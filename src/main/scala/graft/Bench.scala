@@ -1,8 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import com.fasterxml.jackson.databind.ObjectMapper
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 
 /** Benchmark main. Prints ONE JSON line with per-query seconds plus
   * self-diagnosing context so the number stands on its own:
@@ -30,10 +30,10 @@ object Bench {
   private def loadavg(): String =
     try new String(Files.readAllBytes(Paths.get("/proc/loadavg")),
       StandardCharsets.UTF_8).trim.split("\\s+").take(3).mkString(" ")
-    catch { case _: Throwable => "" }
+    catch { case NonFatal(_) => "" }
 
   private def loadavg1(): Double =
-    try loadavg().split("\\s+")(0).toDouble catch { case _: Throwable => 0.0 }
+    try loadavg().split("\\s+")(0).toDouble catch { case NonFatal(_) => 0.0 }
 
   /** Load gate (r8 verdict: a committed artifact carried a q02 reading 3.5x
     * its quiet-box value because the run started on a loaded machine and
@@ -110,35 +110,21 @@ object Bench {
       while (it.hasNext) { val e = it.next(); b += (e.getKey -> e.getValue.asDouble()) }
       val m = b.result()
       if (m.isEmpty) None else Some(m)
-    } catch { case _: Throwable => None }
-    finally { try Files.deleteIfExists(oraclePath) catch { case _: Throwable => } }
+    } catch { case NonFatal(_) => None }
+    finally { try Files.deleteIfExists(oraclePath) catch { case NonFatal(_) => } }
   }
 
   private def r3(d: Double): Double = math.round(d * 1000).toDouble / 1000
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to the machine's cores, not a fixed small number: the driver
-    // sets SPARK_GRAFT_CPUS=32 explicitly, but a bare `runMain graft.Bench`
-    // should bench the hardware it runs on, not a 4-core config
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
+    val cpus = GraftSession.defaultCpus
     // quiet-box gate BEFORE the session exists: loadavg here is FOREIGN
     // load (the warmup/timed passes' own 32-core bursts would trip a
     // post-warmup gate and stall while caches cool)
     val (loadGuard, loadWaitedS) = waitForQuietBox()
     val loadStart = loadavg()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
 
     // Cache budget: the warm-cache union of every query's persisted
     // intermediates is a few hundred MB at sf0.1 but grows linearly with SF —
@@ -194,7 +180,7 @@ object Bench {
       df.write.mode("overwrite").format("noop").save()
     var warmupFlushes = 0
     selected.foreach { case (_, f) =>
-      try force(f(spark, sfDir)) catch { case _: Throwable => }
+      try force(f(spark, sfDir)) catch { case NonFatal(_) => }
       if (enforceCacheBudget()) warmupFlushes += 1
     }
     // deterministic name order: map-iteration order made run-to-run totals
@@ -219,13 +205,13 @@ object Bench {
     def planPrint(df: org.apache.spark.sql.DataFrame): String =
       try df.queryExecution.executedPlan.toString
         .replaceAll("#\\d+", "#x").replaceAll("\\d+", "N")
-      catch { case _: Throwable => "" }
+      catch { case NonFatal(_) => "" }
     def timedPass(): Seq[(String, Double, String)] = names.map { case (name, fn) =>
       if (pendingFlush) { flushBefore += name; pendingFlush = false }
       if (coldMode) clearAllCaches()
       val t0 = System.nanoTime()
       val fp = try { val df = fn(spark, sfDir); force(df); planPrint(df) }
-        catch { case _: Throwable => "" }
+        catch { case NonFatal(_) => "" }
       val dt = (System.nanoTime() - t0) / 1e9
       pendingFlush = enforceCacheBudget()
       (name, dt, fp)
@@ -254,7 +240,7 @@ object Bench {
       if (coldMode) clearAllCaches()
       val t0 = System.nanoTime()
       val ok = try { force(fn(spark, sfDir)); true }
-        catch { case _: Throwable => false }
+        catch { case NonFatal(_) => false }
       if (ok) Some(name -> (System.nanoTime() - t0) / 1e9) else None
     }.toMap
     val results = names.map { case (name, _) =>
@@ -331,7 +317,7 @@ object Bench {
       }.getOrElse("[]")
       Files.write(Paths.get("BENCHPAIR.json"),
         (s"""{"line":$line,"rows":$pairRows}""" + "\n").getBytes(StandardCharsets.UTF_8))
-    } catch { case _: Throwable => }
+    } catch { case NonFatal(_) => }
 
     println(line)
     // VERDICT r11 item 2: the full line above is ~6 KB (100-query map +

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, Des
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
+import scala.util.control.NonFatal
 
 /** `topk_rows(struct, k, first_desc)` — bounded-heap per-group top-k as a
   * mergeable `TypedImperativeAggregate`, the partial-aggregatable
@@ -58,7 +59,7 @@ case class TopKRowsAgg(
       SortOrder(BoundReference(1, f1.dataType, f1.nullable), Ascending))
     (try org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
       .generate(orders)
-    catch { case _: Throwable => new InterpretedOrdering(orders) })
+    catch { case NonFatal(_) => new InterpretedOrdering(orders) })
       .asInstanceOf[Ordering[InternalRow]]
   }
   @transient private lazy val ordU: Ordering[UnsafeRow] = ord.on(identity[UnsafeRow])

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 import scala.collection.mutable.ArrayBuffer
+import scala.util.control.NonFatal
 
 /** Persist-lifecycle control for the operators that cache intermediates
   * (pair generators' shingle sets / signature tables, posting tables,
@@ -60,7 +61,7 @@ object CacheScope {
     // the long-lived-session scenario this scope exists to protect.
     def drop(): Unit = buf.foreach { df =>
       try df.unpersist(blocking = false)
-      catch { case _: Throwable => }
+      catch { case NonFatal(_) => }
     }
     try {
       val out = body

@@ -105,26 +105,19 @@ object Components {
     def pruneAfterMaterialize(): Unit =
       runDir.foreach(dir => pruneOldCheckpoints(sc, dir))
 
-    // initial cut stays EAGER: round 1 references `e` twice (the nbrs
-    // union), so a lazy cut would compute the caller's whole pair pipeline
-    // twice inside one job before the blocks land; the reliable path keeps
-    // its recoverable on-storage copy of the input edge list
-    val dbg = sys.env.contains("GRAFT_CC_DEBUG")
-    val tInit0 = System.nanoTime()
     // initial cut stays EAGER when it happens at all: round 0 references the
     // input from several query stages, and a LAZY cut would race them into
     // computing the caller's whole pair pipeline more than once inside one
-    // job (measured in r11: p77 5 s → 17 s; reverted same hour)
+    // job (measured in r11: p77 5 s → 17 s; reverted same hour); the
+    // reliable path keeps its recoverable on-storage copy of the input edges
     var e = runDir match {
       case Some(_)             => canon.checkpoint()
       case None if !cutInput   => canon
       case None                => canon.localCheckpoint()
     }
-    if (dbg) println(f"[cc] initial cut ${(System.nanoTime() - tInit0) / 1e6}%8.1f ms (cutInput=$cutInput)")
     var converged = false
     var it = 0
     while (!converged && it < maxIter) {
-      val t0 = System.nanoTime()
       // large-star: per node u over its FULL neighborhood Γ(u), connect every
       // strictly-larger neighbor to m = min(Γ(u) ∪ {u}). Shape: the per-node
       // min is a partial-aggregatable groupBy (map-side combine — NOT
@@ -179,7 +172,6 @@ object Components {
           .otherwise(1L)), lit(0L)).as("violations"))
         .head().getLong(0)
       pruneAfterMaterialize()
-      if (dbg) println(f"[cc] round $it%2d  ${(System.nanoTime() - t0) / 1e6}%8.1f ms  viol=$viol")
       converged = viol == 0L
       e = small
       it += 1

@@ -56,19 +56,15 @@ final case class ODataConf(
     pageSize: Option[Int] = None,
     parallelism: Int = 1,
     partitionRows: Long = 100000L,
-    pagination: String = "auto", // auto | offset | keyset
     partitionKey: Option[String] = None,
     keysetSweepMax: Long = 2000000L,
     keysetOrder: String = "asc", // asc | desc (sweep + window direction)
-    keysetCountRefine: Boolean = true,
-    bulkDeleteThreshold: Long = 10000L,
     bearer: Option[String] = None,
     user: Option[String] = None,
     password: Option[String] = None,
     schemaDdl: Option[String] = None,
     unwrap: Option[String] = None,
     filterPushdown: Boolean = true,
-    applyPushdown: Boolean = true,
     applyPartial: Boolean = true,
     insertBatchSize: Option[Int] = None,
     batchFirstPages: Boolean = true,
@@ -90,19 +86,15 @@ object ODataConf {
       pageSize = o.get("pagesize").map(_.toInt),
       parallelism = o.getOrElse("parallelism", "1").toInt,
       partitionRows = o.getOrElse("partitionrows", "100000").toLong,
-      pagination = o.getOrElse("pagination", "auto").toLowerCase,
       partitionKey = o.get("partitionkey"),
       keysetSweepMax = o.getOrElse("keysetsweepmax", "2000000").toLong,
       keysetOrder = o.getOrElse("keysetorder", "asc").toLowerCase,
-      keysetCountRefine = o.getOrElse("keysetcountrefine", "true").toBoolean,
-      bulkDeleteThreshold = o.getOrElse("bulkdeletethreshold", "10000").toLong,
       bearer = o.get("bearertoken"),
       user = o.get("user"),
       password = o.get("password"),
       schemaDdl = o.get("schemaddl"),
       unwrap = o.get("unwrap"),
       filterPushdown = o.getOrElse("filterpushdown", "true").toBoolean,
-      applyPushdown = o.getOrElse("applypushdown", "true").toBoolean,
       applyPartial = o.getOrElse("applypartial", "true").toBoolean,
       insertBatchSize = o.get("insertbatchsize").map(_.toInt),
       batchFirstPages = o.getOrElse("batchfirstpages", "true").toBoolean,
@@ -252,6 +244,10 @@ class ODataTable(conf: ODataConf, schema: StructType) extends Table
       ODataFilterCompiler.compile(filters, meta.version == 2).residual.isEmpty
   }
 
+  /** Matches at or below this size are deleted serially from one buffered
+    * key list; above it, first-page batches are fanned across executors. */
+  private val BulkDeleteThreshold = 10000L
+
   override def deleteWhere(filters: Array[Filter]): Unit = {
     val meta = ODataMeta.resolve(conf)
     val et = meta.model.entityTypes(
@@ -292,9 +288,9 @@ class ODataTable(conf: ODataConf, schema: StructType) extends Table
       try {
         val resp = http.get(countUrl, auth = conf.auth, useCache = false)
         if (resp.status == 200) resp.text.trim.toLong
-        else fetchKeys(keysUrl(None), conf.bulkDeleteThreshold + 1).length.toLong
+        else fetchKeys(keysUrl(None), BulkDeleteThreshold + 1).length.toLong
       } catch { case _: Exception =>
-        fetchKeys(keysUrl(None), conf.bulkDeleteThreshold + 1).length.toLong
+        fetchKeys(keysUrl(None), BulkDeleteThreshold + 1).length.toLong
       }
     }
     def deleteSerial(keys: Seq[String]): Unit = keys.foreach { kv =>
@@ -303,7 +299,7 @@ class ODataTable(conf: ODataConf, schema: StructType) extends Table
       if (del.status >= 300)
         throw new RuntimeException(s"DELETE ($lit) -> HTTP ${del.status}")
     }
-    if (approxSize <= conf.bulkDeleteThreshold) {
+    if (approxSize <= BulkDeleteThreshold) {
       // interactive scale: collect ALL matching keys BEFORE deleting anything —
       // interleaving deletes with a $skip-paged walk shifts the remaining rows
       // under the pagination and silently skips ~half the matches. Keys only.
@@ -593,7 +589,7 @@ class ODataScanBuilder(conf: ODataConf, fullSchema: StructType)
     import org.apache.spark.sql.types._
     // $apply is OData v4; unwrap/expand reshape rows after transfer and a
     // pushed TopN/limit would apply to groups, not entities — all bail out
-    if (meta.version != 4 || !conf.applyPushdown || !conf.filterPushdown) return None
+    if (meta.version != 4 || !conf.filterPushdown) return None
     if (conf.unwrap.isDefined || conf.expand.nonEmpty || conf.schemaDdl.isDefined) return None
     if (limit.isDefined || offset.isDefined || orderBy.isDefined) return None
     if (conf.skip.exists(_ > 0) || conf.top.isDefined) return None
@@ -920,12 +916,7 @@ class ODataScan(conf: ODataConf, meta: ODataMeta, schema: StructType,
       val total = countRows()
       keyOrder match {
         case Some(ord) =>
-          val offsetOk = conf.pagination match {
-            case "offset" => true
-            case "keyset" => false
-            case _        => skipProbe(ord) // auto: ask the server once
-          }
-          if (offsetOk && total.exists(_ > 0)) {
+          if (skipProbe(ord) && total.exists(_ > 0)) {
             val t = total.get
             // at least partitionRows rows per range; cap at `parallelism`
             val nParts = math.min(conf.parallelism.toLong,
@@ -936,9 +927,7 @@ class ODataScan(conf: ODataConf, meta: ODataMeta, schema: StructType,
               ODataInputPartition(
                 buildUrl(Some(skipBase + i * per), Some(per), Some(ord)), i)
             }.toArray
-          } else if (conf.pagination == "offset") // explicit: never keyset
-            Array(ODataInputPartition(buildUrl(None, None), 0))
-          else planKeysetPartitions(ord, total)
+          } else planKeysetPartitions(ord, total)
             .getOrElse(Array(ODataInputPartition(buildUrl(None, None), 0)))
         case None => Array(ODataInputPartition(buildUrl(None, None), 0))
       }
@@ -1116,7 +1105,7 @@ private[odata] object KeysetWindows {
     * unbounded window (the 100 TB skew shape). For a single integral key in
     * asc order the tail is now re-carved NUMERICALLY: min is the last swept
     * boundary, max comes from one `\$orderby key desc&\$top=1` probe, and
-    * the range splits uniformly — then (keysetCountRefine, default on) each
+    * the range splits uniformly — then each
     * candidate sub-window gets a filtered `/\$count`, empty ones are
     * dropped and any window holding > 2× its share is split again,
     * proportionally, one bounded round. O(parallelism) cheap requests
@@ -1277,17 +1266,15 @@ private[odata] object KeysetWindows {
     // interior bounded stretches may be elided.
     def rendersOpen(l: Long, h: Long): Boolean =
       if (desc) l == lo else h == hi
-    val refined: Seq[(Long, Long)] =
-      if (!conf.keysetCountRefine) base
-      else base.flatMap { case (l, h) =>
-        countRows(conf, meta, filters :+ s"$key gt $l and $key le $h") match {
-          case Some(0L) if !rendersOpen(l, h) =>
-            Seq.empty // empty interior stretch: no request at read time
-          case Some(c) if c > 2 * per && (BigInt(h) - BigInt(l)) > 1 =>
-            carve(l, h, math.min(16L, (c + per - 1) / per).toInt)
-          case _ => Seq((l, h))
-        }
+    val refined: Seq[(Long, Long)] = base.flatMap { case (l, h) =>
+      countRows(conf, meta, filters :+ s"$key gt $l and $key le $h") match {
+        case Some(0L) if !rendersOpen(l, h) =>
+          Seq.empty // empty interior stretch: no request at read time
+        case Some(c) if c > 2 * per && (BigInt(h) - BigInt(l)) > 1 =>
+          carve(l, h, math.min(16L, (c + per - 1) / per).toInt)
+        case _ => Seq((l, h))
       }
+    }
     val wins = if (refined.nonEmpty) refined else base
     val ranges = wins.map { case (l, h) =>
       if (!desc && h == hi) s"$key gt $l" // open top: rows beyond the probe
@@ -1407,23 +1394,28 @@ class ODataPartitionReader(partition: ODataInputPartition, schema: StructType,
   private var pages = 0L
   private var rows = 0L
   private var bytes = 0L
+  // every page URL this partition has fetched: a server whose nextLink
+  // repeats one would otherwise keep the scan looping forever
+  private val fetched = scala.collection.mutable.HashSet[String]()
   // first page delivered at planning via one driver-side `$batch` POST
   // (keyset-window scans): consume it instead of the first GET
   private var preloaded: Option[String] = partition.preloaded
 
   override def next(): Boolean = {
-    while (!iter.hasNext && (nextUrl.isDefined || preloaded.isDefined)) fetchPage()
+    while (!iter.hasNext && nextUrl.isDefined) fetchPage()
     if (iter.hasNext) { current = iter.next(); rows += 1; true } else false
   }
 
   private def fetchPage(): Unit = {
+    val url = nextUrl.get
+    if (!fetched.add(url))
+      throw new RuntimeException(s"OData nextLink loop: $url was already fetched by this partition")
     val text = preloaded match {
       case Some(body) =>
         preloaded = None
         bytes += body.length
         body
       case None =>
-        val url = nextUrl.get
         val headers = pageSize.map(n => "Prefer" -> s"odata.maxpagesize=$n").toMap
         val resp = http.get(url, headers = headers, auth = auth, useCache = false)
         if (resp.status != 200)

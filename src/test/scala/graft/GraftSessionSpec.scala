@@ -1,0 +1,43 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+
+/** Pins the one session config every entry point shares, and keeps it the
+  * only one: a second session builder or another dev `main` under `src/`
+  * fails here. */
+class GraftSessionSpec extends SparkSpecBase {
+
+  test("GraftSession.local: extensions, UTC, nanosAsLong, partitions = cpus, no UI") {
+    val s = GraftSession.local(cpus = 4)
+    val conf = s.conf
+    assert(conf.get("spark.sql.extensions") == "graft.GraftExtensions")
+    assert(s.catalog.functionExists("vec_dot"))
+    assert(conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(s.sparkContext.master == "local[4]")
+    assert(conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(s.sparkContext.getConf.get("spark.ui.enabled") == "false")
+    assert(s.sparkContext.uiWebUrl.isEmpty)
+  }
+
+  test("src/ has one session builder and only the Bench, Verify and Probe mains") {
+    val root = Paths.get("src")
+    assert(Files.isDirectory(root), s"run from the repo root: ${root.toAbsolutePath}")
+    val sources: Seq[(String, String)] = {
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+        .map((p: Path) => root.relativize(p).toString -> Files.readString(p))
+      finally walk.close()
+    }
+    // split literals so this file does not count itself
+    def filesWith(needle: String): Set[String] =
+      sources.collect { case (p, text) if text.contains(needle) => p }.toSet
+    assert(filesWith("SparkSession" + ".builder") ==
+      Set("main/scala/graft/GraftSession.scala"))
+    assert(filesWith("def " + "main(") == Set(
+      "main/scala/graft/Bench.scala",
+      "main/scala/graft/Verify.scala",
+      "test/scala/graft/testkit/Probe.scala"))
+  }
+}

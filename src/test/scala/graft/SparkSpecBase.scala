@@ -6,15 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs (one per suite; cheap after the first). */
 trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(cpus = 4)
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 

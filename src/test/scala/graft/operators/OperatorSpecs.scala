@@ -250,6 +250,24 @@ class SimilaritySpec extends SparkSpecBase {
       assert(r.getLong(0) < r.getLong(1))
     }
   }
+
+  test("embeddingDecontaminate: zero-norm rows are never flagged (NaN guard)") {
+    // corpus row 10 is the zero vector; pre-fix 0/0=NaN and Spark's
+    // NaN-greatest ordering made `sim >= minSim` TRUE against every eval row
+    val corpus = Seq(
+      (10L, Array(0f, 0f, 0f)),
+      (11L, Array(1f, 0f, 0f)),
+      (12L, Array(0f, 1f, 0f))).toDF("id", "embedding")
+    val test = Seq(
+      (1L, Array(1f, 0f, 0f)),
+      (2L, Array(0f, 0f, 0f))).toDF("id", "embedding") // zero eval vector too
+    val out = Similarity.embeddingDecontaminate(corpus, "id", test, "id",
+        "embedding", minSim = 0.9)
+      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(3)))).toMap
+    assert(out(10L) == ((0L, false)), s"zero-norm corpus row flagged: $out")
+    assert(out(11L) == ((1L, true)))  // exact match with eval vector 1
+    assert(out(12L) == ((0L, false)))
+  }
 }
 
 class AsofJoinSpec extends SparkSpecBase {

@@ -39,6 +39,17 @@ class TextExtrasSpec extends SparkSpecBase {
     assert(out == Map(1L -> 3L, 2L -> 0L, 3L -> 1L))
   }
 
+  test("max_multiplicity tolerates null array elements") {
+    val df = Seq(1).toDF("i").select(
+      call_function("max_multiplicity",
+        array(lit("a"), lit(null), lit("a"), lit("b"), lit(null))).as("m"),
+      call_function("max_multiplicity",
+        array(lit(null).cast("string"))).as("allNull"))
+    val r = df.collect().head
+    assert(r.getLong(0) == 2L) // nulls skipped: a,a,b -> 2
+    assert(r.getLong(1) == 0L) // only nulls -> 0, like an empty array
+  }
+
   test("PII counts and redaction") {
     val text = "mail bob.smith+x@corp.example.org and carol@ex.io from 10.0.0.1 " +
       "call +1 555 0100 or +49-555-0101 port 999.999.999.999"
@@ -294,6 +305,28 @@ class TextExtrasSpec extends SparkSpecBase {
     val ab = df.select($"id", Bpe.mergeStep($"syms", "a", "b").as("m"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1).toSeq).toMap
     assert(ab(2L) == Seq("ab", "ab"))        // both occurrences merge
+  }
+
+  test("p75 fertility is NULL (not inf/nan) for a zero-word source") {
+    // a source whose docs are all whitespace: words = 0 after tokenize —
+    // Spark Divide yields NULL, DuckDB IEEE division yields inf; the guard
+    // must make both engines emit NULL (oracle uses NULLIF)
+    val dir = java.nio.file.Files.createTempDirectory("p75guard").toString
+    val docs = Seq(
+      (0L, "srcA", "low low low lower lower newest newest widest widest"),
+      (1L, "srcA", "low low lower lower newest newest newest widest"),
+      (2L, "srcB", "   "),
+      (3L, "srcB", "")
+    ).toDF("doc_id", "source", "text")
+    docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val out = graft.SparkEntry.queries("p75_bpe_fertility")(spark, dir)
+      .collect().map(r => r.getString(0) -> r).toMap
+    assert(out("srcB").isNullAt(out("srcB").fieldIndex("fertility")),
+      s"zero-word source must have NULL fertility: ${out("srcB")}")
+    val a = out("srcA")
+    assert(!a.isNullAt(a.fieldIndex("fertility")) &&
+      a.getDouble(a.fieldIndex("fertility")) >= 1.0,
+      s"non-empty source keeps a real fertility: $a")
   }
 
   test("DSIR weights: disjoint-vocab target docs selected, others not") {

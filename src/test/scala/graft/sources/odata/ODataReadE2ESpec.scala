@@ -4,12 +4,16 @@ import graft.SparkSpecBase
 import graft.testkit.ODataStub
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+import org.scalatest.time.{Seconds, Span}
 
 /** End-to-end: Spark DataFrame reads against the in-process OData stub —
   * the port's equivalent of the reference's sqllogictests against live
   * Northwind (SURVEY.md §5), asserting both results AND what reached the
   * server (pushdown observability, §7.2's success criteria). */
-class ODataReadE2ESpec extends SparkSpecBase with BeforeAndAfterAll {
+class ODataReadE2ESpec extends SparkSpecBase with BeforeAndAfterAll with TimeLimits {
+
+  implicit val signaler: Signaler = ThreadSignaler
 
   var v4: ODataStub = _
   var v2: ODataStub = _
@@ -805,6 +809,19 @@ class ODataReadE2ESpec extends SparkSpecBase with BeforeAndAfterAll {
         r.contains("$apply="))
       assert(applySubs.nonEmpty, s"no $$apply sub-GETs: ${v4.requests}")
     } finally v4.skipStatus = 200
+  }
+
+  test("a repeating nextLink fails the scan with the looping URL instead of paging forever") {
+    val looping = new ODataStub(v2 = false).start()
+    looping.loopNextLink = true
+    try {
+      val err = failAfter(Span(60, Seconds)) {
+        intercept[Exception](read(looping).collect())
+      }
+      val msgs = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .map(e => String.valueOf(e.getMessage)).mkString("\n")
+      assert(msgs.contains("OData nextLink loop:") && msgs.contains("__page=1"), msgs)
+    } finally looping.stop()
   }
 
 }

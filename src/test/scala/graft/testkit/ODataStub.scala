@@ -71,6 +71,10 @@ class ODataStub(v2: Boolean, pageSize: Int = 5) {
     * fail and the aggregation stay in Spark). */
   var applyStatus: Int = 200
 
+  /** When true, every `Customers` page links on to page 1 — models a broken
+    * server whose `@odata.nextLink` repeats (reader cycle-check harness). */
+  @volatile var loopNextLink: Boolean = false
+
   /** Raw bodies POSTed to /$batch (JSON batch round-trips). */
   val batchBodies = mutable.ListBuffer[String]()
   private val jsonMapper = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -464,11 +468,12 @@ class ODataStub(v2: Boolean, pageSize: Int = 5) {
     val expandItems = expandRaw.contains("Items") // Orders/Items or Orders($expand=Items)
     val items = slice.map(r => jsonObj(r, select, expand, expandItems)).mkString("[", ",", "]")
     val nextLink =
-      if (!hasMore) None
+      if (!hasMore && !loopNextLink) None
       else {
         val keep = q.filter { case (k, _) => k.startsWith("$") }
           .map { case (k, v) => s"$k=${java.net.URLEncoder.encode(v, "UTF-8")}" }
-        Some(s"$serviceUrl/Customers?${(keep ++ Seq(s"__page=${page + 1}")).mkString("&")}")
+        val next = if (loopNextLink) 1 else page + 1
+        Some(s"$serviceUrl/Customers?${(keep ++ Seq(s"__page=$next")).mkString("&")}")
       }
     val body =
       if (v2)

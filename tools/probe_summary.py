@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Merge per-SF ScaleProbe artifacts into one slope summary.
+"""Merge per-SF `Probe scale` artifacts into one slope summary.
 
 Usage: python3 tools/probe_summary.py out.json note sf1.json sf10.json [sf100.json]
 Slopes are wall ratios between consecutive decades; shuffle-write records
