@@ -80,7 +80,8 @@ object Charsets {
   * `@transient lazy val` in partition readers — the client is NOT serialized;
   * connection pooling/keep-alive comes from the underlying
   * `java.net.http.HttpClient`). Sleep schedule matches the reference:
-  * wait × backoff^(attempt-1).
+  * wait × backoff^(attempt-1); a 429/503 answer carrying `Retry-After`
+  * sleeps at least that long, capped at the request timeout.
   */
 class HttpCore(val policy: HttpPolicy = HttpPolicy()) {
 
@@ -145,8 +146,11 @@ class HttpCore(val policy: HttpPolicy = HttpPolicy()) {
     var last: Either[Throwable, HttpResult] = Left(new RuntimeException("unsent"))
     while (attempt <= policy.retries) {
       if (attempt > 0) {
-        val sleep = (policy.retryWaitMs *
+        val scheduled = (policy.retryWaitMs *
           math.pow(policy.retryBackoff, (attempt - 1).toDouble)).toLong
+        // a throttled answer's Retry-After outranks a shorter schedule step
+        val asked = last.fold(_ => 0L, HttpCore.retryAfterMs(_, System.currentTimeMillis()))
+        val sleep = math.min(policy.timeoutMs, math.max(scheduled, asked))
         Trace.warn("http", s"retry $attempt/${policy.retries} $method $url after ${sleep}ms")
         Thread.sleep(sleep)
       }
@@ -198,4 +202,16 @@ object HttpCore {
   /** Per-JVM shared instance (executors re-create it after deserialization —
     * never ship a client over the wire). */
   lazy val shared = new HttpCore()
+
+  /** The wait, in ms, a throttled (429/503) answer asks for in `Retry-After`:
+    * delta-seconds or an HTTP-date (RFC 9110 §10.2.3). 0 for other statuses
+    * and for an absent, past or unparsable value. */
+  private[http] def retryAfterMs(r: HttpResult, nowMs: Long): Long =
+    if (r.status != 429 && r.status != 503) 0L
+    else r.headers.get("retry-after").map(_.trim).flatMap { v =>
+      if (v.nonEmpty && v.forall(_.isDigit))
+        Some(if (v.length > 9) Long.MaxValue else v.toLong * 1000L)
+      else scala.util.Try(java.time.ZonedDateTime.parse(v,
+        java.time.format.DateTimeFormatter.RFC_1123_DATE_TIME).toInstant.toEpochMilli - nowMs).toOption
+    }.fold(0L)(math.max(0L, _))
 }

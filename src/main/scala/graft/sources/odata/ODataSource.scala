@@ -195,7 +195,9 @@ object ODataMeta {
   * ATTACH behavior (SharePoint lists / Excel workbooks,
   * `graph_sharepoint_catalog.cpp:791`, `graph_excel_catalog.cpp:511` — both
   * are per-row create calls against the items endpoint; so is OData entity
-  * creation). Append-only, at-least-once like the reference. */
+  * creation). At-least-once like the reference. `insertBatchSize` turns
+  * every write (INSERT, UPDATE, MERGE, DELETE) into `$batch` round trips,
+  * see [[batchTarget]]. */
 class ODataTable(conf: ODataConf, schema: StructType) extends Table
   with SupportsRead
   with org.apache.spark.sql.connector.catalog.SupportsWrite
@@ -207,7 +209,8 @@ class ODataTable(conf: ODataConf, schema: StructType) extends Table
     * idiomatic DSv2 delta-based row-level operation: Spark scans the current
     * rows (same pushdown scan), computes the delta, and the writer issues one
     * PATCH/DELETE/POST per changed entity keyed by the EDM key — REST
-    * semantics map 1:1 onto `SupportsDelta`. */
+    * semantics map 1:1 onto `SupportsDelta`. With `insertBatchSize` those
+    * calls travel as `$batch` sub-requests, N per round trip. */
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
   : org.apache.spark.sql.connector.write.RowLevelOperationBuilder = {
@@ -218,9 +221,37 @@ class ODataTable(conf: ODataConf, schema: StructType) extends Table
       s"row-level operations need a single-column EDM key, ${meta.setName} has ${et.keys.length}")
     val key = et.keys.head
     val keyIsString = et.properties.find(_.name == key).exists(_.edmType == "Edm.String")
+    val batch = batchTarget(meta)
     () => new ODataRowLevelOperation(conf, meta.entitySetUrl, schema,
-      info.command(), key, keyIsString)
+      info.command(), key, keyIsString, batch)
   }
+
+  /** Where catalog writes send their `$batch`es. `insertBatchSize = N > 1`
+    * declares that the service accepts OData JSON `$batch` with up to N
+    * sub-requests; INSERT, UPDATE, MERGE and DELETE then all send one batch
+    * per N changes to the `$batch` endpoint of the SERVICE ROOT (resolved by
+    * the `$metadata` probe, not a path-segment strip — nested entity sets get
+    * the right endpoint). JSON batch is an OData 4.01 format: a v2 service
+    * (multipart MIME batches) would answer 400, so that combination fails
+    * here, before anything is written. */
+  private def batchTarget(meta: ODataMeta): Option[ODataBatchTarget] =
+    conf.insertBatchSize.filter(_ > 1).map { bs =>
+      if (meta.version == 2)
+        throw new IllegalArgumentException(
+          s"insertBatchSize=$bs sends OData JSON $$batch, which OData version 2 " +
+            s"services do not accept (${meta.entitySetUrl}); unset insertBatchSize")
+      // relative sub-request URL only when the entity-set URL really lives
+      // under the resolved service root; if the two diverge (user-set
+      // serviceroot behind a proxy, different casing), the absolute form —
+      // also valid per OData 4.01 §11.7.2 — beats shipping "/https://host/..."
+      // from a no-op stripPrefix. Microsoft Graph rejects absolute ones.
+      val setUrl = meta.entitySetUrl
+      val setPath =
+        if (setUrl.startsWith(meta.serviceRoot))
+          "/" + setUrl.stripPrefix(meta.serviceRoot).stripPrefix("/")
+        else setUrl
+      ODataBatchTarget(bs, meta.serviceRoot + "/$batch", setPath)
+    }
 
   override def name(): String = conf.url
   override def schema(): StructType = schema
@@ -230,9 +261,9 @@ class ODataTable(conf: ODataConf, schema: StructType) extends Table
   /** `DELETE FROM cat.main.Set WHERE ...` — the reference's row deletion on
     * attached SharePoint lists (`graph_sharepoint_catalog.cpp:820`) and the
     * `graph_excel_delete_rows` delete-by-value function: compile the filters
-    * to `$filter`, fetch matching key values, then one `DELETE
-    * <set>(<key>)` call per entity (OData deletes are by key). Driver-side
-    * key fetch — deletes are interactive-scale operations, not bulk scans. */
+    * to `$filter`, fetch matching key values, then delete by key (OData
+    * deletes are by key): one `DELETE <set>(<key>)` call per entity, or one
+    * `$batch` per `insertBatchSize` keys. */
   override def canDeleteWhere(filters: Array[Filter]): Boolean = {
     // fixed-schema (Graph) tables have no EDM key metadata — deletes go
     // through the per-row mutation helpers instead
@@ -250,20 +281,21 @@ class ODataTable(conf: ODataConf, schema: StructType) extends Table
 
   override def deleteWhere(filters: Array[Filter]): Unit = {
     val meta = ODataMeta.resolve(conf)
+    val batch = batchTarget(meta)
     val et = meta.model.entityTypes(
       meta.model.entitySets.find(_.name == meta.setName).get.entityTypeName)
     val key = et.keys.head
     val keyIsString = et.properties.find(_.name == key)
       .exists(_.edmType == "Edm.String")
     val compiled = ODataFilterCompiler.compile(filters, meta.version == 2)
-    def keysUrl(top: Option[Long]): String = {
+    def keysUrl(top: Long): String = {
       var u = ODataUrl.parse(meta.entitySetUrl).withParam("$select", key)
       compiled.expr.foreach(e => u = u.mergeFilter(e))
-      top.foreach(t => u = u.withParam("$top", t.toString))
+      u = u.withParam("$top", top.toString)
       if (meta.version == 2) u = u.withParam("$format", "json")
       u.render
     }
-    val http = graft.sources.http.HttpCore.shared
+    val http = HttpCore.shared
     def fetchKeys(url: String, cap: Long): Seq[String] = {
       val out = Seq.newBuilder[String]
       var n = 0L
@@ -278,60 +310,39 @@ class ODataTable(conf: ODataConf, schema: StructType) extends Table
       }
       out.result()
     }
-    // size probe decides the path: filtered /$count when the server has it,
-    // else a capped key fetch (threshold + 1 keys is itself bounded)
-    val approxSize: Long = {
-      val countUrl = {
-        val u0 = ODataUrl.parse(meta.entitySetUrl + "/$count")
-        compiled.expr.foldLeft(u0)((u, e) => u.mergeFilter(e)).render
-      }
-      try {
-        val resp = http.get(countUrl, auth = conf.auth, useCache = false)
-        if (resp.status == 200) resp.text.trim.toLong
-        else fetchKeys(keysUrl(None), BulkDeleteThreshold + 1).length.toLong
-      } catch { case _: Exception =>
-        fetchKeys(keysUrl(None), BulkDeleteThreshold + 1).length.toLong
-      }
-    }
-    def deleteSerial(keys: Seq[String]): Unit = keys.foreach { kv =>
-      val lit = if (keyIsString) s"'${kv.replace("'", "''")}'" else kv
-      val del = http.request("DELETE", s"${meta.entitySetUrl}($lit)", None, auth = conf.auth)
-      if (del.status >= 300)
-        throw new RuntimeException(s"DELETE ($lit) -> HTTP ${del.status}")
-    }
-    if (approxSize <= BulkDeleteThreshold) {
-      // interactive scale: collect ALL matching keys BEFORE deleting anything —
-      // interleaving deletes with a $skip-paged walk shifts the remaining rows
-      // under the pagination and silently skips ~half the matches. Keys only.
-      deleteSerial(fetchKeys(keysUrl(None), Long.MaxValue))
+    // locals only: the bulk path ships these to executors
+    val (setUrl, auth) = (meta.entitySetUrl, conf.auth)
+    val lit: String => String = kv => if (keyIsString) s"'${kv.replace("'", "''")}'" else kv
+    // one capped key walk decides the path: at most threshold + 1 keys means
+    // the walk saw every match. Interactive scale collects ALL matching keys
+    // BEFORE deleting anything — interleaving deletes with a paged walk
+    // shifts the remaining rows under the pagination and silently skips
+    // ~half the matches. Keys only.
+    val first = fetchKeys(keysUrl(BulkDeleteThreshold + 1), BulkDeleteThreshold + 1)
+    if (first.length <= BulkDeleteThreshold) {
+      ODataDeletes.byKey(setUrl, first.iterator.map(lit), batch, auth)
     } else {
       // bulk scale: never buffer the full key set. Repeatedly fetch the FIRST
       // page of remaining matches ($top, no $skip — so deleting cannot shift
-      // pagination under us) and fan the page's DELETE calls across executors;
+      // pagination under us) and fan the page's deletes across executors;
       // stop when the filter matches nothing. Progress guard: a surviving
       // first key after its own page was "deleted" means the server is not
       // actually removing rows — abort instead of looping forever.
       val spark = org.apache.spark.sql.SparkSession.active
       val pageSize = math.max(1L, conf.pageSize.map(_.toLong).getOrElse(1000L))
-      val (setUrl, bearer, user, password) = (meta.entitySetUrl, conf.bearer, conf.user, conf.password)
-      val keyQuoted = keyIsString
       var prevFirst: Option[String] = None
-      var batch = fetchKeys(keysUrl(Some(pageSize)), pageSize)
-      while (batch.nonEmpty) {
-        if (prevFirst.contains(batch.head))
+      var page = fetchKeys(keysUrl(pageSize), pageSize)
+      while (page.nonEmpty) {
+        if (prevFirst.contains(page.head))
           throw new RuntimeException(
-            s"bulk delete is not progressing: key ${batch.head} survived its delete")
-        prevFirst = Some(batch.head)
+            s"bulk delete is not progressing: key ${page.head} survived its delete")
+        prevFirst = Some(page.head)
         val nParts = math.max(1, math.min(
-          spark.sparkContext.defaultParallelism, batch.length / 32 + 1))
-        spark.sparkContext.parallelize(batch, nParts).foreach { kv =>
-          val lit = if (keyQuoted) s"'${kv.replace("'", "''")}'" else kv
-          val del = graft.sources.http.HttpCore.shared.request(
-            "DELETE", s"$setUrl($lit)", None, auth = HttpAuth(bearer, user, password))
-          if (del.status >= 300)
-            throw new RuntimeException(s"DELETE ($lit) -> HTTP ${del.status}")
+          spark.sparkContext.defaultParallelism, page.length / 32 + 1))
+        spark.sparkContext.parallelize(page, nParts).foreachPartition { kvs =>
+          ODataDeletes.byKey(setUrl, kvs.map(lit), batch, auth)
         }
-        batch = fetchKeys(keysUrl(Some(pageSize)), pageSize)
+        page = fetchKeys(keysUrl(pageSize), pageSize)
       }
     }
   }
@@ -345,25 +356,9 @@ class ODataTable(conf: ODataConf, schema: StructType) extends Table
           override def toBatch: org.apache.spark.sql.connector.write.BatchWrite = {
             val meta = ODataMeta.resolve(conf)
             val setUrl = meta.entitySetUrl
-            // beyond-reference: insertBatchSize groups INSERT rows into OData
-            // JSON $batch round-trips at the SERVICE ROOT (resolved by the
-            // $metadata probe, not a path-segment strip — nested entity sets
-            // get the right endpoint). Sub-request URLs ship service-root-
-            // relative: the 4.01 spec allows both forms and Microsoft Graph
-            // rejects absolute ones.
-            val batchOpts = conf.insertBatchSize.map { bs =>
-              // relative sub-request URL only when the entity-set URL really
-              // lives under the resolved service root; if the two diverge
-              // (user-set serviceroot behind a proxy, different casing), the
-              // absolute form — also valid per OData 4.01 §11.7.2 — beats
-              // shipping "/https://host/..." from a no-op stripPrefix
-              val subUrl =
-                if (setUrl.startsWith(meta.serviceRoot))
-                  "/" + setUrl.stripPrefix(meta.serviceRoot).stripPrefix("/")
-                else setUrl
-              Map("batchsize" -> bs.toString,
-                "batchurl" -> (meta.serviceRoot + "/$batch"),
-                "batchsuburl" -> subUrl)
+            val batchOpts = batchTarget(meta).map { b =>
+              Map("batchsize" -> b.size.toString, "batchurl" -> b.url,
+                "batchsuburl" -> b.setPath)
             }.getOrElse(Map.empty)
             new graft.writes.RestItemsBatchWrite(info.schema(), Map(
               "url" -> setUrl) ++ batchOpts ++
@@ -374,13 +369,42 @@ class ODataTable(conf: ODataConf, schema: StructType) extends Table
     }
 }
 
+/** A catalog's `$batch` write endpoint: at most `size` sub-requests per
+  * batch, POSTed to `url`; sub-request URLs are `setPath` (service-root-
+  * relative when possible) or `setPath(<key>)`. */
+final case class ODataBatchTarget(size: Int, url: String, setPath: String)
+
+private[odata] object ODataDeletes {
+  /** Deletes the entities whose key literals `lits` yields: one `$batch` per
+    * `batch.size` keys when batched, else one `DELETE <set>(<key>)` each.
+    * Any failed delete fails the call. */
+  def byKey(setUrl: String, lits: Iterator[String], batch: Option[ODataBatchTarget],
+            auth: HttpAuth): Unit = {
+    val http = HttpCore.shared
+    batch match {
+      case Some(b) =>
+        lits.grouped(b.size).foreach { g =>
+          graft.writes.ODataJsonBatch.send(http, b.url,
+            g.map(l => ("DELETE", s"${b.setPath}($l)", None)), auth)
+        }
+      case None =>
+        lits.foreach { l =>
+          val del = http.request("DELETE", s"$setUrl($l)", None, auth = auth)
+          if (del.status >= 300)
+            throw new RuntimeException(s"DELETE ($l) -> HTTP ${del.status}")
+        }
+    }
+  }
+}
+
 /** Delta-based row-level operation: `rowId` = the entity's EDM key; updates
   * PATCH, deletes DELETE, (re)inserts POST — at-least-once per row, like
   * every write path here and in the reference. */
 class ODataRowLevelOperation(conf: ODataConf, entitySetUrl: String,
                              tableSchema: StructType,
                              cmd: org.apache.spark.sql.connector.write.RowLevelOperation.Command,
-                             key: String, keyIsString: Boolean)
+                             key: String, keyIsString: Boolean,
+                             batch: Option[ODataBatchTarget])
   extends org.apache.spark.sql.connector.write.SupportsDelta {
   import org.apache.spark.sql.connector.write._
 
@@ -395,7 +419,7 @@ class ODataRowLevelOperation(conf: ODataConf, entitySetUrl: String,
         override def toBatch: DeltaBatchWrite = new DeltaBatchWrite {
           override def createBatchWriterFactory(p: PhysicalWriteInfo): DeltaWriterFactory =
             new ODataDeltaWriterFactory(entitySetUrl, info.schema(), key, keyIsString,
-              conf.bearer, conf.user, conf.password)
+              conf.auth, batch)
           override def commit(messages: Array[WriterCommitMessage]): Unit = ()
           override def abort(messages: Array[WriterCommitMessage]): Unit = ()
         }
@@ -403,44 +427,69 @@ class ODataRowLevelOperation(conf: ODataConf, entitySetUrl: String,
     }
 }
 
+/** Per task: one PATCH/DELETE/POST call per change, or with `batch` the
+  * changes buffered and sent as one `$batch` per `batch.size`, at the
+  * latest on `commit()`. Batch sub-requests may run in any order, so the
+  * buffer is flushed before it would hold a second change to one entity;
+  * `abort()` drops the buffer unsent. */
 class ODataDeltaWriterFactory(entitySetUrl: String, rowSchema: StructType,
-                              key: String, keyIsString: Boolean,
-                              bearer: Option[String], user: Option[String],
-                              password: Option[String])
+                              key: String, keyIsString: Boolean, auth: HttpAuth,
+                              batch: Option[ODataBatchTarget])
   extends org.apache.spark.sql.connector.write.DeltaWriterFactory {
   import org.apache.spark.sql.connector.write._
 
   override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
     new DeltaWriter[InternalRow] {
       @transient private lazy val http = HttpCore.shared
-      private val auth = HttpAuth(bearer, user, password)
+      private val keyIdx = rowSchema.fieldIndex(key)
+      private val keyType = rowSchema(key).dataType
       private var n = 0L
+      private val buf = scala.collection.mutable.ArrayBuffer[graft.writes.ODataJsonBatch.SubRequest]()
+      private val bufKeys = scala.collection.mutable.HashSet[String]()
 
-      private def keyUrl(id: InternalRow): String = {
-        // the id row carries exactly the rowId projection (one column)
-        val kv = id.get(0, rowSchema(key).dataType).toString
-        val lit = if (keyIsString) s"'${kv.replace("'", "''")}'" else kv
-        s"$entitySetUrl($lit)"
-      }
-      private def send(method: String, url: String, body: Option[String]): Unit = {
-        val resp = http.request(method, url,
-          body.map((_, "application/json")), auth = auth)
-        if (resp.status >= 300)
-          throw new RuntimeException(s"$method $url -> HTTP ${resp.status}: ${resp.text.take(200)}")
+      private def keyLit(kv: Any): String =
+        if (keyIsString) s"'${kv.toString.replace("'", "''")}'" else kv.toString
+
+      /** One change: POST to the set, else `method` on `<set>(<lit>)`. `lit`
+        * (None: an insert leaving the key to the server) also keys the
+        * one-change-per-entity-per-batch rule. */
+      private def send(method: String, lit: Option[String], body: Option[String]): Unit = {
+        val path = if (method == "POST") "" else s"(${lit.get})"
+        batch match {
+          case Some(b) =>
+            if (lit.exists(bufKeys.contains)) flush()
+            bufKeys ++= lit
+            buf += ((method, b.setPath + path, body))
+            if (buf.size >= b.size) flush()
+          case None =>
+            val url = entitySetUrl + path
+            val resp = http.request(method, url, body.map((_, "application/json")), auth = auth)
+            if (resp.status >= 300)
+              throw new RuntimeException(s"$method $url -> HTTP ${resp.status}: ${resp.text.take(200)}")
+        }
         n += 1
       }
+      private def flush(): Unit = if (buf.nonEmpty) {
+        graft.writes.ODataJsonBatch.send(http, batch.get.url, buf.toSeq, auth)
+        buf.clear()
+        bufKeys.clear()
+      }
 
+      // the id row carries exactly the rowId projection (one column)
       override def update(metadata: InternalRow, id: InternalRow, row: InternalRow): Unit =
-        send("PATCH", keyUrl(id),
+        send("PATCH", Some(keyLit(id.get(0, keyType))),
           Some(graft.writes.RestWrites.rowToJson(row, rowSchema)))
       override def delete(metadata: InternalRow, id: InternalRow): Unit =
-        send("DELETE", keyUrl(id), None)
+        send("DELETE", Some(keyLit(id.get(0, keyType))), None)
       override def insert(row: InternalRow): Unit =
-        send("POST", entitySetUrl,
+        send("POST", Option(row.get(keyIdx, keyType)).map(keyLit),
           Some(graft.writes.RestWrites.rowToJson(row, rowSchema)))
 
-      override def commit(): WriterCommitMessage = graft.writes.RestWriteCommit(n)
-      override def abort(): Unit = ()
+      override def commit(): WriterCommitMessage = {
+        flush()
+        graft.writes.RestWriteCommit(n)
+      }
+      override def abort(): Unit = { buf.clear(); bufKeys.clear() }
       override def close(): Unit = ()
     }
 }

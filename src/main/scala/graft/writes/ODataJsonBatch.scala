@@ -1,5 +1,6 @@
 package graft.writes
 
+import graft.sources.http.{HttpAuth, HttpCore}
 import graft.sources.odata.ODataJson
 
 /** OData JSON batch round-trips (OData 4.01 `$batch`; the same shape
@@ -9,20 +10,50 @@ import graft.sources.odata.ODataJson
   * but essential at scale: a 1M-row INSERT at one POST per row is 1M
   * round-trips of latency, at batch size 20 it is 50k.
   *
-  * Only the homogeneous POST case is built (the write path's need); the
-  * format trivially extends to mixed methods. */
+  * Writes build mixed-method bodies ([[buildBatch]]: POST, PATCH and DELETE
+  * sub-requests in one envelope) and go through [[send]], the single place
+  * a write batch's answer is validated. Sub-requests carry no `dependsOn`,
+  * so a service may run them in any order: callers never put two changes
+  * to the same entity into one batch. */
 object ODataJsonBatch {
 
-  /** Batch body POSTing each JSON object in `bodies` to `url`. The 4.01
-    * spec allows absolute or service-root-relative sub-request URIs; the
-    * OData catalog write path passes the RELATIVE form (Microsoft Graph
-    * rejects absolute ones). Ids are 1-based ordinals, so failures map back
-    * to buffer positions. */
-  def buildPostBatch(url: String, bodies: Seq[String]): String =
-    bodies.zipWithIndex.map { case (b, i) =>
-      s"""{"id":"${i + 1}","method":"POST","url":${JsonEncode.str(url)},""" +
-        s""""headers":{"Content-Type":"application/json"},"body":$b}"""
+  /** One write sub-request: (method, url, JSON body). */
+  type SubRequest = (String, String, Option[String])
+
+  /** Batch body of write sub-requests. The 4.01 spec allows absolute or
+    * service-root-relative sub-request URIs; the OData catalog write paths
+    * pass the RELATIVE form (Microsoft Graph rejects absolute ones). Ids are
+    * 1-based ordinals, so failures map back to buffer positions. */
+  def buildBatch(reqs: Seq[SubRequest]): String =
+    reqs.zipWithIndex.map { case ((method, url, body), i) =>
+      val head = s"""{"id":"${i + 1}","method":"$method","url":${JsonEncode.str(url)}"""
+      body match {
+        case Some(b) => head + s""","headers":{"Content-Type":"application/json"},"body":$b}"""
+        case None    => head + "}"
+      }
     }.mkString("""{"requests":[""", ",", "]}")
+
+  /** POSTs `reqs` as one batch to `batchUrl` and fails unless the batch AND
+    * every sub-request succeeded: a non-2xx envelope, fewer sub-responses
+    * than sub-requests (truncating proxy, buggy service — those changes were
+    * silently not applied) or any sub-status outside 2xx all throw. OData
+    * batches are not transactions without changesets, so a failure may leave
+    * the other sub-requests applied (at-least-once, like the per-row path). */
+  def send(http: HttpCore, batchUrl: String, reqs: Seq[SubRequest], auth: HttpAuth): Unit = {
+    val resp = http.request("POST", batchUrl,
+      Some((buildBatch(reqs), "application/json")), auth = auth)
+    if (resp.status / 100 != 2)
+      throw new RuntimeException(
+        s"POST $batchUrl -> HTTP ${resp.status}: ${resp.text.take(200)}")
+    val answers = getResponses(resp.text)
+    if (answers.size != reqs.size)
+      throw new RuntimeException(s"$$batch answered ${answers.size} of " +
+        s"${reqs.size} sub-requests: ${resp.text.take(200)}")
+    val bad = answers.collect { case (id, status, _) if status / 100 != 2 => (id, status) }
+    if (bad.nonEmpty)
+      throw new RuntimeException(
+        s"$$batch sub-requests failed: ${bad.take(3).mkString(", ")}")
+  }
 
   /** Batch body of GET sub-requests (the READ side: N first pages / probes
     * in one round-trip). `urls` are service-root-relative, ids 1-based. */
@@ -37,8 +68,8 @@ object ODataJsonBatch {
     }.mkString("""{"requests":[""", ",", "]}")
   }
 
-  /** (id, status, body-as-json-text) per sub-response, in response order —
-    * the GET counterpart of [[responseStatuses]]. Missing bodies → "{}". */
+  /** (id, status, body-as-json-text) per sub-response, in response order.
+    * Missing bodies → "{}", a missing status → 0. */
   def getResponses(body: String): Seq[(String, Int, String)] = {
     val rs = ODataJson.parse(body).get("responses")
     if (rs == null || !rs.isArray)
@@ -48,18 +79,6 @@ object ODataJsonBatch {
       (Option(r.get("id")).map(_.asText).getOrElse(""),
         Option(r.get("status")).map(_.asInt).getOrElse(0),
         Option(r.get("body")).map(_.toString).getOrElse("{}"))
-    }
-  }
-
-  /** (id, status) per sub-response, in response order. */
-  def responseStatuses(body: String): Seq[(String, Int)] = {
-    val rs = ODataJson.parse(body).get("responses")
-    if (rs == null || !rs.isArray)
-      throw new RuntimeException(s"malformed $$batch response: ${body.take(200)}")
-    (0 until rs.size).map { i =>
-      val r = rs.get(i)
-      (Option(r.get("id")).map(_.asText).getOrElse(""),
-        Option(r.get("status")).map(_.asInt).getOrElse(0))
     }
   }
 }

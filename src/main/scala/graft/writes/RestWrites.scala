@@ -99,29 +99,15 @@ class RestItemsWriterFactory(schema: StructType, url: String,
         n += 1
       }
 
-      /** One `$batch` round-trip for the buffered rows; every sub-response
-        * must succeed (at-least-once on task retry, same as the per-row
-        * path — OData batches are not transactions unless changesets are
-        * used, and the services the reference targets don't support them). */
+      /** One `$batch` round-trip for the buffered rows, validated by
+        * [[ODataJsonBatch.send]] (at-least-once on task retry, same as the
+        * per-row path). Sub-requests target batchSubUrl when given (the
+        * service-root-relative form Microsoft Graph requires), else the
+        * absolute url. */
       private def flush(): Unit = if (buf.nonEmpty) {
-        // sub-requests target batchSubUrl when given (service-root-relative
-        // form — required by Microsoft Graph), else the absolute url
-        val body = ODataJsonBatch.buildPostBatch(batchSubUrl.getOrElse(url), buf.toSeq)
-        val bu = batchUrl.get
-        val resp = http.request("POST", bu, Some((body, "application/json")), auth = auth)
-        if (resp.status >= 300)
-          throw new RuntimeException(s"POST $bu -> HTTP ${resp.status}: ${resp.text.take(200)}")
-        val statuses = ODataJsonBatch.responseStatuses(resp.text)
-        // every sub-request must be answered AND succeed: a truncated
-        // envelope (proxy, buggy service) or a missing status field must
-        // not pass as success — those rows were silently unwritten
-        if (statuses.size != buf.size)
-          throw new RuntimeException(s"$$batch answered ${statuses.size} of " +
-            s"${buf.size} sub-requests: ${resp.text.take(200)}")
-        val bad = statuses.filter(s => s._2 < 200 || s._2 >= 300)
-        if (bad.nonEmpty)
-          throw new RuntimeException(
-            s"$$batch sub-requests failed: ${bad.take(3).mkString(", ")}")
+        val target = batchSubUrl.getOrElse(url)
+        ODataJsonBatch.send(http, batchUrl.get,
+          buf.toSeq.map(json => ("POST", target, Some(json))), auth)
         buf.clear()
       }
 

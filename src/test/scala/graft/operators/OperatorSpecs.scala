@@ -268,6 +268,29 @@ class SimilaritySpec extends SparkSpecBase {
     assert(out(11L) == ((1L, true)))  // exact match with eval vector 1
     assert(out(12L) == ((0L, false)))
   }
+
+  // a ragged block used to be truncated or zero-padded silently, giving
+  // sims that diverge from the staged per-pair form
+  test("block_cosine_pairs fails loudly on ragged dimensionality") {
+    val df = Seq(
+      (1L, 0, Array(1.0f, 0.0f, 0.0f, 0.0f)),
+      (2L, 0, Array(1.0f, 0.0f, 0.0f, 0.0f)),
+      (3L, 0, Array(1.0f, 0.0f)) // ragged: dim 2 in a dim-4 block
+    ).toDF("vec_id", "label", "embedding")
+    val ex = intercept[Throwable] {
+      Similarity.cosineNearDupBlocked(df, "vec_id", "embedding", "label", 0.1)
+        .collect()
+    }
+    def chain(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(e => e.getMessage +: chain(e.getCause))
+    assert(chain(ex).exists(m => m != null && m.contains("ragged block")),
+      s"expected a ragged-block error, got: ${chain(ex).mkString(" | ")}")
+    // uniform blocks keep working
+    val ok = Similarity.cosineNearDupBlocked(
+      df.filter($"vec_id" =!= 3L), "vec_id", "embedding", "label", 0.1)
+      .collect()
+    assert(ok.map(r => (r.getLong(0), r.getLong(1))).toSet == Set((1L, 2L)))
+  }
 }
 
 class AsofJoinSpec extends SparkSpecBase {
@@ -472,5 +495,20 @@ class ShardsSpec extends SparkSpecBase {
     assert(again.toSet == Shards.spanCorruptionPlan(docs, "doc_id", "tk")
       .select("doc_id", "span_ix", "span_start").collect().toSet)
     assert(again.toSet != other.toSet)
+  }
+
+  test("mixtureDraw quotas survive targetRows*s beyond Long range") {
+    // s ≈ sqrt(20)*1e6 ≈ 4.5e6 per stratum; targetRows = 2^62 makes the
+    // naive BIGINT product overflow by far. The decimal-staged quota is
+    // min(n, huge) = n, so EVERY row must be drawn; the pre-fix negative
+    // quota silently emptied both strata.
+    val df = (0 until 40).map(i => (i.toLong, if (i % 2 == 0) "a" else "b"))
+      .toDF("id", "src")
+    val out = Shards.mixtureDraw(df, "id", "src", lit(1L),
+      targetRows = Long.MaxValue / 2)
+    val got = out.groupBy("src").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(got == Map("a" -> 20L, "b" -> 20L), s"strata dropped: $got")
+    assert(out.select("quota").distinct().collect().forall(_.getLong(0) == 20L))
   }
 }

@@ -28,6 +28,27 @@ class HttpCoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.status == 503)
   }
 
+  test("429 with Retry-After waits the server's delay, not the short schedule") {
+    val http = new HttpCore(HttpPolicy(retries = 3, retryWaitMs = 10))
+    val t0 = System.currentTimeMillis()
+    val r = http.get(s"http://localhost:${stub.port}/throttled?key=a", useCache = false)
+    val elapsed = System.currentTimeMillis() - t0
+    assert(r.status == 200 && r.text == "ok after 2")
+    assert(elapsed >= 1000, s"Retry-After: 1 ignored, took ${elapsed}ms")
+  }
+
+  test("Retry-After takes delta-seconds or an HTTP-date, only on 429/503") {
+    def res(status: Int, v: String) =
+      HttpResult(status, "u", Map("retry-after" -> v), "", Array.emptyByteArray)
+    val now = java.time.ZonedDateTime.parse("Wed, 21 Oct 2015 07:28:00 GMT",
+      java.time.format.DateTimeFormatter.RFC_1123_DATE_TIME).toInstant.toEpochMilli
+    assert(HttpCore.retryAfterMs(res(429, "2"), now) == 2000)
+    assert(HttpCore.retryAfterMs(res(503, "Wed, 21 Oct 2015 07:28:05 GMT"), now) == 5000)
+    assert(HttpCore.retryAfterMs(res(503, "Wed, 21 Oct 2015 07:27:00 GMT"), now) == 0)
+    assert(HttpCore.retryAfterMs(res(429, "soon"), now) == 0)
+    assert(HttpCore.retryAfterMs(res(500, "2"), now) == 0)
+  }
+
   test("cache is bounded: expired entries evicted first, then oldest") {
     val http = new HttpCore(HttpPolicy(cacheTtlMs = 60000, cacheMaxEntries = 5))
     val base = s"http://localhost:${stub.port}/counter"

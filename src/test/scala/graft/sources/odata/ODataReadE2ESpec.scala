@@ -622,6 +622,160 @@ class ODataReadE2ESpec extends SparkSpecBase with BeforeAndAfterAll with TimeLim
     } finally big.stop()
   }
 
+  /** Catalog `<prefix><port>` over `stub` with `insertBatchSize = batchSize`. */
+  private def catalog(prefix: String, stub: ODataStub, batchSize: Int): String = {
+    val cat = s"$prefix${stub.port}"
+    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.odata.ODataCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.url", stub.serviceUrl)
+    spark.conf.set(s"spark.sql.catalog.$cat.insertBatchSize", batchSize.toString)
+    cat
+  }
+
+  private def messages(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+      .map(e => s"${e.getClass.getName}: ${e.getMessage}").mkString("\n")
+
+  private def subMethods(bodies: Seq[String]): Seq[String] =
+    bodies.flatMap(b => "\"method\":\"(\\w+)\"".r.findAllMatchIn(b).map(_.group(1)))
+
+  /** Top-level PATCH/DELETE calls address `/svc/Customers(<key>)`; no read does. */
+  private def keyCalls(stub: ODataStub): Seq[String] =
+    stub.requests.toSeq.filter(_.startsWith("/svc/Customers("))
+
+  test("UPDATE with insertBatchSize=4 PATCHes the 7 Germany rows in 2 $batch round trips") {
+    val cat = catalog("ubat", v4, 4)
+    v4.patchedKeys.clear(); v4.batchBodies.clear(); v4.requests.clear()
+    spark.sql(s"UPDATE $cat.main.Customers SET CompanyName = 'Batched Co' WHERE Country = 'Germany'")
+    assert(v4.patchedKeys.map(_._1).sorted == (0 until 20 by 3).map(i => f"C$i%02d"),
+      v4.patchedKeys.toString)
+    assert(v4.patchedKeys.forall(_._2.contains(""""CompanyName":"Batched Co"""")))
+    assert(v4.batchBodies.size == 2, v4.batchBodies.toString)
+    assert(v4.batchBodies.map(b => subMethods(Seq(b)).size).sorted == Seq(3, 4))
+    assert(subMethods(v4.batchBodies.toSeq).forall(_ == "PATCH"))
+    assert(v4.batchBodies.forall(_.contains(""""url":"/Customers('C""")), v4.batchBodies.head)
+    assert(keyCalls(v4).isEmpty, s"top-level PATCH calls: ${keyCalls(v4)}")
+  }
+
+  test("DELETE with insertBatchSize: one key walk, no /$count, $batch DELETEs only") {
+    val cat = catalog("dbat", v4, 4)
+    v4.deletedKeys.clear(); v4.batchBodies.clear(); v4.requests.clear()
+    spark.sql(s"DELETE FROM $cat.main.Customers WHERE Country = 'Mexico'")
+    assert(v4.deletedKeys.sorted == (2 until 20 by 3).map(i => f"C$i%02d"),
+      v4.deletedKeys.toString)
+    assert(keyCalls(v4).isEmpty, s"top-level DELETE calls: ${keyCalls(v4)}")
+    assert(subMethods(v4.batchBodies.toSeq) == Seq.fill(6)("DELETE"), v4.batchBodies.toString)
+    assert(v4.batchBodies.size == 2, v4.batchBodies.toString)
+    assert(!v4.requests.exists(_.contains("/$count")), v4.requests.toString)
+    assert(v4.requests.count(_.contains("$select=CustomerID")) == 1, v4.requests.toString)
+  }
+
+  test("bulk DELETE with insertBatchSize empties the set through executor $batch DELETEs") {
+    val big = new ODataStub(v2 = false).start()
+    try {
+      big.rows = big.makeRows(12000)
+      big.applyDeletes = true
+      val cat = catalog("bbat", big, 50)
+      spark.sql(s"DELETE FROM $cat.main.Customers WHERE Revenue > 1000")
+      assert(big.deletedKeys.size == 11999, s"deleted ${big.deletedKeys.size}")
+      assert(big.rows.map(_("CustomerID")) == Seq("C00"), s"survivors: ${big.rows.size}")
+      assert(keyCalls(big).isEmpty, s"${keyCalls(big).size} top-level DELETE calls")
+      val sizes = big.batchBodies.map(b => subMethods(Seq(b)).size)
+      assert(sizes.sum == 11999 && sizes.forall(_ <= 50), sizes.toString)
+      val keyPages = big.requests.filter(r =>
+        r.contains("$select=CustomerID") && r.contains("$top=1000"))
+      assert(keyPages.size >= 12, s"expected >=12 bounded key pages, got ${keyPages.size}")
+    } finally big.stop()
+  }
+
+  test("MERGE sends its update, delete and insert as $batch sub-requests") {
+    val cat = catalog("mbat", v4, 10)
+    v4.patchedKeys.clear(); v4.deletedKeys.clear(); v4.postedItems.clear()
+    v4.batchBodies.clear(); v4.requests.clear()
+    spark.sql(
+      s"""MERGE INTO $cat.main.Customers t
+         |USING (SELECT * FROM VALUES ('C00', 'u'), ('C01', 'd'), ('N01', 'i') AS v(id, op)) s
+         |ON t.CustomerID = s.id
+         |WHEN MATCHED AND s.op = 'u' THEN UPDATE SET CompanyName = 'Merged Co'
+         |WHEN MATCHED AND s.op = 'd' THEN DELETE
+         |WHEN NOT MATCHED THEN INSERT (CustomerID, CompanyName, Country, Revenue, Founded)
+         |  VALUES (s.id, 'New Co', 'Spain', 1L, TIMESTAMP '2024-01-01 00:00:00')
+         |""".stripMargin)
+    assert(v4.patchedKeys.map(_._1) == Seq("C00"), v4.patchedKeys.toString)
+    assert(v4.deletedKeys == Seq("C01"), v4.deletedKeys.toString)
+    assert(v4.postedItems.size == 1 && v4.postedItems.head.contains(""""CustomerID":"N01""""),
+      v4.postedItems.toString)
+    assert(subMethods(v4.batchBodies.toSeq).sorted == Seq("DELETE", "PATCH", "POST"),
+      v4.batchBodies.toString)
+    assert(keyCalls(v4).isEmpty, s"top-level calls: ${keyCalls(v4)}")
+  }
+
+  test("a failing $batch sub-request fails the UPDATE statement") {
+    val cat = catalog("fbat", v4, 4)
+    v4.failKeys = Set("C03")
+    try {
+      val err = intercept[Exception](spark.sql(
+        s"UPDATE $cat.main.Customers SET CompanyName = 'Never' WHERE Country = 'Germany'"))
+      assert(messages(err).contains("$batch sub-requests failed"), messages(err))
+    } finally v4.failKeys = Set.empty
+  }
+
+  private def deltaWriter(partition: Int) = {
+    val schema = new org.apache.spark.sql.types.StructType()
+      .add("CustomerID", "string").add("CompanyName", "string")
+    new ODataDeltaWriterFactory(v4.serviceUrl + "/Customers", schema, "CustomerID",
+      keyIsString = true, graft.sources.http.HttpAuth(),
+      Some(ODataBatchTarget(10, v4.serviceUrl + "/$batch", "/Customers")))
+      .createWriter(partition, partition.toLong)
+  }
+  private def customer(fields: String*) =
+    org.apache.spark.sql.catalyst.InternalRow(
+      fields.map(org.apache.spark.unsafe.types.UTF8String.fromString): _*)
+
+  test("batched delta writer flushes before a second change to a buffered key") {
+    v4.batchBodies.clear(); v4.patchedKeys.clear()
+    val w = deltaWriter(0)
+    w.update(null, customer("C00"), customer("C00", "First"))
+    w.update(null, customer("C01"), customer("C01", "Other"))
+    w.update(null, customer("C00"), customer("C00", "Second"))
+    w.commit(); w.close()
+    // one batch may run its sub-requests in any order: the two C00 changes
+    // travel in separate batches, the first before the second
+    assert(v4.batchBodies.size == 2, v4.batchBodies.toString)
+    assert(v4.batchBodies.head.contains("First") && v4.batchBodies.head.contains("Other") &&
+      !v4.batchBodies.head.contains("Second"), v4.batchBodies.head)
+    assert(v4.batchBodies(1).contains("Second"), v4.batchBodies(1))
+    assert(v4.patchedKeys.map(_._1) == Seq("C00", "C01", "C00"), v4.patchedKeys.toString)
+  }
+
+  test("batched delta writer abort() drops its buffer unsent") {
+    v4.batchBodies.clear(); v4.patchedKeys.clear()
+    val w = deltaWriter(1)
+    w.update(null, customer("C00"), customer("C00", "Dropped"))
+    w.delete(null, customer("C01"))
+    w.abort(); w.close()
+    assert(v4.batchBodies.isEmpty && v4.patchedKeys.isEmpty, v4.batchBodies.toString)
+  }
+
+  test("insertBatchSize on an OData v2 service fails INSERT, UPDATE and DELETE before writing") {
+    val cat = catalog("v2bat", v2, 4)
+    v2.batchBodies.clear(); v2.postedItems.clear(); v2.patchedKeys.clear(); v2.deletedKeys.clear()
+    Seq(
+      s"""INSERT INTO $cat.main.Customers SELECT 'V1' AS CustomerID, 'V2 Co' AS CompanyName,
+         |'Spain' AS Country, CAST(1 AS BIGINT) AS Revenue,
+         |TIMESTAMP '2024-01-01 00:00:00' AS Founded""".stripMargin,
+      s"UPDATE $cat.main.Customers SET CompanyName = 'x' WHERE Country = 'Germany'",
+      s"DELETE FROM $cat.main.Customers WHERE Country = 'Mexico'"
+    ).foreach { sql =>
+      val err = intercept[Exception](spark.sql(sql))
+      val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(e => e.isInstanceOf[IllegalArgumentException] &&
+        e.getMessage.contains("insertBatchSize") && e.getMessage.contains("version 2")),
+        s"$sql\n${messages(err)}")
+    }
+    assert(v2.batchBodies.isEmpty && v2.postedItems.isEmpty && v2.patchedKeys.isEmpty &&
+      v2.deletedKeys.isEmpty)
+  }
+
   test("nested $expand (v4): Orders($expand=Items) gives two-level structs and parenthesized URL") {
     v4.requests.clear()
     val df = read(v4, "expand" -> "Orders($expand=Items)")

@@ -46,6 +46,10 @@ class ODataStub(v2: Boolean, pageSize: Int = 5) {
     * bulk-delete loop terminates on the live set like a real service. */
   @volatile var applyDeletes: Boolean = false
 
+  /** Customer keys whose PATCH/DELETE answers 404, top-level or inside a
+    * `$batch` (failing sub-request harness). */
+  @volatile var failKeys: Set[String] = Set.empty
+
   /** ODP delta queue: each pushDelta() becomes one delta batch; token Tk =
     * "k batches already consumed". */
   val deltas = mutable.ListBuffer[Seq[Map[String, Any]]]()
@@ -191,27 +195,19 @@ class ODataStub(v2: Boolean, pageSize: Int = 5) {
           respond(ex, 200, "text/plain", filtered.size.toString)
         }
       case p if p.startsWith("/svc/Customers(") && ex.getRequestMethod == "PATCH" =>
-        val key = p.stripPrefix("/svc/Customers(").stripSuffix(")")
-          .stripPrefix("'").stripSuffix("'")
         val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-        patchedKeys.synchronized { patchedKeys += (key -> body) }
-        respond(ex, 200, "application/json", "{}")
+        respond(ex, patch(customerKey(p), body), "application/json", "{}")
       case p if p.startsWith("/svc/Customers(") && ex.getRequestMethod == "DELETE" =>
-        val key = p.stripPrefix("/svc/Customers(").stripSuffix(")")
-          .stripPrefix("'").stripSuffix("'")
-        deletedKeys.synchronized {
-          deletedKeys += key
-          if (applyDeletes) rows = rows.filterNot(_("CustomerID") == key)
-        }
-        respond(ex, 200, "application/json", "{}")
+        respond(ex, delete(Seq(customerKey(p))).head, "application/json", "{}")
       case "/svc/Customers" if ex.getRequestMethod == "POST" =>
         val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
         postedItems.synchronized { postedItems += body }
         respond(ex, 201, "application/json", body)
       case p if p.endsWith("/$batch") && ex.getRequestMethod == "POST" =>
-        // OData JSON batch: POST sub-requests hit the item sinks; GET
-        // sub-requests are served from the Customers fixture (other sets
-        // answer an empty page) so read-side batching is drivable e2e
+        // OData JSON batch: POST sub-requests hit the item sinks, PATCH and
+        // DELETE the Customers keys; GET sub-requests are served from the
+        // Customers fixture (other sets answer an empty page) so read-side
+        // batching is drivable e2e
         val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
         batchBodies.synchronized { batchBodies += body }
         val reqs = jsonMapper.readTree(body).get("requests")
@@ -230,6 +226,12 @@ class ODataStub(v2: Boolean, pageSize: Int = 5) {
             requests.synchronized { requests += "batch:" + java.net.URLDecoder.decode(rel, "UTF-8") }
           }
         }
+        // one pass over the rows for all of a batch's deletes
+        val deleteIdx = (0 until reqs.size).filter { i =>
+          reqs.get(i).get("method").asText == "DELETE" && reqs.get(i).get("url").asText.contains("Customers(")
+        }
+        val deleteStatus = deleteIdx.zip(delete(deleteIdx.map(i =>
+          customerKey(reqs.get(i).get("url").asText)))).toMap
         val resps = (0 until reqs.size).map { i =>
           val r = reqs.get(i)
           val id = r.get("id").asText
@@ -238,6 +240,10 @@ class ODataStub(v2: Boolean, pageSize: Int = 5) {
           if (method == "POST" && (u.endsWith("Customers") || u.endsWith("items"))) {
             postedItems.synchronized { postedItems += r.get("body").toString }
             s"""{"id":"$id","status":201,"body":{}}"""
+          } else if (method == "PATCH" && u.contains("Customers(")) {
+            s"""{"id":"$id","status":${patch(customerKey(u), r.get("body").toString)},"body":{}}"""
+          } else if (method == "DELETE" && u.contains("Customers(")) {
+            s"""{"id":"$id","status":${deleteStatus(i)}}"""
           } else if (method == "GET") {
             val (path, rawQ) = u.indexOf('?') match {
               case -1 => (u, "")
@@ -306,6 +312,17 @@ class ODataStub(v2: Boolean, pageSize: Int = 5) {
              |  {"ID":"AttrOfCustomer","Description":"AttrOfCustomer"},
              |  {"ID":"Customers","Description":"Plain set"}]}}]}}"""
             .stripMargin.replace("\n", ""))
+      case "/throttled" =>
+        // 429 with Retry-After: 1 once per "key", then success
+        val key = q.getOrElse("key", "k")
+        val n = flakyCounts.synchronized {
+          val v = flakyCounts.getOrElse("throttled:" + key, 0) + 1
+          flakyCounts("throttled:" + key) = v; v
+        }
+        if (n == 1) {
+          ex.getResponseHeaders.set("Retry-After", "1")
+          respond(ex, 429, "text/plain", "slow down")
+        } else respond(ex, 200, "text/plain", s"ok after $n")
       case "/flaky" =>
         // fails twice per "key", then succeeds — for retry tests
         val key = q.getOrElse("key", "k")
@@ -702,6 +719,27 @@ class ODataStub(v2: Boolean, pageSize: Int = 5) {
       case "lt" => cmp < 0
       case "le" => cmp <= 0
     }
+  }
+
+  /** `CustomerID` of a `.../Customers('<id>')` URL. */
+  private def customerKey(url: String): String =
+    url.substring(url.indexOf("Customers(") + "Customers(".length).stripSuffix(")")
+      .stripPrefix("'").stripSuffix("'")
+
+  /** Records a PATCH of `key`; its status (404 for a [[failKeys]] key). */
+  private def patch(key: String, body: String): Int =
+    if (failKeys.contains(key)) 404
+    else { patchedKeys.synchronized { patchedKeys += (key -> body) }; 200 }
+
+  /** Records DELETEs of `keys` (removing them from [[rows]] under
+    * [[applyDeletes]]); one status per key, 404 for a [[failKeys]] key. */
+  private def delete(keys: Seq[String]): Seq[Int] = {
+    val ok = keys.filterNot(failKeys.contains)
+    if (ok.nonEmpty) deletedKeys.synchronized {
+      deletedKeys ++= ok
+      if (applyDeletes) { val gone = ok.toSet; rows = rows.filterNot(r => gone(r("CustomerID").toString)) }
+    }
+    keys.map(k => if (failKeys.contains(k)) 404 else 200)
   }
 
   private def respond(ex: HttpExchange, status: Int, ct: String, body: String): Unit = {
