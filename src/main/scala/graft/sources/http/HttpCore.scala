@@ -53,6 +53,12 @@ final case class HttpResult(
     else Charsets.toUtf8(body, contentType)
 }
 
+/** A non-200 answer to a GET, typed so a caller can act on one status (a 410
+  * resync, a 400 hint) and let every other status fail as it is. */
+final class HttpStatusError(val url: String, val status: Int,
+                            val headers: Map[String, String], body: String)
+  extends RuntimeException(s"GET $url -> HTTP $status: ${body.take(300)}")
+
 /** Charset handling per the reference (`src/charset_converter.cpp:7-93`):
   * convert textual payloads to UTF-8 based on the Content-Type charset;
   * ISO-8859-1/-15 and windows-1252 recognized, UTF-8 default; binary

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import graft.sources.http.{HttpAuth, HttpCore}
+import graft.sources.http.{HttpAuth, HttpCore, HttpStatusError}
 import scala.jdk.CollectionConverters._
 
 /** OData v2/v4 reader as a Spark DataSource V2 — the core deliverable of the
@@ -295,19 +295,13 @@ class ODataTable(conf: ODataConf, schema: StructType) extends Table
       if (meta.version == 2) u = u.withParam("$format", "json")
       u.render
     }
-    val http = HttpCore.shared
+    // whole pages until `cap` keys are in hand: no GET past the cap
     def fetchKeys(url: String, cap: Long): Seq[String] = {
       val out = Seq.newBuilder[String]
       var n = 0L
-      var next: Option[String] = Some(url)
-      while (next.isDefined && n < cap) {
-        val resp = http.get(next.get, auth = conf.auth, useCache = false)
-        if (resp.status != 200)
-          throw new RuntimeException(s"delete key fetch -> HTTP ${resp.status}")
-        val page = ODataJson.extractPage(ODataJson.parse(resp.text))
-        page.rows.foreach { row => out += row.get(key).asText; n += 1 }
-        next = page.nextLink
-      }
+      val pages = ODataPages.walk(url, conf.auth)
+      while (pages.hasNext && n < cap)
+        pages.next().rows.foreach { row => out += row.get(key).asText; n += 1 }
       out.result()
     }
     // locals only: the bulk path ships these to executors
@@ -1222,19 +1216,12 @@ private[odata] object KeysetWindows {
         .withParam("$top", per.toString)
       if (v2) u = u.withParam("$format", "json")
       val out = scala.collection.mutable.Buffer[Seq[String]]()
-      var next: Option[String] = Some(u.render)
-      while (next.isDefined && out.size < per) {
-        val resp = HttpCore.shared.get(next.get, useCache = false, auth = conf.auth)
-        if (resp.status != 200)
-          throw new RuntimeException(s"keyset sweep GET -> HTTP ${resp.status}")
-        val page = ODataJson.extractPage(ODataJson.parse(resp.text))
-        page.rows.foreach { n =>
-          val tuple = keys.indices.map { i =>
-            Option(n.get(keys(i))).filterNot(_.isNull).flatMap(renderKey(i, _))
-          }
-          if (tuple.forall(_.isDefined)) out += tuple.map(_.get)
+      val pages = ODataPages.walk(u.render, conf.auth)
+      while (pages.hasNext && out.size < per) pages.next().rows.foreach { n =>
+        val tuple = keys.indices.map { i =>
+          Option(n.get(keys(i))).filterNot(_.isNull).flatMap(renderKey(i, _))
         }
-        next = page.nextLink
+        if (tuple.forall(_.isDefined)) out += tuple.map(_.get)
       }
       out.take(math.min(per, Int.MaxValue.toLong).toInt).toSeq
     }
@@ -1387,23 +1374,15 @@ class ODataCountScan(conf: ODataConf, meta: ODataMeta, filterExpr: Option[String
           private def pageCount(auth: HttpAuth): Long = {
             var u = ODataUrl.parse(url.replace("/$count", ""))
             if (v2) u = u.withParam("$format", "json")
-            var next: Option[String] = Some(u.render)
-            var n = 0L
-            while (next.isDefined) {
-              val resp = HttpCore.shared.get(next.get, useCache = false, auth = auth)
-              if (resp.status != 200)
-                // some services reject query options on /$count yet serve
-                // filtered pages fine — that case succeeds here; if the pages
-                // ALSO 400, the pushed filter itself is the likely culprit
-                throw new RuntimeException(s"GET ${next.get} -> HTTP ${resp.status}" +
-                  pushedFilterStr.filter(_ => resp.status == 400)
-                    .map(f => s" (service may be rejecting the pushed filter: $f)")
-                    .getOrElse(""))
-              val page = ODataJson.extractPage(ODataJson.parse(resp.text))
-              n += page.rows.size
-              next = page.nextLink
+            try ODataPages.walk(u.render, auth).map(_.rows.size.toLong).sum
+            catch {
+              // some services reject query options on /$count yet serve
+              // filtered pages fine — that case succeeds here; if the pages
+              // ALSO 400, the pushed filter itself is the likely culprit
+              case e: HttpStatusError if e.status == 400 && pushedFilterStr.isDefined =>
+                throw new RuntimeException(e.getMessage +
+                  s" (service may be rejecting the pushed filter: ${pushedFilterStr.get})", e)
             }
-            n
           }
           override def get(): InternalRow = row
           override def close(): Unit = ()
@@ -1436,50 +1415,24 @@ class ODataPartitionReader(partition: ODataInputPartition, schema: StructType,
                            unwrap: Option[String] = None)
   extends PartitionReader[InternalRow] {
 
-  @transient private lazy val http = HttpCore.shared
-  private var nextUrl: Option[String] = Some(partition.url)
-  private var iter: Iterator[InternalRow] = Iterator.empty
   private var current: InternalRow = _
   private var pages = 0L
   private var rows = 0L
   private var bytes = 0L
-  // every page URL this partition has fetched: a server whose nextLink
-  // repeats one would otherwise keep the scan looping forever
-  private val fetched = scala.collection.mutable.HashSet[String]()
-  // first page delivered at planning via one driver-side `$batch` POST
-  // (keyset-window scans): consume it instead of the first GET
-  private var preloaded: Option[String] = partition.preloaded
-
-  override def next(): Boolean = {
-    while (!iter.hasNext && nextUrl.isDefined) fetchPage()
-    if (iter.hasNext) { current = iter.next(); rows += 1; true } else false
-  }
-
-  private def fetchPage(): Unit = {
-    val url = nextUrl.get
-    if (!fetched.add(url))
-      throw new RuntimeException(s"OData nextLink loop: $url was already fetched by this partition")
-    val text = preloaded match {
-      case Some(body) =>
-        preloaded = None
-        bytes += body.length
-        body
-      case None =>
-        val headers = pageSize.map(n => "Prefer" -> s"odata.maxpagesize=$n").toMap
-        val resp = http.get(url, headers = headers, auth = auth, useCache = false)
-        if (resp.status != 200)
-          throw new RuntimeException(s"GET $url -> HTTP ${resp.status}: ${resp.text.take(500)}")
-        bytes += resp.body.length
-        resp.text
-    }
+  // a first page delivered at planning via one driver-side `$batch` POST
+  // (keyset-window scans) stands in for the walk's first GET
+  private val decoded: Iterator[InternalRow] = ODataPages.walk(partition.url, auth,
+    pageSize.map(n => "Prefer" -> s"odata.maxpagesize=$n").toMap,
+    preloaded = partition.preloaded).flatMap { p =>
     pages += 1
-    val page = ODataJson.extractPage(ODataJson.parse(text))
-    iter = page.rows.iterator.map { n =>
-      val eff = unwrap.map(ODataJson.unwrapNode(n, _)).getOrElse(n)
-      ODataJson.decodeRow(eff, schema)
+    bytes += p.bytes
+    p.rows.iterator.map { n =>
+      ODataJson.decodeRow(unwrap.map(ODataJson.unwrapNode(n, _)).getOrElse(n), schema)
     }
-    nextUrl = page.nextLink
   }
+
+  override def next(): Boolean =
+    if (decoded.hasNext) { current = decoded.next(); rows += 1; true } else false
 
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
     Array(ODataTaskMetric("odataPagesFetched", pages),

@@ -3,7 +3,7 @@ package graft.sources.services
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.http.{HttpAuth, HttpCore, SecretRegistry}
-import graft.sources.odata.ODataJson
+import graft.sources.odata.ODataPages
 
 /** OneDrive/SharePoint Excel workbook surface via the Graph workbook API —
   * the port of `graph_excel_functions.cpp` (1,112 LoC): file listing,
@@ -76,20 +76,10 @@ object Excel {
     * the table's width). */
   def tableColumnNames(itemUrl: String, table: String, a: HttpAuth): Seq[String] = {
     val url = s"$itemUrl/workbook/tables/$table/columns?$$select=id,index,name"
-    var next: Option[String] = Some(url)
-    val cols = Seq.newBuilder[(Int, String)]
-    while (next.isDefined) {
-      val resp = HttpCore.shared.get(next.get, auth = a, useCache = false)
-      if (resp.status != 200)
-        throw new RuntimeException(s"GET ${next.get} -> HTTP ${resp.status}")
-      val page = ODataJson.extractPage(ODataJson.parse(resp.text))
-      page.rows.foreach { c =>
-        cols += ((Option(c.get("index")).map(_.asInt).getOrElse(0),
-          Option(c.get("name")).map(_.asText).getOrElse("")))
-      }
-      next = page.nextLink
-    }
-    cols.result().sortBy(_._1).map(_._2)
+    ODataPages.walk(url, a).flatMap(_.rows).map { c =>
+      (Option(c.get("index")).map(_.asInt).getOrElse(0),
+        Option(c.get("name")).map(_.asText).getOrElse(""))
+    }.toSeq.sortBy(_._1).map(_._2)
   }
 
   /** Typed read of a named table (reference `graph_excel_table_data`): column
@@ -138,25 +128,15 @@ object Excel {
     val item = itemUrl(baseUrl, filePath, driveId)
     val a = auth(spark, item, secret)
     val rowsUrl = s"$item/workbook/tables/$table/rows"
-    var next: Option[String] = Some(rowsUrl)
-    val matches = Seq.newBuilder[Int]
-    while (next.isDefined) {
-      val resp = HttpCore.shared.get(next.get, auth = a, useCache = false)
-      if (resp.status != 200)
-        throw new RuntimeException(s"GET ${next.get} -> HTTP ${resp.status}")
-      val page = ODataJson.extractPage(ODataJson.parse(resp.text))
-      page.rows.foreach { r =>
-        val idx = Option(r.get("index")).map(_.asInt).getOrElse(-1)
-        val values = r.get("values")
-        val cell =
-          if (values != null && values.isArray && values.size() > 0 &&
-            values.get(0).size() > colIndex) values.get(0).get(colIndex).asText
-          else null
-        if (cell == colValue) matches += idx
-      }
-      next = page.nextLink
-    }
-    val toDelete = matches.result().sorted.reverse
+    val matches = ODataPages.walk(rowsUrl, a).flatMap(_.rows).filter { r =>
+      val values = r.get("values")
+      val cell =
+        if (values != null && values.isArray && values.size() > 0 &&
+          values.get(0).size() > colIndex) values.get(0).get(colIndex).asText
+        else null
+      cell == colValue
+    }.map(r => Option(r.get("index")).map(_.asInt).getOrElse(-1)).toSeq
+    val toDelete = matches.sorted.reverse
     toDelete.foreach { i =>
       val del = HttpCore.shared.request("DELETE",
         s"$rowsUrl/itemAt(index=$i)", None, auth = a)

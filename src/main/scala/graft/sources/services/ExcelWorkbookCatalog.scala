@@ -9,8 +9,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import graft.sources.http.{HttpAuth, HttpCore}
-import graft.sources.odata.ODataJson
+import graft.sources.http.HttpAuth
+import graft.sources.odata.ODataPages
 import scala.jdk.CollectionConverters._
 
 /** Excel workbook as a Spark catalog — the port of the reference's
@@ -59,19 +59,9 @@ class ExcelWorkbookCatalog extends TableCatalog with SupportsNamespaces {
   override def dropNamespace(namespace: Array[String], cascade: Boolean): Boolean =
     throw new UnsupportedOperationException("excel workbook namespaces are fixed")
 
-  private def tableNames: Seq[String] = {
-    var next: Option[String] = Some(s"$itemUrl/workbook/tables")
-    val out = Seq.newBuilder[String]
-    while (next.isDefined) {
-      val resp = HttpCore.shared.get(next.get, auth = auth, useCache = false)
-      if (resp.status != 200)
-        throw new RuntimeException(s"GET ${next.get} -> HTTP ${resp.status}")
-      val page = ODataJson.extractPage(ODataJson.parse(resp.text))
-      out ++= page.rows.flatMap(n => Option(n.get("name")).map(_.asText))
-      next = page.nextLink
-    }
-    out.result()
-  }
+  private def tableNames: Seq[String] =
+    ODataPages.walk(s"$itemUrl/workbook/tables", auth).flatMap(_.rows)
+      .flatMap(n => Option(n.get("name")).map(_.asText)).toSeq
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     if (!namespaceExists(namespace))
@@ -153,29 +143,19 @@ class ExcelRowsScan(rowsUrl: String, fullSchema: StructType,
     new PartitionReaderFactory {
       override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
         new PartitionReader[InternalRow] {
-          private val a = HttpAuth(b, u, p)
-          private var nextUrl: Option[String] =
-            Some(partition.asInstanceOf[ExcelRowsPartition].url)
-          private var iter: Iterator[InternalRow] = Iterator.empty
-          private var current: InternalRow = _
-          override def next(): Boolean = {
-            while (!iter.hasNext && nextUrl.isDefined) {
-              val resp = HttpCore.shared.get(nextUrl.get, auth = a, useCache = false)
-              if (resp.status != 200)
-                throw new RuntimeException(s"GET ${nextUrl.get} -> HTTP ${resp.status}")
-              val page = ODataJson.extractPage(ODataJson.parse(resp.text))
-              iter = page.rows.iterator.map { item =>
-                val vals = item.get("values")
-                val row = if (vals != null && vals.isArray && vals.size() > 0) vals.get(0) else null
-                InternalRow.fromSeq(indexes.toSeq.map { i =>
-                  if (row == null || i >= row.size() || row.get(i).isNull) null
-                  else UTF8String.fromString(row.get(i).asText)
-                })
-              }
-              nextUrl = page.nextLink
+          private val rows = ODataPages.walk(
+            partition.asInstanceOf[ExcelRowsPartition].url, HttpAuth(b, u, p))
+            .flatMap(_.rows).map { item =>
+              val vals = item.get("values")
+              val row = if (vals != null && vals.isArray && vals.size() > 0) vals.get(0) else null
+              InternalRow.fromSeq(indexes.toSeq.map { i =>
+                if (row == null || i >= row.size() || row.get(i).isNull) null
+                else UTF8String.fromString(row.get(i).asText)
+              })
             }
-            if (iter.hasNext) { current = iter.next(); true } else false
-          }
+          private var current: InternalRow = _
+          override def next(): Boolean =
+            if (rows.hasNext) { current = rows.next(); true } else false
           override def get(): InternalRow = current
           override def close(): Unit = ()
         }

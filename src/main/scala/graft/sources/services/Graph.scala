@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.sources.http.{HttpAuth, HttpCore, SecretRegistry}
-import graft.sources.odata.ODataJson
+import graft.sources.odata.{ODataJson, ODataPages}
 import graft.writes.RestWrites
 import scala.jdk.CollectionConverters._
 
@@ -71,19 +71,8 @@ object Graph {
 
   /** Driver-side paged GET of every item of a Graph collection — for
     * discovery/resolution steps only (site ids, list columns), never data. */
-  private def pagedValues(url: String, a: HttpAuth): Seq[JsonNode] = {
-    val out = Seq.newBuilder[JsonNode]
-    var next: Option[String] = Some(url)
-    while (next.isDefined) {
-      val resp = HttpCore.shared.get(next.get, auth = a, useCache = false)
-      if (resp.status != 200)
-        throw new RuntimeException(s"GET ${next.get} -> HTTP ${resp.status}: ${resp.text.take(300)}")
-      val page = ODataJson.extractPage(ODataJson.parse(resp.text))
-      out ++= page.rows
-      next = page.nextLink
-    }
-    out.result()
-  }
+  private def pagedValues(url: String, a: HttpAuth): Seq[JsonNode] =
+    ODataPages.walk(url, a).flatMap(_.rows).toSeq
 
   private def getJson(url: String, a: HttpAuth): JsonNode = {
     val resp = HttpCore.shared.get(url, auth = a, useCache = false)

@@ -197,39 +197,29 @@ object Services {
     val url = baseUrl.stripSuffix("/") +
       "/sap/opu/odata/iwfnd/catalogservice;v=2/ServiceCollection?$expand=EntitySets&$format=json"
     val auth = SecretRegistry.authFor(spark, url, secret)
-    val out = Seq.newBuilder[(String, String, String, String, String, Boolean)]
-    var next: Option[String] = Some(url)
-    while (next.isDefined) {
-      val resp = HttpCore.shared.get(next.get, auth = auth, useCache = false)
-      if (resp.status != 200)
-        throw new RuntimeException(s"GET ${next.get} -> HTTP ${resp.status}")
-      val page = graft.sources.odata.ODataJson.extractPage(
-        graft.sources.odata.ODataJson.parse(resp.text))
-      page.rows.foreach { svc =>
-        def s(n: com.fasterxml.jackson.databind.JsonNode, k: String): String = {
-          val v = n.get(k); if (v == null || v.isNull) "" else v.asText
-        }
-        val serviceId = s(svc, "ID")
-        val serviceDesc = s(svc, "Description")
-        val serviceUrl = s(svc, "ServiceUrl")
-        val sets = Option(svc.get("EntitySets"))
-          .map(es => if (es.has("results")) es.get("results") else es)
-          .filter(_.isArray).map(_.elements.asScala.toSeq).getOrElse(Seq.empty)
-        sets.foreach { es =>
-          val id = s(es, "ID")
-          val upper = id.toUpperCase
-          if (upper.startsWith("ENTITYOF") || upper.startsWith("FACTSOF") ||
-            upper.startsWith("ATTROF")) {
-            val desc = s(es, "Description")
-            val setUrl = serviceUrl.stripSuffix("/") + "/" +
-              (if (desc.nonEmpty) desc else id)
-            out += ((serviceId, serviceDesc, id, desc, setUrl, true))
-          }
-        }
-      }
-      next = page.nextLink
+    def s(n: com.fasterxml.jackson.databind.JsonNode, k: String): String = {
+      val v = n.get(k); if (v == null || v.isNull) "" else v.asText
     }
-    out.result().toDF("service_id", "service_description", "entity_set_id",
+    val out = graft.sources.odata.ODataPages.walk(url, auth).flatMap(_.rows).flatMap { svc =>
+      val serviceId = s(svc, "ID")
+      val serviceDesc = s(svc, "Description")
+      val serviceUrl = s(svc, "ServiceUrl")
+      val sets = Option(svc.get("EntitySets"))
+        .map(es => if (es.has("results")) es.get("results") else es)
+        .filter(_.isArray).map(_.elements.asScala.toSeq).getOrElse(Seq.empty)
+      sets.flatMap { es =>
+        val id = s(es, "ID")
+        val upper = id.toUpperCase
+        if (upper.startsWith("ENTITYOF") || upper.startsWith("FACTSOF") ||
+          upper.startsWith("ATTROF")) {
+          val desc = s(es, "Description")
+          val setUrl = serviceUrl.stripSuffix("/") + "/" +
+            (if (desc.nonEmpty) desc else id)
+          Some((serviceId, serviceDesc, id, desc, setUrl, true))
+        } else None
+      }
+    }.toSeq
+    out.toDF("service_id", "service_description", "entity_set_id",
       "entity_set_description", "entity_set_url", "change_tracking")
   }
 

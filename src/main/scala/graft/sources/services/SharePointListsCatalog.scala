@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import graft.sources.http.{HttpAuth, HttpCore}
-import graft.sources.odata.{ODataConf, ODataScanBuilder}
+import graft.sources.odata.{ODataConf, ODataPages, ODataScanBuilder}
 import scala.jdk.CollectionConverters._
 
 /** A SharePoint site's lists as a read-WRITE Spark catalog — the port of the
@@ -71,23 +71,12 @@ class SharePointListsCatalog extends TableCatalog with SupportsNamespaces {
   override def dropNamespace(namespace: Array[String], cascade: Boolean): Boolean =
     throw new UnsupportedOperationException("sharepoint namespaces are fixed")
 
-  private def lists(): Seq[(String, String, String)] = { // (id, name, displayName)
-    val out = Seq.newBuilder[(String, String, String)]
-    var next: Option[String] = Some(s"${graphBase.stripSuffix("/")}/sites/$siteId/lists")
-    while (next.isDefined) {
-      val resp = HttpCore.shared.get(next.get, auth = auth, useCache = false)
-      if (resp.status != 200)
-        throw new RuntimeException(s"GET ${next.get} -> HTTP ${resp.status}")
-      val page = graft.sources.odata.ODataJson.extractPage(
-        graft.sources.odata.ODataJson.parse(resp.text))
-      page.rows.foreach { n =>
+  private def lists(): Seq[(String, String, String)] = // (id, name, displayName)
+    ODataPages.walk(s"${graphBase.stripSuffix("/")}/sites/$siteId/lists", auth)
+      .flatMap(_.rows).map { n =>
         def s(k: String) = Option(n.get(k)).filterNot(_.isNull).map(_.asText).getOrElse("")
-        out += ((s("id"), s("name"), s("displayName")))
-      }
-      next = page.nextLink
-    }
-    out.result()
-  }
+        (s("id"), s("name"), s("displayName"))
+      }.toSeq
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     if (!namespaceExists(namespace))

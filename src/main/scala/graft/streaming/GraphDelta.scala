@@ -8,8 +8,8 @@ import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import graft.sources.http.{HttpAuth, HttpCore}
-import graft.sources.odata.ODataJson
+import graft.sources.http.{HttpAuth, HttpCore, HttpStatusError}
+import graft.sources.odata.ODataPages
 
 /** Microsoft Graph delta-query CDC as a Structured Streaming source —
   * beyond reference (the reference reads Graph snapshots only; Graph's
@@ -95,44 +95,35 @@ class GraphDeltaClient(auth: HttpAuth = HttpAuth(),
     val files = Seq.newBuilder[String]
     var rowCount = 0L
     var pageIdx = 0
-    var next: Option[String] = Some(token.getOrElse(url))
     var newToken: Option[String] = None
-    var status = 0
-    var resyncedOnce = false
-    while (next.isDefined) {
-      val resp = http.get(next.get, headers = headers, auth = auth, useCache = false)
-      status = resp.status
-      if (resp.status == 410 && !resyncedOnce) {
-        // token expired: full resync from the server-provided restart URL
-        resyncedOnce = true
-        next = Some(resp.headers.get("location").getOrElse(url))
-      } else if (resp.status != 200) {
-        throw new RuntimeException(s"Graph delta GET ${next.get} -> HTTP ${resp.status}")
-      } else {
-        val root = ODataJson.parse(resp.text)
-        val page = ODataJson.extractPage(root)
-        if (page.rows.nonEmpty) {
-          // tombstones: lift @removed.reason into a plain field before spill
-          var removed = false
-          page.rows.foreach {
-            case o: com.fasterxml.jackson.databind.node.ObjectNode if o.has("@removed") =>
-              removed = true
-              val reason = Option(o.get("@removed").get("reason"))
-                .map(_.asText).getOrElse("deleted")
-              o.remove("@removed")
-              o.put("removedReason", reason)
-            case _ =>
-          }
-          val body = if (removed) root.toString else resp.text
-          files += store.writePage(subId, batch, pageIdx, body)
-          pageIdx += 1
-          rowCount += page.rows.size
+    def spill(from: String): Unit = ODataPages.walk(from, auth, headers, http).foreach { p =>
+      if (p.rows.nonEmpty) {
+        // tombstones: lift @removed.reason into a plain field before spill
+        var removed = false
+        p.rows.foreach {
+          case o: com.fasterxml.jackson.databind.node.ObjectNode if o.has("@removed") =>
+            removed = true
+            val reason = Option(o.get("@removed").get("reason"))
+              .map(_.asText).getOrElse("deleted")
+            o.remove("@removed")
+            o.put("removedReason", reason)
+          case _ =>
         }
-        Option(root.get("@odata.deltaLink")).filter(!_.isNull)
-          .foreach(l => newToken = Some(l.asText))
-        next = page.nextLink
+        files += store.writePage(subId, batch, pageIdx, if (removed) p.root.toString else p.text)
+        pageIdx += 1
+        rowCount += p.rows.size
       }
+      Option(p.root.get("@odata.deltaLink")).filter(!_.isNull)
+        .foreach(l => newToken = Some(l.asText))
     }
-    OdpPagedResult(files.result(), rowCount, newToken, preferenceApplied = false, status)
+    try spill(token.getOrElse(url))
+    catch {
+      // token expired: one full resync from the server-provided restart URL,
+      // as a fresh walk (the restart URL is no repeat of the expired one)
+      case e: HttpStatusError if e.status == 410 =>
+        spill(e.headers.getOrElse("location", url))
+    }
+    // every page answered 200: any other status threw inside the walk
+    OdpPagedResult(files.result(), rowCount, newToken, preferenceApplied = false, httpStatus = 200)
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.types.StructType
 import graft.sources.http.{HttpAuth, HttpCore}
-import graft.sources.odata.{EdmxParser, ODataJson, ODataUrl}
+import graft.sources.odata.{EdmxParser, ODataJson, ODataPages, ODataUrl}
 
 /** SAP ODP incremental / CDC reads — the reference's only streaming
   * capability (SURVEY.md §2.6; `src/odp_*.cpp`, ~3.3k LoC):
@@ -205,34 +205,25 @@ class OdpClient(auth: HttpAuth = HttpAuth(),
     val files = Seq.newBuilder[String]
     var rowCount = 0L
     var pageIdx = 0
-    var next: Option[String] = Some(first)
     var newToken: Option[String] = None
     var prefApplied = false
-    var status = 0
-    while (next.isDefined) {
-      val resp = http.get(next.get, headers = headers, auth = auth, useCache = false)
-      status = resp.status
-      if (resp.status != 200)
-        throw new RuntimeException(s"ODP GET ${next.get} -> HTTP ${resp.status}")
-      prefApplied |= resp.headers.get("preference-applied").exists(_.contains("track-changes"))
-      val body = resp.text
-      val root = ODataJson.parse(body)
-      val page = ODataJson.extractPage(root)
-      if (page.rows.nonEmpty) {
-        files += store.writePage(subId, batch, pageIdx, body)
+    ODataPages.walk(first, auth, headers, http).foreach { p =>
+      prefApplied |= p.headers.get("preference-applied").exists(_.contains("track-changes"))
+      if (p.rows.nonEmpty) {
+        files += store.writePage(subId, batch, pageIdx, p.text)
         pageIdx += 1
-        rowCount += page.rows.size
+        rowCount += p.rows.size
       }
       // delta link: v4 @odata.deltaLink / v2 __delta on the last page
-      val deltaLink = Option(root.get("@odata.deltaLink")).map(_.asText)
-        .orElse(Option(root.path("d").get("__delta")).map(_.asText))
+      val deltaLink = Option(p.root.get("@odata.deltaLink")).map(_.asText)
+        .orElse(Option(p.root.path("d").get("__delta")).map(_.asText))
       deltaLink.foreach { l =>
         newToken = V2TokenRe.findFirstMatchIn(l).map(_.group(1))
           .orElse(Some(l.substring(l.lastIndexOf('=') + 1)))
       }
-      next = page.nextLink
     }
-    OdpPagedResult(files.result(), rowCount, newToken, prefApplied, status)
+    // every page answered 200: any other status threw inside the walk
+    OdpPagedResult(files.result(), rowCount, newToken, prefApplied, httpStatus = 200)
   }
 }
 

@@ -5,7 +5,8 @@ import scala.jdk.CollectionConverters._
 
 /** Pins the one session config every entry point shares, and keeps it the
   * only one: a second session builder or another dev `main` under `src/`
-  * fails here. */
+  * fails here, and so does a hand-written nextLink loop outside
+  * `ODataPages`. */
 class GraftSessionSpec extends SparkSpecBase {
 
   test("GraftSession.local: extensions, UTC, nanosAsLong, partitions = cpus, no UI") {
@@ -21,23 +22,37 @@ class GraftSessionSpec extends SparkSpecBase {
     assert(s.sparkContext.uiWebUrl.isEmpty)
   }
 
-  test("src/ has one session builder and only the Bench, Verify and Probe mains") {
+  private lazy val sources: Seq[(String, String)] = {
     val root = Paths.get("src")
     assert(Files.isDirectory(root), s"run from the repo root: ${root.toAbsolutePath}")
-    val sources: Seq[(String, String)] = {
-      val walk = Files.walk(root)
-      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-        .map((p: Path) => root.relativize(p).toString -> Files.readString(p))
-      finally walk.close()
-    }
-    // split literals so this file does not count itself
-    def filesWith(needle: String): Set[String] =
-      sources.collect { case (p, text) if text.contains(needle) => p }.toSet
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      .map((p: Path) => root.relativize(p).toString -> Files.readString(p))
+    finally walk.close()
+  }
+  // split literals so this file does not count itself
+  private def filesWith(needle: String): Set[String] =
+    sources.collect { case (p, text) if text.contains(needle) => p }.toSet
+
+  test("src/ has one session builder and only the Bench, Verify and Probe mains") {
     assert(filesWith("SparkSession" + ".builder") ==
       Set("main/scala/graft/GraftSession.scala"))
     assert(filesWith("def " + "main(") == Set(
       "main/scala/graft/Bench.scala",
       "main/scala/graft/Verify.scala",
       "test/scala/graft/testkit/Probe.scala"))
+  }
+
+  test("src/main pages through nextLinks only in ODataPages: no hand-written page loop") {
+    def mainFilesWith(needle: String): Set[String] =
+      filesWith(needle).filter(_.startsWith("main/"))
+    // `@odata.nextLink` in payload keys and docs is not a read of the field
+    val reads = sources.collect { case (p, text) if p.startsWith("main/") &&
+      text.replace("@odata" + ".nextLink", "").contains("." + "nextLink") => p }.toSet
+    assert(reads == Set("main/scala/graft/sources/odata/ODataPages.scala"))
+    assert(mainFilesWith("nextLink" + ": Option[String]") ==
+      Set("main/scala/graft/sources/odata/ODataJson.scala"))
+    assert(mainFilesWith("var next" + ": Option[String]").isEmpty)
+    assert(mainFilesWith("var next" + "Url") == Set("main/scala/graft/sources/odata/ODataPages.scala"))
   }
 }

@@ -3,11 +3,11 @@ package graft.operators
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
 
-/** Regression tests for the ADVICE r11 findings fixed in round 12: the
-  * topk_rows SQL registration now validates arity / null literals / struct
+/** The topk_rows SQL registration validates arity, null literals and struct
   * field count at analysis time instead of failing lazily on executors
-  * (IndexOutOfBounds in schema.fields(1), NPE in the builder). */
-class AdviceR11Spec extends SparkSpecBase {
+  * (IndexOutOfBounds in schema.fields(1), NPE in the builder), and its
+  * codegen'd comparator keeps window-equivalent ordering. */
+class TopKRowsSpec extends SparkSpecBase {
   import spark.implicits._
 
   private def analyze(sql: String): Unit =

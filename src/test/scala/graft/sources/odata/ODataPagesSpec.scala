@@ -1,0 +1,58 @@
+package graft.sources.odata
+
+import graft.sources.http.{HttpAuth, HttpStatusError}
+import graft.testkit.ODataStub
+import org.scalatest.BeforeAndAfterAll
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The one nextLink walker: lazy paging (one GET per pulled page, none on
+  * `hasNext`), typed non-200 failures, and a repeated-link guard scoped to a
+  * single walk. The stub serves 20 customers in pages of 5. */
+class ODataPagesSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  var stub: ODataStub = _
+  override def beforeAll(): Unit = stub = new ODataStub(v2 = false).start()
+  override def afterAll(): Unit = if (stub != null) stub.stop()
+
+  private def customers = stub.serviceUrl + "/Customers"
+
+  test("a walk capped after k pages sends exactly k GETs, and hasNext sends none") {
+    stub.requests.clear()
+    val pages = ODataPages.walk(customers, HttpAuth())
+    assert(pages.hasNext)
+    assert(stub.requests.isEmpty, s"hasNext sent ${stub.requests}")
+    val taken = Seq(pages.next(), pages.next())
+    assert(taken.map(_.rows.size) == Seq(5, 5))
+    assert(pages.hasNext)
+    assert(stub.requests.size == 2, stub.requests.toString)
+    assert(pages.map(_.rows.size).sum == 10)
+    assert(stub.requests.size == 4, stub.requests.toString)
+  }
+
+  test("a non-200 answer surfaces HttpStatusError with its status and location header") {
+    val gone = stub.serviceUrl + "/Gone"
+    stub.extraStatuses("/svc/Gone") = (410, Map("Location" -> customers))
+    try {
+      val e = intercept[HttpStatusError](ODataPages.walk(gone, HttpAuth()).next())
+      assert(e.status == 410 && e.url == gone)
+      assert(e.headers.get("location").contains(customers), e.headers.toString)
+      assert(e.getMessage == s"GET $gone -> HTTP 410: answered 410", e.getMessage)
+    } finally stub.extraStatuses.remove("/svc/Gone")
+  }
+
+  test("two separate walks of one URL do not trip the repeated-link guard") {
+    val first = ODataPages.walk(customers, HttpAuth()).flatMap(_.rows).size
+    val second = ODataPages.walk(customers, HttpAuth()).flatMap(_.rows).size
+    assert(first == 20 && second == 20)
+  }
+
+  test("within one walk a repeated link throws, and a preloaded first page counts as fetched") {
+    stub.requests.clear()
+    val selfLinked = s"""{"value":[{"CustomerID":"X"}],"@odata.nextLink":"$customers"}"""
+    val pages = ODataPages.walk(customers, HttpAuth(), preloaded = Some(selfLinked))
+    assert(pages.next().rows.size == 1)
+    val e = intercept[RuntimeException](pages.next())
+    assert(e.getMessage.startsWith(s"OData nextLink loop: $customers"), e.getMessage)
+    assert(stub.requests.isEmpty, s"the preloaded page was fetched again: ${stub.requests}")
+  }
+}

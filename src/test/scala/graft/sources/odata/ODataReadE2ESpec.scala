@@ -978,4 +978,31 @@ class ODataReadE2ESpec extends SparkSpecBase with BeforeAndAfterAll with TimeLim
     } finally looping.stop()
   }
 
+  test("COUNT(*) page walk on a repeating nextLink fails loudly instead of paging forever") {
+    val looping = new ODataStub(v2 = false).start()
+    looping.loopNextLink = true
+    looping.countStatus = 501
+    try {
+      val err = failAfter(Span(60, Seconds)) {
+        intercept[Exception](read(looping).count())
+      }
+      assert(messages(err).contains("OData nextLink loop:"), messages(err))
+    } finally looping.stop()
+  }
+
+  test("DELETE on a repeating nextLink key walk fails loudly and deletes nothing") {
+    val looping = new ODataStub(v2 = false).start()
+    looping.loopNextLink = true
+    try {
+      val cat = s"ldel${looping.port}"
+      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.odata.ODataCatalog")
+      spark.conf.set(s"spark.sql.catalog.$cat.url", looping.serviceUrl)
+      val err = failAfter(Span(60, Seconds)) {
+        intercept[Exception](spark.sql(s"DELETE FROM $cat.main.Customers WHERE Country = 'Mexico'"))
+      }
+      assert(messages(err).contains("OData nextLink loop:"), messages(err))
+      assert(looping.deletedKeys.isEmpty, looping.deletedKeys.toString)
+    } finally looping.stop()
+  }
+
 }

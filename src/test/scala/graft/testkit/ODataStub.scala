@@ -96,6 +96,9 @@ class ODataStub(v2: Boolean, pageSize: Int = 5) {
   /** Ad-hoc routes: (method, path) -> body served as application/json. */
   val extraBodies = mutable.Map[(String, String), String]()
 
+  /** Ad-hoc error routes: path -> (status, response headers), any method. */
+  val extraStatuses = mutable.Map[String, (Int, Map[String, String])]()
+
   private var server: HttpServer = _
   def port: Int = server.getAddress.getPort
   def serviceUrl: String = s"http://localhost:$port/svc"
@@ -186,6 +189,10 @@ class ODataStub(v2: Boolean, pageSize: Int = 5) {
       case p if extraBodies.synchronized { extraBodies.contains((ex.getRequestMethod, p)) } =>
         respond(ex, 200, "application/json",
           extraBodies.synchronized { extraBodies((ex.getRequestMethod, p)) })
+      case p if extraStatuses.synchronized { extraStatuses.contains(p) } =>
+        val (status, headers) = extraStatuses.synchronized { extraStatuses(p) }
+        headers.foreach { case (k, v) => ex.getResponseHeaders.set(k, v) }
+        respond(ex, status, "text/plain", s"answered $status")
       case "/svc/$metadata" =>
         respond(ex, 200, "application/xml", metadataXml)
       case "/svc/Customers/$count" =>
