@@ -53,11 +53,12 @@ final case class HttpResult(
     else Charsets.toUtf8(body, contentType)
 }
 
-/** A non-200 answer to a GET, typed so a caller can act on one status (a 410
-  * resync, a 400 hint) and let every other status fail as it is. */
-final class HttpStatusError(val url: String, val status: Int,
+/** A failed answer — a non-200 page GET or a non-2xx write — typed so a
+  * caller can act on one status (a 410 resync, a 400 hint) and let every
+  * other status fail as it is. */
+final class HttpStatusError(val method: String, val url: String, val status: Int,
                             val headers: Map[String, String], body: String)
-  extends RuntimeException(s"GET $url -> HTTP $status: ${body.take(300)}")
+  extends RuntimeException(s"$method $url -> HTTP $status: ${body.take(300)}")
 
 /** Charset handling per the reference (`src/charset_converter.cpp:7-93`):
   * convert textual payloads to UTF-8 based on the Content-Type charset;

@@ -60,6 +60,16 @@ object SecretRegistry {
   def authFor(spark: SparkSession, url: String, named: Option[String] = None): HttpAuth =
     named.flatMap(byName(spark, _)).orElse(forUrl(spark, url))
       .map(_.auth).getOrElse(HttpAuth())
+
+  /** A catalog's or sink's credentials for `url` from its lower-cased
+    * options: explicit `bearertoken` or `user`/`password` win; otherwise the
+    * `secret` option or the registry scope-matches (reference secret
+    * resolution order). */
+  def authFrom(opts: Map[String, String], url: String): HttpAuth = {
+    val explicit = HttpAuth(opts.get("bearertoken"), opts.get("user"), opts.get("password"))
+    if (explicit.bearer.isDefined || explicit.basicUser.isDefined) explicit
+    else authFor(SparkSession.active, url, opts.get("secret"))
+  }
 }
 
 /** OAuth2: client-credentials (machine auth) and the full PKCE

@@ -51,7 +51,7 @@ object ODataPages {
             (body, body.length.toLong, Map.empty[String, String])
           case None =>
             val r = http.get(u, headers = headers, auth = auth, useCache = false)
-            if (r.status != 200) throw new HttpStatusError(r.url, r.status, r.headers, r.text)
+            if (r.status != 200) throw new HttpStatusError("GET", r.url, r.status, r.headers, r.text)
             (r.text, r.body.length.toLong, r.headers)
         }
         val root = ODataJson.parse(text)

@@ -6,9 +6,10 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import graft.sources.http.{HttpAuth, HttpCore, HttpStatusError}
+import graft.writes.{DeltaShape, RestBatchWrite, RestChanges, RestInsertWriterFactory, RestRowLevelOperation, RestWrites}
 import scala.jdk.CollectionConverters._
 
 /** OData v2/v4 reader as a Spark DataSource V2 — the core deliverable of the
@@ -222,8 +223,8 @@ class ODataTable(conf: ODataConf, schema: StructType) extends Table
     val key = et.keys.head
     val keyIsString = et.properties.find(_.name == key).exists(_.edmType == "Edm.String")
     val batch = batchTarget(meta)
-    () => new ODataRowLevelOperation(conf, meta.entitySetUrl, schema,
-      info.command(), key, keyIsString, batch)
+    () => new RestRowLevelOperation(info.command(), () => new ODataScanBuilder(conf, schema),
+      meta.entitySetUrl, ODataEntities(key, schema(key).dataType, keyIsString), conf.auth, batch)
   }
 
   /** Where catalog writes send their `$batch`es. `insertBatchSize = N > 1`
@@ -344,23 +345,11 @@ class ODataTable(conf: ODataConf, schema: StructType) extends Table
     new ODataScanBuilder(conf, schema)
   override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
   : org.apache.spark.sql.connector.write.WriteBuilder =
-    new org.apache.spark.sql.connector.write.WriteBuilder {
-      override def build(): org.apache.spark.sql.connector.write.Write =
-        new org.apache.spark.sql.connector.write.Write {
-          override def toBatch: org.apache.spark.sql.connector.write.BatchWrite = {
-            val meta = ODataMeta.resolve(conf)
-            val setUrl = meta.entitySetUrl
-            val batchOpts = batchTarget(meta).map { b =>
-              Map("batchsize" -> b.size.toString, "batchurl" -> b.url,
-                "batchsuburl" -> b.setPath)
-            }.getOrElse(Map.empty)
-            new graft.writes.RestItemsBatchWrite(info.schema(), Map(
-              "url" -> setUrl) ++ batchOpts ++
-              conf.bearer.map("bearertoken" -> _) ++
-              conf.user.map("user" -> _) ++ conf.password.map("password" -> _))
-          }
-        }
-    }
+    new RestBatchWrite({
+      val meta = ODataMeta.resolve(conf)
+      new RestInsertWriterFactory(meta.entitySetUrl, info.schema(), conf.auth,
+        batchTarget(meta), RestWrites.rowToJson)
+    })
 }
 
 /** A catalog's `$batch` write endpoint: at most `size` sub-requests per
@@ -374,118 +363,21 @@ private[odata] object ODataDeletes {
     * Any failed delete fails the call. */
   def byKey(setUrl: String, lits: Iterator[String], batch: Option[ODataBatchTarget],
             auth: HttpAuth): Unit = {
-    val http = HttpCore.shared
-    batch match {
-      case Some(b) =>
-        lits.grouped(b.size).foreach { g =>
-          graft.writes.ODataJsonBatch.send(http, b.url,
-            g.map(l => ("DELETE", s"${b.setPath}($l)", None)), auth)
-        }
-      case None =>
-        lits.foreach { l =>
-          val del = http.request("DELETE", s"$setUrl($l)", None, auth = auth)
-          if (del.status >= 300)
-            throw new RuntimeException(s"DELETE ($l) -> HTTP ${del.status}")
-        }
-    }
+    val changes = new RestChanges(setUrl, auth, batch)
+    lits.foreach(l => changes.send("DELETE", s"($l)", None))
+    changes.commit()
   }
 }
 
-/** Delta-based row-level operation: `rowId` = the entity's EDM key; updates
-  * PATCH, deletes DELETE, (re)inserts POST — at-least-once per row, like
-  * every write path here and in the reference. */
-class ODataRowLevelOperation(conf: ODataConf, entitySetUrl: String,
-                             tableSchema: StructType,
-                             cmd: org.apache.spark.sql.connector.write.RowLevelOperation.Command,
-                             key: String, keyIsString: Boolean,
-                             batch: Option[ODataBatchTarget])
-  extends org.apache.spark.sql.connector.write.SupportsDelta {
-  import org.apache.spark.sql.connector.write._
-
-  override def command(): RowLevelOperation.Command = cmd
-  override def rowId(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    Array(org.apache.spark.sql.connector.expressions.Expressions.column(key))
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ODataScanBuilder(conf, tableSchema)
-  override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
-    new DeltaWriteBuilder {
-      override def build(): DeltaWrite = new DeltaWrite {
-        override def toBatch: DeltaBatchWrite = new DeltaBatchWrite {
-          override def createBatchWriterFactory(p: PhysicalWriteInfo): DeltaWriterFactory =
-            new ODataDeltaWriterFactory(entitySetUrl, info.schema(), key, keyIsString,
-              conf.auth, batch)
-          override def commit(messages: Array[WriterCommitMessage]): Unit = ()
-          override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-        }
-      }
-    }
-}
-
-/** Per task: one PATCH/DELETE/POST call per change, or with `batch` the
-  * changes buffered and sent as one `$batch` per `batch.size`, at the
-  * latest on `commit()`. Batch sub-requests may run in any order, so the
-  * buffer is flushed before it would hold a second change to one entity;
-  * `abort()` drops the buffer unsent. */
-class ODataDeltaWriterFactory(entitySetUrl: String, rowSchema: StructType,
-                              key: String, keyIsString: Boolean, auth: HttpAuth,
-                              batch: Option[ODataBatchTarget])
-  extends org.apache.spark.sql.connector.write.DeltaWriterFactory {
-  import org.apache.spark.sql.connector.write._
-
-  override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
-    new DeltaWriter[InternalRow] {
-      @transient private lazy val http = HttpCore.shared
-      private val keyIdx = rowSchema.fieldIndex(key)
-      private val keyType = rowSchema(key).dataType
-      private var n = 0L
-      private val buf = scala.collection.mutable.ArrayBuffer[graft.writes.ODataJsonBatch.SubRequest]()
-      private val bufKeys = scala.collection.mutable.HashSet[String]()
-
-      private def keyLit(kv: Any): String =
-        if (keyIsString) s"'${kv.toString.replace("'", "''")}'" else kv.toString
-
-      /** One change: POST to the set, else `method` on `<set>(<lit>)`. `lit`
-        * (None: an insert leaving the key to the server) also keys the
-        * one-change-per-entity-per-batch rule. */
-      private def send(method: String, lit: Option[String], body: Option[String]): Unit = {
-        val path = if (method == "POST") "" else s"(${lit.get})"
-        batch match {
-          case Some(b) =>
-            if (lit.exists(bufKeys.contains)) flush()
-            bufKeys ++= lit
-            buf += ((method, b.setPath + path, body))
-            if (buf.size >= b.size) flush()
-          case None =>
-            val url = entitySetUrl + path
-            val resp = http.request(method, url, body.map((_, "application/json")), auth = auth)
-            if (resp.status >= 300)
-              throw new RuntimeException(s"$method $url -> HTTP ${resp.status}: ${resp.text.take(200)}")
-        }
-        n += 1
-      }
-      private def flush(): Unit = if (buf.nonEmpty) {
-        graft.writes.ODataJsonBatch.send(http, batch.get.url, buf.toSeq, auth)
-        buf.clear()
-        bufKeys.clear()
-      }
-
-      // the id row carries exactly the rowId projection (one column)
-      override def update(metadata: InternalRow, id: InternalRow, row: InternalRow): Unit =
-        send("PATCH", Some(keyLit(id.get(0, keyType))),
-          Some(graft.writes.RestWrites.rowToJson(row, rowSchema)))
-      override def delete(metadata: InternalRow, id: InternalRow): Unit =
-        send("DELETE", Some(keyLit(id.get(0, keyType))), None)
-      override def insert(row: InternalRow): Unit =
-        send("POST", Option(row.get(keyIdx, keyType)).map(keyLit),
-          Some(graft.writes.RestWrites.rowToJson(row, rowSchema)))
-
-      override def commit(): WriterCommitMessage = {
-        flush()
-        graft.writes.RestWriteCommit(n)
-      }
-      override def abort(): Unit = { buf.clear(); bufKeys.clear() }
-      override def close(): Unit = ()
-    }
+/** OData entities keyed by their single EDM key: PATCH and DELETE address
+  * `<set>(<literal>)`, bodies are the flat row. */
+final case class ODataEntities(key: String, keyType: DataType, keyIsString: Boolean)
+  extends DeltaShape {
+  override def literal(v: Any): String =
+    if (keyIsString) s"'${v.toString.replace("'", "''")}'" else v.toString
+  override def entityPath(lit: String): String = s"($lit)"
+  override def body(row: InternalRow, schema: StructType): String =
+    RestWrites.rowToJson(row, schema)
 }
 
 /** ScanBuilder with the four pushdowns the reference implements (limit/offset

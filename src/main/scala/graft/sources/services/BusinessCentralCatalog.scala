@@ -1,7 +1,6 @@
 package graft.sources.services
 
 import java.util
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.types.StructType
@@ -34,12 +33,7 @@ class BusinessCentralCatalog extends TableCatalog with SupportsNamespaces {
   private def apiRoot: String = options.getOrElse("url",
     throw new IllegalArgumentException("business_central catalog requires option 'url'"))
     .stripSuffix("/") + "/api/v2.0"
-  private def auth: HttpAuth = {
-    val explicit = HttpAuth(
-      options.get("bearertoken"), options.get("user"), options.get("password"))
-    if (explicit.bearer.isDefined || explicit.basicUser.isDefined) explicit
-    else SecretRegistry.authFor(SparkSession.active, apiRoot, options.get("secret"))
-  }
+  private def auth: HttpAuth = SecretRegistry.authFrom(options, apiRoot)
 
   /** COMPANY resolution (reference `ResolveCompanyId`): a display name is
     * looked up in the companies entity set; anything that matches no row is

@@ -2,8 +2,9 @@ package graft.sources.services
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.http.{HttpAuth, HttpCore, SecretRegistry}
+import graft.sources.http.{HttpAuth, SecretRegistry}
 import graft.sources.odata.ODataPages
+import graft.writes.RestChanges
 
 /** OneDrive/SharePoint Excel workbook surface via the Graph workbook API —
   * the port of `graph_excel_functions.cpp` (1,112 LoC): file listing,
@@ -137,31 +138,14 @@ object Excel {
       cell == colValue
     }.map(r => Option(r.get("index")).map(_.asInt).getOrElse(-1)).toSeq
     val toDelete = matches.sorted.reverse
-    toDelete.foreach { i =>
-      val del = HttpCore.shared.request("DELETE",
-        s"$rowsUrl/itemAt(index=$i)", None, auth = a)
-      if (del.status >= 300)
-        throw new RuntimeException(s"DELETE itemAt($i) -> HTTP ${del.status}")
-    }
+    toDelete.foreach(i => RestChanges.call("DELETE", s"$rowsUrl/itemAt(index=$i)", None, a))
     Seq(toDelete.size.toLong).toDF("rows_deleted")
   }
 
-  /** Append rows to a named table: one `rows/add` POST per buffered chunk
-    * (`{"values": [[...], ...]}` — the Graph API takes many rows per call;
-    * reference PlanInsert is per-row, batching exceeds it). */
-  def appendRows(itemUrl: String, table: String, rows: Seq[Seq[String]],
-                 a: HttpAuth, chunk: Int = 100): Unit = {
-    rows.grouped(chunk).foreach { g =>
-      val body = g.map(_.map {
-        case null => "null"
-        case s => graft.writes.JsonEncode.str(s)
-      }.mkString("[", ",", "]")).mkString("""{"values":[""", ",", "]}")
-      val resp = HttpCore.shared.request("POST",
-        s"$itemUrl/workbook/tables/$table/rows/add",
-        Some((body, "application/json")), auth = a)
-      if (resp.status >= 300)
-        throw new RuntimeException(
-          s"POST rows/add -> HTTP ${resp.status}: ${resp.text.take(200)}")
-    }
-  }
+  /** The `rows/add` body of `rows`: `{"values": [[...], ...]}`. */
+  private[services] def valuesBody(rows: Seq[Seq[String]]): String =
+    rows.map(_.map {
+      case null => "null"
+      case s => graft.writes.JsonEncode.str(s)
+    }.mkString("[", ",", "]")).mkString("""{"values":[""", ",", "]}")
 }

@@ -9,8 +9,9 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import graft.sources.http.HttpAuth
+import graft.sources.http.{HttpAuth, SecretRegistry}
 import graft.sources.odata.ODataPages
+import graft.writes.{RestBatchWrite, RestChanges}
 import scala.jdk.CollectionConverters._
 
 /** Excel workbook as a Spark catalog — the port of the reference's
@@ -33,8 +34,7 @@ class ExcelWorkbookCatalog extends TableCatalog with SupportsNamespaces {
   private var options: Map[String, String] = Map.empty
   private def itemUrl: String = options.getOrElse("url",
     throw new IllegalArgumentException("excel_workbook catalog requires option 'url'"))
-  private def auth: HttpAuth = HttpAuth(
-    options.get("bearertoken"), options.get("user"), options.get("password"))
+  private def auth: HttpAuth = SecretRegistry.authFrom(options, itemUrl)
 
   override def initialize(name: String, opts: CaseInsensitiveStringMap): Unit = {
     catalogName = name
@@ -112,16 +112,7 @@ class ExcelNamedTable(itemUrl: String, table: String, tableSchema: StructType,
     }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new WriteBuilder {
-      override def build(): Write = new Write {
-        override def toBatch: BatchWrite = new BatchWrite {
-          override def createBatchWriterFactory(p: PhysicalWriteInfo): DataWriterFactory =
-            new ExcelRowsWriterFactory(itemUrl, table, info.schema(), auth)
-          override def commit(messages: Array[WriterCommitMessage]): Unit = ()
-          override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-        }
-      }
-    }
+    new RestBatchWrite(new ExcelRowsWriterFactory(itemUrl, table, info.schema(), auth))
 }
 
 final case class ExcelRowsPartition(url: String) extends InputPartition
@@ -163,33 +154,29 @@ class ExcelRowsScan(rowsUrl: String, fullSchema: StructType,
   }
 }
 
+/** Appends rows through `rows/add`, one POST per 100 buffered rows (the
+  * Graph API takes many rows per call; reference PlanInsert is per-row,
+  * batching exceeds it). */
 class ExcelRowsWriterFactory(itemUrl: String, table: String,
                              schema: StructType, auth: HttpAuth)
   extends DataWriterFactory {
-  private val (b, u, p) = (auth.bearer, auth.basicUser, auth.basicPassword)
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new DataWriter[InternalRow] {
-      private val a = HttpAuth(b, u, p)
-      private val buf = Seq.newBuilder[Seq[String]]
-      private var n = 0L
+    new RestChanges(s"$itemUrl/workbook/tables/$table/rows", auth) with DataWriter[InternalRow] {
+      private val buf = scala.collection.mutable.ArrayBuffer[Seq[String]]()
       override def write(record: InternalRow): Unit = {
         buf += schema.fields.indices.map { i =>
           if (record.isNullAt(i)) null
           else record.get(i, schema.fields(i).dataType).toString
         }
-        n += 1
-        if (n % 100 == 0) flush()
+        if (buf.size == 100) flushRows()
       }
-      private def flush(): Unit = {
-        val rows = buf.result()
-        if (rows.nonEmpty) Excel.appendRows(itemUrl, table, rows, a)
+      private def flushRows(): Unit = if (buf.nonEmpty) {
+        send("POST", "/add", Some(Excel.valuesBody(buf.toSeq)))
         buf.clear()
       }
       override def commit(): WriterCommitMessage = {
-        flush()
-        graft.writes.RestWriteCommit(n)
+        flushRows()
+        super.commit()
       }
-      override def abort(): Unit = ()
-      override def close(): Unit = ()
     }
 }

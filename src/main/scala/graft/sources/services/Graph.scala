@@ -144,9 +144,11 @@ object Graph {
     * first match. */
   def resolveSiteId(spark: SparkSession, siteNameOrUrlOrId: String,
                     baseUrl: String = DefaultBaseUrl,
-                    secret: Option[String] = None): String = {
+                    secret: Option[String] = None): String =
+    resolveSiteId(siteNameOrUrlOrId, baseUrl, auth(spark, baseUrl.stripSuffix("/"), secret))
+
+  def resolveSiteId(siteNameOrUrlOrId: String, baseUrl: String, a: HttpAuth): String = {
     val base = baseUrl.stripSuffix("/")
-    val a = auth(spark, base, secret)
     val s = siteNameOrUrlOrId
     if (s.contains(",")) s
     else if (s.startsWith("https://") || s.startsWith("http://")) {
@@ -171,10 +173,13 @@ object Graph {
     * else match either internal `name` or `displayName`). */
   def resolveListId(spark: SparkSession, siteId: String, listNameOrId: String,
                     baseUrl: String = DefaultBaseUrl,
-                    secret: Option[String] = None): String = {
+                    secret: Option[String] = None): String =
+    resolveListId(siteId, listNameOrId, baseUrl, auth(spark, baseUrl.stripSuffix("/"), secret))
+
+  def resolveListId(siteId: String, listNameOrId: String, baseUrl: String,
+                    a: HttpAuth): String = {
     if (looksLikeGuid(listNameOrId)) return listNameOrId
-    val base = baseUrl.stripSuffix("/")
-    val lists = pagedValues(s"$base/sites/$siteId/lists", auth(spark, base, secret))
+    val lists = pagedValues(s"${baseUrl.stripSuffix("/")}/sites/$siteId/lists", a)
     lists.find(l => str(l, "name") == listNameOrId || str(l, "displayName") == listNameOrId)
       .map(str(_, "id"))
       .getOrElse(throw new IllegalArgumentException(
@@ -235,11 +240,9 @@ object Graph {
   private val SkippedColumns = Set("Edit", "LinkTitle", "LinkTitleNoMenu",
     "DocIcon", "ItemChildCount", "FolderChildCount", "AppAuthor", "AppEditor")
 
-  private def listColumnDefs(spark: SparkSession, siteId: String, listId: String,
-                             baseUrl: String, secret: Option[String]): Seq[JsonNode] = {
-    val base = baseUrl.stripSuffix("/")
-    pagedValues(s"$base/sites/$siteId/lists/$listId/columns", auth(spark, base, secret))
-  }
+  private def listColumnDefs(siteId: String, listId: String, baseUrl: String,
+                             a: HttpAuth): Seq[JsonNode] =
+    pagedValues(s"${baseUrl.stripSuffix("/")}/sites/$siteId/lists/$listId/columns", a)
 
   def describeList(spark: SparkSession, site: String, list: String,
                    baseUrl: String = DefaultBaseUrl,
@@ -247,7 +250,7 @@ object Graph {
     import spark.implicits._
     val sid = resolveSiteId(spark, site, baseUrl, secret)
     val lid = resolveListId(spark, sid, list, baseUrl, secret)
-    listColumnDefs(spark, sid, lid, baseUrl, secret).map { c =>
+    listColumnDefs(sid, lid, baseUrl, auth(spark, baseUrl.stripSuffix("/"), secret)).map { c =>
       (str(c, "name"), str(c, "displayName"), facetName(c), str(c, "description"),
         c.has("required") && c.get("required").asBoolean(false))
     }.toDF("name", "display_name", "column_type", "description", "required")
@@ -262,7 +265,7 @@ object Graph {
                 secret: Option[String] = None): DataFrame = {
     val sid = resolveSiteId(spark, site, baseUrl, secret)
     val lid = resolveListId(spark, sid, list, baseUrl, secret)
-    val schema = listItemsSchema(spark, sid, lid, baseUrl, secret)
+    val schema = listItemsSchema(sid, lid, baseUrl, auth(spark, baseUrl.stripSuffix("/"), secret))
     fixedRead(spark,
       s"${baseUrl.stripSuffix("/")}/sites/$sid/lists/$lid/items?expand=fields",
       schema.toDDL, secret, unwrap = Some("fields"))
@@ -270,10 +273,9 @@ object Graph {
 
   /** `id` + the list's facet-typed columns (internal columns skipped,
     * case-insensitive dedup — the reference's list_read bind schema). */
-  def listItemsSchema(spark: SparkSession, siteId: String, listId: String,
-                      baseUrl: String = DefaultBaseUrl,
-                      secret: Option[String] = None): StructType = {
-    val defs = listColumnDefs(spark, siteId, listId, baseUrl, secret)
+  def listItemsSchema(siteId: String, listId: String, baseUrl: String,
+                      a: HttpAuth): StructType = {
+    val defs = listColumnDefs(siteId, listId, baseUrl, a)
     val seen = scala.collection.mutable.Set("id")
     val fields = defs.flatMap { c =>
       val name = str(c, "name")

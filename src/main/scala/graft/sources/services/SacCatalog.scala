@@ -1,7 +1,6 @@
 package graft.sources.services
 
 import java.util
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.types.StructType
@@ -56,12 +55,7 @@ class SacCatalog extends TableCatalog with SupportsNamespaces {
         }
       }
 
-  private def auth: HttpAuth = {
-    val explicit = HttpAuth(
-      options.get("bearertoken"), options.get("user"), options.get("password"))
-    if (explicit.bearer.isDefined || explicit.basicUser.isDefined) explicit
-    else SecretRegistry.authFor(SparkSession.active, tenant, options.get("secret"))
-  }
+  private def auth: HttpAuth = SecretRegistry.authFrom(options, tenant)
 
   override def initialize(name: String, opts: CaseInsensitiveStringMap): Unit = {
     catalogName = name

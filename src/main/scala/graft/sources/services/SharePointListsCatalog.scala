@@ -1,16 +1,16 @@
 package graft.sources.services
 
 import java.util
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import graft.sources.http.{HttpAuth, HttpCore}
+import graft.sources.http.{HttpAuth, SecretRegistry}
 import graft.sources.odata.{ODataConf, ODataPages, ODataScanBuilder}
+import graft.writes.{DeltaShape, JsonEncode, RestBatchWrite, RestInsertWriterFactory, RestRowLevelOperation}
 import scala.jdk.CollectionConverters._
 
 /** A SharePoint site's lists as a read-WRITE Spark catalog — the port of the
@@ -40,13 +40,13 @@ class SharePointListsCatalog extends TableCatalog with SupportsNamespaces {
   private var catalogName: String = _
   private var options: Map[String, String] = Map.empty
   private def graphBase: String = options.getOrElse("url", Graph.DefaultBaseUrl)
-  private def auth: HttpAuth = HttpAuth(
-    options.get("bearertoken"), options.get("user"), options.get("password"))
+  /** Every request of this catalog — site, list and column resolution,
+    * listing, reads and writes — carries these credentials. */
+  private def auth: HttpAuth = SecretRegistry.authFrom(options, graphBase)
   private lazy val siteId: String = Graph.resolveSiteId(
-    SparkSession.active,
     options.getOrElse("site",
       throw new IllegalArgumentException("sharepoint_lists catalog requires option 'site'")),
-    graphBase, options.get("secret"))
+    graphBase, auth)
 
   override def initialize(name: String, opts: CaseInsensitiveStringMap): Unit = {
     catalogName = name
@@ -90,11 +90,10 @@ class SharePointListsCatalog extends TableCatalog with SupportsNamespaces {
       lists().exists(l => l._2 == ident.name || l._3 == ident.name)
 
   override def loadTable(ident: Identifier): Table = {
-    val spark = SparkSession.active
-    val lid = Graph.resolveListId(spark, siteId, ident.name, graphBase, options.get("secret"))
-    val schema = Graph.listItemsSchema(spark, siteId, lid, graphBase, options.get("secret"))
-    new SharePointListTable(graphBase.stripSuffix("/"), siteId, lid, ident.name,
-      schema, auth)
+    val a = auth
+    val lid = Graph.resolveListId(siteId, ident.name, graphBase, a)
+    val schema = Graph.listItemsSchema(siteId, lid, graphBase, a)
+    new SharePointListTable(graphBase.stripSuffix("/"), siteId, lid, ident.name, schema, a)
   }
 
   override def createTable(ident: Identifier, schema: StructType,
@@ -136,101 +135,32 @@ class SharePointListTable(graphBase: String, siteId: String, listId: String,
   /** INSERT INTO → POST one `{"fields": {...}}` per row (reference
     * PlanInsert, `graph_sharepoint_catalog.cpp:791`). */
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new WriteBuilder {
-      override def build(): Write = new Write {
-        override def toBatch: BatchWrite = new BatchWrite {
-          override def createBatchWriterFactory(p: PhysicalWriteInfo): DataWriterFactory =
-            new SharePointItemsWriterFactory(itemsUrl, info.schema(), auth)
-          override def commit(messages: Array[WriterCommitMessage]): Unit = ()
-          override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-        }
-      }
-    }
+    new RestBatchWrite(new RestInsertWriterFactory(itemsUrl, info.schema(), auth, None,
+      SharePointItems.insertBody))
 
   /** UPDATE/DELETE/MERGE keyed by the Graph item id (reference PlanUpdate /
     * PlanDelete, `:844/:820`). */
   override def newRowLevelOperationBuilder(info: RowLevelOperationInfo): RowLevelOperationBuilder =
-    () => new RowLevelOperation with SupportsDelta {
-      override def command(): RowLevelOperation.Command = info.command()
-      override def rowId(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-        Array(org.apache.spark.sql.connector.expressions.Expressions.column("id"))
-      override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-        new ODataScanBuilder(scanConf, tableSchema)
-      override def newWriteBuilder(info2: LogicalWriteInfo): DeltaWriteBuilder =
-        new DeltaWriteBuilder {
-          override def build(): DeltaWrite = new DeltaWrite {
-            override def toBatch: DeltaBatchWrite = new DeltaBatchWrite {
-              override def createBatchWriterFactory(p: PhysicalWriteInfo): DeltaWriterFactory =
-                new SharePointDeltaWriterFactory(itemsUrl, info2.schema(), auth)
-              override def commit(messages: Array[WriterCommitMessage]): Unit = ()
-              override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-            }
-          }
-        }
-    }
+    () => new RestRowLevelOperation(info.command(),
+      () => new ODataScanBuilder(scanConf, tableSchema), itemsUrl, SharePointItems, auth, None)
 }
 
-private object SharePointJson {
+/** List items keyed by the Graph item id: PATCH `/{id}/fields` with the
+  * field columns, DELETE `/{id}`, POST `{"fields": {...}}`. */
+object SharePointItems extends DeltaShape {
+  // DELETE ships no data columns, so the id type cannot come from the rows
+  override def key: String = "id"
+  override def keyType: DataType = StringType
+  override def literal(v: Any): String = v.toString
+  override def entityPath(id: String): String = s"/$id"
+  override def patchPath(id: String): String = s"/$id/fields"
+
   /** Field columns of a row as a JSON object, skipping the `id` system
     * column (item ids are server-assigned; PATCHing them is rejected). */
-  def fieldsJson(row: InternalRow, schema: StructType): String = {
-    import graft.writes.JsonEncode
-    val fields = schema.fields.zipWithIndex.filterNot(_._1.name == "id")
-    fields.map { case (f, i) =>
+  override def body(row: InternalRow, schema: StructType): String =
+    schema.fields.zipWithIndex.filterNot(_._1.name == "id").map { case (f, i) =>
       s"${JsonEncode.str(f.name)}:${JsonEncode.value(row, i, f.dataType)}"
     }.mkString("{", ",", "}")
-  }
-}
-
-class SharePointItemsWriterFactory(itemsUrl: String, schema: StructType, auth: HttpAuth)
-  extends DataWriterFactory {
-  private val (b, u, p) = (auth.bearer, auth.basicUser, auth.basicPassword)
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new DataWriter[InternalRow] {
-      @transient private lazy val http = HttpCore.shared
-      private val a = HttpAuth(b, u, p)
-      private var n = 0L
-      override def write(record: InternalRow): Unit = {
-        val body = s"""{"fields":${SharePointJson.fieldsJson(record, schema)}}"""
-        val resp = http.request("POST", itemsUrl, Some((body, "application/json")), auth = a)
-        if (resp.status >= 300)
-          throw new RuntimeException(s"POST $itemsUrl -> HTTP ${resp.status}: ${resp.text.take(200)}")
-        n += 1
-      }
-      override def commit(): WriterCommitMessage = graft.writes.RestWriteCommit(n)
-      override def abort(): Unit = ()
-      override def close(): Unit = ()
-    }
-}
-
-class SharePointDeltaWriterFactory(itemsUrl: String, rowSchema: StructType, auth: HttpAuth)
-  extends DeltaWriterFactory {
-  private val (b, u, p) = (auth.bearer, auth.basicUser, auth.basicPassword)
-  override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
-    new DeltaWriter[InternalRow] {
-      @transient private lazy val http = HttpCore.shared
-      private val a = HttpAuth(b, u, p)
-      private var n = 0L
-      // the delta rowId projection is always the single `id` string column;
-      // DELETE ships no data columns, so rowSchema cannot be consulted here
-      private def itemId(id: InternalRow): String =
-        id.getUTF8String(0).toString
-      private def send(method: String, url: String, body: Option[String]): Unit = {
-        val resp = http.request(method, url, body.map((_, "application/json")), auth = a)
-        if (resp.status >= 300)
-          throw new RuntimeException(s"$method $url -> HTTP ${resp.status}: ${resp.text.take(200)}")
-        n += 1
-      }
-      override def update(metadata: InternalRow, id: InternalRow, row: InternalRow): Unit =
-        send("PATCH", s"$itemsUrl/${itemId(id)}/fields",
-          Some(SharePointJson.fieldsJson(row, rowSchema)))
-      override def delete(metadata: InternalRow, id: InternalRow): Unit =
-        send("DELETE", s"$itemsUrl/${itemId(id)}", None)
-      override def insert(row: InternalRow): Unit =
-        send("POST", itemsUrl,
-          Some(s"""{"fields":${SharePointJson.fieldsJson(row, rowSchema)}}"""))
-      override def commit(): WriterCommitMessage = graft.writes.RestWriteCommit(n)
-      override def abort(): Unit = ()
-      override def close(): Unit = ()
-    }
+  override def insertBody(row: InternalRow, schema: StructType): String =
+    s"""{"fields":${body(row, schema)}}"""
 }

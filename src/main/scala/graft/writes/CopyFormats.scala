@@ -1,15 +1,13 @@
 package graft.writes
 
 import java.util
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import graft.sources.http.{HttpAuth, SecretRegistry}
-import graft.sources.services.{Excel, ExcelRowsWriterFactory, Graph, SharePointItemsWriterFactory}
+import graft.sources.http.SecretRegistry
+import graft.sources.services.{Excel, ExcelRowsWriterFactory, Graph, SharePointItems}
 import scala.jdk.CollectionConverters._
 
 /** The reference's `COPY ... TO (FORMAT ...)` sinks as Spark write formats
@@ -44,18 +42,16 @@ final class SharePointListSink extends RestCopySink {
                         properties: util.Map[String, String]): Table = {
     val opts = properties.asScala.toMap.map { case (k, v) => k.toLowerCase -> v }
     val base = opts.getOrElse("url", Graph.DefaultBaseUrl).stripSuffix("/")
-    val secret = opts.get("secret")
     val site = opts.getOrElse("site",
       throw new IllegalArgumentException("sharepoint-list sink requires option 'site'"))
     val list = opts.getOrElse("list",
       throw new IllegalArgumentException("sharepoint-list sink requires option 'list'"))
-    val spark = SparkSession.active
-    val sid = Graph.resolveSiteId(spark, site, base, secret)
-    val lid = Graph.resolveListId(spark, sid, list, base, secret)
-    val auth = CopyFormats.authFrom(opts, base)
+    val auth = SecretRegistry.authFrom(opts, base)
+    val sid = Graph.resolveSiteId(site, base, auth)
+    val lid = Graph.resolveListId(sid, list, base, auth)
     new RestSinkTable(s"sharepoint-list($site/$list)", schema,
-      info => new SharePointItemsWriterFactory(
-        s"$base/sites/$sid/lists/$lid/items", info.schema(), auth))
+      info => new RestInsertWriterFactory(s"$base/sites/$sid/lists/$lid/items",
+        info.schema(), auth, None, SharePointItems.insertBody))
   }
 }
 
@@ -73,39 +69,8 @@ final class GraphExcelSink extends RestCopySink {
         throw new IllegalArgumentException("graph-excel sink requires option 'path' or 'itemurl'"))
       Excel.itemUrl(base, path, opts.get("driveid"))
     }
-    val auth = CopyFormats.authFrom(opts, base)
+    val auth = SecretRegistry.authFrom(opts, base)
     new RestSinkTable(s"graph-excel($itemUrl/$table)", schema,
       info => new ExcelRowsWriterFactory(itemUrl, table, info.schema(), auth))
-  }
-}
-
-/** Write-only DSv2 table delegating to a per-sink writer factory. */
-final class RestSinkTable(tableName: String, tableSchema: StructType,
-                          factory: LogicalWriteInfo => DataWriterFactory)
-  extends Table with SupportsWrite {
-  override def name(): String = tableName
-  override def schema(): StructType = tableSchema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_WRITE, TableCapability.TRUNCATE)
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new WriteBuilder {
-      override def build(): Write = new Write {
-        override def toBatch: BatchWrite = new BatchWrite {
-          override def createBatchWriterFactory(p: PhysicalWriteInfo): DataWriterFactory =
-            factory(info)
-          override def commit(messages: Array[WriterCommitMessage]): Unit = ()
-          override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-        }
-      }
-    }
-}
-
-object CopyFormats {
-  /** Explicit credentials win; otherwise the secret registry scope-matches
-    * the endpoint (reference secret resolution order). */
-  def authFrom(opts: Map[String, String], url: String): HttpAuth = {
-    val explicit = HttpAuth(opts.get("bearertoken"), opts.get("user"), opts.get("password"))
-    if (explicit.bearer.isDefined || explicit.basicUser.isDefined) explicit
-    else SecretRegistry.authFor(SparkSession.active, url, opts.get("secret"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.writes
 
-import graft.sources.http.{HttpAuth, HttpCore}
+import graft.sources.http.HttpAuth
 import graft.sources.odata.ODataJson
 
 /** OData JSON batch round-trips (OData 4.01 `$batch`; the same shape
@@ -34,17 +34,14 @@ object ODataJsonBatch {
     }.mkString("""{"requests":[""", ",", "]}")
 
   /** POSTs `reqs` as one batch to `batchUrl` and fails unless the batch AND
-    * every sub-request succeeded: a non-2xx envelope, fewer sub-responses
-    * than sub-requests (truncating proxy, buggy service — those changes were
-    * silently not applied) or any sub-status outside 2xx all throw. OData
-    * batches are not transactions without changesets, so a failure may leave
-    * the other sub-requests applied (at-least-once, like the per-row path). */
-  def send(http: HttpCore, batchUrl: String, reqs: Seq[SubRequest], auth: HttpAuth): Unit = {
-    val resp = http.request("POST", batchUrl,
-      Some((buildBatch(reqs), "application/json")), auth = auth)
-    if (resp.status / 100 != 2)
-      throw new RuntimeException(
-        s"POST $batchUrl -> HTTP ${resp.status}: ${resp.text.take(200)}")
+    * every sub-request succeeded: a non-2xx envelope ([[RestChanges.call]]'s
+    * status rule), fewer sub-responses than sub-requests (truncating proxy,
+    * buggy service — those changes were silently not applied) or any
+    * sub-status outside 2xx all throw. OData batches are not transactions
+    * without changesets, so a failure may leave the other sub-requests
+    * applied (at-least-once, like the per-row path). */
+  def send(batchUrl: String, reqs: Seq[SubRequest], auth: HttpAuth): Unit = {
+    val resp = RestChanges.call("POST", batchUrl, Some(buildBatch(reqs)), auth)
     val answers = getResponses(resp.text)
     if (answers.size != reqs.size)
       throw new RuntimeException(s"$$batch answered ${answers.size} of " +

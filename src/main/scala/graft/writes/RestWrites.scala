@@ -2,122 +2,41 @@ package graft.writes
 
 import java.util
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.Table
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{StringType, StructType}
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import graft.sources.http.{HttpAuth, HttpCore}
+import graft.sources.odata.ODataBatchTarget
 import scala.jdk.CollectionConverters._
 
 /** REST sinks — the port of the reference's write paths (SURVEY.md §2.3):
   * `COPY TO (FORMAT graph_excel_table / graph_sharepoint_list)` and catalog
   * `INSERT INTO` both reduce to "POST one JSON object per row to an items
   * endpoint" (`graph_excel_copy.cpp:209-215`,
-  * `graph_sharepoint_catalog.cpp:791`). Spark-first shape: a DSv2
-  * `SupportsWrite` table with a `DataWriterFactory` — executors each hold
-  * one HTTP client and stream their partition's rows as POSTs.
+  * `graph_sharepoint_catalog.cpp:791`). Spark-first shape: a write-only DSv2
+  * table ([[RestSinkTable]]) whose executors stream their partition's rows
+  * as POSTs through [[RestChanges]]; `batchUrl` + `batchSize` (> 1) send
+  * them as JSON `$batch`es of up to `batchSize` sub-requests instead.
   *
   * {{{
   * df.write.format("rest-items").option("url", itemsEndpoint).mode("append").save()
   * }}}
   *
-  * Commit semantics: per-row POSTs are not transactional (neither are the
-  * reference's — each Graph API call stands alone); a failed task may leave
-  * partial rows, and Spark's retry re-POSTs them — document as at-least-once,
-  * use an idempotency key column when the service supports one.
+  * Commit semantics: at-least-once, see [[RestChanges]].
   */
-class RestItemsSink extends TableProvider with DataSourceRegister {
+class RestItemsSink extends RestCopySink {
   override def shortName(): String = "rest-items"
-  override def supportsExternalMetadata(): Boolean = true
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    new StructType() // write-only: schema comes from the DataFrame
   override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new RestItemsTable(schema, properties.asScala.toMap)
-}
-
-class RestItemsTable(schema: StructType, options: Map[String, String])
-  extends Table with SupportsWrite {
-  override def name(): String = s"rest-items(${options.getOrElse("url", "?")})"
-  override def schema(): StructType = schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_WRITE, TableCapability.TRUNCATE)
-
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new WriteBuilder {
-      override def build(): Write = new Write {
-        override def toBatch: BatchWrite = new RestItemsBatchWrite(
-          info.schema(), options)
-      }
-    }
-}
-
-class RestItemsBatchWrite(schema: StructType, options: Map[String, String])
-  extends BatchWrite {
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val o = options.map { case (k, v) => k.toLowerCase -> v }
-    new RestItemsWriterFactory(schema,
-      o.getOrElse("url", throw new IllegalArgumentException("rest-items needs option url")),
-      o.get("bearertoken"), o.get("user"), o.get("password"),
-      o.get("batchurl"), o.getOrElse("batchsize", "1").toInt,
-      o.get("batchsuburl"))
+                        properties: util.Map[String, String]): Table = {
+    val o = properties.asScala.toMap.map { case (k, v) => k.toLowerCase -> v }
+    val url = o.getOrElse("url", throw new IllegalArgumentException("rest-items needs option url"))
+    val auth = HttpAuth(o.get("bearertoken"), o.get("user"), o.get("password"))
+    val batch = o.get("batchurl").map(ODataBatchTarget(o.getOrElse("batchsize", "1").toInt, _, url))
+      .filter(_.size > 1)
+    new RestSinkTable(s"rest-items($url)", schema,
+      info => new RestInsertWriterFactory(url, info.schema(), auth, batch, RestWrites.rowToJson))
   }
-  override def commit(messages: Array[WriterCommitMessage]): Unit = ()
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-final case class RestWriteCommit(rows: Long) extends WriterCommitMessage
-
-class RestItemsWriterFactory(schema: StructType, url: String,
-                             bearer: Option[String], user: Option[String],
-                             password: Option[String],
-                             batchUrl: Option[String] = None,
-                             batchSize: Int = 1,
-                             batchSubUrl: Option[String] = None) extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new DataWriter[InternalRow] {
-      // one client per task, rebuilt executor-side (never serialized)
-      @transient private lazy val http = HttpCore.shared
-      private val auth = HttpAuth(bearer, user, password)
-      private var n = 0L
-      private val batched = batchSize > 1 && batchUrl.isDefined
-      private val buf = scala.collection.mutable.ArrayBuffer[String]()
-
-      override def write(record: InternalRow): Unit = {
-        val json = RestWrites.rowToJson(record, schema)
-        if (batched) {
-          buf += json
-          if (buf.size >= batchSize) flush()
-        } else {
-          val resp = http.request("POST", url, Some((json, "application/json")), auth = auth)
-          if (resp.status >= 300)
-            throw new RuntimeException(s"POST $url -> HTTP ${resp.status}: ${resp.text.take(200)}")
-        }
-        n += 1
-      }
-
-      /** One `$batch` round-trip for the buffered rows, validated by
-        * [[ODataJsonBatch.send]] (at-least-once on task retry, same as the
-        * per-row path). Sub-requests target batchSubUrl when given (the
-        * service-root-relative form Microsoft Graph requires), else the
-        * absolute url. */
-      private def flush(): Unit = if (buf.nonEmpty) {
-        val target = batchSubUrl.getOrElse(url)
-        ODataJsonBatch.send(http, batchUrl.get,
-          buf.toSeq.map(json => ("POST", target, Some(json))), auth)
-        buf.clear()
-      }
-
-      override def commit(): WriterCommitMessage = {
-        if (batched) flush()
-        RestWriteCommit(n)
-      }
-      override def abort(): Unit = ()
-      override def close(): Unit = ()
-    }
 }
 
 object RestWrites {

@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 /** Pins the one session config every entry point shares, and keeps it the
   * only one: a second session builder or another dev `main` under `src/`
   * fails here, and so does a hand-written nextLink loop outside
-  * `ODataPages`. */
+  * `ODataPages` or a hand-written write check outside `RestChanges`. */
 class GraftSessionSpec extends SparkSpecBase {
 
   test("GraftSession.local: extensions, UTC, nanosAsLong, partitions = cpus, no UI") {
@@ -54,5 +54,11 @@ class GraftSessionSpec extends SparkSpecBase {
       Set("main/scala/graft/sources/odata/ODataJson.scala"))
     assert(mainFilesWith("var next" + ": Option[String]").isEmpty)
     assert(mainFilesWith("var next" + "Url") == Set("main/scala/graft/sources/odata/ODataPages.scala"))
+  }
+
+  test("src/main sends and checks sink writes only in RestChanges: one status rule, one shell") {
+    val module = Set("main/scala/graft/writes/RestChanges.scala")
+    assert(filesWith("status >" + "= 300").filter(_.startsWith("main/")) == module)
+    assert(filesWith("createBatch" + "WriterFactory").filter(_.startsWith("main/")) == module)
   }
 }

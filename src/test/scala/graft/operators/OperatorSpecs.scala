@@ -142,6 +142,78 @@ class DedupSpec extends SparkSpecBase {
     assert(capped.columns.toSeq == Seq("id_a", "id_b", "hamming"))
     capped.collect() // runs
   }
+
+  // ---- snapshotDedup ------------------------------------------------------
+
+  test("snapshotDedup: drops corpus-seen and keeps first-in-snapshot") {
+    val snap = Seq(
+      (10L, "alpha"), (11L, "alpha"),   // in-snapshot dup: keep 10
+      (12L, "beta"),                    // already in corpus: drop
+      (13L, "gamma"),                   // fresh: keep
+      (14L, "delta"), (15L, "delta")    // in-snapshot dup of a fresh text
+    ).toDF("doc_id", "text")
+    val corpusFps = Seq("beta", "zeta").toDF("t")
+      .select(TextOps.fingerprint($"t").as("fp"))
+    val out = Dedup.snapshotDedup(snap, corpusFps, "doc_id", "text")
+      .select("doc_id").as[Long].collect().sorted
+    assert(out.toSeq == Seq(10L, 13L, 14L))
+  }
+
+  test("snapshotDedup: surviving fps appended to the corpus close the loop") {
+    val snap1 = Seq((1L, "a"), (2L, "b")).toDF("doc_id", "text")
+    val corpus0 = Seq.empty[String].toDF("fp")
+    val kept1 = Dedup.snapshotDedup(snap1, corpus0, "doc_id", "text")
+    assert(kept1.count() == 2)
+    // next snapshot re-crawls "a": the appended fingerprints reject it
+    val corpus1 = corpus0.unionByName(kept1.select("fp"))
+    val snap2 = Seq((3L, "a"), (4L, "c")).toDF("doc_id", "text")
+    val kept2 = Dedup.snapshotDedup(snap2, corpus1, "doc_id", "text")
+      .select("doc_id").as[Long].collect().toSeq
+    assert(kept2 == Seq(4L))
+  }
+
+  // ---- snapshotDedupNear --------------------------------------------------
+
+  test("snapshotDedupNear: drops corpus near-dups and exact dups, keeps fresh") {
+    val corpus = spark.read.parquet(sf() + "/documents.parquet")
+      .select("doc_id", "text").filter($"doc_id" < 100)
+    // snapshot: a near-dup of corpus doc 0 (last 2 words dropped), an exact
+    // copy of corpus doc 1, a fresh unrelated doc, and a too-short doc
+    val nearText = corpus.filter($"doc_id" === 0)
+      .select(expr("array_join(slice(split(text, ' '), 1, " +
+        "size(split(text, ' ')) - 2), ' ')")).as[String].head()
+    val exactText = corpus.filter($"doc_id" === 1)
+      .select("text").as[String].head()
+    val snap = Seq(
+      (1000L, nearText),
+      (1001L, exactText),
+      (1002L, "qq ww ee rr tt yy uu ii oo pp aa ss dd ff gg hh"),
+      (1003L, "xy zz")).toDF("doc_id", "text")
+    val kept = Dedup.snapshotDedupNear(snap, corpus, "doc_id", "text",
+      n = 3, minJaccard = 0.5)
+      .select("doc_id").as[Long].collect().sorted.toSeq
+    assert(kept == Seq(1002L, 1003L), kept)
+  }
+
+  test("snapshotDedupNear: maxBucket cap drops hot buckets whole (p32 contract)") {
+    // a boilerplate cluster: 40 corpus copies of one text put its band
+    // buckets far over the cap; the capped run must NOT match the snapshot
+    // twin against them (the bucket is dropped whole), while the uncapped
+    // run drops it
+    val boiler = "aa bb cc dd ee ff gg hh ii jj kk ll mm nn oo pp"
+    val corpus = (0L until 40L).map(i => (i, boiler)).toDF("doc_id", "text")
+    val snap = Seq((1000L, boiler),
+      (1001L, "zz yy xx ww vv uu tt ss rr qq pp oo nn mm ll kk"))
+      .toDF("doc_id", "text")
+    val uncapped = Dedup.snapshotDedupNear(snap, corpus, "doc_id", "text",
+      n = 3, minJaccard = 0.5)
+      .select("doc_id").as[Long].collect().sorted.toSeq
+    assert(uncapped == Seq(1001L), uncapped)
+    val capped = Dedup.snapshotDedupNear(snap, corpus, "doc_id", "text",
+      n = 3, minJaccard = 0.5, maxBucket = Some(10L))
+      .select("doc_id").as[Long].collect().sorted.toSeq
+    assert(capped == Seq(1000L, 1001L), capped)
+  }
 }
 
 class SimilaritySpec extends SparkSpecBase {
@@ -392,6 +464,107 @@ class TextOpsSpec extends SparkSpecBase {
       .collect().map(r => r.getInt(0) -> r.getSeq[Long](1).toSet).toMap
     assert((fps(1) & fps(2)).nonEmpty)
     assert((fps(1) & fps(3)).isEmpty)
+  }
+
+  // ---- repeatedNgrams -----------------------------------------------------
+
+  test("repeatedNgrams: document frequency, not occurrences; min-id example") {
+    val docs = Seq(
+      (1L, "the cookie banner says accept the cookie banner says"),
+      (2L, "x the cookie banner says y"),
+      (3L, "the cookie banner says"),
+      (4L, "completely unrelated words here"),
+      (5L, "too short")
+    ).toDF("doc_id", "text")
+    val out = TextOps.repeatedNgrams(docs, "doc_id", "text",
+      n = 3, minDocs = 2L, topK = 10)
+      .select("gram", "n_docs", "example_doc").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    // "the cookie banner" appears twice inside doc 1 but counts once per doc
+    val top = out.find(_._1 == "the cookie banner").get
+    assert(top._2 == 3L && top._3 == 1L)
+    assert(out.find(_._1 == "cookie banner says").get._2 == 3L)
+    // singleton grams (doc 4's) are pruned by minDocs
+    assert(!out.exists(_._1.contains("unrelated")))
+    // ranking: n_docs desc, gram asc
+    assert(out.sortBy(r => (-r._2, r._1)).toSeq == out.toSeq)
+  }
+
+  // ---- filterAblation -----------------------------------------------------
+
+  test("filterAblation: combo masses partition the corpus per stratum") {
+    val docs = Seq(
+      ("s1", 100L, true, true), ("s1", 50L, true, false),
+      ("s1", 10L, false, false), ("s2", 7L, false, true),
+      ("s2", 3L, false, true))
+      .toDF("src", "tk", "a", "b")
+    val out = TextOps.filterAblation(docs, "src",
+      Seq("keep_a" -> $"a", "keep_b" -> $"b"), $"tk")
+      .collect().map(r => ((r.getString(0), r.getBoolean(1), r.getBoolean(2)),
+        (r.getLong(3), r.getLong(4)))).toMap
+    assert(out(("s1", true, true)) == ((1L, 100L)))
+    assert(out(("s1", true, false)) == ((1L, 50L)))
+    assert(out(("s1", false, false)) == ((1L, 10L)))
+    assert(out(("s2", false, true)) == ((2L, 10L)))
+    // every doc lands in exactly one combo row
+    assert(out.values.map(_._1).sum == 5L)
+  }
+
+  // ---- evalReport ---------------------------------------------------------
+
+  test("evalReport: hand-checked AUC, tie half-credit, confusion counts") {
+    // scores far apart → each lands in its own logit bin (binWidth 2^22):
+    // pos z = {3,1}·2^30, neg z = {2,-1}·2^30. Pairwise: (3>2),(3>-1),
+    // (1<2 miss),(1>-1) → AUC = 3/4. Threshold z>=0: tp=2 fp=1 tn=1 fn=0.
+    val g = 1L << 30
+    val scored = Seq(
+      (1L, 3L * g, true), (2L, 1L * g, true),
+      (3L, 2L * g, false), (4L, -1L * g, false))
+      .toDF("doc_id", "z_sum", "label")
+      .withColumn("predicted", $"z_sum" >= 0L)
+    val r = Classifier.evalReport(scored).collect().head
+    assert(r.getLong(0) == 2 && r.getLong(1) == 2)           // n_pos, n_neg
+    assert((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)) ==
+      ((2L, 1L, 1L, 0L)))                                    // tp fp tn fn
+    assert(r.getDouble(7) == 0.75, r)
+    // ties: a pos and a neg in the SAME bin take half credit → AUC 0.5
+    val tied = Seq((1L, 5L, true), (2L, 7L, false))
+      .toDF("doc_id", "z_sum", "label")
+      .withColumn("predicted", $"z_sum" >= 0L)
+    assert(Classifier.evalReport(tied).collect().head.getDouble(7) == 0.5)
+    // perfect separation → AUC 1.0
+    val sep = Seq((1L, 10L * g, true), (2L, -10L * g, false))
+      .toDF("doc_id", "z_sum", "label")
+      .withColumn("predicted", $"z_sum" >= 0L)
+    assert(Classifier.evalReport(sep).collect().head.getDouble(7) == 1.0)
+  }
+
+  // ---- hardNegatives ------------------------------------------------------
+
+  test("hardNegatives: top-k nearest with a different label, exact ranks") {
+    val emb = spark.read.parquet(sf() + "/embeddings.parquet")
+    val queries = emb.filter($"vec_id" < 3)
+    val out = Similarity.hardNegatives(emb, "vec_id", queries, "vec_id",
+      "embedding", "label", k = 5)
+      .select("q_id", "q_label", "id", "label", "sim", "rnk").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getInt(3),
+        r.getDouble(4), r.getInt(5)))
+    assert(out.length == 15)
+    out.foreach { case (_, ql, _, l, _, _) => assert(l != ql) }
+    // against brute-force kNN with the label filter applied afterwards:
+    // the mined negatives are exactly the top-5 of the label-filtered list
+    val qLabels = queries.select("vec_id", "label").as[(Long, Int)]
+      .collect().toMap
+    val knn = Similarity.knnBruteForce(emb, "vec_id", queries, "vec_id",
+      "embedding", k = Int.MaxValue)
+      .join(emb.select($"vec_id".as("id"), $"label"), Seq("id"))
+      .select("q_id", "id", "label", "sim").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
+    val expected = knn.groupBy(_._1).toSeq.flatMap { case (q, rows) =>
+      rows.filter(_._3 != qLabels(q)).sortBy(r => (-r._4, r._2)).take(5)
+        .map(r => (q, r._2)).toSeq
+    }.toSet
+    assert(out.map(r => (r._1, r._3)).toSet == expected)
   }
 }
 

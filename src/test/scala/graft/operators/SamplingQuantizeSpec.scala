@@ -3,7 +3,8 @@ package graft.operators
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
 
-/** Sampling determinism/statistics and int8 quantization edge cases. */
+/** Sampling determinism/statistics, int8 quantization edge cases and the
+  * FIM split plan. */
 class SamplingQuantizeSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -159,5 +160,54 @@ class SamplingQuantizeSpec extends SparkSpecBase {
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
         r.getLong(3), r.getLong(4)))
     assert(out.sortBy(_._1).toSeq == re.sortBy(_._1).toSeq)
+  }
+
+  // ---- fimSplitPlan -------------------------------------------------------
+
+  test("fimSplitPlan: pieces partition the doc, modes follow the hash deal") {
+    val docs = (0L until 400L).map(i => (i, 10L + i % 90)).toDF("doc_id", "tk")
+    val out = Shards.fimSplitPlan(docs, "doc_id", "tk")
+      .select("doc_id", "tk", "fim_mode", "prefix_len", "middle_len",
+        "suffix_len")
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3),
+        r.getLong(4), r.getLong(5)))
+    assert(out.length == 400)
+    out.foreach { case (id, tk, mode, p, m, sfx) =>
+      assert(p >= 0 && m >= 0 && sfx >= 0, s"doc $id negative piece")
+      assert(p + m + sfx == tk, s"doc $id pieces don't sum to tk")
+      if (mode == "ar") assert(p == tk && m == 0 && sfx == 0, s"doc $id ar")
+      assert(Set("ar", "psm", "spm").contains(mode))
+    }
+    // the 900-permille FIM deal holds roughly (md5-uniform over 400 docs)
+    val nFim = out.count(_._3 != "ar")
+    assert(nFim > 300 && nFim < 400, s"fim count $nFim")
+    // and PSM/SPM split the FIM mass both ways
+    assert(out.exists(_._3 == "psm") && out.exists(_._3 == "spm"))
+  }
+
+  test("fimSplitPlan: deterministic per salt, tiny docs stay legal") {
+    val docs = Seq((1L, 0L), (2L, 1L), (3L, 2L), (4L, 1000L))
+      .toDF("doc_id", "tk")
+    val a = Shards.fimSplitPlan(docs, "doc_id", "tk").collect().toSet
+    val b = Shards.fimSplitPlan(docs, "doc_id", "tk").collect().toSet
+    assert(a == b)
+    // tk=0: all three pieces are 0 regardless of mode
+    val z = Shards.fimSplitPlan(docs, "doc_id", "tk")
+      .filter($"doc_id" === 1L).select("prefix_len", "middle_len", "suffix_len")
+      .as[(Long, Long, Long)].head()
+    assert(z == ((0L, 0L, 0L)))
+    // a different salt re-deals at least one cut among the 4 docs
+    val c = Shards.fimSplitPlan(docs, "doc_id", "tk", salt = "other")
+      .collect().toSet
+    assert(a != c)
+  }
+
+  test("fimSplitPlan: fimPermille=0 is pure AR, 1000 is pure FIM") {
+    val docs = (0L until 50L).map(i => (i, 100L)).toDF("doc_id", "tk")
+    val ar = Shards.fimSplitPlan(docs, "doc_id", "tk", fimPermille = 0L)
+    assert(ar.filter($"fim_mode" =!= "ar").count() == 0)
+    val fim = Shards.fimSplitPlan(docs, "doc_id", "tk", fimPermille = 1000L)
+    assert(fim.filter($"fim_mode" === "ar").count() == 0)
   }
 }

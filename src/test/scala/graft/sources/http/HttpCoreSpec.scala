@@ -62,18 +62,18 @@ class HttpCoreSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("GET cache serves within TTL, expires after") {
     val http = new HttpCore(HttpPolicy(cacheTtlMs = 300))
-    stub.counterHits = 0
+    stub.counterHits.set(0)
     val url = s"http://localhost:${stub.port}/counter"
     assert(http.get(url).text == "hit 1")
     assert(http.get(url).text == "hit 1") // cached
-    assert(stub.counterHits == 1)
+    assert(stub.counterHits.get == 1)
     Thread.sleep(350)
     assert(http.get(url).text == "hit 2") // TTL expired
   }
 
   test("cache never crosses principals: distinct auth/headers get distinct entries") {
     val http = new HttpCore(HttpPolicy(cacheTtlMs = 60000))
-    stub.counterHits = 0
+    stub.counterHits.set(0)
     val url = s"http://localhost:${stub.port}/counter"
     val alice = HttpAuth(bearer = Some("alice-token"))
     val bob = HttpAuth(bearer = Some("bob-token"))
@@ -83,7 +83,7 @@ class HttpCoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(http.get(url, auth = alice).text == "hit 1") // alice still cached
     // different request headers are a different cache entry too
     assert(http.get(url, Map("Accept" -> "text/plain"), alice).text == "hit 3")
-    assert(stub.counterHits == 3)
+    assert(stub.counterHits.get == 3)
   }
 
   test("basic auth header is emitted") {

@@ -722,8 +722,9 @@ class ODataReadE2ESpec extends SparkSpecBase with BeforeAndAfterAll with TimeLim
   private def deltaWriter(partition: Int) = {
     val schema = new org.apache.spark.sql.types.StructType()
       .add("CustomerID", "string").add("CompanyName", "string")
-    new ODataDeltaWriterFactory(v4.serviceUrl + "/Customers", schema, "CustomerID",
-      keyIsString = true, graft.sources.http.HttpAuth(),
+    new graft.writes.RestDeltaWriterFactory(v4.serviceUrl + "/Customers",
+      ODataEntities("CustomerID", schema("CustomerID").dataType, keyIsString = true), schema,
+      graft.sources.http.HttpAuth(),
       Some(ODataBatchTarget(10, v4.serviceUrl + "/$batch", "/Customers")))
       .createWriter(partition, partition.toLong)
   }

@@ -7,7 +7,7 @@ import org.scalatest.BeforeAndAfterAll
 /** The read-write `sharepoint_lists` ATTACH catalog end-to-end: SHOW TABLES,
   * typed SELECT (filters evaluated in Spark — projection-only pushdown like
   * the reference), INSERT (fields wrapper), UPDATE (PATCH items/{id}/fields),
-  * DELETE (DELETE items/{id}). */
+  * DELETE (DELETE items/{id}), each sent with the catalog's credentials. */
 class SharePointCatalogSpec extends SparkSpecBase with BeforeAndAfterAll {
 
   private var stub: GraphStub = _
@@ -85,6 +85,33 @@ class SharePointCatalogSpec extends SparkSpecBase with BeforeAndAfterAll {
     spark.sql("UPDATE sp.main.`Budget List` SET Title = 'Renamed' WHERE id = '3'")
     assert(stub.patchedItems.map(_._1).toSeq == Seq("3"), stub.patchedItems.toString)
     assert(stub.patchedItems.head._2.contains(""""Title":"Renamed""""))
+  }
+
+  test("with bearertoken, every request of SHOW TABLES, SELECT, INSERT, UPDATE and DELETE carries it") {
+    spark.conf.set("spark.sql.catalog.spb", "graft.sources.services.SharePointListsCatalog")
+    spark.conf.set("spark.sql.catalog.spb.url", stub.baseUrl)
+    spark.conf.set("spark.sql.catalog.spb.site", "Finance")
+    spark.conf.set("spark.sql.catalog.spb.bearertoken", "sp-token")
+    try {
+      stub.requests.clear()
+      stub.authorizations.clear()
+      spark.sql("SHOW TABLES IN spb.main").collect()
+      spark.sql("SELECT id, Title FROM spb.main.`Budget List`").collect()
+      spark.sql(
+        """INSERT INTO spb.main.`Budget List`
+          |SELECT 'x' AS id, 'Bearer' AS Title, 1.0 AS Amount, true AS Approved,
+          |       TIMESTAMP '2024-06-01 00:00:00' AS DueDate, 1.0 AS Cost""".stripMargin)
+      spark.sql("UPDATE spb.main.`Budget List` SET Title = 'Bearer' WHERE id = '3'")
+      spark.sql("DELETE FROM spb.main.`Budget List` WHERE id = '5'")
+      assert(stub.requests.map(_.takeWhile(_ != ' ')).toSet ==
+        Set("GET", "POST", "PATCH", "DELETE"), stub.requests.toString)
+      assert(stub.authorizations.nonEmpty &&
+        stub.authorizations.forall(_ == "Bearer sp-token"),
+        stub.requests.zip(stub.authorizations).filterNot(_._2 == "Bearer sp-token").toString)
+    } finally {
+      Seq("bearertoken", "site", "url").foreach(k => spark.conf.unset(s"spark.sql.catalog.spb.$k"))
+      spark.conf.unset("spark.sql.catalog.spb")
+    }
   }
 
   test("SQL DELETE removes exactly the matching items") {

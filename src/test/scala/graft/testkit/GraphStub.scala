@@ -15,6 +15,8 @@ import scala.collection.mutable
 class GraphStub {
 
   val requests = mutable.ListBuffer[String]()
+  /** Each request's `Authorization` header ("" when absent), in arrival order. */
+  val authorizations = mutable.ListBuffer[String]()
   val createdItems = mutable.ListBuffer[String]()
   val patchedItems = mutable.ListBuffer[(String, String)]() // (item id, body)
   val deletedItems = mutable.ListBuffer[String]()
@@ -46,6 +48,9 @@ class GraphStub {
       val rawQ = Option(ex.getRequestURI.getRawQuery).getOrElse("")
       val decoded = path + (if (rawQ.isEmpty) "" else "?" + URLDecoder.decode(rawQ, StandardCharsets.UTF_8))
       requests.synchronized { requests += s"${ex.getRequestMethod} $decoded" }
+      authorizations.synchronized {
+        authorizations += Option(ex.getRequestHeaders.getFirst("Authorization")).getOrElse("")
+      }
       try route(ex, path, parseQuery(rawQ))
       catch { case e: Exception => respond(ex, 500, e.toString) }
     }
@@ -89,6 +94,9 @@ class GraphStub {
   /** When set, the next `$deltatoken` request answers 410 Gone with a
     * restart Location (the public token-expiry protocol), then clears. */
   @volatile var expireNextDelta = false
+
+  /** When set, deleting a workbook table row answers 404. */
+  @volatile var failRowDeletes = false
 
   private def route(ex: HttpExchange, path: String, q: Map[String, String]): Unit = {
     val method = ex.getRequestMethod
@@ -330,6 +338,9 @@ class GraphStub {
         val b = body()
         appendedRows.synchronized { appendedRows += b }
         respond(ex, 201, """{"index":99}""", 201)
+      case p if p.contains(":/workbook/tables/Sales/rows/itemAt(index=") && method == "DELETE" &&
+        failRowDeletes =>
+        respond(ex, 404, s"""{"error":{"message":"row not found: $path"}}""", 404)
       case p if p.contains(":/workbook/tables/Sales/rows/itemAt(index=") && method == "DELETE" =>
         val idx = p.split("index=")(1).stripSuffix(")").toInt
         deletedRowIndexes.synchronized { deletedRowIndexes += idx }

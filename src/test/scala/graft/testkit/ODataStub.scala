@@ -85,7 +85,7 @@ class ODataStub(v2: Boolean, pageSize: Int = 5) {
 
   val patchedKeys = mutable.ListBuffer[(String, String)]() // (key, body)
   val flakyCounts = mutable.Map[String, Int]()
-  var counterHits = 0
+  val counterHits = new java.util.concurrent.atomic.AtomicInteger()
   val deletedKeys = mutable.ListBuffer[String]()
 
   /** Delta-Sharing fixture: share/schema/table -> parquet files served at
@@ -342,7 +342,7 @@ class ODataStub(v2: Boolean, pageSize: Int = 5) {
         respond(ex, 200, "application/json",
           """{"address":"Sheet1!A1:C3","values":[["Name","Qty","Price"],["apple","3","1.25"],["pear",null,"0.99"]]}""")
       case "/counter" =>
-        val n = counterHits.synchronized { counterHits += 1; counterHits }
+        val n = counterHits.incrementAndGet()
         respond(ex, 200, "text/plain", s"hit $n")
       case "/token" if ex.getRequestMethod == "POST" =>
         val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
