@@ -170,6 +170,7 @@ class HttpCore(val policy: HttpPolicy = HttpPolicy()) {
         if ((r.status < 500 && r.status != 429) || attempt == policy.retries) return r
         last = Right(r)
       } catch {
+        case e: InterruptedException => throw e // a cancelled request is not sent again
         case e: Exception => last = Left(e)
       }
       attempt += 1

@@ -1,12 +1,15 @@
 package graft.sources.odata
 
 import com.fasterxml.jackson.databind.JsonNode
-import graft.sources.http.{HttpAuth, HttpCore, HttpStatusError}
+import graft.sources.http.{HttpAuth, HttpCore, HttpResult, HttpStatusError}
+import java.util.concurrent.{Callable, ExecutionException, Future, LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
+import scala.collection.mutable
 
 /** The connector's one pagination loop (reference
   * `ODataEntitySetClient::Get(get_next=true)`, SURVEY §3.1 step 4): GET a
   * page, read its envelope, follow `@odata.nextLink` / `__next` until a page
-  * carries none. Every paged reader walks through here. */
+  * carries none. Every paged reader walks through here; a `$skip`/`$top`
+  * range partition reads its window ahead through [[RangeReadAhead]]. */
 object ODataPages {
 
   /** One page: the body as text, its size as received, the response headers
@@ -60,4 +63,115 @@ object ODataPages {
         Fetched(text, bytes, hs, root, page)
       }
     }
+
+  /** Sub-range GETs one range partition keeps in flight. */
+  private val Depth = 4
+
+  /** Sub-range GETs go through their own client, so planning, interactive
+    * requests and first pages keep the few keep-alive connections of
+    * `HttpCore.shared` to themselves: sharing them slowed single-request
+    * reads. */
+  private lazy val readAheadHttp = new HttpCore()
+
+  /** One bounded daemon pool per JVM for every partition's read-ahead GETs:
+    * `Depth` per core covers every task slot keeping `Depth` in flight. */
+  private lazy val fetchPool: ThreadPoolExecutor = {
+    val n = Depth * Runtime.getRuntime.availableProcessors()
+    val pool = new ThreadPoolExecutor(n, n, 30, TimeUnit.SECONDS, new LinkedBlockingQueue[Runnable](),
+      r => { val t = new Thread(r, "odata-read-ahead"); t.setDaemon(true); t })
+    pool.allowCoreThreadTimeOut(true)
+    pool
+  }
+
+  /** The pages of one `$skip`/`$top` range partition, read ahead.
+    *
+    * The first page of `url` (whose window is `[skip, skip + top)`) is
+    * fetched as [[walk]] would, on `HttpCore.shared`. If it links on, its
+    * row count `n` is the server's page size: the rest of the window is
+    * cut into sub-ranges of `n` rows, each `url` with its `$skip`/`$top`
+    * replaced (so the `$orderby` key pin stays), and up to `Depth` of their
+    * GETs are in flight at once. Pages come out in sub-range order, with the same
+    * number of GETs as a serial walk of a full window.
+    *
+    * Fetch threads only GET a body and check its status; every page is
+    * parsed on the caller's thread, by a [[walk]] that takes the body as
+    * its preloaded first page and follows the sub-range's own nextLinks (a
+    * server page smaller than `n`). At most `Depth` unparsed bodies are
+    * held. A sub-range that ends short ends the data: nothing after it is
+    * sent, and what is in flight is cancelled. A failed sub-range throws
+    * its [[HttpStatusError]] on the caller's thread. `close()` cancels
+    * outstanding GETs. */
+  private[odata] final class RangeReadAhead(url: String, skip: Long, top: Long, auth: HttpAuth,
+                             headers: Map[String, String])
+    extends Iterator[Fetched] with AutoCloseable {
+
+    private val base = ODataUrl.parse(url)
+    private var started = false
+    private var pages: Iterator[Fetched] = Iterator.empty
+    // sub-ranges not yet sent, as (skip, top); (url, top, GET) in flight
+    private var pending: Iterator[(Long, Long)] = Iterator.empty
+    private val inFlight = mutable.Queue[(String, Long, Future[HttpResult])]()
+    // rows the current sub-range asked for and has yielded so far
+    private var asked = 0L
+    private var got = 0L
+
+    override def hasNext: Boolean = {
+      if (!started) { started = true; pages = firstPage() }
+      while (!pages.hasNext && inFlight.nonEmpty) {
+        if (got < asked) close() // a short sub-range: the data ends here
+        else pages = nextSubRange()
+      }
+      pages.hasNext
+    }
+
+    override def next(): Fetched = {
+      if (!hasNext) throw new NoSuchElementException("OData range is exhausted")
+      val p = pages.next()
+      got += p.rows.size
+      p
+    }
+
+    override def close(): Unit = {
+      pending = Iterator.empty
+      inFlight.foreach(_._3.cancel(true))
+      inFlight.clear()
+    }
+
+    private def firstPage(): Iterator[Fetched] = {
+      val head = walk(url, auth, headers)
+      val first = head.next()
+      val n = first.rows.size.toLong
+      if (first.page.nextLink.isEmpty || n == 0) Iterator.single(first) ++ head
+      else {
+        pending = Iterator.iterate(skip + n)(_ + n).takeWhile(_ < skip + top)
+          .map(s => (s, math.min(n, skip + top - s)))
+        send()
+        Iterator.single(first)
+      }
+    }
+
+    /** Tops the in-flight queue up to `Depth` GETs. */
+    private def send(): Unit =
+      while (inFlight.size < Depth && pending.hasNext) {
+        val (s, t) = pending.next()
+        val u = base.withParam("$top", t.toString).withParam("$skip", s.toString).render
+        val get: Callable[HttpResult] = () => {
+          val r = readAheadHttp.get(u, headers = headers, auth = auth, useCache = false)
+          if (r.status != 200) throw new HttpStatusError("GET", r.url, r.status, r.headers, r.text)
+          r
+        }
+        inFlight += ((u, t, fetchPool.submit(get)))
+      }
+
+    private def nextSubRange(): Iterator[Fetched] = {
+      val (u, t, fetch) = inFlight.dequeue()
+      val body = try fetch.get().text catch { case e: ExecutionException => throw e.getCause }
+      val rest = walk(u, auth, headers, readAheadHttp, preloaded = Some(body))
+      val first = rest.next() // parsed before the next GET goes out
+      send()
+      asked = t
+      got = 0
+      Iterator.single(first) ++ rest
+    }
+  }
 }

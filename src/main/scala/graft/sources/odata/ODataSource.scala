@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import graft.sources.http.{HttpAuth, HttpCore, HttpStatusError}
+import graft.sources.http.{HttpAuth, HttpCore, HttpStatusError, Trace}
 import graft.writes.{DeltaShape, RestBatchWrite, RestChanges, RestInsertWriterFactory, RestRowLevelOperation, RestWrites}
 import scala.jdk.CollectionConverters._
 
@@ -26,9 +26,11 @@ import scala.jdk.CollectionConverters._
   * Spark automatically (partial pushdown).
   *
   * Scale (beyond the reference, whose scan is single-threaded): when the
-  * server reports `$count` and `parallelism > 1`, the scan plans multiple
-  * `$skip/$top` range partitions so a large entity set is paged by many
-  * executors concurrently (SURVEY.md §7.4 item 6).
+  * server reports `$count` and `parallelism > 1`, the scan plans up to
+  * `parallelism` `$skip/$top` range partitions so a large entity set is
+  * paged by many executors concurrently (SURVEY.md §7.4 item 6), and each
+  * range partition keeps up to 4 page GETs of its window in flight
+  * ([[ODataPages.RangeReadAhead]]).
   *
   * Options: url, version (auto|2|4), expand, top, skip, count,
   * pageSize, parallelism, bearerToken / user+password.
@@ -112,6 +114,23 @@ final case class ODataMeta(entitySetUrl: String, setName: String,
 
 object ODataMeta {
   private val edmCache = new java.util.concurrent.ConcurrentHashMap[String, EdmModel]()
+
+  /** Capabilities servers have shown, one JVM-wide set like [[edmCache]]:
+    * `$skip` paging per entity set and order key, `$apply` per entity set,
+    * aggregate stage and pushed-filter shape. Only a yes is kept here; a
+    * no is asked again by the next query. */
+  private val capabilities = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** True when `key` is a known capability; else runs `probe` and keeps a
+    * yes. */
+  private[odata] def capable(key: Seq[String])(probe: => Boolean): Boolean = {
+    val k = key.mkString("\u0000")
+    capabilities.contains(k) || (probe && { capabilities.add(k); true })
+  }
+
+  /** Forgets every capability: a test server that stops accepting what it
+    * accepted, or a new one on a reused port. */
+  private[graft] def forgetCapabilities(): Unit = capabilities.clear()
 
   /** Sentinel model for fixed-schema endpoints (Microsoft Graph family):
     * no `$metadata` document exists, the schema is declared by the caller. */
@@ -599,23 +618,43 @@ class ODataScanBuilder(conf: ODataConf, fullSchema: StructType)
     }
   }
 
-  @volatile private var applyProbeCache: Map[String, Boolean] = Map.empty
+  /** The `\$top=1` capability probe of a pipeline, answered once per JVM
+    * for its entity set, aggregate stage and pushed-filter shape (literals
+    * do not change the answer). An answer that is not a 2xx page whose
+    * rows carry `agg0` means no and is traced; a transport failure fails
+    * the query. A no is kept by this builder only: Spark asks it both
+    * `supportCompletePushDown` and `pushAggregation`, and asking the
+    * server twice would double a refusing server's probes. */
+  private val applyRefused = scala.collection.mutable.Set[Seq[String]]()
   private def probeApply(a: ApplyAgg): Boolean = {
-    val url = ODataUrl.parse(meta.entitySetUrl)
-      .withParam("$apply", a.pipeline).withParam("$top", "1").render
-    applyProbeCache.getOrElse(url, {
-      val ok = try {
-        val resp = HttpCore.shared.get(url, useCache = false, auth = conf.auth)
-        resp.status / 100 == 2 && {
-          val page = ODataJson.extractPage(ODataJson.parse(resp.text))
-          // rows must carry the aggregate alias: a server that ignores
-          // $apply echoes raw entities, which would decode as all-null aggs
-          page.rows.forall(_.has("agg0"))
+    val key = Seq("$apply", meta.entitySetUrl, a.aggStage) ++ pushed.map(shape)
+    !applyRefused(key) && (ODataMeta.capable(key) {
+      val url = ODataUrl.parse(meta.entitySetUrl)
+        .withParam("$apply", a.pipeline).withParam("$top", "1").render
+      val resp = HttpCore.shared.get(url, useCache = false, auth = conf.auth)
+      // rows must carry the aggregate alias: a server that ignores $apply
+      // echoes raw entities, which would decode as all-null aggs
+      val refusal =
+        if (resp.status / 100 != 2) Some(s"HTTP ${resp.status}")
+        else scala.util.Try(ODataJson.extractPage(ODataJson.parse(resp.text))).toOption match {
+          case None => Some(s"HTTP ${resp.status}, not an OData page")
+          case Some(p) if !p.rows.forall(_.has("agg0")) => Some(s"HTTP ${resp.status}, rows without agg0")
+          case _ => None
         }
-      } catch { case _: Exception => false }
-      applyProbeCache += (url -> ok)
-      ok
-    })
+      refusal.foreach(r => Trace.warn("odata", s"$$apply probe GET $url -> $r: aggregating in Spark"))
+      refusal.isEmpty
+    } || { applyRefused += key; false })
+  }
+
+  /** A pushed filter without its literals: its classes and columns. */
+  private def shape(f: Filter): String = {
+    import org.apache.spark.sql.sources.{And, Not, Or}
+    f match {
+      case And(l, r) => s"And(${shape(l)},${shape(r)})"
+      case Or(l, r) => s"Or(${shape(l)},${shape(r)})"
+      case Not(c) => s"Not(${shape(c)})"
+      case _ => s"${f.getClass.getSimpleName}(${f.references.mkString(",")})"
+    }
   }
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
@@ -857,10 +896,11 @@ class ODataScan(conf: ODataConf, meta: ODataMeta, schema: StructType,
             val nParts = math.min(conf.parallelism.toLong,
               math.max(1L, (t + conf.partitionRows - 1) / conf.partitionRows)).toInt
             val per = (t + nParts - 1) / nParts
+            val skipBase = conf.skip.getOrElse(0L) + offset.map(_.toLong).getOrElse(0L)
             (0 until nParts).map { i =>
-              val skipBase = conf.skip.getOrElse(0L) + offset.map(_.toLong).getOrElse(0L)
-              ODataInputPartition(
-                buildUrl(Some(skipBase + i * per), Some(per), Some(ord)), i)
+              val skip = skipBase + i * per
+              ODataInputPartition(buildUrl(Some(skip), Some(per), Some(ord)), i,
+                range = Some((skip, per)))
             }.toArray
           } else planKeysetPartitions(ord, total)
             .getOrElse(Array(ODataInputPartition(buildUrl(None, None), 0)))
@@ -870,20 +910,22 @@ class ODataScan(conf: ODataConf, meta: ODataMeta, schema: StructType,
   }
 
   /** Does the server honor `$skip`? One cheap authenticated probe
-    * (`$top=1&$skip=1`) at planning time. Graph rejects `$skip` on many
-    * collections and delta feeds always do — those used to silently fall
-    * back to ONE partition; now they take the keyset path below. */
-  @volatile private var skipProbeResult: Option[Boolean] = None
-  private def skipProbe(ord: String): Boolean = skipProbeResult.getOrElse {
-    val r = try {
+    * (`$top=1&$skip=1`) at planning time, answered once per JVM for the
+    * entity set and order key. Graph rejects `$skip` on many collections
+    * and delta feeds always do — those take the keyset path below. A
+    * non-2xx answer means no and is traced; a transport failure fails the
+    * plan. A no is kept by this scan only, which Spark may plan twice. */
+  @volatile private var skipRefused = false
+  private def skipProbe(ord: String): Boolean =
+    !skipRefused && (ODataMeta.capable(Seq("$skip", meta.entitySetUrl, ord)) {
       var u = ODataUrl.parse(meta.entitySetUrl)
         .withParam("$top", "1").withParam("$skip", "1").withParam("$orderby", ord)
       if (meta.version == 2) u = u.withParam("$format", "json")
-      HttpCore.shared.get(u.render, useCache = false, auth = conf.auth).status / 100 == 2
-    } catch { case _: Exception => false }
-    skipProbeResult = Some(r) // plan may re-run under runtime filtering: probe once
-    r
-  }
+      val status = HttpCore.shared.get(u.render, useCache = false, auth = conf.auth).status
+      if (status / 100 != 2)
+        Trace.warn("odata", s"$$skip probe GET ${u.render} -> HTTP $status: no range partitions")
+      status / 100 == 2
+    } || { skipRefused = true; false })
 
   /** Keyset-window parallel scan for servers that reject `$skip`: partitions
     * are disjoint key ranges (see [[KeysetWindows]]); pushed OFFSET cannot be
@@ -1284,8 +1326,12 @@ class ODataCountScan(conf: ODataConf, meta: ODataMeta, filterExpr: Option[String
   }
 }
 
+/** One partition's request: its first page's `url`, a body that already
+  * stands in for that page (`preloaded`), or the `(skip, top)` window of a
+  * `$skip`/`$top` range partition (`range`), which its reader reads ahead. */
 final case class ODataInputPartition(url: String, index: Int,
-                                     preloaded: Option[String] = None)
+                                     preloaded: Option[String] = None,
+                                     range: Option[(Long, Long)] = None)
   extends InputPartition
 
 /** Everything shipped to executors must be small + serializable (SURVEY §7.4
@@ -1301,7 +1347,8 @@ class ODataReaderFactory(schema: StructType, pageSize: Option[Int],
 }
 
 /** The executor-side paging loop (reference scan loop, SURVEY §3.1 step 4):
-  * GET page → decode rows → follow nextLink until exhausted. */
+  * GET page → decode rows → follow nextLink until exhausted. A range
+  * partition's pages are read ahead, still decoded here in window order. */
 class ODataPartitionReader(partition: ODataInputPartition, schema: StructType,
                            pageSize: Option[Int], auth: HttpAuth,
                            unwrap: Option[String] = None)
@@ -1311,11 +1358,14 @@ class ODataPartitionReader(partition: ODataInputPartition, schema: StructType,
   private var pages = 0L
   private var rows = 0L
   private var bytes = 0L
+  private val headers = pageSize.map(n => "Prefer" -> s"odata.maxpagesize=$n").toMap
+  private val readAhead = partition.range.map { case (skip, top) =>
+    new ODataPages.RangeReadAhead(partition.url, skip, top, auth, headers)
+  }
   // a first page delivered at planning via one driver-side `$batch` POST
   // (keyset-window scans) stands in for the walk's first GET
-  private val decoded: Iterator[InternalRow] = ODataPages.walk(partition.url, auth,
-    pageSize.map(n => "Prefer" -> s"odata.maxpagesize=$n").toMap,
-    preloaded = partition.preloaded).flatMap { p =>
+  private val decoded: Iterator[InternalRow] = readAhead.getOrElse(
+    ODataPages.walk(partition.url, auth, headers, preloaded = partition.preloaded)).flatMap { p =>
     pages += 1
     bytes += p.bytes
     p.rows.iterator.map { n =>
@@ -1332,5 +1382,5 @@ class ODataPartitionReader(partition: ODataInputPartition, schema: StructType,
       ODataTaskMetric("odataBytesFetched", bytes))
 
   override def get(): InternalRow = current
-  override def close(): Unit = ()
+  override def close(): Unit = readAhead.foreach(_.close())
 }

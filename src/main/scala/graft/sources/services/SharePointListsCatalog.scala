@@ -89,12 +89,21 @@ class SharePointListsCatalog extends TableCatalog with SupportsNamespaces {
     namespaceExists(ident.namespace) &&
       lists().exists(l => l._2 == ident.name || l._3 == ident.name)
 
+  /** List id and item schema per table name, resolved once per catalog like
+    * [[siteId]]: a statement after the first sends no `/lists` walk and no
+    * `/columns` GET. `REFRESH TABLE` ([[invalidateTable]]) resolves again. */
+  private val resolved = new java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]()
+
   override def loadTable(ident: Identifier): Table = {
     val a = auth
-    val lid = Graph.resolveListId(siteId, ident.name, graphBase, a)
-    val schema = Graph.listItemsSchema(siteId, lid, graphBase, a)
+    val (lid, schema) = resolved.computeIfAbsent(ident.name, { name =>
+      val lid = Graph.resolveListId(siteId, name, graphBase, a)
+      (lid, Graph.listItemsSchema(siteId, lid, graphBase, a))
+    })
     new SharePointListTable(graphBase.stripSuffix("/"), siteId, lid, ident.name, schema, a)
   }
+
+  override def invalidateTable(ident: Identifier): Unit = resolved.remove(ident.name)
 
   override def createTable(ident: Identifier, schema: StructType,
                            partitions: Array[Transform],

@@ -3,7 +3,7 @@ package graft.sources.odata
 import graft.SparkSpecBase
 import graft.testkit.ODataStub
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
+import org.scalatest.{BeforeAndAfterAll, BeforeAndAfterEach}
 import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.time.{Seconds, Span}
 
@@ -11,7 +11,8 @@ import org.scalatest.time.{Seconds, Span}
   * the port's equivalent of the reference's sqllogictests against live
   * Northwind (SURVEY.md §5), asserting both results AND what reached the
   * server (pushdown observability, §7.2's success criteria). */
-class ODataReadE2ESpec extends SparkSpecBase with BeforeAndAfterAll with TimeLimits {
+class ODataReadE2ESpec extends SparkSpecBase with BeforeAndAfterAll with BeforeAndAfterEach
+  with TimeLimits {
 
   implicit val signaler: Signaler = ThreadSignaler
 
@@ -22,6 +23,12 @@ class ODataReadE2ESpec extends SparkSpecBase with BeforeAndAfterAll with TimeLim
     v4 = new ODataStub(v2 = false).start()
     v2 = new ODataStub(v2 = true).start()
     super.beforeAll()
+  }
+  // the stubs keep their port across tests that switch what they accept,
+  // so no test inherits a capability an earlier one saw
+  override def beforeEach(): Unit = {
+    ODataMeta.forgetCapabilities()
+    super.beforeEach()
   }
   override def afterAll(): Unit = {
     if (v4 != null) v4.stop()
@@ -1006,4 +1013,141 @@ class ODataReadE2ESpec extends SparkSpecBase with BeforeAndAfterAll with TimeLim
     } finally looping.stop()
   }
 
+  /** A 40-row server whose range scans (two partitions) cut into two
+    * 20-row windows of 5-row pages: a first page and 3 sub-ranges each. */
+  private def rangeStub(): ODataStub = {
+    val s = new ODataStub(v2 = false).start()
+    s.rows = s.makeRows(40)
+    s.pagesWithinTop = true
+    s
+  }
+  private def rangeScan(s: ODataStub) = read(s, "parallelism" -> "2", "partitionRows" -> "20")
+  private val rangeIds = (0 until 40).map(i => f"C$i%02d")
+  /** Data page GETs of a range scan: no probe, no count. */
+  private def pageGets(s: ODataStub): Seq[String] =
+    s.requests.toSeq.filter(r => r.startsWith("/svc/Customers?") && !r.contains("$top=1&"))
+
+  test("range read-ahead: sub-ranges answered out of order yield every row in order, with a serial walk's page GETs") {
+    val s = rangeStub()
+    // each window's first sub-range answers last
+    s.skipAnswers = Map(5 -> ODataStub.SkipAnswer(delayMs = 500),
+      25 -> ODataStub.SkipAnswer(delayMs = 500))
+    try {
+      val ids = failAfter(Span(60, Seconds))(rangeScan(s).collect().map(_.getString(0)).toSeq)
+      assert(ids == rangeIds, ids)
+      // a serial walk sends 4 pages per window too: the first and 3 nextLinks
+      val gets = pageGets(s)
+      assert(gets.size == 8, gets.mkString("\n"))
+      assert(Seq(5, 10, 15, 25, 30, 35).forall(k =>
+        gets.exists(_.endsWith(s"$$top=5&$$skip=$k"))), gets.mkString("\n"))
+    } finally s.stop()
+  }
+
+  test("range read-ahead: a sub-range the server pages smaller is followed to completion") {
+    val s = rangeStub()
+    s.skipAnswers = Map(10 -> ODataStub.SkipAnswer(pageSize = Some(2)))
+    try {
+      assert(rangeScan(s).collect().map(_.getString(0)).toSeq == rangeIds)
+      // [10, 15) came back as pages of 2, 2 and 1 rows
+      val sub = pageGets(s).filter(_.contains("$skip=10"))
+      assert(sub.size == 3 && sub.exists(_.contains("__page=2")), sub.mkString("\n"))
+    } finally s.stop()
+  }
+
+  test("range read-ahead: a 404 on one sub-range fails the query naming that sub-range's URL") {
+    val s = rangeStub()
+    s.skipAnswers = Map(10 -> ODataStub.SkipAnswer(status = 404))
+    try {
+      val err = failAfter(Span(60, Seconds))(intercept[Exception](rangeScan(s).collect()))
+      assert(messages(err).contains("HttpStatusError: GET ") &&
+        messages(err).contains("$top=5&$skip=10 -> HTTP 404"), messages(err))
+    } finally s.stop()
+  }
+
+  private def applyProbes(s: ODataStub): Int =
+    s.requests.count(r => r.contains("$apply=") && r.endsWith("$top=1"))
+  private def revenueByCountry(s: ODataStub, min: Long): Map[String, Long] =
+    s.rows.filter(_("Revenue").asInstanceOf[Long] > min).groupBy(_("Country").toString)
+      .map { case (c, rs) => c -> rs.map(_("Revenue").asInstanceOf[Long]).sum }
+
+  test("capability cache: two group-bys that differ only in literals send one $apply probe") {
+    v4.requests.clear()
+    Seq(5000L, 9000L).foreach { min =>
+      val out = read(v4).filter(col("Revenue") > min).groupBy("Country")
+        .agg(sum("Revenue")).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(out == revenueByCountry(v4, min))
+    }
+    assert(applyProbes(v4) == 1, v4.requests)
+  }
+
+  test("capability cache: two range scans of one set send one $skip probe") {
+    v4.requests.clear()
+    (1 to 2).foreach(_ =>
+      assert(read(v4, "parallelism" -> "4", "partitionRows" -> "5").collect().length == 20))
+    assert(v4.requests.count(_.contains("$top=1&$skip=1&")) == 1, v4.requests)
+    assert(v4.requests.count(_.endsWith("$top=5&$skip=15")) == 2, v4.requests)
+  }
+
+  test("capability cache: a server answering $apply with 501 is probed by every query, which aggregates in Spark") {
+    v4.applyStatus = 501
+    try {
+      v4.requests.clear()
+      (1 to 2).foreach { i =>
+        val out = read(v4).groupBy("Country").agg(sum("Revenue"))
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        assert(out == revenueByCountry(v4, 0L))
+        assert(applyProbes(v4) >= i, v4.requests)
+      }
+      assert(v4.requests.forall(r => !r.contains("$apply=") || r.endsWith("$top=1")), v4.requests)
+    } finally v4.applyStatus = 200
+  }
+
+  /** Runs `body` with WARN traces written to a fresh file; its lines. */
+  private def warnings(body: => Unit): Seq[String] = {
+    val dir = java.nio.file.Files.createTempDirectory("odata-warn")
+    val conf = Seq("enabled" -> "true", "level" -> "WARN", "output" -> "file", "dir" -> dir.toString)
+    try {
+      conf.foreach { case (k, v) => spark.conf.set(s"spark.graft.trace.$k", v) }
+      body
+    } finally conf.foreach { case (k, _) => spark.conf.unset(s"spark.graft.trace.$k") }
+    val f = dir.resolve("graft_trace.log")
+    val lines =
+      if (java.nio.file.Files.exists(f)) java.nio.file.Files.readAllLines(f).toArray.toSeq.map(_.toString)
+      else Seq.empty
+    java.nio.file.Files.deleteIfExists(f)
+    java.nio.file.Files.delete(dir)
+    lines
+  }
+
+  test("$skip probe: an HTTP no is traced and plans keyset windows; a transport failure fails the scan") {
+    val s = new ODataStub(v2 = false).start()
+    def scan() = read(s, "parallelism" -> "4", "partitionRows" -> "5").collect()
+    try {
+      s.skipStatus = 501
+      val lines = warnings(assert(scan().length == 20))
+      assert(lines.exists(l => l.contains("[WARN] [odata] $skip probe GET ") &&
+        l.contains("-> HTTP 501")), lines)
+      s.skipStatus = 200
+      s.dropProbes = true
+      val err = failAfter(Span(60, Seconds))(intercept[Exception](scan()))
+      assert(messages(err).contains("HTTP GET ") && messages(err).contains("$top=1&$skip=1&") &&
+        messages(err).contains("failed after 3 retries"), messages(err))
+    } finally s.stop()
+  }
+
+  test("$apply probe: an HTTP no is traced and aggregates in Spark; a transport failure fails the query") {
+    val s = new ODataStub(v2 = false).start()
+    def agg() = read(s).groupBy("Country").agg(sum("Revenue")).collect()
+    try {
+      s.applyStatus = 501
+      val lines = warnings(assert(agg().length == 3))
+      assert(lines.exists(l => l.contains("[WARN] [odata] $apply probe GET ") &&
+        l.contains("-> HTTP 501")), lines)
+      s.applyStatus = 200
+      s.dropProbes = true
+      val err = failAfter(Span(60, Seconds))(intercept[Exception](agg()))
+      assert(messages(err).contains("HTTP GET ") && messages(err).contains("$apply=") &&
+        messages(err).contains("failed after 3 retries"), messages(err))
+    } finally s.stop()
+  }
 }

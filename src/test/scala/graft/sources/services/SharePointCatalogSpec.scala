@@ -114,6 +114,33 @@ class SharePointCatalogSpec extends SparkSpecBase with BeforeAndAfterAll {
     }
   }
 
+  test("SELECT, INSERT, UPDATE and DELETE of one list resolve it once; REFRESH TABLE resolves it again") {
+    spark.conf.set("spark.sql.catalog.spr", "graft.sources.services.SharePointListsCatalog")
+    spark.conf.set("spark.sql.catalog.spr.url", stub.baseUrl)
+    spark.conf.set("spark.sql.catalog.spr.site", "Finance")
+    try {
+      stub.requests.clear()
+      def resolutions(): (Int, Int) = {
+        val gets = stub.requests.filter(_.startsWith("GET ")).map(_.takeWhile(_ != '?'))
+        (gets.count(_.endsWith("/lists")), gets.count(_.endsWith("/columns")))
+      }
+      spark.sql("SELECT id, Title FROM spr.main.`Budget List`").collect()
+      spark.sql(
+        """INSERT INTO spr.main.`Budget List`
+          |SELECT 'x' AS id, 'Once' AS Title, 1.0 AS Amount, true AS Approved,
+          |       TIMESTAMP '2024-06-01 00:00:00' AS DueDate, 1.0 AS Cost""".stripMargin)
+      spark.sql("UPDATE spr.main.`Budget List` SET Title = 'Once' WHERE id = '3'")
+      spark.sql("DELETE FROM spr.main.`Budget List` WHERE id = '5'")
+      assert(resolutions() == ((1, 1)), stub.requests.mkString("\n"))
+      spark.sql("REFRESH TABLE spr.main.`Budget List`")
+      spark.sql("SELECT id FROM spr.main.`Budget List`").collect()
+      assert(resolutions() == ((2, 2)), stub.requests.mkString("\n"))
+    } finally {
+      Seq("site", "url").foreach(k => spark.conf.unset(s"spark.sql.catalog.spr.$k"))
+      spark.conf.unset("spark.sql.catalog.spr")
+    }
+  }
+
   test("SQL DELETE removes exactly the matching items") {
     stub.deletedItems.clear()
     spark.sql("DELETE FROM sp.main.`Budget List` WHERE Amount < 3.0")

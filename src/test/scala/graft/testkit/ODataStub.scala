@@ -79,6 +79,19 @@ class ODataStub(v2: Boolean, pageSize: Int = 5) {
     * server whose `@odata.nextLink` repeats (reader cycle-check harness). */
   @volatile var loopNextLink: Boolean = false
 
+  /** When true, an answer to a `$top` is paged too, as real servers page
+    * it; when false it is one page. */
+  @volatile var pagesWithinTop: Boolean = false
+
+  /** How a `Customers` GET carrying `$skip=<key>` is answered: after a
+    * delay (range reads answered out of order), with a status instead of
+    * the page, or paged smaller than asked (a server capping its pages). */
+  @volatile var skipAnswers: Map[Int, ODataStub.SkipAnswer] = Map.empty
+
+  /** When true, every `$top=1` GET under /svc has its connection closed
+    * unanswered: a transport failure no client retry gets past. */
+  @volatile var dropProbes: Boolean = false
+
   /** Raw bodies POSTed to /$batch (JSON batch round-trips). */
   val batchBodies = mutable.ListBuffer[String]()
   private val jsonMapper = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -104,6 +117,8 @@ class ODataStub(v2: Boolean, pageSize: Int = 5) {
   def serviceUrl: String = s"http://localhost:$port/svc"
 
   def start(): this.type = {
+    // a reused port must not carry what an earlier server here accepted
+    graft.sources.odata.ODataMeta.forgetCapabilities()
     server = HttpServer.create(new InetSocketAddress("localhost", 0), 0)
     server.createContext("/", new Handler)
     // small daemon pool: executor-distributed operations (bulk delete) hit
@@ -167,7 +182,9 @@ class ODataStub(v2: Boolean, pageSize: Int = 5) {
       val rawQ = Option(ex.getRequestURI.getRawQuery).getOrElse("")
       val decoded = path + (if (rawQ.isEmpty) "" else "?" + URLDecoder.decode(rawQ, StandardCharsets.UTF_8))
       requests.synchronized { requests += decoded }
-      if (path.startsWith("/svc") && !authorized(ex)) {
+      if (dropProbes && path.startsWith("/svc") && parseQuery(rawQ).get("$top").contains("1"))
+        ex.close()
+      else if (path.startsWith("/svc") && !authorized(ex)) {
         unauthorized.synchronized { unauthorized += decoded }
         respond(ex, 401, "text/plain", "unauthorized")
       } else try route(ex, path, parseQuery(rawQ)) catch {
@@ -467,6 +484,12 @@ class ODataStub(v2: Boolean, pageSize: Int = 5) {
     if (q.contains("$skip") && skipStatus != 200) {
       respond(ex, skipStatus, "text/plain", "$skip not supported"); return
     }
+    val answer = q.get("$skip").flatMap(s => skipAnswers.get(s.toInt))
+      .getOrElse(ODataStub.SkipAnswer())
+    Thread.sleep(answer.delayMs)
+    if (answer.status != 200) {
+      respond(ex, answer.status, "text/plain", s"answered ${answer.status}"); return
+    }
     if (q.contains("$apply")) {
       if (applyStatus != 200) respond(ex, applyStatus, "text/plain", "$apply not supported")
       else serveApply(ex, q("$apply"), q.get("$top").map(_.toInt), q.get("$orderby"))
@@ -475,15 +498,15 @@ class ODataStub(v2: Boolean, pageSize: Int = 5) {
     var data = shapeRows(q)
     val explicitTop = q.get("$top").map(_.toInt)
     explicitTop.foreach(n => data = data.take(n))
-    // nextLink pagination for unlimited scans; a requested
+    // nextLink pagination (within a `$top` if `pagesWithinTop`); a requested
     // `Prefer: odata.maxpagesize` overrides the stub's default page size
     // (what real services do — and what makes a batched first page and its
     // follow-up GETs slice the same sequence at the same granularity)
-    val psz = preferPageSize(Option(ex.getRequestHeaders.getFirst("Prefer")))
-      .getOrElse(pageSize)
+    val psz = answer.pageSize.getOrElse(
+      preferPageSize(Option(ex.getRequestHeaders.getFirst("Prefer"))).getOrElse(pageSize))
     val page = q.getOrElse("__page", "0").toInt
     val (slice, hasMore) =
-      if (explicitTop.isDefined) (data, false)
+      if (explicitTop.isDefined && !pagesWithinTop) (data, false)
       else (data.slice(page * psz, (page + 1) * psz),
         data.size > (page + 1) * psz)
     val select = q.get("$select").map(_.split(',').map(_.trim).toSeq)
@@ -756,4 +779,9 @@ class ODataStub(v2: Boolean, pageSize: Int = 5) {
     val os = ex.getResponseBody
     os.write(bytes); os.close()
   }
+}
+
+object ODataStub {
+  /** See [[ODataStub.skipAnswers]]. */
+  final case class SkipAnswer(delayMs: Long = 0, status: Int = 200, pageSize: Option[Int] = None)
 }
