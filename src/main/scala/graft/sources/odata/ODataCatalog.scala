@@ -1,11 +1,7 @@
 package graft.sources.odata
 
-import java.util
-import org.apache.spark.sql.connector.catalog._
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.connector.catalog.Table
+import graft.sources.AttachedCatalog
 
 /** OData service as a Spark catalog — the port of the reference's
   * `ATTACH '<url>' AS db (TYPE odata)` storage extension
@@ -18,69 +14,25 @@ import scala.jdk.CollectionConverters._
   * SELECT * FROM nw.main.Customers WHERE Country = 'Germany'
   * }}}
   *
-  * Like the reference, one `main` namespace; `listTables` enumerates entity
-  * sets from one cached `$metadata` fetch; `loadTable` wires the same DSv2
-  * scan (with all pushdowns) used by the `odata` format. Writes are rejected
-  * (reference `odata_catalog.cpp:214-215`).
+  * Like the reference, one `main` namespace; the tables are the entity sets
+  * of one cached `$metadata` fetch. Each table is the same DSv2 table (all
+  * pushdowns) the `odata` format reads, and it takes INSERT, UPDATE, MERGE
+  * and DELETE ([[ODataTable]]) — beyond the reference, whose OData catalog
+  * rejects writes (`odata_catalog.cpp:214-215`).
   */
-class ODataCatalog extends TableCatalog with SupportsNamespaces {
+class ODataCatalog extends AttachedCatalog("odata") {
 
-  private var catalogName: String = _
-  private var baseOptions: Map[String, String] = Map.empty
-  private lazy val conf: ODataConf = ODataConf.fromOptions(baseOptions)
-  private lazy val meta: EdmModel = {
-    val m = ODataMeta.resolve(conf)
-    m.model
-  }
+  private lazy val conf: ODataConf = ODataConf.fromOptions(options)
+  private lazy val meta: EdmModel = ODataMeta.resolve(conf).model
   private lazy val serviceRoot: String = ODataUrl.parse(conf.url).base.stripSuffix("/")
 
-  override def initialize(name: String, options: CaseInsensitiveStringMap): Unit = {
-    catalogName = name
-    baseOptions = options.asScala.toMap
-  }
-  override def name(): String = catalogName
+  override protected def namespaceMetadata: (String, String) = "service" -> conf.url
 
-  override def listNamespaces(): Array[Array[String]] = Array(Array("main"))
-  override def listNamespaces(namespace: Array[String]): Array[Array[String]] =
-    if (namespace.isEmpty) listNamespaces() else Array.empty
-  override def namespaceExists(namespace: Array[String]): Boolean =
-    namespace.sameElements(Array("main"))
-  override def loadNamespaceMetadata(namespace: Array[String]): util.Map[String, String] = {
-    if (!namespaceExists(namespace))
-      throw new org.apache.spark.sql.catalyst.analysis.NoSuchNamespaceException(namespace)
-    Map("service" -> conf.url).asJava
-  }
-  override def createNamespace(namespace: Array[String], metadata: util.Map[String, String]): Unit =
-    throw new UnsupportedOperationException("odata catalog is read-only")
-  override def alterNamespace(namespace: Array[String], changes: NamespaceChange*): Unit =
-    throw new UnsupportedOperationException("odata catalog is read-only")
-  override def dropNamespace(namespace: Array[String], cascade: Boolean): Boolean =
-    throw new UnsupportedOperationException("odata catalog is read-only")
+  override protected def tableNames: Seq[String] = meta.entitySets.map(_.name)
 
-  override def listTables(namespace: Array[String]): Array[Identifier] = {
-    if (!namespaceExists(namespace))
-      throw new org.apache.spark.sql.catalyst.analysis.NoSuchNamespaceException(namespace)
-    meta.entitySets.map(es => Identifier.of(Array("main"), es.name)).toArray
-  }
-
-  override def tableExists(ident: Identifier): Boolean =
-    namespaceExists(ident.namespace) && meta.entitySets.exists(_.name == ident.name)
-
-  override def loadTable(ident: Identifier): Table = {
-    if (!tableExists(ident))
-      throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(ident)
-    val tableConf = conf.copy(url = s"$serviceRoot/${ident.name}")
+  override protected def load(name: String): Table = {
+    if (!tableNames.contains(name)) noSuchTable(name)
+    val tableConf = conf.copy(url = s"$serviceRoot/$name")
     new ODataTable(tableConf, ODataMeta.resolve(tableConf).sparkSchema)
   }
-
-  override def createTable(ident: Identifier, schema: StructType,
-                           partitions: Array[Transform],
-                           properties: util.Map[String, String]): Table =
-    throw new UnsupportedOperationException("odata catalog is read-only")
-  override def alterTable(ident: Identifier, changes: TableChange*): Table =
-    throw new UnsupportedOperationException("odata catalog is read-only")
-  override def dropTable(ident: Identifier): Boolean =
-    throw new UnsupportedOperationException("odata catalog is read-only")
-  override def renameTable(oldIdent: Identifier, newIdent: Identifier): Unit =
-    throw new UnsupportedOperationException("odata catalog is read-only")
 }

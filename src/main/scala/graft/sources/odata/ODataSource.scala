@@ -113,7 +113,9 @@ final case class ODataMeta(entitySetUrl: String, setName: String,
                            serviceRoot: String)
 
 object ODataMeta {
-  private val edmCache = new java.util.concurrent.ConcurrentHashMap[String, EdmModel]()
+  /** A parsed `$metadata` model and the credentials that fetched it. */
+  private final case class KeptModel(principal: String, model: EdmModel)
+  private val edmCache = new java.util.concurrent.ConcurrentHashMap[String, KeptModel]()
 
   /** Capabilities servers have shown, one JVM-wide set like [[edmCache]]:
     * `$skip` paging per entity set and order key, `$apply` per entity set,
@@ -131,6 +133,11 @@ object ODataMeta {
   /** Forgets every capability: a test server that stops accepting what it
     * accepted, or a new one on a reused port. */
   private[graft] def forgetCapabilities(): Unit = capabilities.clear()
+
+  /** Forgets the models of every service under `origin`: a new test server
+    * on a reused port. */
+  private[graft] def forgetModels(origin: String): Unit =
+    edmCache.keySet.removeIf(_.startsWith(origin))
 
   /** Sentinel model for fixed-schema endpoints (Microsoft Graph family):
     * no `$metadata` document exists, the schema is declared by the caller. */
@@ -171,25 +178,33 @@ object ODataMeta {
       conf.serviceRoot.getOrElse(serviceRoot))
   }
 
+  /** Parsed `$metadata` model of a service root, fetched once per JVM per
+    * root (`edmCache`): the connector's only `$metadata` read. Every
+    * consumer — the DSv2 scan, the catalogs, the service-root probe,
+    * `odata_attach`, the describe functions, ODP — shares this cache, so
+    * attaching an N-set service costs ONE metadata round-trip, not N+1.
+    * A model answers only the credentials that fetched it, as `HttpCore`'s
+    * response cache does: a call with other credentials fetches again and
+    * replaces it, so one principal's fetch never answers another's and a
+    * rotating token keeps one entry. A non-200 answer throws
+    * `GET <url> -> HTTP <status>`; failures are not cached. */
+  def modelAt(serviceRoot: String, auth: HttpAuth): EdmModel = {
+    val metaUrl = serviceRoot.stripSuffix("/") + "/$metadata"
+    val principal = auth.headerValue.getOrElse("")
+    edmCache.compute(metaUrl, { (_, kept) =>
+      if (kept != null && kept.principal == principal) kept
+      else {
+        val resp = HttpCore.shared.get(metaUrl, auth = auth)
+        if (resp.status != 200)
+          throw new RuntimeException(s"GET $metaUrl -> HTTP ${resp.status}")
+        KeptModel(principal, EdmxParser.parse(resp.text))
+      }
+    }).model
+  }
+
   /** A URL names an entity set when its last segment matches no service
     * document; we use the pragmatic rule: try `$metadata` at the parent — if
     * the last segment is a known entity set there, treat it as the set. */
-  /** Parsed `$metadata` model of a service root, fetched once per JVM per
-    * root (`edmCache`). Every consumer — the DSv2 scan, the catalog, the
-    * service-root probe, `odata_attach` — shares this cache, so attaching
-    * an N-set service costs ONE metadata round-trip, not N+1 (the probe in
-    * [[splitServiceAndSet]] previously re-fetched AND re-parsed the full
-    * EDMX document for every entity set). Failures are not cached. */
-  def modelAt(serviceRoot: String, auth: HttpAuth): EdmModel = {
-    val metaUrl = serviceRoot.stripSuffix("/") + "/$metadata"
-    edmCache.computeIfAbsent(metaUrl, { _ =>
-      val resp = HttpCore.shared.get(metaUrl, auth = auth)
-      if (resp.status != 200)
-        throw new RuntimeException(s"GET $metaUrl -> HTTP ${resp.status}")
-      EdmxParser.parse(resp.text)
-    })
-  }
-
   private def splitServiceAndSet(url: String, auth: HttpAuth): (String, Option[String]) = {
     val idx = url.lastIndexOf('/')
     if (idx <= "https://".length) return (url, None)

@@ -2,17 +2,16 @@ package graft.sources.services
 
 import java.util
 import org.apache.spark.sql.connector.catalog._
-import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import graft.sources.AttachedCatalog
 import graft.sources.http.{HttpAuth, SecretRegistry}
 import graft.sources.odata.ODataPages
 import graft.writes.{RestBatchWrite, RestChanges}
-import scala.jdk.CollectionConverters._
 
 /** Excel workbook as a Spark catalog — the port of the reference's
   * `ATTACH (TYPE excel_workbook)` storage extension
@@ -28,68 +27,22 @@ import scala.jdk.CollectionConverters._
   * SELECT * FROM wb.main.Sales;  INSERT INTO wb.main.Sales VALUES (...);
   * }}}
   */
-class ExcelWorkbookCatalog extends TableCatalog with SupportsNamespaces {
+class ExcelWorkbookCatalog extends AttachedCatalog("excel_workbook") {
 
-  private var catalogName: String = _
-  private var options: Map[String, String] = Map.empty
-  private def itemUrl: String = options.getOrElse("url",
-    throw new IllegalArgumentException("excel_workbook catalog requires option 'url'"))
+  private def itemUrl: String = required("url", "Graph drive item URL of the workbook")
   private def auth: HttpAuth = SecretRegistry.authFrom(options, itemUrl)
 
-  override def initialize(name: String, opts: CaseInsensitiveStringMap): Unit = {
-    catalogName = name
-    options = opts.asScala.toMap.map { case (k, v) => k.toLowerCase -> v }
-  }
-  override def name(): String = catalogName
+  override protected def namespaceMetadata: (String, String) = "workbook" -> itemUrl
 
-  override def listNamespaces(): Array[Array[String]] = Array(Array("main"))
-  override def listNamespaces(namespace: Array[String]): Array[Array[String]] =
-    if (namespace.isEmpty) listNamespaces() else Array.empty
-  override def namespaceExists(namespace: Array[String]): Boolean =
-    namespace.sameElements(Array("main"))
-  override def loadNamespaceMetadata(namespace: Array[String]): util.Map[String, String] = {
-    if (!namespaceExists(namespace))
-      throw new org.apache.spark.sql.catalyst.analysis.NoSuchNamespaceException(namespace)
-    Map("workbook" -> itemUrl).asJava
-  }
-  override def createNamespace(namespace: Array[String], metadata: util.Map[String, String]): Unit =
-    throw new UnsupportedOperationException("excel workbook namespaces are fixed")
-  override def alterNamespace(namespace: Array[String], changes: NamespaceChange*): Unit =
-    throw new UnsupportedOperationException("excel workbook namespaces are fixed")
-  override def dropNamespace(namespace: Array[String], cascade: Boolean): Boolean =
-    throw new UnsupportedOperationException("excel workbook namespaces are fixed")
-
-  private def tableNames: Seq[String] =
+  override protected def tableNames: Seq[String] =
     ODataPages.walk(s"$itemUrl/workbook/tables", auth).flatMap(_.rows)
       .flatMap(n => Option(n.get("name")).map(_.asText)).toSeq
 
-  override def listTables(namespace: Array[String]): Array[Identifier] = {
-    if (!namespaceExists(namespace))
-      throw new org.apache.spark.sql.catalyst.analysis.NoSuchNamespaceException(namespace)
-    tableNames.map(t => Identifier.of(Array("main"), t)).toArray
+  override protected def load(name: String): Table = {
+    if (!tableNames.contains(name)) noSuchTable(name)
+    val cols = Excel.tableColumnNames(itemUrl, name, auth)
+    new ExcelNamedTable(itemUrl, name, StructType(cols.map(StructField(_, StringType))), auth)
   }
-
-  override def tableExists(ident: Identifier): Boolean =
-    namespaceExists(ident.namespace) && tableNames.contains(ident.name)
-
-  override def loadTable(ident: Identifier): Table = {
-    if (!tableExists(ident))
-      throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(ident)
-    val cols = Excel.tableColumnNames(itemUrl, ident.name, auth)
-    new ExcelNamedTable(itemUrl, ident.name,
-      StructType(cols.map(StructField(_, StringType))), auth)
-  }
-
-  override def createTable(ident: Identifier, schema: StructType,
-                           partitions: Array[Transform],
-                           properties: util.Map[String, String]): Table =
-    throw new UnsupportedOperationException("create a table in Excel first")
-  override def alterTable(ident: Identifier, changes: TableChange*): Table =
-    throw new UnsupportedOperationException("excel tables cannot be altered here")
-  override def dropTable(ident: Identifier): Boolean =
-    throw new UnsupportedOperationException("excel tables cannot be dropped here")
-  override def renameTable(oldIdent: Identifier, newIdent: Identifier): Unit =
-    throw new UnsupportedOperationException("excel tables cannot be renamed here")
 }
 
 /** One named table: readable (paged rows flattened to strings) + appendable. */

@@ -1,13 +1,9 @@
 package graft.sources.services
 
-import java.util
-import org.apache.spark.sql.connector.catalog._
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import graft.sources.http.{HttpAuth, SecretRegistry}
+import org.apache.spark.sql.connector.catalog.Table
+import graft.sources.{AttachedCatalog, ReadOnlyTable}
+import graft.sources.http.SecretRegistry
 import graft.sources.odata.{ODataConf, ODataMeta, ODataTable}
-import scala.jdk.CollectionConverters._
 
 /** SAP Analytics Cloud tenant as a Spark catalog — the analog of the
   * reference's `ATTACH (TYPE sac)` storage extension (`sac_catalog.cpp`).
@@ -31,22 +27,15 @@ import scala.jdk.CollectionConverters._
   * from option `kind` (default `planning`, the reference's primary read,
   * `sac_read_functions.cpp`).
   */
-class SacCatalog extends TableCatalog with SupportsNamespaces {
+class SacCatalog extends AttachedCatalog("sac") {
 
-  private var catalogName: String = _
-  private var options: Map[String, String] = Map.empty
-
-  private def tenant: String = options.getOrElse("url",
-    throw new IllegalArgumentException("sac catalog requires option 'url' (tenant base)"))
-    .stripSuffix("/")
+  private def tenant: String = required("url", "tenant base").stripSuffix("/")
   private def defaultKind: String = options.getOrElse("kind", "planning")
 
   /** model name -> kind, in configuration order */
   private lazy val models: Seq[(String, String)] =
-    options.getOrElse("models",
-      throw new IllegalArgumentException(
-        "sac catalog requires option 'models' (comma-separated model ids; " +
-          "SAC model discovery is a stub in the reference, sac_catalog.cpp:37-60)"))
+    required("models", "comma-separated model ids; " +
+      "SAC model discovery is a stub in the reference, sac_catalog.cpp:37-60")
       .split(',').map(_.trim).filter(_.nonEmpty).toSeq
       .map { entry =>
         entry.split(':') match {
@@ -55,75 +44,16 @@ class SacCatalog extends TableCatalog with SupportsNamespaces {
         }
       }
 
-  private def auth: HttpAuth = SecretRegistry.authFrom(options, tenant)
+  override protected def namespaceMetadata: (String, String) = "tenant" -> tenant
 
-  override def initialize(name: String, opts: CaseInsensitiveStringMap): Unit = {
-    catalogName = name
-    options = opts.asScala.toMap.map { case (k, v) => k.toLowerCase -> v }
-  }
-  override def name(): String = catalogName
+  override protected def tableNames: Seq[String] = models.map(_._1)
 
-  override def listNamespaces(): Array[Array[String]] = Array(Array("main"))
-  override def listNamespaces(namespace: Array[String]): Array[Array[String]] =
-    if (namespace.isEmpty) listNamespaces() else Array.empty
-  override def namespaceExists(namespace: Array[String]): Boolean =
-    namespace.sameElements(Array("main"))
-  override def loadNamespaceMetadata(namespace: Array[String]): util.Map[String, String] = {
-    if (!namespaceExists(namespace))
-      throw new org.apache.spark.sql.catalyst.analysis.NoSuchNamespaceException(namespace)
-    Map("tenant" -> tenant).asJava
-  }
-  override def createNamespace(namespace: Array[String], metadata: util.Map[String, String]): Unit =
-    throw new UnsupportedOperationException("sac storage is read-only")
-  override def alterNamespace(namespace: Array[String], changes: NamespaceChange*): Unit =
-    throw new UnsupportedOperationException("sac storage is read-only")
-  override def dropNamespace(namespace: Array[String], cascade: Boolean): Boolean =
-    throw new UnsupportedOperationException("sac storage is read-only")
-
-  override def listTables(namespace: Array[String]): Array[Identifier] = {
-    if (!namespaceExists(namespace))
-      throw new org.apache.spark.sql.catalyst.analysis.NoSuchNamespaceException(namespace)
-    models.map { case (m, _) => Identifier.of(Array("main"), m) }.toArray
-  }
-
-  override def tableExists(ident: Identifier): Boolean =
-    namespaceExists(ident.namespace) && models.exists(_._1 == ident.name)
-
-  /** One `$metadata` round trip per model per catalog instance — Spark may
-    * call `loadTable` several times while planning a single statement. */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
-
-  override def loadTable(ident: Identifier): Table = {
-    val kind = models.collectFirst {
-      case (m, k) if m == ident.name && namespaceExists(ident.namespace) => k
-    }.getOrElse(throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(ident))
-    val a = auth
+  override protected def load(name: String): Table = {
+    val kind = models.collectFirst { case (`name`, k) => k }.getOrElse(noSuchTable(name))
+    val a = SecretRegistry.authFrom(options, tenant)
     val conf = ODataConf(
-      url = s"$tenant/api/v1/odata/$kind/${ident.name}",
+      url = s"$tenant/api/v1/odata/$kind/$name",
       bearer = a.bearer, user = a.basicUser, password = a.basicPassword)
-    val schema = schemaCache.computeIfAbsent(ident.name,
-      _ => ODataMeta.resolve(conf).sparkSchema)
-    val inner = new ODataTable(conf, schema)
-    // read-only wrapper: the generic entity-set table is writable; SAC is not
-    new Table with SupportsRead {
-      override def name(): String = s"sac:$kind/${ident.name}"
-      override def schema(): StructType = inner.schema()
-      override def capabilities(): util.Set[TableCapability] =
-        util.EnumSet.of(TableCapability.BATCH_READ)
-      override def newScanBuilder(opts: CaseInsensitiveStringMap): org.apache.spark.sql.connector.read.ScanBuilder =
-        inner.newScanBuilder(opts)
-    }
+    new ReadOnlyTable(new ODataTable(conf, ODataMeta.resolve(conf).sparkSchema), s"sac:$kind/$name")
   }
-
-  override def createTable(ident: Identifier, schema: StructType,
-                           partitions: Array[Transform],
-                           properties: util.Map[String, String]): Table =
-    throw new UnsupportedOperationException("sac storage is read-only")
-  override def alterTable(ident: Identifier, changes: TableChange*): Table =
-    throw new UnsupportedOperationException("sac storage is read-only")
-  override def dropTable(ident: Identifier): Boolean =
-    throw new UnsupportedOperationException("sac storage is read-only")
-  override def renameTable(oldIdent: Identifier, newIdent: Identifier): Unit =
-    throw new UnsupportedOperationException("sac storage is read-only")
 }

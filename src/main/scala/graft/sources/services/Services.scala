@@ -2,7 +2,7 @@ package graft.sources.services
 
 import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import graft.sources.http.SecretRegistry
-import graft.sources.odata.{EdmxParser, ODataMeta, ODataConf, ODataUrl}
+import graft.sources.odata.{ODataMeta, ODataConf, ODataUrl}
 import graft.sources.http.HttpCore
 
 /** Service-specific connectors (SURVEY.md §2.1 bottom half): SAP Datasphere,
@@ -34,10 +34,7 @@ object Services {
                     secret: Option[String] = None): DataFrame = {
     import spark.implicits._
     val auth = SecretRegistry.authFor(spark, serviceUrl, secret)
-    val resp = HttpCore.shared.get(serviceUrl.stripSuffix("/") + "/$metadata", auth = auth)
-    if (resp.status != 200)
-      throw new RuntimeException(s"GET $serviceUrl/$$metadata -> HTTP ${resp.status}")
-    val model = EdmxParser.parse(resp.text)
+    val model = ODataMeta.modelAt(serviceUrl, auth)
     val rows = for {
       set <- model.entitySets
       et = model.entityTypes(set.entityTypeName)
@@ -61,10 +58,7 @@ object Services {
     import scala.jdk.CollectionConverters._
     val auth = SecretRegistry.authFor(spark, serviceUrl, secret)
     val base = serviceUrl.stripSuffix("/")
-    val resp = HttpCore.shared.get(base + "/$metadata", auth = auth)
-    if (resp.status != 200)
-      throw new RuntimeException(s"GET $base/$$metadata -> HTTP ${resp.status}")
-    val model = EdmxParser.parse(resp.text)
+    val model = ODataMeta.modelAt(base, auth)
     // entity-set URL → (resource_type=entity_set, that set); service root →
     // every set, no single entity type (reference probe, `:224-259`)
     val lastSeg = base.substring(base.lastIndexOf('/') + 1)
@@ -130,7 +124,7 @@ object Services {
     val auth = SecretRegistry.authFor(spark, serviceUrl, secret)
     // shared per-JVM model cache: this fetch ALSO serves every per-set
     // service-root probe below, so an N-set attach is one metadata round-trip
-    val model = graft.sources.odata.ODataMeta.modelAt(serviceUrl.stripSuffix("/"), auth)
+    val model = ODataMeta.modelAt(serviceUrl.stripSuffix("/"), auth)
     model.entitySets.map { set =>
       val view = prefix + set.name
       reader(spark, serviceUrl.stripSuffix("/") + "/" + set.name, secret)
@@ -151,7 +145,7 @@ object Services {
     import spark.implicits._
     val root = serviceUrl.stripSuffix("/")
     val auth = SecretRegistry.authFor(spark, root, secret)
-    val model = graft.sources.odata.ODataMeta.modelAt(root, auth)
+    val model = ODataMeta.modelAt(root, auth)
     val sets = model.entitySets.map(_.name)
     val body = graft.writes.ODataJsonBatch.buildGetBatch(
       sets.map(s => s"$s?$$top=$top&$$format=json"))
@@ -352,10 +346,7 @@ object Services {
                              nullCol: String, keyCol: String): DataFrame = {
     import spark.implicits._
     val auth = SecretRegistry.authFor(spark, serviceRoot, secret)
-    val resp = HttpCore.shared.get(serviceRoot + "/$metadata", auth = auth)
-    if (resp.status != 200)
-      throw new RuntimeException(s"GET $serviceRoot/$$metadata -> HTTP ${resp.status}")
-    val model = EdmxParser.parse(resp.text)
+    val model = ODataMeta.modelAt(serviceRoot, auth)
     val set = model.entitySets.find(s => s.name.equalsIgnoreCase(entity))
       .getOrElse(throw new IllegalArgumentException(s"no entity set '$entity' at $serviceRoot"))
     val et = model.entityTypes(set.entityTypeName.split('.').last)

@@ -2,16 +2,15 @@ package graft.sources.services
 
 import java.util
 import org.apache.spark.sql.connector.catalog._
-import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.{DataType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import graft.sources.AttachedCatalog
 import graft.sources.http.{HttpAuth, SecretRegistry}
 import graft.sources.odata.{ODataConf, ODataPages, ODataScanBuilder}
 import graft.writes.{DeltaShape, JsonEncode, RestBatchWrite, RestInsertWriterFactory, RestRowLevelOperation}
-import scala.jdk.CollectionConverters._
 
 /** A SharePoint site's lists as a read-WRITE Spark catalog — the port of the
   * reference's flagship `ATTACH (TYPE sharepoint_lists)` storage extension
@@ -35,41 +34,16 @@ import scala.jdk.CollectionConverters._
   * choice. Mutations are delta-based row-level operations keyed by the item
   * id, the 1:1 REST mapping.
   */
-class SharePointListsCatalog extends TableCatalog with SupportsNamespaces {
+class SharePointListsCatalog extends AttachedCatalog("sharepoint_lists") {
 
-  private var catalogName: String = _
-  private var options: Map[String, String] = Map.empty
   private def graphBase: String = options.getOrElse("url", Graph.DefaultBaseUrl)
   /** Every request of this catalog — site, list and column resolution,
     * listing, reads and writes — carries these credentials. */
   private def auth: HttpAuth = SecretRegistry.authFrom(options, graphBase)
-  private lazy val siteId: String = Graph.resolveSiteId(
-    options.getOrElse("site",
-      throw new IllegalArgumentException("sharepoint_lists catalog requires option 'site'")),
-    graphBase, auth)
+  private lazy val siteId: String =
+    Graph.resolveSiteId(required("site", "site name, web URL or site id"), graphBase, auth)
 
-  override def initialize(name: String, opts: CaseInsensitiveStringMap): Unit = {
-    catalogName = name
-    options = opts.asScala.toMap.map { case (k, v) => k.toLowerCase -> v }
-  }
-  override def name(): String = catalogName
-
-  override def listNamespaces(): Array[Array[String]] = Array(Array("main"))
-  override def listNamespaces(namespace: Array[String]): Array[Array[String]] =
-    if (namespace.isEmpty) listNamespaces() else Array.empty
-  override def namespaceExists(namespace: Array[String]): Boolean =
-    namespace.sameElements(Array("main"))
-  override def loadNamespaceMetadata(namespace: Array[String]): util.Map[String, String] = {
-    if (!namespaceExists(namespace))
-      throw new org.apache.spark.sql.catalyst.analysis.NoSuchNamespaceException(namespace)
-    Map("site" -> siteId).asJava
-  }
-  override def createNamespace(namespace: Array[String], metadata: util.Map[String, String]): Unit =
-    throw new UnsupportedOperationException("sharepoint namespaces are fixed")
-  override def alterNamespace(namespace: Array[String], changes: NamespaceChange*): Unit =
-    throw new UnsupportedOperationException("sharepoint namespaces are fixed")
-  override def dropNamespace(namespace: Array[String], cascade: Boolean): Boolean =
-    throw new UnsupportedOperationException("sharepoint namespaces are fixed")
+  override protected def namespaceMetadata: (String, String) = "site" -> siteId
 
   private def lists(): Seq[(String, String, String)] = // (id, name, displayName)
     ODataPages.walk(s"${graphBase.stripSuffix("/")}/sites/$siteId/lists", auth)
@@ -78,43 +52,20 @@ class SharePointListsCatalog extends TableCatalog with SupportsNamespaces {
         (s("id"), s("name"), s("displayName"))
       }.toSeq
 
-  override def listTables(namespace: Array[String]): Array[Identifier] = {
-    if (!namespaceExists(namespace))
-      throw new org.apache.spark.sql.catalyst.analysis.NoSuchNamespaceException(namespace)
-    lists().map(l => Identifier.of(Array("main"),
-      if (l._3.nonEmpty) l._3 else l._2)).toArray
-  }
+  /** Lists by display name, else by internal name. */
+  override protected def tableNames: Seq[String] =
+    lists().map { case (_, name, display) => if (display.nonEmpty) display else name }
 
-  override def tableExists(ident: Identifier): Boolean =
-    namespaceExists(ident.namespace) &&
-      lists().exists(l => l._2 == ident.name || l._3 == ident.name)
-
-  /** List id and item schema per table name, resolved once per catalog like
-    * [[siteId]]: a statement after the first sends no `/lists` walk and no
-    * `/columns` GET. `REFRESH TABLE` ([[invalidateTable]]) resolves again. */
-  private val resolved = new java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]()
-
-  override def loadTable(ident: Identifier): Table = {
+  /** A list by display name, internal name or id, as the reference's
+    * `ResolveListId` finds it: one `/lists` walk, then its item schema from
+    * one `/columns` walk. */
+  override protected def load(name: String): Table = {
     val a = auth
-    val (lid, schema) = resolved.computeIfAbsent(ident.name, { name =>
-      val lid = Graph.resolveListId(siteId, name, graphBase, a)
-      (lid, Graph.listItemsSchema(siteId, lid, graphBase, a))
-    })
-    new SharePointListTable(graphBase.stripSuffix("/"), siteId, lid, ident.name, schema, a)
+    val lid = lists().collectFirst { case (id, n, d) if Seq(id, n, d).contains(name) => id }
+      .getOrElse(noSuchTable(name))
+    new SharePointListTable(graphBase.stripSuffix("/"), siteId, lid, name,
+      Graph.listItemsSchema(siteId, lid, graphBase, a), a)
   }
-
-  override def invalidateTable(ident: Identifier): Unit = resolved.remove(ident.name)
-
-  override def createTable(ident: Identifier, schema: StructType,
-                           partitions: Array[Transform],
-                           properties: util.Map[String, String]): Table =
-    throw new UnsupportedOperationException("create lists in SharePoint first")
-  override def alterTable(ident: Identifier, changes: TableChange*): Table =
-    throw new UnsupportedOperationException("sharepoint lists cannot be altered here")
-  override def dropTable(ident: Identifier): Boolean =
-    throw new UnsupportedOperationException("sharepoint lists cannot be dropped here")
-  override def renameTable(oldIdent: Identifier, newIdent: Identifier): Unit =
-    throw new UnsupportedOperationException("sharepoint lists cannot be renamed here")
 }
 
 /** One list: facet-typed read scan + append + delta-based UPDATE/DELETE. */

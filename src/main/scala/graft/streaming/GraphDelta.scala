@@ -8,7 +8,7 @@ import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import graft.sources.http.{HttpAuth, HttpCore, HttpStatusError}
+import graft.sources.http.{HttpAuth, HttpStatusError}
 import graft.sources.odata.ODataPages
 
 /** Microsoft Graph delta-query CDC as a Structured Streaming source —
@@ -83,8 +83,7 @@ class GraphDeltaTable(schema: StructType, options: Map[String, String])
   *    retry/backoff.)
   */
 class GraphDeltaClient(auth: HttpAuth = HttpAuth(),
-                       maxPageSize: Option[Int] = None,
-                       http: HttpCore = HttpCore.shared) extends PagedDeltaClient {
+                       maxPageSize: Option[Int] = None) extends PagedDeltaClient {
 
   override def fetchPaged(url: String, token: Option[String],
                           store: OdpStateStore, subId: String,
@@ -96,7 +95,7 @@ class GraphDeltaClient(auth: HttpAuth = HttpAuth(),
     var rowCount = 0L
     var pageIdx = 0
     var newToken: Option[String] = None
-    def spill(from: String): Unit = ODataPages.walk(from, auth, headers, http).foreach { p =>
+    def spill(from: String): Unit = ODataPages.walk(from, auth, headers).foreach { p =>
       if (p.rows.nonEmpty) {
         // tombstones: lift @removed.reason into a plain field before spill
         var removed = false

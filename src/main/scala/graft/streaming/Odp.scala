@@ -4,8 +4,8 @@ import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.types.StructType
-import graft.sources.http.{HttpAuth, HttpCore}
-import graft.sources.odata.{EdmxParser, ODataJson, ODataPages, ODataUrl}
+import graft.sources.http.HttpAuth
+import graft.sources.odata.{ODataJson, ODataMeta, ODataPages, ODataUrl}
 
 /** SAP ODP incremental / CDC reads — the reference's only streaming
   * capability (SURVEY.md §2.6; `src/odp_*.cpp`, ~3.3k LoC):
@@ -186,8 +186,7 @@ trait PagedDeltaClient {
   * body is streamed straight to the state store's page spill (never
   * accumulated) — driver memory is O(one page) regardless of extraction
   * size; decoding happens executor-side over the spilled files. */
-class OdpClient(auth: HttpAuth = HttpAuth(),
-                maxPageSize: Option[Int] = None, http: HttpCore = HttpCore.shared)
+class OdpClient(auth: HttpAuth = HttpAuth(), maxPageSize: Option[Int] = None)
   extends PagedDeltaClient {
 
   private val V2TokenRe = """[!?]deltatoken=([^&\s"]+)""".r
@@ -207,7 +206,7 @@ class OdpClient(auth: HttpAuth = HttpAuth(),
     var pageIdx = 0
     var newToken: Option[String] = None
     var prefApplied = false
-    ODataPages.walk(first, auth, headers, http).foreach { p =>
+    ODataPages.walk(first, auth, headers).foreach { p =>
       prefApplied |= p.headers.get("preference-applied").exists(_.contains("track-changes"))
       if (p.rows.nonEmpty) {
         files += store.writePage(subId, batch, pageIdx, p.text)
@@ -251,8 +250,7 @@ object OdpPages {
   * `importDeltaToken`, `maxPageSize` (`odp_odata_read_functions.cpp:33-50`).
   */
 class OdpReader(spark: SparkSession, url: String, stateDir: String,
-                auth: HttpAuth = HttpAuth(), maxPageSize: Option[Int] = None,
-                httpOverride: Option[HttpCore] = None) {
+                auth: HttpAuth = HttpAuth(), maxPageSize: Option[Int] = None) {
 
   val subscriptionId: String = java.util.UUID.nameUUIDFromBytes(
     url.getBytes(StandardCharsets.UTF_8)).toString
@@ -261,8 +259,7 @@ class OdpReader(spark: SparkSession, url: String, stateDir: String,
   lazy val schema: StructType = {
     val serviceRoot = url.substring(0, url.lastIndexOf('/'))
     val setName = url.substring(url.lastIndexOf('/') + 1)
-    val resp = httpOverride.getOrElse(HttpCore.shared).get(serviceRoot + "/$metadata", auth = auth)
-    EdmxParser.parse(resp.text).schemaOfSet(setName)
+    ODataMeta.modelAt(serviceRoot, auth).schemaOfSet(setName)
   }
 
   def read(forceFullLoad: Boolean = false,
@@ -273,8 +270,7 @@ class OdpReader(spark: SparkSession, url: String, stateDir: String,
       else importDeltaToken.orElse(prior.flatMap(_.deltaToken))
     val batch = prior.map(_.batch).getOrElse(-1L) + 1
     val t0 = System.currentTimeMillis()
-    val client = new OdpClient(auth, maxPageSize,
-      httpOverride.getOrElse(HttpCore.shared))
+    val client = new OdpClient(auth, maxPageSize)
     store.deletePages(subscriptionId, batch) // re-run hygiene
     val res = client.fetchPaged(url, token, store, subscriptionId, batch)
     store.save(OdpSubscription(subscriptionId,

@@ -10,8 +10,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import graft.sources.http.HttpAuth
-import graft.sources.odata.{EdmxParser, ODataJson}
-import graft.sources.http.HttpCore
+import graft.sources.odata.{ODataJson, ODataMeta}
 
 /** ODP CDC as an idiomatic Structured Streaming source (SURVEY.md §2.6 tier
   * 2): `spark.readStream.format("odp").option("url", ...).load()`.
@@ -35,8 +34,7 @@ class OdpStreamSource extends TableProvider with DataSourceRegister {
     val setName = url.substring(url.lastIndexOf('/') + 1)
     val auth = HttpAuth(Option(options.get("bearertoken")),
       Option(options.get("user")), Option(options.get("password")))
-    val resp = HttpCore.shared.get(serviceRoot + "/$metadata", auth = auth)
-    EdmxParser.parse(resp.text).schemaOfSet(setName)
+    ODataMeta.modelAt(serviceRoot, auth).schemaOfSet(setName)
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],

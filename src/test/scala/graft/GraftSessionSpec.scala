@@ -61,4 +61,13 @@ class GraftSessionSpec extends SparkSpecBase {
     assert(filesWith("status >" + "= 300").filter(_.startsWith("main/")) == module)
     assert(filesWith("createBatch" + "WriterFactory").filter(_.startsWith("main/")) == module)
   }
+
+  test("src/main implements SupportsNamespaces only in AttachedCatalog and parses $metadata only in ODataSource") {
+    def mainFilesWith(needle: String): Set[String] =
+      filesWith(needle).filter(_.startsWith("main/"))
+    assert(mainFilesWith("Supports" + "Namespaces") ==
+      Set("main/scala/graft/sources/AttachedCatalog.scala"))
+    assert(mainFilesWith("EdmxParser" + ".parse(") ==
+      Set("main/scala/graft/sources/odata/ODataSource.scala"))
+  }
 }

@@ -69,4 +69,15 @@ class AuthProbeSpec extends SparkSpecBase with BeforeAndAfterAll {
       Option(ex.getCause).map(_.getMessage).getOrElse("")
     assert(msg.contains("401"), s"expected an HTTP 401 failure, got: $msg")
   }
+
+  test("a $metadata model fetched with one principal's credentials does not answer another's") {
+    // alice's reads above warmed the model of this service root
+    spark.conf.set("spark.graft.secret.wrongsecret.type", "http_basic")
+    spark.conf.set("spark.graft.secret.wrongsecret.user", "mallory")
+    spark.conf.set("spark.graft.secret.wrongsecret.password", "guess")
+    val ex = intercept[Exception] {
+      Services.odataDescribe(spark, stub.serviceUrl, Some("wrongsecret")).collect()
+    }
+    assert(ex.getMessage.contains(s"GET ${stub.serviceUrl}/$$metadata -> HTTP 401"), ex.getMessage)
+  }
 }

@@ -54,4 +54,50 @@ class BusinessCentralCatalogSpec extends SparkSpecBase with BeforeAndAfterAll {
     // rejected by capability, not by the wire: nothing was POSTed
     assert(stub.postedItems.isEmpty)
   }
+
+  /** Runs `body` with catalog `cat` on the stub, COMPANY `company`. */
+  private def withCatalog(cat: String, company: String)(body: => Unit): Unit = {
+    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.services.BusinessCentralCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.url", s"http://localhost:${stub.port}")
+    spark.conf.set(s"spark.sql.catalog.$cat.company", company)
+    try body
+    finally Seq(s"$cat.company", s"$cat.url", cat).foreach(k => spark.conf.unset(s"spark.sql.catalog.$k"))
+  }
+
+  private def messages(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.toString).mkString("\n")
+
+  test("a failing companies request fails the SELECT with its URL and status") {
+    withCatalog("bc401", "c1") {
+      stub.extraStatuses.synchronized { stub.extraStatuses("/api/v2.0/companies") = (401, Map.empty) }
+      try {
+        val e = intercept[Exception](spark.sql("SELECT * FROM bc401.main.Customers").collect())
+        assert(messages(e).contains(s"GET http://localhost:${stub.port}/api/v2.0/companies -> HTTP 401"),
+          messages(e))
+      } finally stub.extraStatuses.synchronized { stub.extraStatuses.remove("/api/v2.0/companies") }
+    }
+  }
+
+  test("a company named on a later companies page resolves to its id") {
+    val companies = "/api/v2.0/companies"
+    val later = "/api/v2.0/companies-page-2"
+    stub.extraBodies.synchronized {
+      stub.extraBodies(("GET", companies)) =
+        s"""{"value":[{"id":"c0","name":"First Co"}],"@odata.nextLink":"http://localhost:${stub.port}$later"}"""
+      stub.extraBodies(("GET", later)) = """{"value":[{"id":"c9","name":"Later Co"}]}"""
+    }
+    try withCatalog("bcpaged", "later co") {
+      stub.requests.clear()
+      assert(spark.sql("SELECT CustomerID FROM bcpaged.main.Customers").collect().length == 20)
+      assert(stub.requests.exists(_.contains("/api/v2.0/companies(c9)/Customers")), stub.requests.toString)
+    } finally stub.extraBodies.synchronized {
+      stub.extraBodies.remove(("GET", companies))
+      stub.extraBodies.remove(("GET", later))
+    }
+  }
+
+  test("companies scopes the other entity sets and is not a table") {
+    assert(!spark.catalog.tableExists("bc.main.companies"))
+    intercept[Exception](spark.sql("SELECT * FROM bc.main.companies").collect())
+  }
 }

@@ -84,4 +84,25 @@ class ExcelSpec extends SparkSpecBase with BeforeAndAfterAll {
     assert(df.count() == 2)
     assert(stub.requests.exists(_.contains(":/workbook/worksheets/Sheet1/usedRange")))
   }
+
+  test("excel_workbook catalog resolves a table once; REFRESH TABLE resolves it again") {
+    spark.conf.set("spark.sql.catalog.wbr", "graft.sources.services.ExcelWorkbookCatalog")
+    spark.conf.set("spark.sql.catalog.wbr.url", Excel.itemUrl(base, "book.xlsx"))
+    try {
+      stub.requests.clear()
+      def resolutions(): (Int, Int) = {
+        val gets = stub.requests.filter(_.startsWith("GET ")).map(_.takeWhile(_ != '?'))
+        (gets.count(_.endsWith("/workbook/tables")), gets.count(_.endsWith("/columns")))
+      }
+      spark.sql("SELECT Region FROM wbr.main.Sales").collect()
+      spark.sql("INSERT INTO wbr.main.Sales VALUES ('West', '1', '1.00')")
+      assert(resolutions() == ((1, 1)), stub.requests.mkString("\n"))
+      spark.sql("REFRESH TABLE wbr.main.Sales")
+      spark.sql("SELECT Region FROM wbr.main.Sales").collect()
+      assert(resolutions() == ((2, 2)), stub.requests.mkString("\n"))
+    } finally {
+      spark.conf.unset("spark.sql.catalog.wbr.url")
+      spark.conf.unset("spark.sql.catalog.wbr")
+    }
+  }
 }

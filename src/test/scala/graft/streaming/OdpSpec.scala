@@ -141,4 +141,15 @@ class OdpSpec extends SparkSpecBase with BeforeAndAfterAll {
     assert(Files.exists(stateUnderCkpt), s"expected odp-state under $stateUnderCkpt")
     assert(Files.list(stateUnderCkpt).toArray.nonEmpty)
   }
+
+  test("a failing $metadata fails the read with its URL and status") {
+    val s = new ODataStub(v2 = false).start()
+    try {
+      s.extraStatuses.synchronized { s.extraStatuses("/svc/$metadata") = (401, Map.empty) }
+      val dir = Files.createTempDirectory("odp-401").toString
+      val reader = new OdpReader(spark, s.serviceUrl + "/OdpCustomers", dir)
+      val e = intercept[Exception](reader.read())
+      assert(e.getMessage.contains(s"GET ${s.serviceUrl}/$$metadata -> HTTP 401"), e.toString)
+    } finally s.stop()
+  }
 }

@@ -120,6 +120,7 @@ class ODataStub(v2: Boolean, pageSize: Int = 5) {
     // a reused port must not carry what an earlier server here accepted
     graft.sources.odata.ODataMeta.forgetCapabilities()
     server = HttpServer.create(new InetSocketAddress("localhost", 0), 0)
+    graft.sources.odata.ODataMeta.forgetModels(s"http://localhost:$port/")
     server.createContext("/", new Handler)
     // small daemon pool: executor-distributed operations (bulk delete) hit
     // the stub concurrently; shared state is synchronized where mutated
