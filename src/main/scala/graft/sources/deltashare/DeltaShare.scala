@@ -171,7 +171,12 @@ object DeltaShare {
     * cluster it MUST be shared storage every node can reach (`s3a://`,
     * `hdfs://`, a mounted NFS path); a driver-local temp default would be
     * invisible to executors, so it is only applied under `local[*]` masters
-    * and any other deployment without an explicit dir fails fast. */
+    * and any other deployment without an explicit dir fails fast.
+    *
+    * A presigned URL carries its own authorization, and it points at a
+    * storage host, not the sharing server: its GET sends no `Authorization`
+    * header, so the share's bearer token never leaves for that host (and
+    * storage services that reject a second credential still answer). */
   def read(spark: SparkSession, profile: DeltaShareProfile,
            share: String, schema: String, table: String,
            downloadDir: Option[String] = None): DataFrame = {
@@ -189,7 +194,6 @@ object DeltaShare {
               "— a driver-local temp dir is invisible to executors")
           Files.createTempDirectory("delta-share").toUri.toString
         }
-        val bearer = profile.bearerToken
         spark.sparkContext.parallelize(files.map(f => (f.url, f.id)), files.size)
           .map { case (url, id) =>
             // executor-side: rebuild the client (never serialized), stream to
@@ -197,7 +201,7 @@ object DeltaShare {
             val target = new org.apache.hadoop.fs.Path(dir, s"$id.parquet")
             val fs = target.getFileSystem(new org.apache.hadoop.conf.Configuration())
             if (!fs.exists(target)) {
-              val resp = HttpCore.shared.get(url, auth = HttpAuth(bearer = bearer), useCache = false)
+              val resp = HttpCore.shared.get(url, useCache = false)
               if (resp.status != 200)
                 throw new RuntimeException(s"presigned GET $url -> ${resp.status}")
               val out = fs.create(target, true)

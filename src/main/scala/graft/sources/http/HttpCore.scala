@@ -89,6 +89,11 @@ object Charsets {
   * `java.net.http.HttpClient`). Sleep schedule matches the reference:
   * wait × backoff^(attempt-1); a 429/503 answer carrying `Retry-After`
   * sleeps at least that long, capped at the request timeout.
+  *
+  * Only a transport failure and the transient statuses in [[HttpCore.Retried]]
+  * (429, 500, 502, 503, 504) are sent again. Every other status, 501 and
+  * 505 included, is an answer: a 501 "not implemented" capability probe
+  * goes out once.
   */
 class HttpCore(val policy: HttpPolicy = HttpPolicy()) {
 
@@ -166,8 +171,7 @@ class HttpCore(val policy: HttpPolicy = HttpPolicy()) {
         val r = send(method, url, body, headers, auth)
         Trace.debug("http", s"$method $url -> ${r.status} " +
           s"(${if (r.body == null) 0 else r.body.length} B, ${(System.nanoTime() - t0) / 1000000} ms)")
-        // retry server-side errors and 429 throttling; return everything else
-        if ((r.status < 500 && r.status != 429) || attempt == policy.retries) return r
+        if (!HttpCore.Retried(r.status) || attempt == policy.retries) return r
         last = Right(r)
       } catch {
         case e: InterruptedException => throw e // a cancelled request is not sent again
@@ -210,6 +214,10 @@ object HttpCore {
   /** Per-JVM shared instance (executors re-create it after deserialization —
     * never ship a client over the wire). */
   lazy val shared = new HttpCore()
+
+  /** The statuses a request is retried on: throttling and transient
+    * server or gateway failures. */
+  val Retried: Set[Int] = Set(429, 500, 502, 503, 504)
 
   /** The wait, in ms, a throttled (429/503) answer asks for in `Retry-After`:
     * delta-seconds or an HTTP-date (RFC 9110 §10.2.3). 0 for other statuses

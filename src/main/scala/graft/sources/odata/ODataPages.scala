@@ -1,25 +1,26 @@
 package graft.sources.odata
 
-import com.fasterxml.jackson.databind.JsonNode
-import graft.sources.http.{HttpAuth, HttpCore, HttpResult, HttpStatusError}
+import graft.sources.http.{Charsets, HttpAuth, HttpCore, HttpResult, HttpStatusError}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.{Callable, ExecutionException, Future, LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
 import scala.collection.mutable
 
 /** The connector's one pagination loop (reference
   * `ODataEntitySetClient::Get(get_next=true)`, SURVEY §3.1 step 4): GET a
-  * page, read its envelope, follow `@odata.nextLink` / `__next` until a page
-  * carries none. Every paged reader walks through here; a `$skip`/`$top`
-  * range partition reads its window ahead through [[RangeReadAhead]]. */
+  * page, decode it, follow `@odata.nextLink` / `__next` until a page
+  * carries none. Every paged reader walks through here with its page
+  * decoder: row readers pass a [[ODataJson.RowDecoder]], readers that
+  * inspect payloads pass [[ODataJson.tree]]. A `$skip`/`$top` range
+  * partition reads its window ahead through [[RangeReadAhead]]. */
 object ODataPages {
 
-  /** One page: the body as text, its size as received, the response headers
-    * (empty for a preloaded page), the parsed root and its envelope. */
-  final case class Fetched(text: String, bytes: Long, headers: Map[String, String],
-                           root: JsonNode, page: ODataJson.Page) {
-    def rows: Seq[JsonNode] = page.rows
-  }
+  /** One page: its UTF-8 body, the response headers (empty for a preloaded
+    * page) and the page decoded from the body. */
+  final case class Fetched[P <: ODataJson.Paged](body: Array[Byte], headers: Map[String, String],
+                                                 page: P)
 
-  /** Lazily walk the pages from `url`, one element per page.
+  /** Lazily walk the pages from `url`, one element per page, each decoded
+    * by `decode` on the caller's thread.
     *
     * No GET happens until `next()`: `hasNext` only says whether a next URL
     * is known, and each `next()` sends exactly one uncached GET with
@@ -34,35 +35,39 @@ object ODataPages {
     * `preloaded` is the first page's body when it already arrived another
     * way (a planning-time `$batch`); it stands in for the GET of `url`,
     * which still counts as fetched. */
-  def walk(url: String, auth: HttpAuth, headers: Map[String, String] = Map.empty,
-           http: HttpCore = HttpCore.shared,
-           preloaded: Option[String] = None): Iterator[Fetched] =
-    new Iterator[Fetched] {
+  def walk[P <: ODataJson.Paged](url: String, auth: HttpAuth, decode: Array[Byte] => P,
+                                 headers: Map[String, String] = Map.empty,
+                                 http: HttpCore = HttpCore.shared,
+                                 preloaded: Option[Array[Byte]] = None): Iterator[Fetched[P]] =
+    new Iterator[Fetched[P]] {
       private var nextUrl: Option[String] = Some(url)
       private var first = preloaded
       private val fetched = scala.collection.mutable.HashSet[String]()
 
       override def hasNext: Boolean = nextUrl.isDefined
 
-      override def next(): Fetched = {
+      override def next(): Fetched[P] = {
         val u = nextUrl.getOrElse(throw new NoSuchElementException("OData walk is exhausted"))
         if (!fetched.add(u))
           throw new RuntimeException(s"OData nextLink loop: $u was already fetched by this partition")
-        val (text, bytes, hs) = first match {
-          case Some(body) =>
+        val (body, hs) = first match {
+          case Some(b) =>
             first = None
-            (body, body.length.toLong, Map.empty[String, String])
+            (b, Map.empty[String, String])
           case None =>
             val r = http.get(u, headers = headers, auth = auth, useCache = false)
             if (r.status != 200) throw new HttpStatusError("GET", r.url, r.status, r.headers, r.text)
-            (r.text, r.body.length.toLong, r.headers)
+            (utf8(r), r.headers)
         }
-        val root = ODataJson.parse(text)
-        val page = ODataJson.extractPage(root)
+        val page = decode(body)
         nextUrl = page.nextLink
-        Fetched(text, bytes, hs, root, page)
+        Fetched(body, hs, page)
       }
     }
+
+  /** The body as UTF-8 bytes: as received unless its charset says otherwise. */
+  private def utf8(r: HttpResult): Array[Byte] =
+    if (Charsets.fromContentType(r.contentType) == UTF_8) r.body else r.text.getBytes(UTF_8)
 
   /** Sub-range GETs one range partition keeps in flight. */
   private val Depth = 4
@@ -94,20 +99,21 @@ object ODataPages {
     * number of GETs as a serial walk of a full window.
     *
     * Fetch threads only GET a body and check its status; every page is
-    * parsed on the caller's thread, by a [[walk]] that takes the body as
+    * decoded on the caller's thread, by a [[walk]] that takes the body as
     * its preloaded first page and follows the sub-range's own nextLinks (a
     * server page smaller than `n`). At most `Depth` unparsed bodies are
     * held. A sub-range that ends short ends the data: nothing after it is
     * sent, and what is in flight is cancelled. A failed sub-range throws
     * its [[HttpStatusError]] on the caller's thread. `close()` cancels
     * outstanding GETs. */
-  private[odata] final class RangeReadAhead(url: String, skip: Long, top: Long, auth: HttpAuth,
-                             headers: Map[String, String])
-    extends Iterator[Fetched] with AutoCloseable {
+  private[odata] final class RangeReadAhead[P <: ODataJson.Paged](
+      url: String, skip: Long, top: Long, auth: HttpAuth, headers: Map[String, String],
+      decode: Array[Byte] => P)
+    extends Iterator[Fetched[P]] with AutoCloseable {
 
     private val base = ODataUrl.parse(url)
     private var started = false
-    private var pages: Iterator[Fetched] = Iterator.empty
+    private var pages: Iterator[Fetched[P]] = Iterator.empty
     // sub-ranges not yet sent, as (skip, top); (url, top, GET) in flight
     private var pending: Iterator[(Long, Long)] = Iterator.empty
     private val inFlight = mutable.Queue[(String, Long, Future[HttpResult])]()
@@ -124,10 +130,10 @@ object ODataPages {
       pages.hasNext
     }
 
-    override def next(): Fetched = {
+    override def next(): Fetched[P] = {
       if (!hasNext) throw new NoSuchElementException("OData range is exhausted")
       val p = pages.next()
-      got += p.rows.size
+      got += p.page.size
       p
     }
 
@@ -137,10 +143,10 @@ object ODataPages {
       inFlight.clear()
     }
 
-    private def firstPage(): Iterator[Fetched] = {
-      val head = walk(url, auth, headers)
+    private def firstPage(): Iterator[Fetched[P]] = {
+      val head = walk(url, auth, decode, headers)
       val first = head.next()
-      val n = first.rows.size.toLong
+      val n = first.page.size.toLong
       if (first.page.nextLink.isEmpty || n == 0) Iterator.single(first) ++ head
       else {
         pending = Iterator.iterate(skip + n)(_ + n).takeWhile(_ < skip + top)
@@ -163,11 +169,11 @@ object ODataPages {
         inFlight += ((u, t, fetchPool.submit(get)))
       }
 
-    private def nextSubRange(): Iterator[Fetched] = {
+    private def nextSubRange(): Iterator[Fetched[P]] = {
       val (u, t, fetch) = inFlight.dequeue()
-      val body = try fetch.get().text catch { case e: ExecutionException => throw e.getCause }
-      val rest = walk(u, auth, headers, readAheadHttp, preloaded = Some(body))
-      val first = rest.next() // parsed before the next GET goes out
+      val body = try utf8(fetch.get()) catch { case e: ExecutionException => throw e.getCause }
+      val rest = walk(u, auth, decode, headers, readAheadHttp, preloaded = Some(body))
+      val first = rest.next() // decoded before the next GET goes out
       send()
       asked = t
       got = 0

@@ -334,9 +334,9 @@ class ODataTable(conf: ODataConf, schema: StructType) extends Table
     def fetchKeys(url: String, cap: Long): Seq[String] = {
       val out = Seq.newBuilder[String]
       var n = 0L
-      val pages = ODataPages.walk(url, conf.auth)
+      val pages = ODataPages.walk(url, conf.auth, ODataJson.tree)
       while (pages.hasNext && n < cap)
-        pages.next().rows.foreach { row => out += row.get(key).asText; n += 1 }
+        pages.next().page.rows.foreach { row => out += row.get(key).asText; n += 1 }
       out.result()
     }
     // locals only: the bulk path ships these to executors
@@ -890,7 +890,23 @@ class ODataScan(conf: ODataConf, meta: ODataMeta, schema: StructType,
     u.render
   }
 
+  /** The partitions, planned once per runtime filter: Spark calls this
+    * more than once per query (planning and execution), and each plan sends
+    * its `$count`, probes, key sweep and first-page `$batch`. A runtime
+    * filter arriving in between changes the URLs, so it plans again. */
   override def planInputPartitions(): Array[InputPartition] = {
+    val rt = runtimeExpr
+    planned match {
+      case Some((r, parts)) if r == rt => parts
+      case _ =>
+        val parts = plan()
+        planned = Some((rt, parts))
+        parts
+    }
+  }
+  @volatile private var planned: Option[(Option[String], Array[InputPartition])] = None
+
+  private def plan(): Array[InputPartition] = {
     if (conf.parallelism <= 1 || limit.isDefined || conf.top.isDefined) {
       Array(ODataInputPartition(buildUrl(None, None), 0))
     } else {
@@ -929,7 +945,8 @@ class ODataScan(conf: ODataConf, meta: ODataMeta, schema: StructType,
     * entity set and order key. Graph rejects `$skip` on many collections
     * and delta feeds always do — those take the keyset path below. A
     * non-2xx answer means no and is traced; a transport failure fails the
-    * plan. A no is kept by this scan only, which Spark may plan twice. */
+    * plan. A no is kept by this scan, which plans again for a runtime
+    * filter. */
   @volatile private var skipRefused = false
   private def skipProbe(ord: String): Boolean =
     !skipRefused && (ODataMeta.capable(Seq("$skip", meta.entitySetUrl, ord)) {
@@ -951,22 +968,13 @@ class ODataScan(conf: ODataConf, meta: ODataMeta, schema: StructType,
         filterExpr.toSeq ++ runtimeExpr.toSeq, total)
       .map { ws =>
         val urls = ws.map(w => buildUrl(None, None, None, Some(w)))
-        // one `$batch` round-trip fetches every window's first page; cached
-        // because Spark calls planInputPartitions more than once per query
-        // (planning + execution) — re-keyed when runtime filters change urls
-        val pages = preloadCache match {
-          case Some((u, p)) if u == urls => p
-          case _ =>
-            val p = KeysetWindows.preloadFirstPages(conf, meta, urls)
-            preloadCache = Some((urls, p))
-            p
-        }
+        // one `$batch` round-trip fetches every window's first page
+        val pages = KeysetWindows.preloadFirstPages(conf, meta, urls)
         urls.zip(pages).zipWithIndex.map { case ((u, pg), i) =>
           ODataInputPartition(u, i, pg): InputPartition
         }.toArray
       }
   }
-  @volatile private var preloadCache: Option[(Seq[String], Seq[Option[String]])] = None
 
   // runtime filter must shape the ranges too, or the $skip/$top windows
   // would be computed over the unfiltered set the pages no longer serve
@@ -1165,8 +1173,8 @@ private[odata] object KeysetWindows {
         .withParam("$top", per.toString)
       if (v2) u = u.withParam("$format", "json")
       val out = scala.collection.mutable.Buffer[Seq[String]]()
-      val pages = ODataPages.walk(u.render, conf.auth)
-      while (pages.hasNext && out.size < per) pages.next().rows.foreach { n =>
+      val pages = ODataPages.walk(u.render, conf.auth, ODataJson.tree)
+      while (pages.hasNext && out.size < per) pages.next().page.rows.foreach { n =>
         val tuple = keys.indices.map { i =>
           Option(n.get(keys(i))).filterNot(_.isNull).flatMap(renderKey(i, _))
         }
@@ -1323,7 +1331,7 @@ class ODataCountScan(conf: ODataConf, meta: ODataMeta, filterExpr: Option[String
           private def pageCount(auth: HttpAuth): Long = {
             var u = ODataUrl.parse(url.replace("/$count", ""))
             if (v2) u = u.withParam("$format", "json")
-            try ODataPages.walk(u.render, auth).map(_.rows.size.toLong).sum
+            try ODataPages.walk(u.render, auth, ODataJson.tree).map(_.page.size.toLong).sum
             catch {
               // some services reject query options on /$count yet serve
               // filtered pages fine — that case succeeds here; if the pages
@@ -1363,7 +1371,9 @@ class ODataReaderFactory(schema: StructType, pageSize: Option[Int],
 
 /** The executor-side paging loop (reference scan loop, SURVEY §3.1 step 4):
   * GET page → decode rows → follow nextLink until exhausted. A range
-  * partition's pages are read ahead, still decoded here in window order. */
+  * partition's pages are read ahead, still decoded here in window order.
+  * `get()` returns the decoder's pooled row, valid until the next `next()`
+  * (Spark projects each scanned row before it asks for the next). */
 class ODataPartitionReader(partition: ODataInputPartition, schema: StructType,
                            pageSize: Option[Int], auth: HttpAuth,
                            unwrap: Option[String] = None)
@@ -1374,19 +1384,20 @@ class ODataPartitionReader(partition: ODataInputPartition, schema: StructType,
   private var rows = 0L
   private var bytes = 0L
   private val headers = pageSize.map(n => "Prefer" -> s"odata.maxpagesize=$n").toMap
+  private val decode = new ODataJson.RowDecoder(schema, unwrap)
   private val readAhead = partition.range.map { case (skip, top) =>
-    new ODataPages.RangeReadAhead(partition.url, skip, top, auth, headers)
+    new ODataPages.RangeReadAhead(partition.url, skip, top, auth, headers, decode)
   }
   // a first page delivered at planning via one driver-side `$batch` POST
   // (keyset-window scans) stands in for the walk's first GET
   private val decoded: Iterator[InternalRow] = readAhead.getOrElse(
-    ODataPages.walk(partition.url, auth, headers, preloaded = partition.preloaded)).flatMap { p =>
-    pages += 1
-    bytes += p.bytes
-    p.rows.iterator.map { n =>
-      ODataJson.decodeRow(unwrap.map(ODataJson.unwrapNode(n, _)).getOrElse(n), schema)
+    ODataPages.walk(partition.url, auth, decode, headers,
+      preloaded = partition.preloaded.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))))
+    .flatMap { p =>
+      pages += 1
+      bytes += p.body.length
+      p.page.iterator
     }
-  }
 
   override def next(): Boolean =
     if (decoded.hasNext) { current = decoded.next(); rows += 1; true } else false

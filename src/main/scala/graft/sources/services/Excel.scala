@@ -3,7 +3,7 @@ package graft.sources.services
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.http.{HttpAuth, SecretRegistry}
-import graft.sources.odata.ODataPages
+import graft.sources.odata.{ODataJson, ODataPages}
 import graft.writes.RestChanges
 
 /** OneDrive/SharePoint Excel workbook surface via the Graph workbook API —
@@ -77,7 +77,7 @@ object Excel {
     * the table's width). */
   def tableColumnNames(itemUrl: String, table: String, a: HttpAuth): Seq[String] = {
     val url = s"$itemUrl/workbook/tables/$table/columns?$$select=id,index,name"
-    ODataPages.walk(url, a).flatMap(_.rows).map { c =>
+    ODataPages.walk(url, a, ODataJson.tree).flatMap(_.page.rows).map { c =>
       (Option(c.get("index")).map(_.asInt).getOrElse(0),
         Option(c.get("name")).map(_.asText).getOrElse(""))
     }.toSeq.sortBy(_._1).map(_._2)
@@ -129,7 +129,7 @@ object Excel {
     val item = itemUrl(baseUrl, filePath, driveId)
     val a = auth(spark, item, secret)
     val rowsUrl = s"$item/workbook/tables/$table/rows"
-    val matches = ODataPages.walk(rowsUrl, a).flatMap(_.rows).filter { r =>
+    val matches = ODataPages.walk(rowsUrl, a, ODataJson.tree).flatMap(_.page.rows).filter { r =>
       val values = r.get("values")
       val cell =
         if (values != null && values.isArray && values.size() > 0 &&

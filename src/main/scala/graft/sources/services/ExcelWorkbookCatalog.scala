@@ -10,7 +10,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import graft.sources.AttachedCatalog
 import graft.sources.http.{HttpAuth, SecretRegistry}
-import graft.sources.odata.ODataPages
+import graft.sources.odata.{ODataJson, ODataPages}
 import graft.writes.{RestBatchWrite, RestChanges}
 
 /** Excel workbook as a Spark catalog — the port of the reference's
@@ -35,7 +35,7 @@ class ExcelWorkbookCatalog extends AttachedCatalog("excel_workbook") {
   override protected def namespaceMetadata: (String, String) = "workbook" -> itemUrl
 
   override protected def tableNames: Seq[String] =
-    ODataPages.walk(s"$itemUrl/workbook/tables", auth).flatMap(_.rows)
+    ODataPages.walk(s"$itemUrl/workbook/tables", auth, ODataJson.tree).flatMap(_.page.rows)
       .flatMap(n => Option(n.get("name")).map(_.asText)).toSeq
 
   override protected def load(name: String): Table = {
@@ -88,8 +88,8 @@ class ExcelRowsScan(rowsUrl: String, fullSchema: StructType,
       override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
         new PartitionReader[InternalRow] {
           private val rows = ODataPages.walk(
-            partition.asInstanceOf[ExcelRowsPartition].url, HttpAuth(b, u, p))
-            .flatMap(_.rows).map { item =>
+            partition.asInstanceOf[ExcelRowsPartition].url, HttpAuth(b, u, p), ODataJson.tree)
+            .flatMap(_.page.rows).map { item =>
               val vals = item.get("values")
               val row = if (vals != null && vals.isArray && vals.size() > 0) vals.get(0) else null
               InternalRow.fromSeq(indexes.toSeq.map { i =>

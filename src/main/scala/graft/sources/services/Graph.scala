@@ -72,7 +72,7 @@ object Graph {
   /** Driver-side paged GET of every item of a Graph collection — for
     * discovery/resolution steps only (site ids, list columns), never data. */
   private def pagedValues(url: String, a: HttpAuth): Seq[JsonNode] =
-    ODataPages.walk(url, a).flatMap(_.rows).toSeq
+    ODataPages.walk(url, a, ODataJson.tree).flatMap(_.page.rows).toSeq
 
   private def getJson(url: String, a: HttpAuth): JsonNode = {
     val resp = HttpCore.shared.get(url, auth = a, useCache = false)

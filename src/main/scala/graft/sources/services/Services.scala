@@ -194,7 +194,8 @@ object Services {
     def s(n: com.fasterxml.jackson.databind.JsonNode, k: String): String = {
       val v = n.get(k); if (v == null || v.isNull) "" else v.asText
     }
-    val out = graft.sources.odata.ODataPages.walk(url, auth).flatMap(_.rows).flatMap { svc =>
+    val out = graft.sources.odata.ODataPages.walk(url, auth, graft.sources.odata.ODataJson.tree)
+      .flatMap(_.page.rows).flatMap { svc =>
       val serviceId = s(svc, "ID")
       val serviceDesc = s(svc, "Description")
       val serviceUrl = s(svc, "ServiceUrl")

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.{DataType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import graft.sources.AttachedCatalog
 import graft.sources.http.{HttpAuth, SecretRegistry}
-import graft.sources.odata.{ODataConf, ODataPages, ODataScanBuilder}
+import graft.sources.odata.{ODataConf, ODataJson, ODataPages, ODataScanBuilder}
 import graft.writes.{DeltaShape, JsonEncode, RestBatchWrite, RestInsertWriterFactory, RestRowLevelOperation}
 
 /** A SharePoint site's lists as a read-WRITE Spark catalog — the port of the
@@ -46,8 +46,8 @@ class SharePointListsCatalog extends AttachedCatalog("sharepoint_lists") {
   override protected def namespaceMetadata: (String, String) = "site" -> siteId
 
   private def lists(): Seq[(String, String, String)] = // (id, name, displayName)
-    ODataPages.walk(s"${graphBase.stripSuffix("/")}/sites/$siteId/lists", auth)
-      .flatMap(_.rows).map { n =>
+    ODataPages.walk(s"${graphBase.stripSuffix("/")}/sites/$siteId/lists", auth, ODataJson.tree)
+      .flatMap(_.page.rows).map { n =>
         def s(k: String) = Option(n.get(k)).filterNot(_.isNull).map(_.asText).getOrElse("")
         (s("id"), s("name"), s("displayName"))
       }.toSeq

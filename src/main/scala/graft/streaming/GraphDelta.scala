@@ -1,5 +1,6 @@
 package graft.streaming
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.util
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -9,7 +10,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import graft.sources.http.{HttpAuth, HttpStatusError}
-import graft.sources.odata.ODataPages
+import graft.sources.odata.{ODataJson, ODataPages}
 
 /** Microsoft Graph delta-query CDC as a Structured Streaming source —
   * beyond reference (the reference reads Graph snapshots only; Graph's
@@ -95,7 +96,8 @@ class GraphDeltaClient(auth: HttpAuth = HttpAuth(),
     var rowCount = 0L
     var pageIdx = 0
     var newToken: Option[String] = None
-    def spill(from: String): Unit = ODataPages.walk(from, auth, headers).foreach { p =>
+    def spill(from: String): Unit = ODataPages.walk(from, auth, ODataJson.tree, headers).foreach { f =>
+      val p = f.page
       if (p.rows.nonEmpty) {
         // tombstones: lift @removed.reason into a plain field before spill
         var removed = false
@@ -108,7 +110,7 @@ class GraphDeltaClient(auth: HttpAuth = HttpAuth(),
             o.put("removedReason", reason)
           case _ =>
         }
-        files += store.writePage(subId, batch, pageIdx, if (removed) p.root.toString else p.text)
+        files += store.writePage(subId, batch, pageIdx, if (removed) p.root.toString else new String(f.body, UTF_8))
         pageIdx += 1
         rowCount += p.rows.size
       }

@@ -206,10 +206,11 @@ class OdpClient(auth: HttpAuth = HttpAuth(), maxPageSize: Option[Int] = None)
     var pageIdx = 0
     var newToken: Option[String] = None
     var prefApplied = false
-    ODataPages.walk(first, auth, headers).foreach { p =>
-      prefApplied |= p.headers.get("preference-applied").exists(_.contains("track-changes"))
+    ODataPages.walk(first, auth, ODataJson.tree, headers).foreach { f =>
+      val p = f.page
+      prefApplied |= f.headers.get("preference-applied").exists(_.contains("track-changes"))
       if (p.rows.nonEmpty) {
-        files += store.writePage(subId, batch, pageIdx, p.text)
+        files += store.writePage(subId, batch, pageIdx, new String(f.body, StandardCharsets.UTF_8))
         pageIdx += 1
         rowCount += p.rows.size
       }
@@ -230,18 +231,18 @@ class OdpClient(auth: HttpAuth = HttpAuth(), maxPageSize: Option[Int] = None)
   * partition — the page files live on the checkpoint FS, reachable
   * cluster-wide). */
 object OdpPages {
-  def readBody(uri: String): String = {
+  def readBody(uri: String): Array[Byte] = {
     import org.apache.hadoop.fs.Path
     val p = new Path(uri)
     val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
     val in = fs.open(p)
-    try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
+    try in.readAllBytes() finally in.close()
   }
 
   def decode(uri: String, schema: StructType): Iterator[Row] = {
     val toRow = CatalystTypeConverters.createToScalaConverter(schema)
-    ODataJson.extractPage(ODataJson.parse(readBody(uri))).rows.iterator
-      .map(n => toRow(ODataJson.decodeRow(n, schema)).asInstanceOf[Row])
+    new ODataJson.RowDecoder(schema)(readBody(uri)).iterator
+      .map(r => toRow(r).asInstanceOf[Row])
   }
 }
 

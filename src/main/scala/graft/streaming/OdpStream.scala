@@ -128,17 +128,14 @@ class OdpMicroBatchStream(schema: StructType, options: Map[String, String],
   override def createReaderFactory(): PartitionReaderFactory = {
     val s = schema
     // SharePoint list-item CDC: typed columns live under `fields`;
-    // unwrapNode is tombstone-safe (no `fields` child -> node unchanged,
-    // so `@removed` rewrites decode at the top level)
+    // unwrapping is tombstone-safe (no `fields` child -> the item decodes
+    // as it is, so `@removed` rewrites decode at the top level)
     val unwrap = options.get("unwrap")
     (partition: InputPartition) => {
       val uri = partition.asInstanceOf[OdpPagePartition].uri
       new PartitionReader[InternalRow] {
         private lazy val rows: Iterator[InternalRow] =
-          ODataJson.extractPage(ODataJson.parse(OdpPages.readBody(uri)))
-            .rows.iterator.map { n =>
-              ODataJson.decodeRow(unwrap.map(ODataJson.unwrapNode(n, _)).getOrElse(n), s)
-            }
+          new ODataJson.RowDecoder(s, unwrap)(OdpPages.readBody(uri)).iterator
         private var current: InternalRow = _
         override def next(): Boolean =
           if (rows.hasNext) { current = rows.next(); true } else false

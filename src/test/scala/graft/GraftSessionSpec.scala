@@ -6,7 +6,8 @@ import scala.jdk.CollectionConverters._
 /** Pins the one session config every entry point shares, and keeps it the
   * only one: a second session builder or another dev `main` under `src/`
   * fails here, and so does a hand-written nextLink loop outside
-  * `ODataPages` or a hand-written write check outside `RestChanges`. */
+  * `ODataPages`, a JSON-to-row decoder outside `ODataJson` or a
+  * hand-written write check outside `RestChanges`. */
 class GraftSessionSpec extends SparkSpecBase {
 
   test("GraftSession.local: extensions, UTC, nanosAsLong, partitions = cpus, no UI") {
@@ -54,6 +55,23 @@ class GraftSessionSpec extends SparkSpecBase {
       Set("main/scala/graft/sources/odata/ODataJson.scala"))
     assert(mainFilesWith("var next" + ": Option[String]").isEmpty)
     assert(mainFilesWith("var next" + "Url") == Set("main/scala/graft/sources/odata/ODataPages.scala"))
+  }
+
+  test("src/main decodes JSON into rows only in ODataJson: one schema-compiled decoder, no per-cell match") {
+    def mainFilesWith(needle: String): Set[String] =
+      filesWith(needle).filter(_.startsWith("main/"))
+    // a type match that reads Jackson values is a row decoder
+    val decoders = sources.collect { case (p, text) if p.startsWith("main/") &&
+      text.contains("Timestamp" + "Type =>") &&
+      Seq("Json" + "Node", "Json" + "Parser", ".as" + "Text").exists(text.contains) => p }.toSet
+    assert(decoders == Set("main/scala/graft/sources/odata/ODataJson.scala"))
+    assert(mainFilesWith("decode" + "Value(").isEmpty)
+    assert(mainFilesWith("unwrap" + "Node(").isEmpty)
+    // every row reader decodes its pages through the compiled decoder
+    assert(mainFilesWith("new ODataJson." + "RowDecoder(") == Set(
+      "main/scala/graft/sources/odata/ODataSource.scala",
+      "main/scala/graft/streaming/Odp.scala",
+      "main/scala/graft/streaming/OdpStream.scala"))
   }
 
   test("src/main sends and checks sink writes only in RestChanges: one status rule, one shell") {

@@ -48,6 +48,22 @@ class MiscSourcesSpec extends SparkSpecBase with BeforeAndAfterAll {
     assert(out.agg(sum("id")).head().getLong(0) == 4950L)
   }
 
+  test("delta sharing: presigned file GETs send no Authorization, only the share's own calls do") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("share-auth")
+    val df = (0 until 10).map(i => (i.toLong, s"item$i", i * 1.5)).toDF("id", "name", "v")
+    df.coalesce(1).write.parquet(dir.toString + "/tx")
+    stub.shareFiles = java.nio.file.Files.list(java.nio.file.Paths.get(dir.toString + "/tx"))
+      .toArray.map(_.asInstanceOf[java.nio.file.Path]).filter(_.toString.endsWith(".parquet")).toSeq
+    stub.shareSchemaJson = df.schema.json
+    stub.fileAuth.synchronized { stub.fileAuth.clear() }
+    stub.requests.synchronized { stub.requests.clear() }
+    assert(DeltaShare.read(spark, profile, "sales", "core", "tx").count() == 10)
+    assert(stub.fileAuth.synchronized { stub.fileAuth.toList } == List(None))
+    // the sharing server itself was queried (with the profile's token)
+    assert(stub.requests.synchronized { stub.requests.exists(_.endsWith("/tx/query")) })
+  }
+
   test("delta sharing: attach registers SQL views for every shared table") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("share-att")

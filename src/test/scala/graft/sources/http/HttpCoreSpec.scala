@@ -28,6 +28,19 @@ class HttpCoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.status == 503)
   }
 
+  test("a 501 answer is not retried: the capability probe goes out once") {
+    val http = new HttpCore(HttpPolicy(retries = 3, retryWaitMs = 10))
+    stub.extraStatuses.synchronized { stub.extraStatuses("/notimpl") = (501, Map.empty) }
+    try {
+      stub.requests.synchronized { stub.requests.clear() }
+      val r = http.get(s"http://localhost:${stub.port}/notimpl?$$top=1&$$skip=1", useCache = false)
+      assert(r.status == 501)
+      assert(stub.requests.synchronized { stub.requests.count(_.startsWith("/notimpl")) } == 1,
+        stub.requests.toString)
+    } finally stub.extraStatuses.synchronized { stub.extraStatuses.remove("/notimpl") }
+    assert(HttpCore.Retried == Set(429, 500, 502, 503, 504))
+  }
+
   test("429 with Retry-After waits the server's delay, not the short schedule") {
     val http = new HttpCore(HttpPolicy(retries = 3, retryWaitMs = 10))
     val t0 = System.currentTimeMillis()

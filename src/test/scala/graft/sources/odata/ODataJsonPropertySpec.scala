@@ -5,7 +5,8 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Property tests for the lenient decoder (SURVEY §1.3 — "wrong here =
+/** Property tests for the lenient decoder, through the schema-compiled
+  * page decoder (SURVEY §1.3 — "wrong here =
   * silently wrong data"): numeric round-trips whether the server serialized
   * a number natively or as a string (the v2 habit), /Date()/ equivalence
   * with ISO, and null totality. */
@@ -20,16 +21,16 @@ class ODataJsonPropertySpec extends AnyFunSuite {
 
   test("longs decode identically from native and string JSON") {
     check(Prop.forAll(Gen.chooseNum(Long.MinValue + 1, Long.MaxValue)) { l =>
-      val native = ODataJson.decodeValue(node(s"""{"v":$l}""").get("v"), LongType)
-      val str = ODataJson.decodeValue(node(s"""{"v":"$l"}""").get("v"), LongType)
+      val native = ODataJsonCells.decodeValue(node(s"""{"v":$l}""").get("v"), LongType)
+      val str = ODataJsonCells.decodeValue(node(s"""{"v":"$l"}""").get("v"), LongType)
       native == l && str == l
     })
   }
 
   test("doubles decode identically from native and string JSON") {
     check(Prop.forAll(Gen.chooseNum(-1e15, 1e15)) { d =>
-      val native = ODataJson.decodeValue(node(s"""{"v":$d}""").get("v"), DoubleType)
-      val str = ODataJson.decodeValue(node(s"""{"v":"$d"}""").get("v"), DoubleType)
+      val native = ODataJsonCells.decodeValue(node(s"""{"v":$d}""").get("v"), DoubleType)
+      val str = ODataJsonCells.decodeValue(node(s"""{"v":"$d"}""").get("v"), DoubleType)
       native == d && str == d
     })
   }
@@ -39,7 +40,7 @@ class ODataJsonPropertySpec extends AnyFunSuite {
       unscaled <- Gen.chooseNum(-999999999L, 999999999L)
     } yield java.math.BigDecimal.valueOf(unscaled, 2)
     check(Prop.forAll(gen) { bd =>
-      val v = ODataJson.decodeValue(node(s"""{"v":"${bd.toPlainString}"}""").get("v"),
+      val v = ODataJsonCells.decodeValue(node(s"""{"v":"${bd.toPlainString}"}""").get("v"),
         DecimalType(18, 2))
       v.asInstanceOf[org.apache.spark.sql.types.Decimal].toJavaBigDecimal
         .compareTo(bd) == 0
@@ -48,9 +49,9 @@ class ODataJsonPropertySpec extends AnyFunSuite {
 
   test("/Date(ms)/ equals the ISO rendering of the same instant") {
     check(Prop.forAll(Gen.chooseNum(-62135596800000L, 253402300799000L)) { ms =>
-      val legacy = ODataJson.decodeValue(node(s"""{"v":"/Date($ms)/"}""").get("v"), TimestampType)
+      val legacy = ODataJsonCells.decodeValue(node(s"""{"v":"/Date($ms)/"}""").get("v"), TimestampType)
       val iso = java.time.Instant.ofEpochMilli(ms).toString
-      val modern = ODataJson.decodeValue(node(s"""{"v":"$iso"}""").get("v"), TimestampType)
+      val modern = ODataJsonCells.decodeValue(node(s"""{"v":"$iso"}""").get("v"), TimestampType)
       legacy == modern && legacy == ms * 1000L
     })
   }
@@ -59,7 +60,7 @@ class ODataJsonPropertySpec extends AnyFunSuite {
     // full range incl. pre-1970 — truncating division fails every ms that is
     // not an exact midnight before the epoch (VERDICT r1 #2)
     check(Prop.forAll(Gen.chooseNum(-62135596800000L, 253402300799000L)) { ms =>
-      val got = ODataJson.decodeValue(node(s"""{"v":"/Date($ms)/"}""").get("v"), DateType)
+      val got = ODataJsonCells.decodeValue(node(s"""{"v":"/Date($ms)/"}""").get("v"), DateType)
       val want = java.time.Instant.ofEpochMilli(ms)
         .atZone(java.time.ZoneOffset.UTC).toLocalDate.toEpochDay.toInt
       got == want
@@ -72,7 +73,7 @@ class ODataJsonPropertySpec extends AnyFunSuite {
       DateType, BinaryType, ArrayType(IntegerType),
       StructType(Seq(StructField("x", IntegerType))))
     types.foreach { t =>
-      assert(ODataJson.decodeValue(node("""{"v":null}""").get("v"), t) == null, t)
+      assert(ODataJsonCells.decodeValue(node("""{"v":null}""").get("v"), t) == null, t)
     }
   }
 
@@ -81,7 +82,7 @@ class ODataJsonPropertySpec extends AnyFunSuite {
       val n = node(com.fasterxml.jackson.databind.node.JsonNodeFactory.instance
         .objectNode().put("v", s).toString)
       // must not throw; result is either a parsed number or null
-      val out = ODataJson.decodeValue(n.get("v"), LongType)
+      val out = ODataJsonCells.decodeValue(n.get("v"), LongType)
       out == null || out.isInstanceOf[Long] || out.isInstanceOf[java.lang.Long]
     })
   }
@@ -91,7 +92,7 @@ class ODataJsonPropertySpec extends AnyFunSuite {
       .map(_.mkString)) { s =>
       val n = node(com.fasterxml.jackson.databind.node.JsonNodeFactory.instance
         .objectNode().put("v", s).toString)
-      ODataJson.decodeValue(n.get("v"), StringType) == UTF8String.fromString(s)
+      ODataJsonCells.decodeValue(n.get("v"), StringType) == UTF8String.fromString(s)
     })
   }
 }

@@ -18,14 +18,14 @@ class ODataPagesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("a walk capped after k pages sends exactly k GETs, and hasNext sends none") {
     stub.requests.clear()
-    val pages = ODataPages.walk(customers, HttpAuth())
+    val pages = ODataPages.walk(customers, HttpAuth(), ODataJson.tree)
     assert(pages.hasNext)
     assert(stub.requests.isEmpty, s"hasNext sent ${stub.requests}")
     val taken = Seq(pages.next(), pages.next())
-    assert(taken.map(_.rows.size) == Seq(5, 5))
+    assert(taken.map(_.page.size) == Seq(5, 5))
     assert(pages.hasNext)
     assert(stub.requests.size == 2, stub.requests.toString)
-    assert(pages.map(_.rows.size).sum == 10)
+    assert(pages.map(_.page.size).sum == 10)
     assert(stub.requests.size == 4, stub.requests.toString)
   }
 
@@ -33,7 +33,7 @@ class ODataPagesSpec extends AnyFunSuite with BeforeAndAfterAll {
     val gone = stub.serviceUrl + "/Gone"
     stub.extraStatuses("/svc/Gone") = (410, Map("Location" -> customers))
     try {
-      val e = intercept[HttpStatusError](ODataPages.walk(gone, HttpAuth()).next())
+      val e = intercept[HttpStatusError](ODataPages.walk(gone, HttpAuth(), ODataJson.tree).next())
       assert(e.status == 410 && e.url == gone)
       assert(e.headers.get("location").contains(customers), e.headers.toString)
       assert(e.getMessage == s"GET $gone -> HTTP 410: answered 410", e.getMessage)
@@ -41,16 +41,17 @@ class ODataPagesSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("two separate walks of one URL do not trip the repeated-link guard") {
-    val first = ODataPages.walk(customers, HttpAuth()).flatMap(_.rows).size
-    val second = ODataPages.walk(customers, HttpAuth()).flatMap(_.rows).size
+    val first = ODataPages.walk(customers, HttpAuth(), ODataJson.tree).flatMap(_.page.rows).size
+    val second = ODataPages.walk(customers, HttpAuth(), ODataJson.tree).flatMap(_.page.rows).size
     assert(first == 20 && second == 20)
   }
 
   test("within one walk a repeated link throws, and a preloaded first page counts as fetched") {
     stub.requests.clear()
     val selfLinked = s"""{"value":[{"CustomerID":"X"}],"@odata.nextLink":"$customers"}"""
-    val pages = ODataPages.walk(customers, HttpAuth(), preloaded = Some(selfLinked))
-    assert(pages.next().rows.size == 1)
+    val pages = ODataPages.walk(customers, HttpAuth(), ODataJson.tree,
+      preloaded = Some(selfLinked.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+    assert(pages.next().page.size == 1)
     val e = intercept[RuntimeException](pages.next())
     assert(e.getMessage.startsWith(s"OData nextLink loop: $customers"), e.getMessage)
     assert(stub.requests.isEmpty, s"the preloaded page was fetched again: ${stub.requests}")

@@ -114,6 +114,25 @@ class ODataReadE2ESpec extends SparkSpecBase with BeforeAndAfterAll with BeforeA
     assert(ranged.size >= 2, s"expected ranged partitions, got: ${v4.requests}")
   }
 
+  test("a parallel scan plans its partitions once: one $count, one key sweep, one $skip probe") {
+    v4.requests.clear()
+    assert(read(v4, "parallelism" -> "4", "partitionRows" -> "5").collect().length == 20)
+    assert(v4.requests.count(_.contains("/Customers/$count")) == 1, v4.requests.toString)
+    ODataMeta.forgetCapabilities()
+    v4.skipStatus = 501
+    try {
+      v4.requests.clear()
+      assert(read(v4, "parallelism" -> "4", "partitionRows" -> "5").collect().length == 20)
+      assert(v4.requests.count(_.contains("/Customers/$count")) == 1, v4.requests.toString)
+      // 20 keys swept 5 at a time: three boundaries, three GETs
+      val sweeps = v4.requests.filter(r =>
+        r.contains("$select=CustomerID") && r.contains("$orderby=CustomerID"))
+      assert(sweeps.size == 3, sweeps.toString)
+      // the refused probe is an answer, not a failure to retry
+      assert(v4.requests.count(_.contains("$top=1&$skip=1")) == 1, v4.requests.toString)
+    } finally v4.skipStatus = 200
+  }
+
   test("parallel scan: server rejecting $skip falls back to keyset windows") {
     v4.skipStatus = 501
     try {
@@ -436,6 +455,16 @@ class ODataReadE2ESpec extends SparkSpecBase with BeforeAndAfterAll with BeforeA
       // probe failed -> entity pages fetched, no successful $apply data flow
       assert(v4.requests.exists(r => r.contains("/Customers?") && !r.contains("$apply")),
         s"expected an entity scan fallback in ${v4.requests}")
+    } finally v4.applyStatus = 200
+  }
+
+  test("a server answering 501 to $apply is probed once per query") {
+    v4.applyStatus = 501
+    try {
+      v4.requests.clear()
+      assert(read(v4).groupBy("Country").agg(sum("Revenue")).collect().length == 3)
+      val probes = v4.requests.filter(r => r.contains("$apply=") && r.contains("$top=1"))
+      assert(probes.size == 1, probes.toString)
     } finally v4.applyStatus = 200
   }
 

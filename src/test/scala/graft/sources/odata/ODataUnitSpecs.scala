@@ -73,6 +73,7 @@ class ODataUrlSpec extends AnyFunSuite {
 
 class ODataJsonSpec extends AnyFunSuite {
   import ODataJson._
+  import ODataJsonCells.decodeValue
 
   private def node(s: String) = parse(s)
 

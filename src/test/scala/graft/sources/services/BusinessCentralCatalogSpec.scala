@@ -12,12 +12,17 @@ class BusinessCentralCatalogSpec extends SparkSpecBase with BeforeAndAfterAll {
 
   private var stub: ODataStub = _
 
+  // the `bc` catalog's environment: its companies set names company c1
+  private val env = "/cronus"
+
   override def beforeAll(): Unit = {
     stub = new ODataStub(v2 = false).start()
+    stub.extraBodies(("GET", s"$env/api/v2.0/companies")) =
+      """{"value":[{"id":"c1","name":"CRONUS"},{"id":"c 2/x","name":"Odd Co"}]}"""
     super.beforeAll()
     spark.conf.set("spark.sql.catalog.bc",
       "graft.sources.services.BusinessCentralCatalog")
-    spark.conf.set("spark.sql.catalog.bc.url", s"http://localhost:${stub.port}")
+    spark.conf.set("spark.sql.catalog.bc.url", s"http://localhost:${stub.port}$env")
     spark.conf.set("spark.sql.catalog.bc.company", "c1")
   }
   override def afterAll(): Unit = {
@@ -56,9 +61,9 @@ class BusinessCentralCatalogSpec extends SparkSpecBase with BeforeAndAfterAll {
   }
 
   /** Runs `body` with catalog `cat` on the stub, COMPANY `company`. */
-  private def withCatalog(cat: String, company: String)(body: => Unit): Unit = {
+  private def withCatalog(cat: String, company: String, env: String = "")(body: => Unit): Unit = {
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.services.BusinessCentralCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.url", s"http://localhost:${stub.port}")
+    spark.conf.set(s"spark.sql.catalog.$cat.url", s"http://localhost:${stub.port}$env")
     spark.conf.set(s"spark.sql.catalog.$cat.company", company)
     try body
     finally Seq(s"$cat.company", s"$cat.url", cat).foreach(k => spark.conf.unset(s"spark.sql.catalog.$k"))
@@ -93,6 +98,31 @@ class BusinessCentralCatalogSpec extends SparkSpecBase with BeforeAndAfterAll {
     } finally stub.extraBodies.synchronized {
       stub.extraBodies.remove(("GET", companies))
       stub.extraBodies.remove(("GET", later))
+    }
+  }
+
+  test("a COMPANY that matches no company name or id and is no GUID fails early, naming it") {
+    withCatalog("bcunknown", "No Such Co", env) {
+      stub.requests.clear()
+      val e = intercept[Exception](spark.sql("SELECT * FROM bcunknown.main.Customers").collect())
+      assert(messages(e).contains("COMPANY 'No Such Co' matches no company name or id"), messages(e))
+      // no scan request was sent with the unknown literal
+      assert(!stub.requests.exists(_.contains("No Such Co")), stub.requests.toString)
+    }
+  }
+
+  test("a GUID COMPANY is taken as the id; a resolved id is percent-encoded in the URL") {
+    val guid = "6f1b3c1e-0a2b-4c5d-8e9f-0123456789ab"
+    withCatalog("bcguid", guid, env) {
+      stub.requests.clear()
+      assert(spark.sql("SELECT CustomerID FROM bcguid.main.Customers").collect().length == 20)
+      assert(stub.requests.exists(_.contains(s"/api/v2.0/companies($guid)/Customers")), stub.requests.toString)
+    }
+    withCatalog("bcodd", "odd co", env) {
+      stub.requests.clear()
+      assert(spark.sql("SELECT CustomerID FROM bcodd.main.Customers").collect().length == 20)
+      // the stub logs decoded paths: the id reached it as one encoded segment
+      assert(stub.requests.exists(_.contains("/api/v2.0/companies(c 2/x)/Customers")), stub.requests.toString)
     }
   }
 

@@ -106,6 +106,11 @@ class ODataStub(v2: Boolean, pageSize: Int = 5) {
   var shareFiles: Seq[java.nio.file.Path] = Seq.empty
   var shareSchemaJson: String = ""
 
+  /** The `Authorization` header of every presigned file GET (None: absent).
+    * A file GET that carries one answers 400, as storage hosts refuse a
+    * second credential beside the presigned signature. */
+  val fileAuth = mutable.ListBuffer[Option[String]]()
+
   /** Ad-hoc routes: (method, path) -> body served as application/json. */
   val extraBodies = mutable.Map[(String, String), String]()
 
@@ -392,6 +397,12 @@ class ODataStub(v2: Boolean, pageSize: Int = 5) {
         }
         respond(ex, 200, "application/x-ndjson",
           (Seq(shareNdjsonMeta.trim) ++ files).mkString("\n"))
+      case p if p.startsWith("/files/") && {
+          val a = Option(ex.getRequestHeaders.getFirst("Authorization"))
+          fileAuth.synchronized { fileAuth += a }
+          a.isDefined
+        } =>
+        respond(ex, 400, "text/plain", "presigned URL: no Authorization header allowed")
       case p if p.startsWith("/files/") =>
         val idx = p.stripPrefix("/files/f").toInt
         val bytes = java.nio.file.Files.readAllBytes(shareFiles(idx))
