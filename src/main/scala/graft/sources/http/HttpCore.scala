@@ -4,7 +4,8 @@ import java.net.URI
 import java.net.http.{HttpClient => JHttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.{Charset, StandardCharsets}
 import java.time.Duration
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.{CompletableFuture, CompletionException, ConcurrentHashMap, ExecutionException, Executor, TimeUnit}
+import java.util.concurrent.atomic.AtomicReference
 
 /** Retry/redirect/timeout policy. Defaults mirror the reference's operational
   * constants (erpl-web `src/include/http_client.hpp:90-97`): 30 s timeout,
@@ -81,26 +82,32 @@ object Charsets {
     new String(body, fromContentType(contentType))
 }
 
-/** Blocking HTTP client with retry/backoff and a TTL response cache for GETs.
+/** HTTP client with retry/backoff and a TTL response cache for GETs.
   *
   * One instance per JVM-side component (driver planning, or per executor via
   * `@transient lazy val` in partition readers — the client is NOT serialized;
   * connection pooling/keep-alive comes from the underlying
-  * `java.net.http.HttpClient`). Sleep schedule matches the reference:
-  * wait × backoff^(attempt-1); a 429/503 answer carrying `Retry-After`
-  * sleeps at least that long, capped at the request timeout.
+  * `java.net.http.HttpClient`). There is one retry path,
+  * [[requestAsync]]; the blocking [[request]] waits on it. Wait schedule
+  * matches the reference: wait × backoff^(attempt-1); a 429/503 answer
+  * carrying `Retry-After` waits at least that long, capped at the request
+  * timeout. `executor` runs the JDK client's exchanges and completions
+  * (None: the JDK's own unbounded default).
   *
   * Only a transport failure and the transient statuses in [[HttpCore.Retried]]
   * (429, 500, 502, 503, 504) are sent again. Every other status, 501 and
   * 505 included, is an answer: a 501 "not implemented" capability probe
   * goes out once.
   */
-class HttpCore(val policy: HttpPolicy = HttpPolicy()) {
+class HttpCore(val policy: HttpPolicy = HttpPolicy(), executor: Option[Executor] = None) {
 
-  private val client: JHttpClient = JHttpClient.newBuilder()
-    .followRedirects(JHttpClient.Redirect.NORMAL)
-    .connectTimeout(Duration.ofMillis(policy.timeoutMs))
-    .build()
+  private val client: JHttpClient = {
+    val b = JHttpClient.newBuilder()
+      .followRedirects(JHttpClient.Redirect.NORMAL)
+      .connectTimeout(Duration.ofMillis(policy.timeoutMs))
+    executor.foreach(b.executor)
+    b.build()
+  }
 
   private case class CacheEntry(at: Long, result: HttpResult)
   private val cache = new ConcurrentHashMap[String, CacheEntry]()
@@ -151,44 +158,83 @@ class HttpCore(val policy: HttpPolicy = HttpPolicy()) {
   /** Visible for tests. */
   private[http] def cacheSize: Int = cache.size()
 
+  /** Sends one request and waits for [[requestAsync]]'s outcome: the
+    * answer, or the failure that survived every retry. An interrupted
+    * caller cancels the request, which is then never sent again. */
   def request(method: String, url: String, body: Option[(String, String)],
               headers: Map[String, String] = Map.empty,
               auth: HttpAuth = HttpAuth()): HttpResult = {
-    var attempt = 0
-    var last: Either[Throwable, HttpResult] = Left(new RuntimeException("unsent"))
-    while (attempt <= policy.retries) {
-      if (attempt > 0) {
-        val scheduled = (policy.retryWaitMs *
-          math.pow(policy.retryBackoff, (attempt - 1).toDouble)).toLong
-        // a throttled answer's Retry-After outranks a shorter schedule step
-        val asked = last.fold(_ => 0L, HttpCore.retryAfterMs(_, System.currentTimeMillis()))
-        val sleep = math.min(policy.timeoutMs, math.max(scheduled, asked))
-        Trace.warn("http", s"retry $attempt/${policy.retries} $method $url after ${sleep}ms")
-        Thread.sleep(sleep)
-      }
-      try {
-        val t0 = System.nanoTime()
-        val r = send(method, url, body, headers, auth)
-        Trace.debug("http", s"$method $url -> ${r.status} " +
-          s"(${if (r.body == null) 0 else r.body.length} B, ${(System.nanoTime() - t0) / 1000000} ms)")
-        if (!HttpCore.Retried(r.status) || attempt == policy.retries) return r
-        last = Right(r)
-      } catch {
-        case e: InterruptedException => throw e // a cancelled request is not sent again
-        case e: Exception => last = Left(e)
-      }
-      attempt += 1
-    }
-    last match {
-      case Right(r) => r
-      case Left(e) =>
-        Trace.error("http", s"$method $url failed after ${policy.retries} retries: ${e.getMessage}")
-        throw new RuntimeException(s"HTTP $method $url failed after ${policy.retries} retries", e)
+    val call = requestAsync(method, url, body, headers, auth)
+    try call.get() catch {
+      case e: ExecutionException => throw e.getCause
+      case e: InterruptedException => call.cancel(true); throw e
     }
   }
 
+  /** Sends one request without holding a thread while it waits: every
+    * attempt goes out on the JDK client's `sendAsync`, and the wait before a
+    * retry is scheduled on a delayed executor. The future completes with
+    * the answer (the last one, when every attempt met a [[HttpCore.Retried]]
+    * status) or fails with `HTTP <method> <url> failed after <n> retries`.
+    *
+    * Cancelling the future cancels the exchange in flight, and a cancelled
+    * request is never sent again: an attempt still waiting out its retry
+    * delay finds the future done and stops. Trace lines go where the
+    * calling thread's would. */
+  def requestAsync(method: String, url: String, body: Option[(String, String)],
+                   headers: Map[String, String] = Map.empty,
+                   auth: HttpAuth = HttpAuth()): CompletableFuture[HttpResult] = {
+    val result = new CompletableFuture[HttpResult]()
+    val traced = Trace.capture()
+    val exchange = new AtomicReference[CompletableFuture[_]]()
+    result.whenComplete { (_, _) => if (result.isCancelled) Option(exchange.get).foreach(_.cancel(true)) }
+    // runs on a completion or delay thread: whatever escapes fails the request
+    def guarded(body: => Unit): Unit =
+      try Trace.within(traced)(body) catch { case e: Throwable => result.completeExceptionally(e) }
+
+    def attempt(n: Int): Unit = if (!result.isDone) {
+      val t0 = System.nanoTime()
+      val sent = try send(method, url, body, headers, auth)
+        catch { case e: Exception => CompletableFuture.failedFuture[HttpResponse[Array[Byte]]](e) }
+      exchange.set(sent)
+      if (result.isDone) sent.cancel(true)
+      sent.whenComplete { (resp, err) =>
+        guarded(answered(n, t0, if (err == null) Right(toResult(url, resp)) else Left(unwrap(err))))
+      }
+    }
+
+    def answered(n: Int, t0: Long, last: Either[Throwable, HttpResult]): Unit = {
+      if (result.isDone) return // cancelled meanwhile
+      last.foreach(r => Trace.debug("http", s"$method $url -> ${r.status} " +
+        s"(${if (r.body == null) 0 else r.body.length} B, ${(System.nanoTime() - t0) / 1000000} ms)"))
+      last match {
+        case Right(r) if !HttpCore.Retried(r.status) || n == policy.retries => result.complete(r)
+        case Left(e) if n == policy.retries =>
+          Trace.error("http", s"$method $url failed after ${policy.retries} retries: ${e.getMessage}")
+          result.completeExceptionally(
+            new RuntimeException(s"HTTP $method $url failed after ${policy.retries} retries", e))
+        case _ =>
+          val scheduled = (policy.retryWaitMs * math.pow(policy.retryBackoff, n.toDouble)).toLong
+          // a throttled answer's Retry-After outranks a shorter schedule step
+          val asked = last.fold(_ => 0L, HttpCore.retryAfterMs(_, System.currentTimeMillis()))
+          val wait = math.min(policy.timeoutMs, math.max(scheduled, asked))
+          Trace.warn("http", s"retry ${n + 1}/${policy.retries} $method $url after ${wait}ms")
+          CompletableFuture.delayedExecutor(wait, TimeUnit.MILLISECONDS).execute(() => guarded(attempt(n + 1)))
+      }
+    }
+
+    attempt(0)
+    result
+  }
+
+  private def unwrap(e: Throwable): Throwable = e match {
+    case c: CompletionException if c.getCause != null => c.getCause
+    case _ => e
+  }
+
   private def send(method: String, url: String, body: Option[(String, String)],
-                   headers: Map[String, String], auth: HttpAuth): HttpResult = {
+                   headers: Map[String, String],
+                   auth: HttpAuth): CompletableFuture[HttpResponse[Array[Byte]]] = {
     val b = HttpRequest.newBuilder(URI.create(url))
       .timeout(Duration.ofMillis(policy.timeoutMs))
     headers.foreach { case (k, v) => b.header(k, v) }
@@ -199,8 +245,10 @@ class HttpCore(val policy: HttpPolicy = HttpPolicy()) {
         b.method(method, HttpRequest.BodyPublishers.ofString(content))
       case None => b.method(method, HttpRequest.BodyPublishers.noBody())
     }
-    val resp: HttpResponse[Array[Byte]] =
-      client.send(b.build(), HttpResponse.BodyHandlers.ofByteArray())
+    client.sendAsync(b.build(), HttpResponse.BodyHandlers.ofByteArray())
+  }
+
+  private def toResult(url: String, resp: HttpResponse[Array[Byte]]): HttpResult = {
     val hs = {
       val m = scala.collection.mutable.Map[String, String]()
       resp.headers().map().forEach((k, vs) => m.put(k.toLowerCase, String.join(", ", vs)))

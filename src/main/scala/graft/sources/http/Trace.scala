@@ -29,8 +29,24 @@ object Trace {
   private val Levels = Seq("TRACE", "DEBUG", "INFO", "WARN", "ERROR")
   private def rank(l: String): Int = math.max(0, Levels.indexOf(l.toUpperCase))
 
+  /** The session whose confs this thread's lines follow, while it emits
+    * for another thread (see [[within]]); null: its own active session. */
+  private val lent = new ThreadLocal[Option[SparkSession]]
+
+  /** The calling thread's trace settings, for lines emitted later on another
+    * thread (an HTTP request's completion and retry threads). */
+  def capture(): Option[SparkSession] = Option(lent.get).getOrElse(SparkSession.getActiveSession)
+
+  /** Runs `body` with its lines going where the thread that made `captured`
+    * would send them. */
+  def within[T](captured: Option[SparkSession])(body: => T): T = {
+    val prev = lent.get
+    lent.set(captured)
+    try body finally lent.set(prev)
+  }
+
   private def conf(key: String, default: String): String =
-    SparkSession.getActiveSession
+    capture()
       .flatMap(s => s.conf.getOption(s"spark.graft.trace.$key"))
       .orElse(Option(System.getProperty(s"spark.graft.trace.$key")))
       .getOrElse(default)

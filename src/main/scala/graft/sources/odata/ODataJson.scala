@@ -327,6 +327,13 @@ object ODataJson {
       if (micros == null) null else Math.floorDiv(micros.longValue, 86400000000L).toInt
     }
     case BinaryType => p => java.util.Base64.getDecoder.decode(text(p))
+    case _: DayTimeIntervalType => p =>
+      // Edm.Duration: ISO-8601 `[-]PnDTnHnMn.nS` to microseconds; any other
+      // text (years or months included, which no day-time interval holds) is null
+      try {
+        val d = java.time.Duration.parse(text(p).trim)
+        Math.addExact(Math.multiplyExact(d.getSeconds, 1000000L), d.getNano / 1000L)
+      } catch { case _: java.time.format.DateTimeParseException => null }
     case ArrayType(inner, _) =>
       val c = converter(inner)
       p => p.currentToken match {

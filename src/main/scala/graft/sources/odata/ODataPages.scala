@@ -2,7 +2,7 @@ package graft.sources.odata
 
 import graft.sources.http.{Charsets, HttpAuth, HttpCore, HttpResult, HttpStatusError}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.concurrent.{Callable, ExecutionException, Future, LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
+import java.util.concurrent.{CompletableFuture, ExecutionException, Executors}
 import scala.collection.mutable
 
 /** The connector's one pagination loop (reference
@@ -11,7 +11,8 @@ import scala.collection.mutable
   * carries none. Every paged reader walks through here with its page
   * decoder: row readers pass a [[ODataJson.RowDecoder]], readers that
   * inspect payloads pass [[ODataJson.tree]]. A `$skip`/`$top` range
-  * partition reads its window ahead through [[RangeReadAhead]]. */
+  * partition reads its window ahead through [[RangeReadAhead]], up to 16
+  * page GETs in flight. */
 object ODataPages {
 
   /** One page: its UTF-8 body, the response headers (empty for a preloaded
@@ -69,24 +70,24 @@ object ODataPages {
   private def utf8(r: HttpResult): Array[Byte] =
     if (Charsets.fromContentType(r.contentType) == UTF_8) r.body else r.text.getBytes(UTF_8)
 
-  /** Sub-range GETs one range partition keeps in flight. */
-  private val Depth = 4
+  /** Most sub-range GETs one range partition keeps in flight. */
+  private val MaxDepth = 16
+
+  /** Most unparsed body bytes one partition's window is sized to hold. */
+  private val WindowBytes = 32L << 20
+
+  /** The window for pages of `pageBytes`: 16 GETs, fewer for pages wider
+    * than 2 MiB, at least 1. */
+  private[odata] def depthFor(pageBytes: Long): Int =
+    math.min(MaxDepth.toLong, math.max(1L, WindowBytes / math.max(1L, pageBytes))).toInt
 
   /** Sub-range GETs go through their own client, so planning, interactive
     * requests and first pages keep the few keep-alive connections of
     * `HttpCore.shared` to themselves: sharing them slowed single-request
-    * reads. */
-  private lazy val readAheadHttp = new HttpCore()
-
-  /** One bounded daemon pool per JVM for every partition's read-ahead GETs:
-    * `Depth` per core covers every task slot keeping `Depth` in flight. */
-  private lazy val fetchPool: ThreadPoolExecutor = {
-    val n = Depth * Runtime.getRuntime.availableProcessors()
-    val pool = new ThreadPoolExecutor(n, n, 30, TimeUnit.SECONDS, new LinkedBlockingQueue[Runnable](),
-      r => { val t = new Thread(r, "odata-read-ahead"); t.setDaemon(true); t })
-    pool.allowCoreThreadTimeOut(true)
-    pool
-  }
+    * reads. Its exchanges complete on 4 daemon threads, in place of the
+    * JDK's unbounded default: no thread waits on a GET. */
+  private lazy val readAheadHttp = new HttpCore(executor = Some(Executors.newFixedThreadPool(4,
+    r => { val t = new Thread(r, "odata-read-ahead"); t.setDaemon(true); t })))
 
   /** The pages of one `$skip`/`$top` range partition, read ahead.
     *
@@ -94,18 +95,21 @@ object ODataPages {
     * fetched as [[walk]] would, on `HttpCore.shared`. If it links on, its
     * row count `n` is the server's page size: the rest of the window is
     * cut into sub-ranges of `n` rows, each `url` with its `$skip`/`$top`
-    * replaced (so the `$orderby` key pin stays), and up to `Depth` of their
-    * GETs are in flight at once. Pages come out in sub-range order, with the same
-    * number of GETs as a serial walk of a full window.
+    * replaced (so the `$orderby` key pin stays), and their GETs go out on
+    * [[HttpCore.requestAsync]], up to `min(16, 32 MiB / first page's body
+    * bytes)` at once (at least 1). So a task holds at most 16 unparsed
+    * bodies and, while its pages are no wider than its first, at most
+    * 32 MiB of them. No thread waits on a GET in flight. Pages come out in
+    * sub-range order, with the same GETs as a serial walk of a full window.
     *
-    * Fetch threads only GET a body and check its status; every page is
-    * decoded on the caller's thread, by a [[walk]] that takes the body as
-    * its preloaded first page and follows the sub-range's own nextLinks (a
-    * server page smaller than `n`). At most `Depth` unparsed bodies are
-    * held. A sub-range that ends short ends the data: nothing after it is
-    * sent, and what is in flight is cancelled. A failed sub-range throws
-    * its [[HttpStatusError]] on the caller's thread. `close()` cancels
-    * outstanding GETs. */
+    * Every page is decoded on the caller's thread, by a [[walk]] that takes
+    * the body as its preloaded first page and follows the sub-range's own
+    * nextLinks (a server page smaller than `n`). A sub-range that ends
+    * short ends the data: nothing after it is sent, and what is in flight
+    * is cancelled. The first failure in window order throws on the
+    * caller's thread (a non-200 answer as its [[HttpStatusError]]) after
+    * cancelling the rest, as does `close()`; a cancelled GET is never sent
+    * again, even one waiting out a retry delay. */
   private[odata] final class RangeReadAhead[P <: ODataJson.Paged](
       url: String, skip: Long, top: Long, auth: HttpAuth, headers: Map[String, String],
       decode: Array[Byte] => P)
@@ -113,22 +117,24 @@ object ODataPages {
 
     private val base = ODataUrl.parse(url)
     private var started = false
+    private var depth = 1
     private var pages: Iterator[Fetched[P]] = Iterator.empty
     // sub-ranges not yet sent, as (skip, top); (url, top, GET) in flight
     private var pending: Iterator[(Long, Long)] = Iterator.empty
-    private val inFlight = mutable.Queue[(String, Long, Future[HttpResult])]()
+    private val inFlight = mutable.Queue[(String, Long, CompletableFuture[HttpResult])]()
     // rows the current sub-range asked for and has yielded so far
     private var asked = 0L
     private var got = 0L
 
-    override def hasNext: Boolean = {
-      if (!started) { started = true; pages = firstPage() }
-      while (!pages.hasNext && inFlight.nonEmpty) {
-        if (got < asked) close() // a short sub-range: the data ends here
-        else pages = nextSubRange()
-      }
-      pages.hasNext
-    }
+    override def hasNext: Boolean =
+      try {
+        if (!started) { started = true; pages = firstPage() }
+        while (!pages.hasNext && inFlight.nonEmpty) {
+          if (got < asked) close() // a short sub-range: the data ends here
+          else pages = nextSubRange()
+        }
+        pages.hasNext
+      } catch { case e: Exception => close(); throw e }
 
     override def next(): Fetched[P] = {
       if (!hasNext) throw new NoSuchElementException("OData range is exhausted")
@@ -149,6 +155,7 @@ object ODataPages {
       val n = first.page.size.toLong
       if (first.page.nextLink.isEmpty || n == 0) Iterator.single(first) ++ head
       else {
+        depth = depthFor(first.body.length.toLong)
         pending = Iterator.iterate(skip + n)(_ + n).takeWhile(_ < skip + top)
           .map(s => (s, math.min(n, skip + top - s)))
         send()
@@ -156,23 +163,19 @@ object ODataPages {
       }
     }
 
-    /** Tops the in-flight queue up to `Depth` GETs. */
+    /** Tops the window up to `depth` GETs. */
     private def send(): Unit =
-      while (inFlight.size < Depth && pending.hasNext) {
+      while (inFlight.size < depth && pending.hasNext) {
         val (s, t) = pending.next()
         val u = base.withParam("$top", t.toString).withParam("$skip", s.toString).render
-        val get: Callable[HttpResult] = () => {
-          val r = readAheadHttp.get(u, headers = headers, auth = auth, useCache = false)
-          if (r.status != 200) throw new HttpStatusError("GET", r.url, r.status, r.headers, r.text)
-          r
-        }
-        inFlight += ((u, t, fetchPool.submit(get)))
+        inFlight += ((u, t, readAheadHttp.requestAsync("GET", u, None, headers, auth)))
       }
 
     private def nextSubRange(): Iterator[Fetched[P]] = {
       val (u, t, fetch) = inFlight.dequeue()
-      val body = try utf8(fetch.get()) catch { case e: ExecutionException => throw e.getCause }
-      val rest = walk(u, auth, decode, headers, readAheadHttp, preloaded = Some(body))
+      val r = try fetch.get() catch { case e: ExecutionException => throw e.getCause }
+      if (r.status != 200) throw new HttpStatusError("GET", r.url, r.status, r.headers, r.text)
+      val rest = walk(u, auth, decode, headers, readAheadHttp, preloaded = Some(utf8(r)))
       val first = rest.next() // decoded before the next GET goes out
       send()
       asked = t

@@ -29,7 +29,9 @@ import scala.jdk.CollectionConverters._
   * server reports `$count` and `parallelism > 1`, the scan plans up to
   * `parallelism` `$skip/$top` range partitions so a large entity set is
   * paged by many executors concurrently (SURVEY.md §7.4 item 6), and each
-  * range partition keeps up to 4 page GETs of its window in flight
+  * range partition keeps up to 16 page GETs of its window in flight on the
+  * HTTP client's async path, fewer when its pages are wider than 2 MiB, so
+  * a task holds about 32 MiB of unparsed bodies at most
   * ([[ODataPages.RangeReadAhead]]).
   *
   * Options: url, version (auto|2|4), expand, top, skip, count,
@@ -1078,16 +1080,19 @@ private[odata] object KeysetWindows {
         .map(_.keys).filter(_.nonEmpty).map(_.mkString(","))
     }
 
-  /** Filter-aware `/\$count` probe (None on any failure). Never served from
-    * the response cache: partition planning sized by a TTL-stale count
-    * mis-carves windows on a set that changed underneath it. */
+  /** Filter-aware `/\$count` probe. An answer that carries no count (a
+    * non-200 status, a body that is not a number) is None and traced; a
+    * transport failure that survives `HttpCore`'s retries propagates. Never
+    * served from the response cache: partition planning sized by a
+    * TTL-stale count mis-carves windows on a set that changed underneath it. */
   def countRows(conf: ODataConf, meta: ODataMeta, filters: Seq[String]): Option[Long] = {
-    try {
-      val u0 = ODataUrl.parse(meta.entitySetUrl + "/$count")
-      val withFilter = filters.foldLeft(u0)((u, e) => u.mergeFilter(e))
-      val resp = HttpCore.shared.get(withFilter.render, useCache = false, auth = conf.auth)
-      if (resp.status == 200) Some(resp.text.trim.toLong) else None
-    } catch { case _: Exception => None }
+    val u0 = ODataUrl.parse(meta.entitySetUrl + "/$count")
+    val url = filters.foldLeft(u0)((u, e) => u.mergeFilter(e)).render
+    val resp = HttpCore.shared.get(url, useCache = false, auth = conf.auth)
+    val n = if (resp.status == 200) resp.text.trim.toLongOption else None
+    if (n.isEmpty)
+      Trace.warn("odata", s"$$count GET $url -> HTTP ${resp.status}: planning without a row count")
+    n
   }
 
   /** Carve up to `parallelism` disjoint window predicates sized by

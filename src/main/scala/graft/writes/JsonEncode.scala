@@ -11,7 +11,8 @@ import org.apache.spark.sql.types._
   * JSON → server 400 → endless task retries), and non-scalar temporal types
   * (DateType rendered as a bare epoch-day integer, Row-path timestamps as an
   * unquoted `2020-01-01 00:00:00.0`). Strings escape the full control range;
-  * dates/timestamps render as quoted ISO-8601. */
+  * dates, timestamps and day-time intervals (Edm.Duration) render as quoted
+  * ISO-8601. */
 object JsonEncode {
 
   def str(s: String): String = {
@@ -36,6 +37,8 @@ object JsonEncode {
       case TimestampType =>
         str(java.time.Instant.ofEpochSecond(0, row.getLong(i) * 1000L).toString)
       case DateType => str(java.time.LocalDate.ofEpochDay(row.getInt(i).toLong).toString)
+      case _: DayTimeIntervalType =>
+        str(java.time.Duration.of(row.getLong(i), java.time.temporal.ChronoUnit.MICROS).toString)
       case BooleanType | ByteType | ShortType | IntegerType | LongType |
            FloatType | DoubleType | _: DecimalType =>
         String.valueOf(row.get(i, dt))

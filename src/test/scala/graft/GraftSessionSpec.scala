@@ -6,8 +6,9 @@ import scala.jdk.CollectionConverters._
 /** Pins the one session config every entry point shares, and keeps it the
   * only one: a second session builder or another dev `main` under `src/`
   * fails here, and so does a hand-written nextLink loop outside
-  * `ODataPages`, a JSON-to-row decoder outside `ODataJson` or a
-  * hand-written write check outside `RestChanges`. */
+  * `ODataPages`, a JSON-to-row decoder outside `ODataJson`, a
+  * hand-written write check outside `RestChanges`, a second JDK HTTP client
+  * builder or a blocking pool or sleep in the connector. */
 class GraftSessionSpec extends SparkSpecBase {
 
   test("GraftSession.local: extensions, UTC, nanosAsLong, partitions = cpus, no UI") {
@@ -78,6 +79,16 @@ class GraftSessionSpec extends SparkSpecBase {
     val module = Set("main/scala/graft/writes/RestChanges.scala")
     assert(filesWith("status >" + "= 300").filter(_.startsWith("main/")) == module)
     assert(filesWith("createBatch" + "WriterFactory").filter(_.startsWith("main/")) == module)
+  }
+
+  test("a JDK HttpClient is built only in HttpCore, and graft/sources holds no ThreadPoolExecutor and no sleep") {
+    val core = Set("main/scala/graft/sources/http/HttpCore.scala")
+    assert(filesWith("java.net" + ".http") == core)
+    assert(filesWith("HttpClient" + ".new") == core)
+    val connector = sources.collect { case (p, text) if p.startsWith("main/scala/graft/sources/") => p -> text }
+    assert(connector.nonEmpty)
+    assert(connector.collect { case (p, text) if text.contains("ThreadPool" + "Executor") ||
+      text.contains("Thread" + ".sleep") => p }.isEmpty)
   }
 
   test("src/main implements SupportsNamespaces only in AttachedCatalog and parses $metadata only in ODataSource") {

@@ -56,4 +56,12 @@ class ODataPagesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e.getMessage.startsWith(s"OData nextLink loop: $customers"), e.getMessage)
     assert(stub.requests.isEmpty, s"the preloaded page was fetched again: ${stub.requests}")
   }
+
+  test("a range window holds 16 GETs, fewer once pages pass 2 MiB: 32 MiB of bodies at most") {
+    val mib = 1L << 20
+    assert(Seq(1L, 100 * 1024L, 2 * mib).map(ODataPages.depthFor) == Seq(16, 16, 16))
+    assert(ODataPages.depthFor(3 * mib) == 10)
+    assert(Seq(32 * mib, 40 * mib).map(ODataPages.depthFor) == Seq(1, 1))
+    assert((1L to 64L).map(_ * mib / 4).forall(b => ODataPages.depthFor(b) * b <= 32 * mib || b > 32 * mib))
+  }
 }

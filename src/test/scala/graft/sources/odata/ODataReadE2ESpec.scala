@@ -1093,6 +1093,96 @@ class ODataReadE2ESpec extends SparkSpecBase with BeforeAndAfterAll with BeforeA
     } finally s.stop()
   }
 
+  /** Sub-range GETs in flight at once, at most, among `spans` (the stub's
+    * handling intervals). */
+  private def mostOverlapping(spans: Seq[(Long, Long)]): Int =
+    spans.flatMap { case (b, e) => Seq((b, 1), (e, -1)) }.sortBy(identity)
+      .scanLeft(0)(_ + _._2).max
+  private def skipOf(r: String): Int = "\\$skip=(\\d+)".r.findFirstMatchIn(r).get.group(1).toInt
+
+  test("range read-ahead: a partition keeps more than 4 and at most 16 sub-range GETs in flight, every row in order") {
+    // two 110-row partitions of 5-row pages: a first page and 21 sub-ranges each
+    val s = new ODataStub(v2 = false, threads = 48).start()
+    s.rows = s.makeRows(220)
+    s.pagesWithinTop = true
+    s.skipAnswers = (5 until 220 by 5).map(_ -> ODataStub.SkipAnswer(delayMs = 100)).toMap
+    try {
+      val ids = failAfter(Span(60, Seconds))(
+        read(s, "parallelism" -> "2", "partitionRows" -> "110").collect().map(_.getString(0)).toSeq)
+      assert(ids == s.rows.map(_("CustomerID").toString).sorted, ids)
+      // a serial walk of each window sends its first page and 21 nextLinks
+      assert(pageGets(s).size == 44, pageGets(s).mkString("\n"))
+      val subRanges = s.served.toSeq.filter { case (r, _, _) =>
+        r.startsWith("/svc/Customers?") && !r.contains("$top=1&") && skipOf(r) % 110 != 0
+      }
+      val perPartition = subRanges.groupBy { case (r, _, _) => skipOf(r) / 110 }
+        .map { case (p, rs) => p -> mostOverlapping(rs.map { case (_, b, e) => (b, e) }) }
+      assert(perPartition.size == 2 && perPartition.values.forall(n => n > 4 && n <= 16),
+        perPartition)
+    } finally s.stop()
+  }
+
+  test("range read-ahead: a 503 with Retry-After on one sub-range is retried after the asked delay") {
+    val s = rangeStub()
+    s.skipAnswers = Map(10 -> ODataStub.SkipAnswer(status = 503,
+      headers = Map("Retry-After" -> "1"), times = 1))
+    try {
+      val t0 = System.nanoTime()
+      val ids = failAfter(Span(60, Seconds))(rangeScan(s).collect().map(_.getString(0)).toSeq)
+      assert(ids == rangeIds, ids)
+      assert((System.nanoTime() - t0) / 1000000 >= 1000, "Retry-After: 1 was not waited out")
+      assert(pageGets(s).count(_.endsWith("$top=5&$skip=10")) == 2, pageGets(s).mkString("\n"))
+      assert(pageGets(s).size == 9, pageGets(s).mkString("\n"))
+    } finally s.stop()
+  }
+
+  test("range read-ahead: after a sub-range 404 surfaces, no GET is sent, resent or retried") {
+    // one 110-row range partition: a first page and 21 sub-ranges, the first
+    // 16 sent at once; [5, 10) fails after [10, 15) met a 503 asking for 1 s
+    val s = new ODataStub(v2 = false).start()
+    s.rows = s.makeRows(110)
+    s.pagesWithinTop = true
+    s.skipAnswers = (15 until 110 by 5).map(_ -> ODataStub.SkipAnswer(delayMs = 300)).toMap ++ Map(
+      5 -> ODataStub.SkipAnswer(status = 404, delayMs = 200),
+      10 -> ODataStub.SkipAnswer(status = 503, headers = Map("Retry-After" -> "1"), times = 1))
+    try {
+      val err = failAfter(Span(60, Seconds))(intercept[Exception](
+        read(s, "parallelism" -> "2", "partitionRows" -> "110").collect()))
+      assert(messages(err).contains("HttpStatusError: GET ") &&
+        messages(err).contains("$top=5&$skip=5 -> HTTP 404"), messages(err))
+      Thread.sleep(1500) // past the 503's retry delay
+      val gets = pageGets(s)
+      // the first page and the first window, each once: the rest never went out
+      assert(gets.map(skipOf).sorted == (0 to 80 by 5), gets.mkString("\n"))
+    } finally s.stop()
+  }
+
+  test("range read-ahead: a truncated page fails the scan loudly, never a partial row set") {
+    val s = rangeStub()
+    s.skipAnswers = Map(30 -> ODataStub.SkipAnswer(truncate = true))
+    try {
+      val err = failAfter(Span(60, Seconds))(intercept[Exception](rangeScan(s).collect()))
+      assert(messages(err).contains("Unexpected end-of-input"), messages(err))
+    } finally s.stop()
+  }
+
+  test("$count: an HTTP no is traced once and plans no range partition; a dropped connection fails the query") {
+    val s = new ODataStub(v2 = false).start()
+    def scan() = read(s, "parallelism" -> "4", "partitionRows" -> "5").collect()
+    try {
+      s.countStatus = 501
+      val lines = warnings(assert(scan().length == 20))
+      assert(lines.count(l => l.contains("[WARN] [odata] $count GET ") &&
+        l.contains("-> HTTP 501")) == 1, lines)
+      assert(!s.requests.exists(r => r.contains("$skip=") && !r.contains("$top=1&")), s.requests)
+      s.countStatus = 200
+      s.dropCounts = true
+      val err = failAfter(Span(60, Seconds))(intercept[Exception](scan()))
+      assert(messages(err).contains("HTTP GET ") && messages(err).contains("/Customers/$count") &&
+        messages(err).contains("failed after 3 retries"), messages(err))
+    } finally s.stop()
+  }
+
   private def applyProbes(s: ODataStub): Int =
     s.requests.count(r => r.contains("$apply=") && r.endsWith("$top=1"))
   private def revenueByCountry(s: ODataStub, min: Long): Map[String, Long] =

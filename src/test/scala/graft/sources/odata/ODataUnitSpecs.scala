@@ -147,4 +147,19 @@ class ODataJsonSpec extends AnyFunSuite {
       .asInstanceOf[org.apache.spark.sql.catalyst.util.GenericArrayData]
     assert(arr.numElements() == 2)
   }
+
+  test("Edm.Duration: ISO-8601 day-time text decodes to interval microseconds and encodes back") {
+    import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+    val schema = StructType(Seq(StructField("d", DayTimeIntervalType())))
+    val page = new RowDecoder(schema)(
+      """{"value":[{"d":"PT1H"},{"d":"-P1DT0.5S"},{"d":null}]}""".getBytes("UTF-8"))
+    val project = UnsafeProjection.create(schema)
+    val out = page.iterator.map(r => project(r).copy()).toSeq
+    assert(out.map(r => if (r.isNullAt(0)) None else Some(r.getLong(0))) ==
+      Seq(Some(3600000000L), Some(-86400500000L), None))
+    val json = graft.writes.JsonEncode.value(out(1), 0, DayTimeIntervalType())
+    assert(json == "\"PT-24H-0.5S\"")
+    val back = new RowDecoder(schema)(s"""{"value":[{"d":$json}]}""".getBytes("UTF-8"))
+    assert(back.iterator.next().getLong(0) == -86400500000L)
+  }
 }

@@ -9,11 +9,16 @@ import scala.collection.mutable
   * strategy): serves a `$metadata` EDMX document and a `Customers` entity set
   * with server-side `$filter`/`$select`/`$top`/`$skip`/`$count` evaluation and
   * nextLink pagination, and records every request URL so tests can assert
-  * what was pushed down.
+  * what was pushed down. `threads` is the number of requests it serves at
+  * once.
   */
-class ODataStub(v2: Boolean, pageSize: Int = 5) {
+class ODataStub(v2: Boolean, pageSize: Int = 5, threads: Int = 16) {
 
   val requests = mutable.ListBuffer[String]()
+
+  /** Every request as (decoded URL, nanoTime its handling began, nanoTime
+    * its answer was sent): which requests overlapped. */
+  val served = mutable.ListBuffer[(String, Long, Long)]()
 
   /** When set, every /svc request must carry matching basic credentials —
     * 401 otherwise, recorded in [[unauthorized]]. Regression harness for the
@@ -84,9 +89,14 @@ class ODataStub(v2: Boolean, pageSize: Int = 5) {
   @volatile var pagesWithinTop: Boolean = false
 
   /** How a `Customers` GET carrying `$skip=<key>` is answered: after a
-    * delay (range reads answered out of order), with a status instead of
-    * the page, or paged smaller than asked (a server capping its pages). */
+    * delay (range reads answered out of order), with a status and headers
+    * instead of the page (for its first `times` GETs), paged smaller than
+    * asked (a server capping its pages), or with its JSON cut in half. */
   @volatile var skipAnswers: Map[Int, ODataStub.SkipAnswer] = Map.empty
+  private val skipGets = mutable.Map[Int, Int]()
+
+  /** When true, every `/$count` GET has its connection closed unanswered. */
+  @volatile var dropCounts: Boolean = false
 
   /** When true, every `$top=1` GET under /svc has its connection closed
     * unanswered: a transport failure no client retry gets past. */
@@ -129,7 +139,7 @@ class ODataStub(v2: Boolean, pageSize: Int = 5) {
     server.createContext("/", new Handler)
     // small daemon pool: executor-distributed operations (bulk delete) hit
     // the stub concurrently; shared state is synchronized where mutated
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(16,
+    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(threads,
       r => { val t = new Thread(r); t.setDaemon(true); t }))
     server.start()
     this
@@ -187,15 +197,22 @@ class ODataStub(v2: Boolean, pageSize: Int = 5) {
       val path = ex.getRequestURI.getPath
       val rawQ = Option(ex.getRequestURI.getRawQuery).getOrElse("")
       val decoded = path + (if (rawQ.isEmpty) "" else "?" + URLDecoder.decode(rawQ, StandardCharsets.UTF_8))
+      val began = System.nanoTime()
       requests.synchronized { requests += decoded }
-      if (dropProbes && path.startsWith("/svc") && parseQuery(rawQ).get("$top").contains("1"))
-        ex.close()
-      else if (path.startsWith("/svc") && !authorized(ex)) {
-        unauthorized.synchronized { unauthorized += decoded }
-        respond(ex, 401, "text/plain", "unauthorized")
-      } else try route(ex, path, parseQuery(rawQ)) catch {
-        case e: Exception => respond(ex, 500, "text/plain", e.toString)
-      }
+      try handleRecorded(ex, path, rawQ, decoded)
+      finally served.synchronized { served += ((decoded, began, System.nanoTime())) }
+    }
+  }
+
+  private def handleRecorded(ex: HttpExchange, path: String, rawQ: String, decoded: String): Unit = {
+    if ((dropProbes && path.startsWith("/svc") && parseQuery(rawQ).get("$top").contains("1")) ||
+        (dropCounts && path.endsWith("/$count")))
+      ex.close()
+    else if (path.startsWith("/svc") && !authorized(ex)) {
+      unauthorized.synchronized { unauthorized += decoded }
+      respond(ex, 401, "text/plain", "unauthorized")
+    } else try route(ex, path, parseQuery(rawQ)) catch {
+      case e: Exception => respond(ex, 500, "text/plain", e.toString)
     }
   }
 
@@ -496,10 +513,17 @@ class ODataStub(v2: Boolean, pageSize: Int = 5) {
     if (q.contains("$skip") && skipStatus != 200) {
       respond(ex, skipStatus, "text/plain", "$skip not supported"); return
     }
-    val answer = q.get("$skip").flatMap(s => skipAnswers.get(s.toInt))
-      .getOrElse(ODataStub.SkipAnswer())
+    val answer = q.get("$skip").flatMap { s =>
+      skipAnswers.get(s.toInt).filter { a =>
+        val n = skipGets.synchronized {
+          val n = skipGets.getOrElse(s.toInt, 0) + 1; skipGets(s.toInt) = n; n
+        }
+        n <= a.times
+      }
+    }.getOrElse(ODataStub.SkipAnswer())
     Thread.sleep(answer.delayMs)
     if (answer.status != 200) {
+      answer.headers.foreach { case (k, v) => ex.getResponseHeaders.set(k, v) }
       respond(ex, answer.status, "text/plain", s"answered ${answer.status}"); return
     }
     if (q.contains("$apply")) {
@@ -539,7 +563,7 @@ class ODataStub(v2: Boolean, pageSize: Int = 5) {
         s"""{"d":{"results":$items${nextLink.map(l => s""","__next":"$l"""").getOrElse("")}}}"""
       else
         s"""{"value":$items${nextLink.map(l => s""","@odata.nextLink":"$l"""").getOrElse("")}}"""
-    respond(ex, 200, "application/json", body)
+    respond(ex, 200, "application/json", if (answer.truncate) body.take(body.length / 2) else body)
   }
 
   /** Tiny `$apply` evaluator: `filter(...)` / `groupby((cols),aggregate(...))`
@@ -795,5 +819,7 @@ class ODataStub(v2: Boolean, pageSize: Int = 5) {
 
 object ODataStub {
   /** See [[ODataStub.skipAnswers]]. */
-  final case class SkipAnswer(delayMs: Long = 0, status: Int = 200, pageSize: Option[Int] = None)
+  final case class SkipAnswer(delayMs: Long = 0, status: Int = 200, pageSize: Option[Int] = None,
+                              headers: Map[String, String] = Map.empty,
+                              times: Int = Int.MaxValue, truncate: Boolean = false)
 }
