@@ -44,7 +44,7 @@ object DeltaShareProfile {
     fromFile(path, new org.apache.hadoop.conf.Configuration())
   def fromFile(path: String, hadoopConf: org.apache.hadoop.conf.Configuration): DeltaShareProfile =
     if (path.startsWith("http://") || path.startsWith("https://")) {
-      val r = HttpCore.shared.get(path, useCache = false)
+      val r = HttpCore.shared.get(path)
       if (r.status != 200)
         throw new RuntimeException(s"delta-share profile GET $path -> HTTP ${r.status}")
       fromJson(r.text)
@@ -69,7 +69,7 @@ final case class DeltaShareTableMeta(schema: StructType, partitionColumns: Seq[S
 class DeltaShareClient(profile: DeltaShareProfile, http: HttpCore = HttpCore.shared) {
 
   private def getJson(path: String): Seq[com.fasterxml.jackson.databind.JsonNode] = {
-    val r = http.get(profile.endpoint + path, auth = profile.auth, useCache = false)
+    val r = http.get(profile.endpoint + path, auth = profile.auth)
     if (r.status != 200) throw new RuntimeException(s"GET $path -> HTTP ${r.status}")
     val root = ODataJson.parse(r.text)
     Option(root.get("items")).map(it =>
@@ -86,7 +86,7 @@ class DeltaShareClient(profile: DeltaShareProfile, http: HttpCore = HttpCore.sha
   def tableMetadata(share: String, schema: String, table: String): DeltaShareTableMeta = {
     val r = http.get(
       s"${profile.endpoint}/shares/$share/schemas/$schema/tables/$table/metadata",
-      auth = profile.auth, useCache = false)
+      auth = profile.auth)
     if (r.status != 200) throw new RuntimeException(s"metadata -> HTTP ${r.status}")
     parseMetadata(r.text)
   }
@@ -201,7 +201,7 @@ object DeltaShare {
             val target = new org.apache.hadoop.fs.Path(dir, s"$id.parquet")
             val fs = target.getFileSystem(new org.apache.hadoop.conf.Configuration())
             if (!fs.exists(target)) {
-              val resp = HttpCore.shared.get(url, useCache = false)
+              val resp = HttpCore.shared.get(url)
               if (resp.status != 200)
                 throw new RuntimeException(s"presigned GET $url -> ${resp.status}")
               val out = fs.create(target, true)

@@ -4,21 +4,19 @@ import java.net.URI
 import java.net.http.{HttpClient => JHttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.{Charset, StandardCharsets}
 import java.time.Duration
-import java.util.concurrent.{CompletableFuture, CompletionException, ConcurrentHashMap, ExecutionException, Executor, TimeUnit}
+import java.util.concurrent.{CompletableFuture, CompletionException, ExecutionException, Executor, TimeUnit}
 import java.util.concurrent.atomic.AtomicReference
 
-/** Retry/redirect/timeout policy. Defaults mirror the reference's operational
+/** Retry/timeout policy. Defaults mirror the reference's operational
   * constants (erpl-web `src/include/http_client.hpp:90-97`): 30 s timeout,
-  * 3 retries starting at 100 ms with ×4 exponential backoff, 10 redirects.
+  * 3 retries starting at 100 ms with ×4 exponential backoff. Redirects
+  * follow the JDK client's `Redirect.NORMAL`, which applies its own limit.
   */
 final case class HttpPolicy(
     timeoutMs: Long = 30000,
     retries: Int = 3,
     retryWaitMs: Long = 100,
-    retryBackoff: Double = 4.0,
-    maxRedirects: Int = 10,
-    cacheTtlMs: Long = 30000,
-    cacheMaxEntries: Int = 256)
+    retryBackoff: Double = 4.0)
 
 final case class HttpAuth(
     bearer: Option[String] = None,
@@ -82,7 +80,8 @@ object Charsets {
     new String(body, fromContentType(contentType))
 }
 
-/** HTTP client with retry/backoff and a TTL response cache for GETs.
+/** HTTP client with retry/backoff. It keeps no response cache: every call
+  * is one request to the server.
   *
   * One instance per JVM-side component (driver planning, or per executor via
   * `@transient lazy val` in partition readers — the client is NOT serialized;
@@ -109,54 +108,9 @@ class HttpCore(val policy: HttpPolicy = HttpPolicy(), executor: Option[Executor]
     b.build()
   }
 
-  private case class CacheEntry(at: Long, result: HttpResult)
-  private val cache = new ConcurrentHashMap[String, CacheEntry]()
-
   def get(url: String, headers: Map[String, String] = Map.empty,
-          auth: HttpAuth = HttpAuth(), useCache: Boolean = true): HttpResult = {
-    // cache key includes the FULL credential and header values: a URL-only
-    // key (or a collidable 32-bit hash of the credentials) could serve one
-    // principal's cached body to another within the TTL
-    val key = url + "\u0000" + auth.headerValue.getOrElse("") + "\u0000" +
-      headers.toSeq.sorted.map { case (k, v) => k + "\u0001" + v }.mkString("\u0000")
-    if (useCache) {
-      val e = cache.get(key)
-      if (e != null && System.currentTimeMillis() - e.at < policy.cacheTtlMs) {
-        Trace.trace("http", s"cache hit GET $url")
-        return e.result
-      }
-    }
-    val r = request("GET", url, None, headers, auth)
-    if (useCache && r.status == 200) {
-      evictIfNeeded()
-      cache.put(key, CacheEntry(System.currentTimeMillis(), r))
-    }
-    r
-  }
-
-  /** Bounded cache (the reference GCs on a background thread,
-    * `http_client.cpp:1123-1196`; inline eviction gives the same bound with
-    * no thread): drop expired entries first, then oldest-inserted until under
-    * the cap. Round 2 never evicted — the cache grew without bound. */
-  private def evictIfNeeded(): Unit = {
-    if (cache.size() < policy.cacheMaxEntries) return
-    val now = System.currentTimeMillis()
-    val it = cache.entrySet().iterator()
-    while (it.hasNext) {
-      if (now - it.next().getValue.at >= policy.cacheTtlMs) it.remove()
-    }
-    while (cache.size() >= policy.cacheMaxEntries) {
-      // still full of live entries: evict the oldest
-      var oldestKey: String = null
-      var oldestAt = Long.MaxValue
-      cache.forEach { (k, v) => if (v.at < oldestAt) { oldestAt = v.at; oldestKey = k } }
-      if (oldestKey == null) return
-      cache.remove(oldestKey)
-    }
-  }
-
-  /** Visible for tests. */
-  private[http] def cacheSize: Int = cache.size()
+          auth: HttpAuth = HttpAuth()): HttpResult =
+    request("GET", url, None, headers, auth)
 
   /** Sends one request and waits for [[requestAsync]]'s outcome: the
     * answer, or the failure that survived every retry. An interrupted

@@ -32,7 +32,7 @@ object HttpFunctions {
   def httpGet(spark: SparkSession, url: String,
               headers: Map[String, String] = Map.empty,
               auth: HttpAuth = HttpAuth()): DataFrame =
-    toDf(spark, "GET", HttpCore.shared.get(url, headers, auth, useCache = false))
+    toDf(spark, "GET", HttpCore.shared.get(url, headers, auth))
 
   def httpHead(spark: SparkSession, url: String,
                headers: Map[String, String] = Map.empty,

@@ -86,8 +86,6 @@ object Trace {
     } catch { case _: Exception => () } // tracing must never break a query
   }
 
-  def trace(component: String, msg: => String): Unit =
-    if (shouldEmit("TRACE")) emit("TRACE", component, msg)
   def debug(component: String, msg: => String): Unit =
     if (shouldEmit("DEBUG")) emit("DEBUG", component, msg)
   def info(component: String, msg: => String): Unit =

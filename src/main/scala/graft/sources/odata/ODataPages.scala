@@ -34,8 +34,8 @@ object ODataPages {
     * Two separate walks of one URL are independent.
     *
     * `preloaded` is the first page's body when it already arrived another
-    * way (a planning-time `$batch`); it stands in for the GET of `url`,
-    * which still counts as fetched. */
+    * way (a [[RangeReadAhead]] sub-range GET); it stands in for the GET of
+    * `url`, which still counts as fetched. */
   def walk[P <: ODataJson.Paged](url: String, auth: HttpAuth, decode: Array[Byte] => P,
                                  headers: Map[String, String] = Map.empty,
                                  http: HttpCore = HttpCore.shared,
@@ -56,7 +56,7 @@ object ODataPages {
             first = None
             (b, Map.empty[String, String])
           case None =>
-            val r = http.get(u, headers = headers, auth = auth, useCache = false)
+            val r = http.get(u, headers = headers, auth = auth)
             if (r.status != 200) throw new HttpStatusError("GET", r.url, r.status, r.headers, r.text)
             (utf8(r), r.headers)
         }

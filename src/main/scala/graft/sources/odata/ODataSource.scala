@@ -34,8 +34,16 @@ import scala.jdk.CollectionConverters._
   * a task holds about 32 MiB of unparsed bodies at most
   * ([[ODataPages.RangeReadAhead]]).
   *
-  * Options: url, version (auto|2|4), expand, top, skip, count,
-  * pageSize, parallelism, bearerToken / user+password.
+  * Planning sends only requests that carry no rows (`$metadata`, `$count`,
+  * capability probes, the keys-only keyset sweep): every partition fetches
+  * its own pages from its task, so a Dataset collected twice reads the
+  * server's rows as they are at each collect.
+  *
+  * Options ([[ODataConf.fromOptions]]): url (or path), version
+  * (auto|2|4), expand, top, skip, pageSize, parallelism, partitionRows,
+  * partitionKey, keysetSweepMax, keysetOrder (asc|desc), bearerToken /
+  * user+password, schemaDdl, unwrap, filterPushdown, applyPartial,
+  * insertBatchSize, serviceRoot.
   */
 class ODataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "odata"
@@ -72,7 +80,6 @@ final case class ODataConf(
     filterPushdown: Boolean = true,
     applyPartial: Boolean = true,
     insertBatchSize: Option[Int] = None,
-    batchFirstPages: Boolean = true,
     serviceRoot: Option[String] = None) {
   def auth: HttpAuth = HttpAuth(bearer, user, password)
 }
@@ -102,7 +109,6 @@ object ODataConf {
       filterPushdown = o.getOrElse("filterpushdown", "true").toBoolean,
       applyPartial = o.getOrElse("applypartial", "true").toBoolean,
       insertBatchSize = o.get("insertbatchsize").map(_.toInt),
-      batchFirstPages = o.getOrElse("batchfirstpages", "true").toBoolean,
       serviceRoot = o.get("serviceroot").map(_.stripSuffix("/")))
   }
 }
@@ -185,11 +191,11 @@ object ODataMeta {
     * consumer — the DSv2 scan, the catalogs, the service-root probe,
     * `odata_attach`, the describe functions, ODP — shares this cache, so
     * attaching an N-set service costs ONE metadata round-trip, not N+1.
-    * A model answers only the credentials that fetched it, as `HttpCore`'s
-    * response cache does: a call with other credentials fetches again and
-    * replaces it, so one principal's fetch never answers another's and a
-    * rotating token keeps one entry. A non-200 answer throws
-    * `GET <url> -> HTTP <status>`; failures are not cached. */
+    * A model answers only the credentials that fetched it: a call with
+    * other credentials fetches again and replaces it, so one principal's
+    * fetch never answers another's and a rotating token keeps one entry.
+    * A non-200 answer throws `GET <url> -> HTTP <status>`; failures are
+    * not cached. */
   def modelAt(serviceRoot: String, auth: HttpAuth): EdmModel = {
     val metaUrl = serviceRoot.stripSuffix("/") + "/$metadata"
     val principal = auth.headerValue.getOrElse("")
@@ -648,7 +654,7 @@ class ODataScanBuilder(conf: ODataConf, fullSchema: StructType)
     !applyRefused(key) && (ODataMeta.capable(key) {
       val url = ODataUrl.parse(meta.entitySetUrl)
         .withParam("$apply", a.pipeline).withParam("$top", "1").render
-      val resp = HttpCore.shared.get(url, useCache = false, auth = conf.auth)
+      val resp = HttpCore.shared.get(url, auth = conf.auth)
       // rows must carry the aggregate alias: a server that ignores $apply
       // echoes raw entities, which would decode as all-null aggs
       val refusal =
@@ -737,13 +743,15 @@ final case class ApplyAgg(rawFilter: Option[String], aggStage: String,
   * server-side in parallel, and Spark's final aggregate merges. */
 class ODataApplyScan(conf: ODataConf, meta: ODataMeta, agg: ApplyAgg)
   extends Scan with Batch {
-  @volatile private var preloadCache: Option[(Seq[String], Seq[Option[String]])] = None
   override def readSchema(): StructType = agg.schema
   override def toBatch: Batch = this
   override def description(): String =
     s"odata apply${if (agg.partial) " partial" else ""} ${meta.entitySetUrl} " +
       s"$$apply=${agg.pipeline}"
-  override def planInputPartitions(): Array[InputPartition] = {
+  /** Spark asks for the partitions more than once per query; the `$count`
+    * and key sweep that carve the windows go out once. */
+  override def planInputPartitions(): Array[InputPartition] = partitions
+  private lazy val partitions: Array[InputPartition] = {
     val windows: Option[Seq[String]] =
       if (!agg.partial) None
       else KeysetWindows.keyOrder(conf, meta).flatMap { ord =>
@@ -752,17 +760,9 @@ class ODataApplyScan(conf: ODataConf, meta: ODataMeta, agg: ApplyAgg)
       }
     windows match {
       case Some(ws) =>
-        val urls = ws.map(w => ODataUrl.parse(meta.entitySetUrl)
-          .withParam("$apply", agg.pipelineWith(Some(w))).render)
-        val pages = preloadCache match { // planInputPartitions runs >1x
-          case Some((u, p)) if u == urls => p
-          case _ =>
-            val p = KeysetWindows.preloadFirstPages(conf, meta, urls)
-            preloadCache = Some((urls, p))
-            p
-        }
-        urls.zip(pages).zipWithIndex.map { case ((u, pg), i) =>
-          ODataInputPartition(u, i, pg): InputPartition
+        ws.zipWithIndex.map { case (w, i) =>
+          ODataInputPartition(ODataUrl.parse(meta.entitySetUrl)
+            .withParam("$apply", agg.pipelineWith(Some(w))).render, i): InputPartition
         }.toArray
       case None =>
         // partial with no plannable windows degrades to one partition running
@@ -772,7 +772,7 @@ class ODataApplyScan(conf: ODataConf, meta: ODataMeta, agg: ApplyAgg)
         // $apply over the group rows — exactly Spark's Sort+Limit semantics
         agg.orderBy.foreach(o => u = u.withParam("$orderby", o))
         agg.top.foreach(t => u = u.withParam("$top", t.toString))
-        Array(ODataInputPartition(u.render, 0))
+        Array[InputPartition](ODataInputPartition(u.render, 0))
     }
   }
   override def createReaderFactory(): PartitionReaderFactory =
@@ -894,8 +894,8 @@ class ODataScan(conf: ODataConf, meta: ODataMeta, schema: StructType,
 
   /** The partitions, planned once per runtime filter: Spark calls this
     * more than once per query (planning and execution), and each plan sends
-    * its `$count`, probes, key sweep and first-page `$batch`. A runtime
-    * filter arriving in between changes the URLs, so it plans again. */
+    * its `$count`, probes and key sweep. A runtime filter arriving in
+    * between changes the URLs, so it plans again. */
   override def planInputPartitions(): Array[InputPartition] = {
     val rt = runtimeExpr
     planned match {
@@ -955,7 +955,7 @@ class ODataScan(conf: ODataConf, meta: ODataMeta, schema: StructType,
       var u = ODataUrl.parse(meta.entitySetUrl)
         .withParam("$top", "1").withParam("$skip", "1").withParam("$orderby", ord)
       if (meta.version == 2) u = u.withParam("$format", "json")
-      val status = HttpCore.shared.get(u.render, useCache = false, auth = conf.auth).status
+      val status = HttpCore.shared.get(u.render, auth = conf.auth).status
       if (status / 100 != 2)
         Trace.warn("odata", s"$$skip probe GET ${u.render} -> HTTP $status: no range partitions")
       status / 100 == 2
@@ -968,14 +968,9 @@ class ODataScan(conf: ODataConf, meta: ODataMeta, schema: StructType,
     if (conf.skip.getOrElse(0L) + offset.map(_.toLong).getOrElse(0L) > 0) return None
     KeysetWindows.planWindows(conf, meta, ord,
         filterExpr.toSeq ++ runtimeExpr.toSeq, total)
-      .map { ws =>
-        val urls = ws.map(w => buildUrl(None, None, None, Some(w)))
-        // one `$batch` round-trip fetches every window's first page
-        val pages = KeysetWindows.preloadFirstPages(conf, meta, urls)
-        urls.zip(pages).zipWithIndex.map { case ((u, pg), i) =>
-          ODataInputPartition(u, i, pg): InputPartition
-        }.toArray
-      }
+      .map(_.zipWithIndex.map { case (w, i) =>
+        ODataInputPartition(buildUrl(None, None, None, Some(w)), i): InputPartition
+      }.toArray)
   }
 
   // runtime filter must shape the ranges too, or the $skip/$top windows
@@ -1039,36 +1034,6 @@ private[odata] object KeysetWindows {
     ((l +: cuts) :+ h).sliding(2).map(p => (p(0), p(1))).toSeq
   }
 
-  /** Fetch the FIRST page of every window URL in ONE `$batch` round-trip
-    * (driver-side, at planning): a keyset scan otherwise pays one
-    * serial-per-partition cold-start GET per window before executors can
-    * stream. v4 JSON batch only (v2 batch is multipart MIME); any failure
-    * — non-200 envelope, missing sub-response, transport error — degrades
-    * that window to its normal per-partition GET. Bounded: at most
-    * `PreloadMaxWindows` first pages are held at the driver (each at most
-    * one server page), and only between planning and task serialization. */
-  private[odata] val PreloadMaxWindows = 64
-  def preloadFirstPages(conf: ODataConf, meta: ODataMeta,
-                        urls: Seq[String]): Seq[Option[String]] = {
-    if (!conf.batchFirstPages || urls.size < 2 ||
-        urls.size > PreloadMaxWindows || meta.version == 2)
-      return urls.map(_ => None)
-    try {
-      val prefer = conf.pageSize
-        .map(n => Map("Prefer" -> s"odata.maxpagesize=$n")).getOrElse(Map.empty)
-      val body = graft.writes.ODataJsonBatch.buildGetBatch(urls, prefer)
-      val resp = HttpCore.shared.request("POST",
-        meta.serviceRoot.stripSuffix("/") + "/$batch",
-        Some((body, "application/json")), auth = conf.auth)
-      if (resp.status != 200) return urls.map(_ => None)
-      val byId = graft.writes.ODataJsonBatch.getResponses(resp.text)
-        .map(r => r._1 -> r).toMap
-      urls.indices.map { i =>
-        byId.get((i + 1).toString).collect { case (_, 200, b) => b }
-      }
-    } catch { case _: Exception => urls.map(_ => None) }
-  }
-
   /** Key properties to order/partition by: the explicit `partitionKey`
     * option, or the entity type's declared key (requires `$metadata`;
     * fixed-schema reads have none). */
@@ -1082,13 +1047,11 @@ private[odata] object KeysetWindows {
 
   /** Filter-aware `/\$count` probe. An answer that carries no count (a
     * non-200 status, a body that is not a number) is None and traced; a
-    * transport failure that survives `HttpCore`'s retries propagates. Never
-    * served from the response cache: partition planning sized by a
-    * TTL-stale count mis-carves windows on a set that changed underneath it. */
+    * transport failure that survives `HttpCore`'s retries propagates. */
   def countRows(conf: ODataConf, meta: ODataMeta, filters: Seq[String]): Option[Long] = {
     val u0 = ODataUrl.parse(meta.entitySetUrl + "/$count")
     val url = filters.foldLeft(u0)((u, e) => u.mergeFilter(e)).render
-    val resp = HttpCore.shared.get(url, useCache = false, auth = conf.auth)
+    val resp = HttpCore.shared.get(url, auth = conf.auth)
     val n = if (resp.status == 200) resp.text.trim.toLongOption else None
     if (n.isEmpty)
       Trace.warn("odata", s"$$count GET $url -> HTTP ${resp.status}: planning without a row count")
@@ -1098,8 +1061,10 @@ private[odata] object KeysetWindows {
   /** Carve up to `parallelism` disjoint window predicates sized by
     * `partitionRows`. `filters` narrow the sweep (pushed + runtime filters
     * must shape the windows, or they would cover the unfiltered key space).
-    * None when un-plannable (unsupported key type, one window, sweep
-    * failure) — the caller stays serial, which is always correct.
+    * None when un-plannable (unsupported key type, one window, a sweep
+    * page answered with a status other than 200, which is traced) — the
+    * caller stays serial, which is always correct. A transport failure
+    * that survives `HttpCore`'s retries propagates.
     *
     * `keysetOrder=desc` sweeps (and windows) in descending key order — for
     * time-keyed sets where the newest rows matter most, a capped sweep then
@@ -1213,7 +1178,11 @@ private[odata] object KeysetWindows {
             .getOrElse(Seq(past(boundaries.last)))
         else Seq(past(boundaries.last))
       Some(head ++ tailParts)
-    } catch { case _: Exception => None } // sweep failure: correct, serial
+    } catch {
+      case e: HttpStatusError =>
+        Trace.warn("odata", s"keyset sweep GET ${e.url} -> HTTP ${e.status}: serial scan")
+        None
+    }
   }
 
   /** Numeric re-carve of the un-swept tail `{t : t beyond boundary}` by the
@@ -1237,21 +1206,24 @@ private[odata] object KeysetWindows {
     val key = keys.head
     val b1 = try boundary.head.toLong catch { case _: Exception => return None }
     // one keys-only probe for the extreme of the first key in sweep
-    // direction (max for asc, min for desc); servers that reject the
-    // needed ordering leave the tail as one window
-    val ext = try {
+    // direction (max for asc, min for desc); a server that rejects the
+    // needed ordering leaves the tail as one window, traced
+    val ext = {
       var u = ODataUrl.parse(meta.entitySetUrl)
       filters.foreach(e => u = u.mergeFilter(e))
       u = u.withParam("$select", key)
         .withParam("$orderby", if (desc) key else s"$key desc")
         .withParam("$top", "1")
       if (meta.version == 2) u = u.withParam("$format", "json")
-      val resp = HttpCore.shared.get(u.render, useCache = false, auth = conf.auth)
-      if (resp.status != 200) return None
-      val rows = ODataJson.extractPage(ODataJson.parse(resp.text)).rows
-      if (rows.isEmpty) return None
-      rows.head.get(key).asText.toLong
-    } catch { case _: Exception => return None }
+      val resp = HttpCore.shared.get(u.render, auth = conf.auth)
+      if (resp.status != 200) {
+        Trace.warn("odata", s"keyset tail probe GET ${u.render} -> HTTP ${resp.status}: one tail window")
+        return None
+      }
+      ODataJson.extractPage(ODataJson.parse(resp.text)).rows.headOption
+        .flatMap(r => Option(r.get(key))).flatMap(_.asText.toLongOption)
+        .getOrElse(return None)
+    }
     // carve domain as (lo, hi] half-open ranges regardless of direction:
     // asc tail = k1 in (b1, max]; desc tail = k1 in [min, b1) = (min-1, b1-1]
     val (lo, hi) = if (desc) (ext - 1, b1 - 1) else (b1, ext)
@@ -1316,7 +1288,7 @@ class ODataCountScan(conf: ODataConf, meta: ODataMeta, filterExpr: Option[String
           override def next(): Boolean = {
             if (done) return false
             val auth = HttpAuth(bearer, user, password)
-            val resp = HttpCore.shared.get(url, useCache = false, auth = auth)
+            val resp = HttpCore.shared.get(url, auth = auth)
             // Page-walk fallback ONLY for "this server doesn't do /$count"
             // statuses; auth/server errors rethrow directly — an expired
             // token must not trigger an expensive full-table crawl that
@@ -1354,11 +1326,10 @@ class ODataCountScan(conf: ODataConf, meta: ODataMeta, filterExpr: Option[String
   }
 }
 
-/** One partition's request: its first page's `url`, a body that already
-  * stands in for that page (`preloaded`), or the `(skip, top)` window of a
-  * `$skip`/`$top` range partition (`range`), which its reader reads ahead. */
+/** One partition's request: its first page's `url`, and for a
+  * `$skip`/`$top` range partition its `(skip, top)` window (`range`), which
+  * its reader reads ahead. The reader sends the first GET from its task. */
 final case class ODataInputPartition(url: String, index: Int,
-                                     preloaded: Option[String] = None,
                                      range: Option[(Long, Long)] = None)
   extends InputPartition
 
@@ -1393,11 +1364,8 @@ class ODataPartitionReader(partition: ODataInputPartition, schema: StructType,
   private val readAhead = partition.range.map { case (skip, top) =>
     new ODataPages.RangeReadAhead(partition.url, skip, top, auth, headers, decode)
   }
-  // a first page delivered at planning via one driver-side `$batch` POST
-  // (keyset-window scans) stands in for the walk's first GET
   private val decoded: Iterator[InternalRow] = readAhead.getOrElse(
-    ODataPages.walk(partition.url, auth, decode, headers,
-      preloaded = partition.preloaded.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))))
+    ODataPages.walk(partition.url, auth, decode, headers))
     .flatMap { p =>
       pages += 1
       bytes += p.body.length

@@ -45,7 +45,7 @@ object Datasphere {
     SecretRegistry.authFor(spark, url, secret)
 
   private def getOpt(url: String, a: HttpAuth): Option[JsonNode] = {
-    val resp = HttpCore.shared.get(url, auth = a, useCache = false)
+    val resp = HttpCore.shared.get(url, auth = a)
     if (resp.status == 200) Some(ODataJson.parse(resp.text)) else None
   }
 

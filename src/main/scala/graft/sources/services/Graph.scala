@@ -75,7 +75,7 @@ object Graph {
     ODataPages.walk(url, a, ODataJson.tree).flatMap(_.page.rows).toSeq
 
   private def getJson(url: String, a: HttpAuth): JsonNode = {
-    val resp = HttpCore.shared.get(url, auth = a, useCache = false)
+    val resp = HttpCore.shared.get(url, auth = a)
     if (resp.status != 200)
       throw new RuntimeException(s"GET $url -> HTTP ${resp.status}: ${resp.text.take(300)}")
     ODataJson.parse(resp.text)

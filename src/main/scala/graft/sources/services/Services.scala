@@ -383,7 +383,7 @@ object Services {
                  headerRow: Boolean = true, secret: Option[String] = None): DataFrame = {
     import scala.jdk.CollectionConverters._
     val auth = SecretRegistry.authFor(spark, rangeUrl, secret)
-    val resp = HttpCore.shared.get(rangeUrl, auth = auth, useCache = false)
+    val resp = HttpCore.shared.get(rangeUrl, auth = auth)
     if (resp.status != 200)
       throw new RuntimeException(s"GET $rangeUrl -> HTTP ${resp.status}")
     val values = graft.sources.odata.ODataJson.parse(resp.text).get("values")

@@ -52,18 +52,14 @@ object ODataJsonBatch {
         s"$$batch sub-requests failed: ${bad.take(3).mkString(", ")}")
   }
 
-  /** Batch body of GET sub-requests (the READ side: N first pages / probes
-    * in one round-trip). `urls` are service-root-relative, ids 1-based. */
-  def buildGetBatch(urls: Seq[String],
-                    extraHeaders: Map[String, String] = Map.empty): String = {
-    val hdrs = (Map("Accept" -> "application/json") ++ extraHeaders)
-      .map { case (k, v) => s"${JsonEncode.str(k)}:${JsonEncode.str(v)}" }
-      .mkString("{", ",", "}")
+  /** Batch body of GET sub-requests (the READ side: `odataPeek`'s sampled
+    * pages in one round-trip). `urls` are service-root-relative, ids
+    * 1-based. */
+  def buildGetBatch(urls: Seq[String]): String =
     urls.zipWithIndex.map { case (u, i) =>
       s"""{"id":"${i + 1}","method":"GET","url":${JsonEncode.str(u)},""" +
-        s""""headers":$hdrs}"""
+        """"headers":{"Accept":"application/json"}}"""
     }.mkString("""{"requests":[""", ",", "]}")
-  }
 
   /** (id, status, body-as-json-text) per sub-response, in response order.
     * Missing bodies → "{}", a missing status → 0. */

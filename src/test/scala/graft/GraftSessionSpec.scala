@@ -8,7 +8,8 @@ import scala.jdk.CollectionConverters._
   * fails here, and so does a hand-written nextLink loop outside
   * `ODataPages`, a JSON-to-row decoder outside `ODataJson`, a
   * hand-written write check outside `RestChanges`, a second JDK HTTP client
-  * builder or a blocking pool or sleep in the connector. */
+  * builder, a blocking pool or sleep in the connector, or a scan that
+  * fetches row pages in a `$batch`. */
 class GraftSessionSpec extends SparkSpecBase {
 
   test("GraftSession.local: extensions, UTC, nanosAsLong, partitions = cpus, no UI") {
@@ -89,6 +90,11 @@ class GraftSessionSpec extends SparkSpecBase {
     assert(connector.nonEmpty)
     assert(connector.collect { case (p, text) if text.contains("ThreadPool" + "Executor") ||
       text.contains("Thread" + ".sleep") => p }.isEmpty)
+  }
+
+  test("a $batch of GETs is built only by odataPeek: no scan plan fetches row pages in a $batch") {
+    assert(filesWith("ODataJsonBatch" + ".buildGetBatch(") ==
+      Set("main/scala/graft/sources/services/Services.scala"))
   }
 
   test("src/main implements SupportsNamespaces only in AttachedCatalog and parses $metadata only in ODataSource") {

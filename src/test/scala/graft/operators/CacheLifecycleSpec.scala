@@ -101,7 +101,7 @@ class CacheLifecycleSpec extends SparkSpecBase {
       s"snapshotDedupNear left its shingle sets persisted: $delta")
   }
 
-  test("releasing drops tracked persists when the body throws (ADVICE r9)") {
+  test("releasing drops tracked persists when the body throws") {
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = true))
     val delta = withDelta {

@@ -142,7 +142,7 @@ class ComponentsSpec extends SparkSpecBase {
     assert(unguarded == 5L)
   }
 
-  test("r12: cluster_size comes from a count window, not a second join (one exchange)") {
+  test("cluster_size comes from a count window, not a second join (one exchange)") {
     // the r12 assign shape: docs left-join components, then cluster_size as
     // count() OVER (PARTITION BY cluster_id) — the old groupBy + join-back
     // paid a second shuffle/broadcast for the same rows (guide §2.4)

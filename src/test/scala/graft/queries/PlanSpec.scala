@@ -469,7 +469,7 @@ class PlanSpec extends SparkSpecBase {
     assert(p.contains("HashAggregate"), p.take(3000))
   }
 
-  test("p58 BPE encode (r9 composite): map-side piece fold, one agg, no joins") {
+  test("p58 BPE encode: map-side piece fold, one agg, no joins, one shared tokenize") {
     val p = plan("p58_bpe_encode")
     // the short-merge-list tier folds per (doc, word) row and aggregates by
     // doc — the old type-table join chain (distinct + posting shuffle by w

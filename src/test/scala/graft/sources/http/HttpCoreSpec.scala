@@ -4,8 +4,8 @@ import graft.testkit.ODataStub
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Retry/backoff + response-cache behavior of the HTTP core (reference
-  * policy constants: `http_client.hpp:90-97`, cache `:316-331`). */
+/** Retry/backoff behavior of the HTTP core (reference policy constants:
+  * `http_client.hpp:90-97`). */
 class HttpCoreSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   var stub: ODataStub = _
@@ -15,7 +15,7 @@ class HttpCoreSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("5xx responses are retried with backoff until success") {
     val http = new HttpCore(HttpPolicy(retries = 3, retryWaitMs = 10))
     val t0 = System.currentTimeMillis()
-    val r = http.get(s"http://localhost:${stub.port}/flaky?key=a", useCache = false)
+    val r = http.get(s"http://localhost:${stub.port}/flaky?key=a")
     val elapsed = System.currentTimeMillis() - t0
     assert(r.status == 200 && r.text == "ok after 3")
     // two retries: 10ms + 40ms backoff minimum
@@ -24,7 +24,7 @@ class HttpCoreSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("retries exhausted -> last 5xx response is returned") {
     val http = new HttpCore(HttpPolicy(retries = 1, retryWaitMs = 1))
-    val r = http.get(s"http://localhost:${stub.port}/flaky?key=b", useCache = false)
+    val r = http.get(s"http://localhost:${stub.port}/flaky?key=b")
     assert(r.status == 503)
   }
 
@@ -33,7 +33,7 @@ class HttpCoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     stub.extraStatuses.synchronized { stub.extraStatuses("/notimpl") = (501, Map.empty) }
     try {
       stub.requests.synchronized { stub.requests.clear() }
-      val r = http.get(s"http://localhost:${stub.port}/notimpl?$$top=1&$$skip=1", useCache = false)
+      val r = http.get(s"http://localhost:${stub.port}/notimpl?$$top=1&$$skip=1")
       assert(r.status == 501)
       assert(stub.requests.synchronized { stub.requests.count(_.startsWith("/notimpl")) } == 1,
         stub.requests.toString)
@@ -44,7 +44,7 @@ class HttpCoreSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("429 with Retry-After waits the server's delay, not the short schedule") {
     val http = new HttpCore(HttpPolicy(retries = 3, retryWaitMs = 10))
     val t0 = System.currentTimeMillis()
-    val r = http.get(s"http://localhost:${stub.port}/throttled?key=a", useCache = false)
+    val r = http.get(s"http://localhost:${stub.port}/throttled?key=a")
     val elapsed = System.currentTimeMillis() - t0
     assert(r.status == 200 && r.text == "ok after 2")
     assert(elapsed >= 1000, s"Retry-After: 1 ignored, took ${elapsed}ms")
@@ -60,43 +60,6 @@ class HttpCoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(HttpCore.retryAfterMs(res(503, "Wed, 21 Oct 2015 07:27:00 GMT"), now) == 0)
     assert(HttpCore.retryAfterMs(res(429, "soon"), now) == 0)
     assert(HttpCore.retryAfterMs(res(500, "2"), now) == 0)
-  }
-
-  test("cache is bounded: expired entries evicted first, then oldest") {
-    val http = new HttpCore(HttpPolicy(cacheTtlMs = 60000, cacheMaxEntries = 5))
-    val base = s"http://localhost:${stub.port}/counter"
-    (1 to 20).foreach(i => http.get(s"$base?i=$i"))
-    assert(http.cacheSize <= 5, s"cache grew to ${http.cacheSize}")
-    // short TTL: expired entries are dropped on insert instead of live ones
-    val http2 = new HttpCore(HttpPolicy(cacheTtlMs = 1, cacheMaxEntries = 5))
-    (1 to 6).foreach { i => http2.get(s"$base?j=$i"); Thread.sleep(3) }
-    assert(http2.cacheSize <= 5)
-  }
-
-  test("GET cache serves within TTL, expires after") {
-    val http = new HttpCore(HttpPolicy(cacheTtlMs = 300))
-    stub.counterHits.set(0)
-    val url = s"http://localhost:${stub.port}/counter"
-    assert(http.get(url).text == "hit 1")
-    assert(http.get(url).text == "hit 1") // cached
-    assert(stub.counterHits.get == 1)
-    Thread.sleep(350)
-    assert(http.get(url).text == "hit 2") // TTL expired
-  }
-
-  test("cache never crosses principals: distinct auth/headers get distinct entries") {
-    val http = new HttpCore(HttpPolicy(cacheTtlMs = 60000))
-    stub.counterHits.set(0)
-    val url = s"http://localhost:${stub.port}/counter"
-    val alice = HttpAuth(bearer = Some("alice-token"))
-    val bob = HttpAuth(bearer = Some("bob-token"))
-    assert(http.get(url, auth = alice).text == "hit 1")
-    // a different principal must NOT see alice's cached body
-    assert(http.get(url, auth = bob).text == "hit 2")
-    assert(http.get(url, auth = alice).text == "hit 1") // alice still cached
-    // different request headers are a different cache entry too
-    assert(http.get(url, Map("Accept" -> "text/plain"), alice).text == "hit 3")
-    assert(stub.counterHits.get == 3)
   }
 
   test("basic auth header is emitted") {

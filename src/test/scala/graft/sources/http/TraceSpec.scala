@@ -31,12 +31,12 @@ class TraceSpec extends SparkSpecBase {
       val url = s"http://localhost:${stub.port}/svc/Customers?$$top=1"
       withTraceConf("enabled" -> "true", "level" -> "DEBUG",
         "output" -> "file", "dir" -> dir) {
-        HttpCore.shared.get(url, useCache = false)
+        HttpCore.shared.get(url)
       }
       // at INFO the DEBUG request line is suppressed
       withTraceConf("enabled" -> "true", "level" -> "INFO",
         "output" -> "file", "dir" -> dir) {
-        HttpCore.shared.get(url, useCache = false)
+        HttpCore.shared.get(url)
       }
       val f = java.nio.file.Paths.get(dir, "graft_trace.log")
       val lines = java.nio.file.Files.readAllLines(f)

@@ -9,7 +9,9 @@ import graft.testkit.ODataStub
   *    per-JVM model cache serves the attach listing AND every per-set
   *    service-root probe);
   *  - `odataPeek` samples every entity set of a service in ONE HTTP
-  *    round-trip (JSON `$batch` of GET sub-requests). */
+  *    round-trip (JSON `$batch` of GET sub-requests);
+  *  - a scan fetches no rows in a `$batch`: each keyset window pages
+  *    itself with plain GETs. */
 class BatchReadSpec extends SparkSpecBase {
 
   test("odataAttach of a multi-set service fetches $metadata once") {
@@ -26,12 +28,9 @@ class BatchReadSpec extends SparkSpecBase {
     } finally stub.stop()
   }
 
-  test("batched keyset first pages carry nextLinks that readers follow via GET") {
-    // ADVICE r8: the stub used to serve each batched window's FULL result as
-    // the "first page", so the production path — a preloaded page whose
-    // nextLink the partition reader must then follow with a plain GET —
-    // never ran end-to-end. With `Prefer: odata.maxpagesize=2` honored in
-    // the batch path, every 5-row keyset window needs 2+ continuation GETs.
+  test("keyset windows follow their nextLinks with plain GETs and send no $batch") {
+    // `Prefer: odata.maxpagesize=2` pages every 5-row keyset window in 3:
+    // its first GET and two nextLink continuations, all from its task
     val stub = new ODataStub(v2 = false).start()
     stub.skipStatus = 501 // force the keyset-window path
     try {
@@ -42,16 +41,16 @@ class BatchReadSpec extends SparkSpecBase {
         .load()
       val ids = df.collect().map(_.getString(0)).toSeq
       assert(ids.length == 20 && ids.distinct.length == 20,
-        s"keyset union wrong under paged batch first pages: $ids")
-      // the windows' first pages arrived via ONE $batch...
-      assert(stub.batchBodies.exists(_.contains("odata.maxpagesize=2")),
-        s"no maxpagesize Prefer in batch bodies: ${stub.batchBodies}")
-      // ...and every window continued via __page GETs (NOT batch: entries)
-      val contGets = stub.requests.filter(r =>
-        !r.startsWith("batch:") && r.contains("/Customers?") &&
-          r.contains("__page="))
-      assert(contGets.nonEmpty,
-        s"no nextLink continuation GETs followed the preloaded pages:\n${stub.requests.mkString("\n")}")
+        s"keyset union wrong under paged windows: $ids")
+      assert(stub.batchBodies.isEmpty && !stub.requests.exists(_.contains("$batch")),
+        s"a scan sent a $$batch POST:\n${stub.requests.mkString("\n")}")
+      // window GETs carry the window filter; the keys-only sweep carries $select
+      val windowGets = stub.requests.toSeq.filter(r =>
+        r.startsWith("/svc/Customers?") && r.contains("$filter=") && !r.contains("$select="))
+      val byWindow = windowGets.groupBy(_.replaceAll("&__page=\\d+", ""))
+      assert(byWindow.size == 4 && byWindow.values.forall(gets =>
+        gets.size == 3 && gets.count(_.contains("__page=")) == 2),
+        s"every window must send its first GET and two continuation GETs:\n${windowGets.mkString("\n")}")
     } finally stub.stop()
   }
 

@@ -946,44 +946,38 @@ class ODataReadE2ESpec extends SparkSpecBase with BeforeAndAfterAll with BeforeA
     assert(dataReqs.nonEmpty && dataReqs.forall(!_.contains("$filter=")),
       s"cap not respected: $dataReqs")
   }
-  test("keyset windows fetch their first pages in ONE $batch round-trip") {
+  test("keyset windows each send their own first-page GET from their tasks, and no $batch") {
     v4.skipStatus = 501 // force the keyset path
     try {
       v4.requests.clear(); v4.batchBodies.clear()
-      val df = read(v4, "parallelism" -> "4", "partitionRows" -> "5")
-      val ids = df.collect().map(_.getString(0)).toSeq
-      assert(ids.length == 20 && ids.distinct.length == 20,
-        s"keyset union wrong under batched first pages: $ids")
-      // exactly one $batch POST carried every window's first page
-      assert(v4.batchBodies.size == 1, s"batch POSTs: ${v4.batchBodies.size}")
-      val subGets = v4.requests.filter(_.startsWith("batch:"))
-      assert(subGets.size >= 4 && subGets.forall(_.contains("$filter=")),
-        s"sub-GETs: $subGets")
-      // no INDEPENDENT per-window data GET was needed (stub serves whole
-      // windows in the batched page)
-      val independent = v4.requests.filter(r => !r.startsWith("batch:") &&
-        r.contains("/Customers?") && r.contains("$filter=") &&
-        (r.contains(" gt ") || r.contains(" le ")) && !r.contains("$select="))
-      assert(independent.isEmpty, s"window GETs escaped the batch: $independent")
+      val ids = read(v4, "parallelism" -> "4", "partitionRows" -> "5")
+        .collect().map(_.getString(0)).toSeq
+      assert(ids.sorted == (0 until 20).map(i => f"C$i%02d"), s"keyset union wrong: $ids")
+      assert(v4.batchBodies.isEmpty, s"unexpected $$batch: ${v4.batchBodies}")
+      // 5-row windows of 5-row pages: one GET per window, the sweep aside
+      val windows = v4.requests.toSeq.filter(r => r.startsWith("/svc/Customers?") &&
+        r.contains("$filter=") && !r.contains("$select="))
+      assert(windows.size == 4 && windows.distinct.size == 4, s"window GETs: $windows")
     } finally v4.skipStatus = 200
   }
 
-  test("batchFirstPages=false keeps per-window first-page GETs") {
+  test("keyset planning fetches no window page: the windows' first GETs come from collect()") {
     v4.skipStatus = 501
     try {
       v4.requests.clear(); v4.batchBodies.clear()
-      val df = read(v4, "parallelism" -> "4", "partitionRows" -> "5",
-        "batchFirstPages" -> "false")
+      val df = read(v4, "parallelism" -> "4", "partitionRows" -> "5")
+      def windows() = v4.requests.toSeq.filter(r => r.startsWith("/svc/Customers?") &&
+        r.contains("$filter=") && !r.contains("$select="))
+      assert(df.rdd.getNumPartitions == 4)
+      assert(v4.requests.exists(_.contains("$select=CustomerID")), s"no key sweep: ${v4.requests}")
+      assert(windows().isEmpty && v4.batchBodies.isEmpty,
+        s"planning fetched rows: ${windows()} ${v4.batchBodies}")
       assert(df.collect().length == 20)
-      assert(v4.batchBodies.isEmpty, s"unexpected $$batch: ${v4.batchBodies}")
-      val windows = v4.requests.filter(r => r.contains("/Customers?") &&
-        r.contains("$filter=") && !r.contains("$orderby") &&
-        (r.contains(" gt ") || r.contains(" le ")))
-      assert(windows.size >= 4, s"expected per-window GETs, got ${v4.requests}")
+      assert(windows().size == 4, s"window GETs: ${windows()}")
     } finally v4.skipStatus = 200
   }
 
-  test("partial $apply windows also ride the first-page $batch") {
+  test("partial $apply windows send their own GETs: per-country sums, one key sweep, no $batch") {
     v4.skipStatus = 501
     try {
       v4.requests.clear(); v4.batchBodies.clear()
@@ -995,11 +989,54 @@ class ODataReadE2ESpec extends SparkSpecBase with BeforeAndAfterAll with BeforeA
         case 0 => "Germany"; case 1 => "France"; case _ => "Mexico"
       }).map { case (c, is) => c -> is.map(i => 1000L * (i + 1)).sum }
       assert(out == exp, s"got $out")
-      assert(v4.batchBodies.nonEmpty, "no $batch for partial $apply windows")
-      val applySubs = v4.requests.filter(r => r.startsWith("batch:") &&
-        r.contains("$apply="))
-      assert(applySubs.nonEmpty, s"no $$apply sub-GETs: ${v4.requests}")
+      assert(v4.batchBodies.isEmpty, s"unexpected $$batch: ${v4.batchBodies}")
+      val windows = v4.requests.toSeq.filter(_.contains("$apply=filter("))
+      assert(windows.size == 4 && windows.distinct.size == 4, s"window GETs: $windows")
+      // planned once although Spark asks for the partitions more than once:
+      // 20 keys swept 5 at a time, three boundaries, three GETs
+      val sweeps = v4.requests.toSeq.filter(r =>
+        r.contains("$select=CustomerID") && r.contains("$orderby=CustomerID"))
+      assert(sweeps.size == 3, sweeps.toString)
     } finally v4.skipStatus = 200
+  }
+
+  test("a keyset-window Dataset collected twice reads the server's rows at each collect") {
+    val s = new ODataStub(v2 = false).start()
+    s.skipStatus = 501
+    try {
+      val df = read(s, "parallelism" -> "4", "partitionRows" -> "5", "pagesize" -> "2")
+      def live() = s.rows.map(_("CustomerID").toString).sorted
+      assert(df.collect().map(_.getString(0)).toSeq.sorted == live())
+      s.rows = s.rows.filterNot(_("CustomerID") == "C00")
+      assert(df.collect().map(_.getString(0)).toSeq.sorted == live())
+    } finally s.stop()
+  }
+
+  test("keyset sweep: an HTTP no is traced once and the scan reads every row from one partition") {
+    val s = new ODataStub(v2 = false).start()
+    s.skipStatus = 501
+    s.sweepStatus = 501
+    try {
+      val lines = warnings(assert(read(s, "parallelism" -> "4", "partitionRows" -> "5")
+        .collect().map(_.getString(0)).toSeq.sorted == (0 until 20).map(i => f"C$i%02d")))
+      assert(lines.count(l => l.contains("[WARN] [odata] keyset sweep GET ") &&
+        l.contains("-> HTTP 501: serial scan")) == 1, lines)
+      // one partition: no data GET carries a window filter
+      assert(!s.requests.exists(r => r.startsWith("/svc/Customers") && r.contains("$filter=")),
+        s.requests)
+    } finally s.stop()
+  }
+
+  test("keyset sweep: a dropped connection fails the query after the client's retries") {
+    val s = new ODataStub(v2 = false).start()
+    s.skipStatus = 501
+    s.dropSweeps = true
+    try {
+      val err = failAfter(Span(60, Seconds))(intercept[Exception](
+        read(s, "parallelism" -> "4", "partitionRows" -> "5").collect()))
+      assert(messages(err).contains("HTTP GET ") && messages(err).contains("$select=CustomerID") &&
+        messages(err).contains("failed after 3 retries"), messages(err))
+    } finally s.stop()
   }
 
   test("a repeating nextLink fails the scan with the looping URL instead of paging forever") {

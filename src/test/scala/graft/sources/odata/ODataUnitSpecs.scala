@@ -111,7 +111,7 @@ class ODataJsonSpec extends AnyFunSuite {
     assert(decodeValue(row.get("d1"), DateType) == 10957) // 2000-01-01
   }
 
-  test("pre-1970 dates: floorDiv, not truncation (VERDICT r1 #2)") {
+  test("pre-1970 dates: floorDiv, not truncation") {
     // 1969-12-31T00:00:00Z = -86400000 ms = epoch day -1
     val row = node(
       """{"a":"/Date(-86400000)/","b":"1969-12-31","c":"1969-12-31T12:00:00Z",

@@ -102,13 +102,20 @@ class ODataStub(v2: Boolean, pageSize: Int = 5, threads: Int = 16) {
     * unanswered: a transport failure no client retry gets past. */
   @volatile var dropProbes: Boolean = false
 
+  /** How a keyset sweep GET (a keys-only `$select` + `$orderby` page with a
+    * `$top` other than 1) is answered: with this status when != 200, and
+    * with its connection closed unanswered when [[dropSweeps]]. */
+  @volatile var sweepStatus: Int = 200
+  @volatile var dropSweeps: Boolean = false
+  private def isSweep(q: Map[String, String]): Boolean =
+    q.contains("$select") && q.contains("$orderby") && q.get("$top").exists(_ != "1")
+
   /** Raw bodies POSTed to /$batch (JSON batch round-trips). */
   val batchBodies = mutable.ListBuffer[String]()
   private val jsonMapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
   val patchedKeys = mutable.ListBuffer[(String, String)]() // (key, body)
   val flakyCounts = mutable.Map[String, Int]()
-  val counterHits = new java.util.concurrent.atomic.AtomicInteger()
   val deletedKeys = mutable.ListBuffer[String]()
 
   /** Delta-Sharing fixture: share/schema/table -> parquet files served at
@@ -206,7 +213,8 @@ class ODataStub(v2: Boolean, pageSize: Int = 5, threads: Int = 16) {
 
   private def handleRecorded(ex: HttpExchange, path: String, rawQ: String, decoded: String): Unit = {
     if ((dropProbes && path.startsWith("/svc") && parseQuery(rawQ).get("$top").contains("1")) ||
-        (dropCounts && path.endsWith("/$count")))
+        (dropCounts && path.endsWith("/$count")) ||
+        (dropSweeps && path.startsWith("/svc") && isSweep(parseQuery(rawQ))))
       ex.close()
     else if (path.startsWith("/svc") && !authorized(ex)) {
       unauthorized.synchronized { unauthorized += decoded }
@@ -253,8 +261,7 @@ class ODataStub(v2: Boolean, pageSize: Int = 5, threads: Int = 16) {
       case p if p.endsWith("/$batch") && ex.getRequestMethod == "POST" =>
         // OData JSON batch: POST sub-requests hit the item sinks, PATCH and
         // DELETE the Customers keys; GET sub-requests are served from the
-        // Customers fixture (other sets answer an empty page) so read-side
-        // batching is drivable e2e
+        // Customers fixture (other sets answer an empty page)
         val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
         batchBodies.synchronized { batchBodies += body }
         val reqs = jsonMapper.readTree(body).get("requests")
@@ -292,50 +299,21 @@ class ODataStub(v2: Boolean, pageSize: Int = 5, threads: Int = 16) {
           } else if (method == "DELETE" && u.contains("Customers(")) {
             s"""{"id":"$id","status":${deleteStatus(i)}}"""
           } else if (method == "GET") {
+            // odataPeek's sampled pages: Customers rows, other sets empty
             val (path, rawQ) = u.indexOf('?') match {
               case -1 => (u, "")
               case q  => (u.take(q), u.drop(q + 1))
             }
             val sq = parseQuery(rawQ)
-            if (sq.contains("$apply")) {
-              if (applyStatus != 200)
-                s"""{"id":"$id","status":$applyStatus,"body":{}}"""
+            val items =
+              if (path.split('/').last != "Customers") "[]"
               else {
-                val body = applyBody(sq("$apply"), sq.get("$top").map(_.toInt),
-                  sq.get("$orderby"))
-                s"""{"id":"$id","status":200,"body":$body}"""
+                val data = shapeRows(sq)
+                val select = sq.get("$select").map(_.split(',').map(_.trim).toSeq)
+                sq.get("$top").map(n => data.take(n.toInt)).getOrElse(data)
+                  .map(jsonObj(_, select)).mkString("[", ",", "]")
               }
-            } else if (path.split('/').last == "Customers") {
-              // honor the sub-request's `Prefer: odata.maxpagesize` (ADVICE
-              // r8): serve only the first page and a nextLink, so the
-              // production preloaded-page + follow-up-GET continuation is
-              // exercised end-to-end. Shaping (filter/order/skip) is shared
-              // with serveRows, so the continuation slices the same sequence.
-              val mps = preferPageSize(
-                Option(r.get("headers")).flatMap(h => Option(h.get("Prefer")))
-                  .map(_.asText))
-              val data = shapeRows(sq)
-              val explicitTop = sq.get("$top").map(_.toInt)
-              val limited = explicitTop.map(data.take).getOrElse(data)
-              val (slice, more) = mps match {
-                case Some(m) if explicitTop.isEmpty && limited.size > m =>
-                  (limited.take(m), true)
-                case _ => (limited, false)
-              }
-              val select = sq.get("$select").map(_.split(',').map(_.trim).toSeq)
-              val items = slice.map(jsonObj(_, select)).mkString("[", ",", "]")
-              val next =
-                if (!more) None
-                else {
-                  val keep = sq.filter { case (k, _) => k.startsWith("$") }
-                    .map { case (k, v) =>
-                      s"$k=${java.net.URLEncoder.encode(v, "UTF-8")}" }
-                  Some(s"$serviceUrl/Customers?${(keep ++ Seq("__page=1")).mkString("&")}")
-                }
-              val body = s"""{"value":$items${next.map(l =>
-                s""","@odata.nextLink":"$l"""").getOrElse("")}}"""
-              s"""{"id":"$id","status":200,"body":$body}"""
-            } else s"""{"id":"$id","status":200,"body":{"value":[]}}"""
+            s"""{"id":"$id","status":200,"body":{"value":$items}}"""
           } else s"""{"id":"$id","status":400,"body":{}}"""
         }
         respond(ex, 200, "application/json",
@@ -381,9 +359,6 @@ class ODataStub(v2: Boolean, pageSize: Int = 5, threads: Int = 16) {
       case "/workbook/range" =>
         respond(ex, 200, "application/json",
           """{"address":"Sheet1!A1:C3","values":[["Name","Qty","Price"],["apple","3","1.25"],["pear",null,"0.99"]]}""")
-      case "/counter" =>
-        val n = counterHits.incrementAndGet()
-        respond(ex, 200, "text/plain", s"hit $n")
       case "/token" if ex.getRequestMethod == "POST" =>
         val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
         tokenRequests.synchronized { tokenRequests += body }
@@ -475,15 +450,13 @@ class ODataStub(v2: Boolean, pageSize: Int = 5, threads: Int = 16) {
   }
 
   /** `Prefer: odata.maxpagesize=N` → N (the page size a client ASKED for —
-    * real services honor it; the stub does too so preloaded-first-page +
-    * nextLink continuation is drivable end-to-end). */
+    * real services honor it, and so does the stub). */
   private def preferPageSize(prefer: Option[String]): Option[Int] =
     prefer.flatMap("odata\\.maxpagesize=(\\d+)".r.findFirstMatchIn(_))
       .map(_.group(1).toInt)
 
-  /** Shared row shaping ($filter + $orderby + $skip) — used by BOTH the
-    * top-level GET and the `$batch` sub-request path, so a batched first
-    * page and its nextLink continuation slice one consistent sequence. */
+  /** Shared row shaping ($filter + $orderby + $skip) — used by both the
+    * top-level GET and the `$batch` GET sub-request. */
   private def shapeRows(q: Map[String, String]): Seq[Map[String, Any]] = {
     var data = applyFilter(rows, q.get("$filter"))
     q.get("$orderby").foreach { ob =>
@@ -513,6 +486,9 @@ class ODataStub(v2: Boolean, pageSize: Int = 5, threads: Int = 16) {
     if (q.contains("$skip") && skipStatus != 200) {
       respond(ex, skipStatus, "text/plain", "$skip not supported"); return
     }
+    if (isSweep(q) && sweepStatus != 200) {
+      respond(ex, sweepStatus, "text/plain", "sweep refused"); return
+    }
     val answer = q.get("$skip").flatMap { s =>
       skipAnswers.get(s.toInt).filter { a =>
         val n = skipGets.synchronized {
@@ -535,9 +511,8 @@ class ODataStub(v2: Boolean, pageSize: Int = 5, threads: Int = 16) {
     val explicitTop = q.get("$top").map(_.toInt)
     explicitTop.foreach(n => data = data.take(n))
     // nextLink pagination (within a `$top` if `pagesWithinTop`); a requested
-    // `Prefer: odata.maxpagesize` overrides the stub's default page size
-    // (what real services do — and what makes a batched first page and its
-    // follow-up GETs slice the same sequence at the same granularity)
+    // `Prefer: odata.maxpagesize` overrides the stub's default page size,
+    // as real services do
     val psz = answer.pageSize.getOrElse(
       preferPageSize(Option(ex.getRequestHeaders.getFirst("Prefer"))).getOrElse(pageSize))
     val page = q.getOrElse("__page", "0").toInt
