@@ -105,4 +105,18 @@ class GraftSessionSpec extends SparkSpecBase {
     assert(mainFilesWith("EdmxParser" + ".parse(") ==
       Set("main/scala/graft/sources/odata/ODataSource.scala"))
   }
+
+  test("src/main counts rows and plans keyset windows only in ODataScan and KeysetWindows: pushdown and the $apply scan send no planning $count or sweep") {
+    // the top-level class, object or trait each call sits in
+    val topLevel = "(?m)^(?:(?:private\\[\\w+\\]|final|case|abstract|sealed) )*(?:class|object|trait) (\\w+)".r
+    val callers = sources.filter(_._1.startsWith("main/")).flatMap { case (p, text) =>
+      val defs = topLevel.findAllMatchIn(text).map(m => m.start -> m.group(1)).toSeq
+      Seq("countRows" + "(", "planWindows" + "(").flatMap { needle =>
+        Iterator.iterate(text.indexOf(needle))(i => text.indexOf(needle, i + 1)).takeWhile(_ >= 0)
+          .map(i => p -> defs.takeWhile(_._1 < i).lastOption.map(_._2).getOrElse("-"))
+      }
+    }.toSet
+    val odata = "main/scala/graft/sources/odata/ODataSource.scala"
+    assert(callers == Set(odata -> "ODataScan", odata -> "KeysetWindows"))
+  }
 }

@@ -1,6 +1,7 @@
 package graft.sources.odata
 
 import graft.SparkSpecBase
+import graft.sources.http.{HttpPolicy, HttpStatusError}
 import graft.testkit.ODataStub
 import org.apache.spark.sql.functions._
 import org.scalatest.{BeforeAndAfterAll, BeforeAndAfterEach}
@@ -189,30 +190,6 @@ class ODataReadE2ESpec extends SparkSpecBase with BeforeAndAfterAll with BeforeA
     } finally v4.skipStatus = 200
   }
 
-  test("parallel scan: keysetOrder=desc sweeps and windows in descending key order") {
-    v4.skipStatus = 501
-    try {
-      v4.requests.clear()
-      val df = read(v4, "parallelism" -> "4", "partitionRows" -> "5",
-        "keysetOrder" -> "desc")
-      val ids = df.collect().map(_.getString(0)).toSeq
-      assert(ids.length == 20 && ids.distinct.length == 20,
-        s"desc keyset union wrong: $ids")
-      // sweep pages order by the key DESC
-      val sweeps = v4.requests.filter(r =>
-        r.contains("$select=CustomerID") && r.contains("$orderby=CustomerID desc"))
-      assert(sweeps.nonEmpty, s"no desc boundary sweep in ${v4.requests}")
-      // windows flip: first = ge highest boundary, middles lt+ge, tail = lt
-      val windows = v4.requests.filter(r =>
-        r.contains("/Customers?") && r.contains("$filter=") &&
-          !r.contains("$orderby") && (r.contains(" ge ") || r.contains(" lt ")))
-      assert(windows.exists(_.contains("CustomerID ge 'C15'")), s"got $windows")
-      assert(windows.exists(r => r.contains("CustomerID lt 'C15'") &&
-        r.contains("CustomerID ge 'C10'")), s"got $windows")
-      assert(windows.exists(_.contains("CustomerID lt 'C05'")), s"got $windows")
-    } finally v4.skipStatus = 200
-  }
-
   test("capped sweep re-splits the tail numerically (integral key)") {
     v4.skipStatus = 501
     try {
@@ -237,32 +214,6 @@ class ODataReadE2ESpec extends SparkSpecBase with BeforeAndAfterAll with BeforeA
         r.contains("Revenue le 15000")), s"got $windows")
       assert(windows.exists(r => r.contains("Revenue gt 15000") &&
         !r.contains(" le ")), s"open tail missing: $windows")
-    } finally v4.skipStatus = 200
-  }
-
-  test("capped DESC sweep carves the tail numerically toward a min probe") {
-    v4.skipStatus = 501
-    try {
-      v4.requests.clear()
-      // desc sweep batch: Revenue 20000..16000 -> boundary 16000; tail =
-      // {Revenue < 16000} carved (999,5999],(5999,10999],(10999,15999]
-      // with the bottom window left open
-      val df = read(v4, "parallelism" -> "4", "partitionRows" -> "5",
-        "partitionKey" -> "Revenue", "keysetSweepMax" -> "5",
-        "keysetOrder" -> "desc")
-      val ids = df.collect().map(_.getString(0)).toSeq
-      assert(ids.length == 20 && ids.distinct.length == 20,
-        s"desc numeric tail union wrong: $ids")
-      // min probe: keys-only ASC top=1 (plus the desc sweep itself)
-      assert(v4.requests.exists(r => r.contains("$orderby=Revenue&") ||
-        r.endsWith("$orderby=Revenue")), s"no min probe in ${v4.requests}")
-      val windows = v4.requests.filter(r =>
-        r.contains("/Customers?") && r.contains("$filter=") && !r.contains("$orderby"))
-      assert(windows.exists(_.contains("Revenue ge 16000")), s"got $windows")
-      assert(windows.exists(r => r.contains("Revenue gt 10999") &&
-        r.contains("Revenue le 15999")), s"got $windows")
-      assert(windows.exists(r => r.contains("Revenue le 5999") &&
-        !r.contains(" gt ")), s"open bottom missing: $windows")
     } finally v4.skipStatus = 200
   }
 
@@ -388,40 +339,22 @@ class ODataReadE2ESpec extends SparkSpecBase with BeforeAndAfterAll with BeforeA
       r.contains("Revenue with countdistinct as agg2")), v4.requests.toString)
   }
 
-  test("partial $apply: per-keyset-window aggregation merged by Spark") {
-    v4.requests.clear()
-    // partitionRows=5 < 20 rows -> partial mode carves keyset windows; each
-    // partition runs groupby server-side and Spark's final agg merges them
-    val df = read(v4, "parallelism" -> "4", "partitionRows" -> "5")
-      .groupBy("Country").agg(sum("Revenue").as("rev"), count(lit(1)).as("cnt"))
-    val out = df.collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    assert(out == Map("Germany" -> ((70000L, 7L)), "France" -> ((77000L, 7L)),
-      "Mexico" -> ((63000L, 6L))), s"got $out")
-    // multiple $apply partitions, each with the key window folded in as a
-    // filter() stage INSIDE the pipeline (before the groupby)
-    val applies = v4.requests.filter(r => r.contains("$apply=filter(") &&
-      r.contains("/groupby((Country),aggregate(Revenue with sum as agg0,$count as agg1))"))
-    assert(applies.size >= 2, s"expected windowed $$apply partitions: ${v4.requests}")
-    assert(applies.exists(_.contains("CustomerID le ")), s"no window bound: $applies")
-    // entity rows never transferred: non-$apply requests are only the
-    // keys-only boundary sweeps and the /$count sizing probes
-    val plain = v4.requests.filter(r =>
-      r.contains("/Customers?") && !r.contains("$apply") && !r.contains("$count"))
-    assert(plain.forall(_.contains("$select=CustomerID")),
-      s"entity rows fetched for a partial agg: $plain")
-  }
-
-  test("partial $apply disabled keeps the complete single-request pushdown") {
-    v4.requests.clear()
-    val df = read(v4, "parallelism" -> "4", "partitionRows" -> "5",
-      "applyPartial" -> "false")
-      .groupBy("Country").agg(sum("Revenue").as("rev"))
-    val out = df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(out == Map("Germany" -> 70000L, "France" -> 77000L, "Mexico" -> 63000L))
-    val applies = v4.requests.filter(_.contains("$apply="))
-    // probe + the one complete data request; no filter() window stages
-    assert(applies.nonEmpty && applies.forall(!_.contains("$apply=filter(")),
-      s"windowed pipelines despite applyPartial=false: $applies")
+  test("a parallel group-by is one $apply GET: no $count, no key sweep, with $skip answered 200 or 501") {
+    try {
+      Seq(200, 501).foreach { skip =>
+        v4.skipStatus = skip
+        v4.requests.clear()
+        val out = read(v4, "parallelism" -> "4", "partitionRows" -> "5")
+          .groupBy("Country").agg(sum("Revenue").as("rev"))
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        assert(out == Map("Germany" -> 70000L, "France" -> 77000L, "Mexico" -> 63000L), s"$$skip $skip: $out")
+        assert(!v4.requests.exists(_.contains("/$count")), v4.requests)
+        assert(!v4.requests.exists(r => r.contains("$select=") && r.contains("$orderby=")), v4.requests)
+        val data = v4.requests.filter(r => r.contains("$apply=") && !r.endsWith("$top=1"))
+        assert(data == Seq("/svc/Customers?$apply=groupby((Country),aggregate(Revenue with sum as agg0))"),
+          v4.requests)
+      }
+    } finally v4.skipStatus = 200
   }
 
   test("TopN over a pushed aggregate pushes $orderby + $top after $apply") {
@@ -977,29 +910,6 @@ class ODataReadE2ESpec extends SparkSpecBase with BeforeAndAfterAll with BeforeA
     } finally v4.skipStatus = 200
   }
 
-  test("partial $apply windows send their own GETs: per-country sums, one key sweep, no $batch") {
-    v4.skipStatus = 501
-    try {
-      v4.requests.clear(); v4.batchBodies.clear()
-      val df = read(v4, "parallelism" -> "4", "partitionRows" -> "5")
-        .groupBy("Country").agg(sum("Revenue").as("rev"))
-      val out = df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      // 20 customers, Country = i%3: Germany rows i=0,3,..18; revenue 1000*(i+1)
-      val exp = (0 until 20).groupBy(i => i % 3 match {
-        case 0 => "Germany"; case 1 => "France"; case _ => "Mexico"
-      }).map { case (c, is) => c -> is.map(i => 1000L * (i + 1)).sum }
-      assert(out == exp, s"got $out")
-      assert(v4.batchBodies.isEmpty, s"unexpected $$batch: ${v4.batchBodies}")
-      val windows = v4.requests.toSeq.filter(_.contains("$apply=filter("))
-      assert(windows.size == 4 && windows.distinct.size == 4, s"window GETs: $windows")
-      // planned once although Spark asks for the partitions more than once:
-      // 20 keys swept 5 at a time, three boundaries, three GETs
-      val sweeps = v4.requests.toSeq.filter(r =>
-        r.contains("$select=CustomerID") && r.contains("$orderby=CustomerID"))
-      assert(sweeps.size == 3, sweeps.toString)
-    } finally v4.skipStatus = 200
-  }
-
   test("a keyset-window Dataset collected twice reads the server's rows at each collect") {
     val s = new ODataStub(v2 = false).start()
     s.skipStatus = 501
@@ -1194,6 +1104,21 @@ class ODataReadE2ESpec extends SparkSpecBase with BeforeAndAfterAll with BeforeA
     } finally s.stop()
   }
 
+  test("range read-ahead: a sub-range answered 429 on every attempt fails the scan after the client's retries, and is not sent again") {
+    val s = rangeStub()
+    s.skipAnswers = Map(10 -> ODataStub.SkipAnswer(status = 429))
+    def sent() = pageGets(s).count(_.endsWith("$top=5&$skip=10"))
+    try {
+      val err = failAfter(Span(60, Seconds))(intercept[Exception](rangeScan(s).collect()))
+      val statuses = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .collect { case e: HttpStatusError => e.status }.toSeq
+      assert(statuses.contains(429), messages(err))
+      assert(sent() == HttpPolicy().retries + 1, pageGets(s).mkString("\n"))
+      Thread.sleep(1500) // longer than any retry delay the client would wait
+      assert(sent() == HttpPolicy().retries + 1, pageGets(s).mkString("\n"))
+    } finally s.stop()
+  }
+
   test("range read-ahead: a truncated page fails the scan loudly, never a partial row set") {
     val s = rangeStub()
     s.skipAnswers = Map(30 -> ODataStub.SkipAnswer(truncate = true))
@@ -1217,6 +1142,38 @@ class ODataReadE2ESpec extends SparkSpecBase with BeforeAndAfterAll with BeforeA
       val err = failAfter(Span(60, Seconds))(intercept[Exception](scan()))
       assert(messages(err).contains("HTTP GET ") && messages(err).contains("/Customers/$count") &&
         messages(err).contains("failed after 3 retries"), messages(err))
+    } finally s.stop()
+  }
+
+  test("a parallel scan with no key order sends no $count and reads every row from one partition") {
+    v4.requests.clear()
+    val df = read(v4, "parallelism" -> "4", "partitionRows" -> "5",
+      "schemaDdl" -> "CustomerID STRING, CompanyName STRING, Country STRING, Revenue BIGINT, Founded TIMESTAMP")
+    assert(df.collect().map(_.getString(0)).toSeq.sorted == (0 until 20).map(i => f"C$i%02d"))
+    assert(!v4.requests.exists(_.contains("/$count")), v4.requests)
+    assert(!v4.requests.exists(_.contains("$filter=")), v4.requests)
+  }
+
+  test("service-root detection: a parent answering its $metadata with 404 is traced and the URL is the root") {
+    val s = new ODataStub(v2 = false).start()
+    s.extraStatuses.synchronized { s.extraStatuses("/$metadata") = (404, Map.empty) }
+    try {
+      val lines = warnings(assert(
+        spark.read.format("odata").option("url", s.serviceUrl).load().collect().length == 20))
+      assert(lines.exists(_.contains(
+        s"[WARN] [odata] service root probe GET http://localhost:${s.port}/$$metadata -> HTTP 404: " +
+          s"${s.serviceUrl} is the service root")), lines)
+    } finally s.stop()
+  }
+
+  test("service-root detection: a dropped connection at the parent fails the read after the client's retries") {
+    val s = new ODataStub(v2 = false).start()
+    s.dropPaths = Set("/$metadata")
+    try {
+      val err = failAfter(Span(60, Seconds))(intercept[Exception](
+        spark.read.format("odata").option("url", s.serviceUrl).load().collect()))
+      assert(messages(err).contains(
+        s"HTTP GET http://localhost:${s.port}/$$metadata failed after 3 retries"), messages(err))
     } finally s.stop()
   }
 

@@ -90,13 +90,17 @@ class ODataStub(v2: Boolean, pageSize: Int = 5, threads: Int = 16) {
 
   /** How a `Customers` GET carrying `$skip=<key>` is answered: after a
     * delay (range reads answered out of order), with a status and headers
-    * instead of the page (for its first `times` GETs), paged smaller than
-    * asked (a server capping its pages), or with its JSON cut in half. */
+    * instead of the page (for its first `times` GETs, by default every one:
+    * a 429 storm outlasts any retry budget), paged smaller than asked (a
+    * server capping its pages), or with its JSON cut in half. */
   @volatile var skipAnswers: Map[Int, ODataStub.SkipAnswer] = Map.empty
   private val skipGets = mutable.Map[Int, Int]()
 
   /** When true, every `/$count` GET has its connection closed unanswered. */
   @volatile var dropCounts: Boolean = false
+
+  /** Paths whose every request has its connection closed unanswered. */
+  @volatile var dropPaths: Set[String] = Set.empty
 
   /** When true, every `$top=1` GET under /svc has its connection closed
     * unanswered: a transport failure no client retry gets past. */
@@ -213,7 +217,7 @@ class ODataStub(v2: Boolean, pageSize: Int = 5, threads: Int = 16) {
 
   private def handleRecorded(ex: HttpExchange, path: String, rawQ: String, decoded: String): Unit = {
     if ((dropProbes && path.startsWith("/svc") && parseQuery(rawQ).get("$top").contains("1")) ||
-        (dropCounts && path.endsWith("/$count")) ||
+        (dropCounts && path.endsWith("/$count")) || dropPaths.contains(path) ||
         (dropSweeps && path.startsWith("/svc") && isSweep(parseQuery(rawQ))))
       ex.close()
     else if (path.startsWith("/svc") && !authorized(ex)) {
