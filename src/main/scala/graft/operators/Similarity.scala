@@ -391,7 +391,7 @@ object Similarity {
 
   /** Public top-`nProbe` probe order (sim DESC, cid DESC — the `top_cells`
     * kernel) for callers pinning a cell model outside one operator call,
-    * e.g. the PROBING streaming SemDeDup twin. `probeCells(v, c, n)(0)` is
+    * e.g. the streaming SemDeDup twin. `probeCells(v, c, n)(0)` is
     * exactly [[cellAssign]] (same tie order). */
   def probeCells(v: Column, centroids: Seq[Seq[Double]], nProbe: Int): Column =
     topCells(cellSimsFor(centroids)(v), nProbe)

@@ -44,10 +44,7 @@ object DeltaShareProfile {
     fromFile(path, new org.apache.hadoop.conf.Configuration())
   def fromFile(path: String, hadoopConf: org.apache.hadoop.conf.Configuration): DeltaShareProfile =
     if (path.startsWith("http://") || path.startsWith("https://")) {
-      val r = HttpCore.shared.get(path)
-      if (r.status != 200)
-        throw new RuntimeException(s"delta-share profile GET $path -> HTTP ${r.status}")
-      fromJson(r.text)
+      fromJson(HttpCore.shared.call("GET", path).text)
     } else {
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(hadoopConf)
@@ -69,9 +66,7 @@ final case class DeltaShareTableMeta(schema: StructType, partitionColumns: Seq[S
 class DeltaShareClient(profile: DeltaShareProfile, http: HttpCore = HttpCore.shared) {
 
   private def getJson(path: String): Seq[com.fasterxml.jackson.databind.JsonNode] = {
-    val r = http.get(profile.endpoint + path, auth = profile.auth)
-    if (r.status != 200) throw new RuntimeException(s"GET $path -> HTTP ${r.status}")
-    val root = ODataJson.parse(r.text)
+    val root = ODataJson.parse(http.call("GET", profile.endpoint + path, auth = profile.auth).text)
     Option(root.get("items")).map(it =>
       it.elements().asScala.toSeq).getOrElse(Seq.empty)
   }
@@ -84,11 +79,9 @@ class DeltaShareClient(profile: DeltaShareProfile, http: HttpCore = HttpCore.sha
 
   /** NDJSON protocol+metaData lines (reference `delta_share_scan.cpp:54-122`). */
   def tableMetadata(share: String, schema: String, table: String): DeltaShareTableMeta = {
-    val r = http.get(
+    parseMetadata(http.call("GET",
       s"${profile.endpoint}/shares/$share/schemas/$schema/tables/$table/metadata",
-      auth = profile.auth)
-    if (r.status != 200) throw new RuntimeException(s"metadata -> HTTP ${r.status}")
-    parseMetadata(r.text)
+      auth = profile.auth).text)
   }
 
   private def parseMetadata(ndjson: String): DeltaShareTableMeta = {
@@ -107,10 +100,9 @@ class DeltaShareClient(profile: DeltaShareProfile, http: HttpCore = HttpCore.sha
   def queryTable(share: String, schema: String, table: String,
                  limitHint: Option[Long] = None): (DeltaShareTableMeta, Seq[DeltaShareFile]) = {
     val body = limitHint.map(l => s"""{"limitHint":$l}""").getOrElse("{}")
-    val r = http.request("POST",
+    val r = http.call("POST",
       s"${profile.endpoint}/shares/$share/schemas/$schema/tables/$table/query",
       Some((body, "application/json")), auth = profile.auth)
-    if (r.status != 200) throw new RuntimeException(s"query -> HTTP ${r.status}")
     val lines = r.text.linesIterator.filter(_.nonEmpty).map(ODataJson.parse).toSeq
     val meta = parseMetadata(r.text)
     val files = lines.flatMap(l => Option(l.get("file"))).map { f =>
@@ -201,9 +193,7 @@ object DeltaShare {
             val target = new org.apache.hadoop.fs.Path(dir, s"$id.parquet")
             val fs = target.getFileSystem(new org.apache.hadoop.conf.Configuration())
             if (!fs.exists(target)) {
-              val resp = HttpCore.shared.get(url)
-              if (resp.status != 200)
-                throw new RuntimeException(s"presigned GET $url -> ${resp.status}")
+              val resp = HttpCore.shared.call("GET", url)
               val out = fs.create(target, true)
               try out.write(resp.body) finally out.close()
             }

@@ -52,9 +52,10 @@ final case class HttpResult(
     else Charsets.toUtf8(body, contentType)
 }
 
-/** A failed answer — a non-200 page GET or a non-2xx write — typed so a
-  * caller can act on one status (a 410 resync, a 400 hint) and let every
-  * other status fail as it is. */
+/** A failed answer: any status outside 2xx to a request that must succeed
+  * ([[HttpCore.checked]]). Typed so a caller can act on one status (a 410
+  * resync, a 404 absent endpoint, a probe's no) and let every other status
+  * fail as it is. */
 final class HttpStatusError(val method: String, val url: String, val status: Int,
                             val headers: Map[String, String], body: String)
   extends RuntimeException(s"$method $url -> HTTP $status: ${body.take(300)}")
@@ -111,6 +112,13 @@ class HttpCore(val policy: HttpPolicy = HttpPolicy(), executor: Option[Executor]
   def get(url: String, headers: Map[String, String] = Map.empty,
           auth: HttpAuth = HttpAuth()): HttpResult =
     request("GET", url, None, headers, auth)
+
+  /** [[request]] held to the success rule: the 2xx answer, or its
+    * [[HttpStatusError]] ([[HttpCore.checked]]). */
+  def call(method: String, url: String, body: Option[(String, String)] = None,
+           headers: Map[String, String] = Map.empty,
+           auth: HttpAuth = HttpAuth()): HttpResult =
+    HttpCore.checked(method, request(method, url, body, headers, auth))
 
   /** Sends one request and waits for [[requestAsync]]'s outcome: the
     * answer, or the failure that survived every retry. An interrupted
@@ -220,6 +228,16 @@ object HttpCore {
   /** The statuses a request is retried on: throttling and transient
     * server or gateway failures. */
   val Retried: Set[Int] = Set(429, 500, 502, 503, 504)
+
+  /** The one success rule for a request that must succeed: a 2xx status. */
+  def succeeded(status: Int): Boolean = status / 100 == 2
+
+  /** `r` if it [[succeeded]], else its [[HttpStatusError]]: `<method> <url>
+    * -> HTTP <status>: <first 300 chars of the body>`. Applies to an answer
+    * from [[HttpCore.request]] and from [[HttpCore.requestAsync]] alike. */
+  def checked(method: String, r: HttpResult): HttpResult =
+    if (succeeded(r.status)) r
+    else throw new HttpStatusError(method, r.url, r.status, r.headers, r.text)
 
   /** The wait, in ms, a throttled (429/503) answer asks for in `Retry-After`:
     * delta-seconds or an HTTP-date (RFC 9110 §10.2.3). 0 for other statuses

@@ -159,10 +159,7 @@ object OAuth2 {
     val body = form.map { case (k, v) =>
       k + "=" + java.net.URLEncoder.encode(v, StandardCharsets.UTF_8)
     }.mkString("&")
-    val resp = http.request("POST", tokenEndpoint,
-      Some((body, "application/x-www-form-urlencoded")))
-    if (resp.status != 200)
-      throw new RuntimeException(s"token endpoint -> HTTP ${resp.status}: ${resp.text.take(200)}")
+    val resp = http.call("POST", tokenEndpoint, Some((body, "application/x-www-form-urlencoded")))
     val n = ODataJson.parse(resp.text)
     val token = n.get("access_token").asText
     val expiresIn = Option(n.get("expires_in")).map(_.asLong).getOrElse(3600L)
@@ -237,11 +234,7 @@ object OAuth2 {
       val body = form.map { case (k, v) =>
         k + "=" + java.net.URLEncoder.encode(v, StandardCharsets.UTF_8)
       }.mkString("&")
-      val resp = http.request("POST", tokenEndpoint,
-        Some((body, "application/x-www-form-urlencoded")))
-      if (resp.status != 200)
-        throw new RuntimeException(
-          s"token endpoint -> HTTP ${resp.status}: ${resp.text.take(200)}")
+      val resp = http.call("POST", tokenEndpoint, Some((body, "application/x-www-form-urlencoded")))
       ODataJson.parse(resp.text).get("access_token").asText
     } finally server.stop()
   }

@@ -35,17 +35,21 @@ final case class EdmModel(
   private def stripNs(t: String): String = t.split('.').last
 
   /** Spark schema of one entity type, expanding complex-typed properties into
-    * nested structs and enum-typed properties into strings. */
-  def schemaOf(entityTypeName: String): StructType = {
-    val et = entityTypes(stripNs(entityTypeName))
-    StructType(et.properties.map(p => StructField(p.name, resolveType(p.edmType), p.nullable)))
-  }
+    * nested structs and enum-typed properties into strings. Entity, set and
+    * navigation type names are held without their namespace ([[EdmxParser]]
+    * strips it). */
+  def schemaOf(entityTypeName: String): StructType = structOf(entityTypes(entityTypeName))
 
-  def schemaOfSet(setName: String): StructType = {
-    val set = entitySets.find(_.name == setName)
-      .getOrElse(throw new NoSuchElementException(s"entity set $setName"))
-    schemaOf(set.entityTypeName)
-  }
+  private def structOf(et: EdmEntityType): StructType =
+    StructType(et.properties.map(p => StructField(p.name, resolveType(p.edmType), p.nullable)))
+
+  /** The entity type of entity set `setName`; fails naming a set the model
+    * does not hold. */
+  def entityTypeOf(setName: String): EdmEntityType = entityTypes(
+    entitySets.find(_.name == setName)
+      .getOrElse(throw new NoSuchElementException(s"entity set $setName")).entityTypeName)
+
+  def schemaOfSet(setName: String): StructType = structOf(entityTypeOf(setName))
 
   /** Schema with chosen navigation properties expanded as nested columns:
     * to-one → struct, to-many → array<struct> (SURVEY.md §1.2 expand rule).
@@ -55,17 +59,15 @@ final case class EdmModel(
     schemaWithExpandSpecs(setName, expand.map(ExpandSpec.parse))
 
   def schemaWithExpandSpecs(setName: String, specs: Seq[ExpandSpec]): StructType = {
-    val set = entitySets.find(_.name == setName).get
-    val et = entityTypes(stripNs(set.entityTypeName))
-    val base = schemaOf(set.entityTypeName)
-    StructType(base.fields ++ specs.map(expandField(et, _)))
+    val et = entityTypeOf(setName)
+    StructType(structOf(et).fields ++ specs.map(expandField(et, _)))
   }
 
   private def expandField(et: EdmEntityType, spec: ExpandSpec): StructField = {
     val nav = et.navProperties.find(_.name == spec.nav)
       .getOrElse(throw new NoSuchElementException(s"nav property ${spec.nav} on ${et.name}"))
-    val targetEt = entityTypes(stripNs(nav.targetType))
-    var inner = schemaOf(nav.targetType)
+    val targetEt = entityTypes(nav.targetType)
+    var inner = structOf(targetEt)
     spec.options.get("$select").foreach { sel =>
       val keep = sel.split(",").map(_.trim).filter(_.nonEmpty).toSet
       inner = StructType(inner.fields.filter(f => keep.contains(f.name)))
@@ -84,9 +86,7 @@ final case class EdmModel(
           StructType(complexTypes(short).properties
             .map(p => StructField(p.name, resolveType(p.edmType), p.nullable)))
         else if (enumTypes.contains(short)) StringType // no Spark enum; member set kept in model
-        else if (entityTypes.contains(short))
-          StructType(entityTypes(short).properties
-            .map(p => StructField(p.name, resolveType(p.edmType), p.nullable)))
+        else if (entityTypes.contains(short)) structOf(entityTypes(short))
         else EdmTypes.primitive(edmType)
     }
   }

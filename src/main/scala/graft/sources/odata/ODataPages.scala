@@ -1,6 +1,6 @@
 package graft.sources.odata
 
-import graft.sources.http.{Charsets, HttpAuth, HttpCore, HttpResult, HttpStatusError}
+import graft.sources.http.{Charsets, HttpAuth, HttpCore, HttpResult}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.{CompletableFuture, ExecutionException, Executors}
 import scala.collection.mutable
@@ -26,8 +26,8 @@ object ODataPages {
     * No GET happens until `next()`: `hasNext` only says whether a next URL
     * is known, and each `next()` sends exactly one uncached GET with
     * `headers` and `auth`. A caller that stops pulling (a capped walk)
-    * therefore sends no further request. A non-200 answer throws
-    * [[HttpStatusError]].
+    * therefore sends no further request. A non-2xx answer throws
+    * [[graft.sources.http.HttpStatusError]] ([[HttpCore.checked]]).
     *
     * The repeated-link guard's scope is this one walk: a URL fetched twice
     * within it throws `OData nextLink loop: ...` instead of paging forever.
@@ -56,8 +56,7 @@ object ODataPages {
             first = None
             (b, Map.empty[String, String])
           case None =>
-            val r = http.get(u, headers = headers, auth = auth)
-            if (r.status != 200) throw new HttpStatusError("GET", r.url, r.status, r.headers, r.text)
+            val r = http.call("GET", u, headers = headers, auth = auth)
             (utf8(r), r.headers)
         }
         val page = decode(body)
@@ -107,9 +106,9 @@ object ODataPages {
     * nextLinks (a server page smaller than `n`). A sub-range that ends
     * short ends the data: nothing after it is sent, and what is in flight
     * is cancelled. The first failure in window order throws on the
-    * caller's thread (a non-200 answer as its [[HttpStatusError]]) after
-    * cancelling the rest, as does `close()`; a cancelled GET is never sent
-    * again, even one waiting out a retry delay. */
+    * caller's thread (a non-2xx answer as its [[HttpCore.checked]] error)
+    * after cancelling the rest, as does `close()`; a cancelled GET is never
+    * sent again, even one waiting out a retry delay. */
   private[odata] final class RangeReadAhead[P <: ODataJson.Paged](
       url: String, skip: Long, top: Long, auth: HttpAuth, headers: Map[String, String],
       decode: Array[Byte] => P)
@@ -173,8 +172,7 @@ object ODataPages {
 
     private def nextSubRange(): Iterator[Fetched[P]] = {
       val (u, t, fetch) = inFlight.dequeue()
-      val r = try fetch.get() catch { case e: ExecutionException => throw e.getCause }
-      if (r.status != 200) throw new HttpStatusError("GET", r.url, r.status, r.headers, r.text)
+      val r = HttpCore.checked("GET", try fetch.get() catch { case e: ExecutionException => throw e.getCause })
       val rest = walk(u, auth, decode, headers, readAheadHttp, preloaded = Some(utf8(r)))
       val first = rest.next() // decoded before the next GET goes out
       send()

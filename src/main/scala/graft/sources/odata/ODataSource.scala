@@ -190,26 +190,21 @@ object ODataMeta {
     * A model answers only the credentials that fetched it: a call with
     * other credentials fetches again and replaces it, so one principal's
     * fetch never answers another's and a rotating token keeps one entry.
-    * A non-200 answer throws the typed [[HttpStatusError]] (`GET <url> ->
-    * HTTP <status>: ...`); failures are not cached. */
+    * A non-2xx answer throws the typed [[HttpStatusError]] (`GET <url> ->
+    * HTTP <status>: ...`, [[HttpCore.checked]]); failures are not cached. */
   def modelAt(serviceRoot: String, auth: HttpAuth): EdmModel = {
     val metaUrl = serviceRoot.stripSuffix("/") + "/$metadata"
     val principal = auth.headerValue.getOrElse("")
     edmCache.compute(metaUrl, { (_, kept) =>
       if (kept != null && kept.principal == principal) kept
-      else {
-        val resp = HttpCore.shared.get(metaUrl, auth = auth)
-        if (resp.status != 200)
-          throw new HttpStatusError("GET", metaUrl, resp.status, resp.headers, resp.text)
-        KeptModel(principal, EdmxParser.parse(resp.text))
-      }
+      else KeptModel(principal, EdmxParser.parse(HttpCore.shared.call("GET", metaUrl, auth = auth).text))
     }).model
   }
 
   /** A URL names an entity set when its last segment matches no service
     * document; we use the pragmatic rule: try `$metadata` at the parent — if
     * the last segment is a known entity set there, treat it as the set. A
-    * parent that answers its `$metadata` with a status other than 200 is
+    * parent that answers its `$metadata` with a status outside 2xx is
     * traced and the URL taken as the service root; a transport failure that
     * survives `HttpCore`'s retries propagates. */
   private def splitServiceAndSet(url: String, auth: HttpAuth): (String, Option[String]) = {
@@ -261,8 +256,7 @@ class ODataTable(conf: ODataConf, schema: StructType) extends Table
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
   : org.apache.spark.sql.connector.write.RowLevelOperationBuilder = {
     val meta = ODataMeta.resolve(conf)
-    val et = meta.model.entityTypes(
-      meta.model.entitySets.find(_.name == meta.setName).get.entityTypeName)
+    val et = meta.model.entityTypeOf(meta.setName)
     require(et.keys.length == 1,
       s"row-level operations need a single-column EDM key, ${meta.setName} has ${et.keys.length}")
     val key = et.keys.head
@@ -315,8 +309,7 @@ class ODataTable(conf: ODataConf, schema: StructType) extends Table
     // through the per-row mutation helpers instead
     if (conf.schemaDdl.isDefined) return false
     val meta = ODataMeta.resolve(conf)
-    val keys = meta.model.entityTypes(
-      meta.model.entitySets.find(_.name == meta.setName).get.entityTypeName).keys
+    val keys = meta.model.entityTypeOf(meta.setName).keys
     keys.length == 1 &&
       ODataFilterCompiler.compile(filters, meta.version == 2).residual.isEmpty
   }
@@ -328,8 +321,7 @@ class ODataTable(conf: ODataConf, schema: StructType) extends Table
   override def deleteWhere(filters: Array[Filter]): Unit = {
     val meta = ODataMeta.resolve(conf)
     val batch = batchTarget(meta)
-    val et = meta.model.entityTypes(
-      meta.model.entitySets.find(_.name == meta.setName).get.entityTypeName)
+    val et = meta.model.entityTypeOf(meta.setName)
     val key = et.keys.head
     val keyIsString = et.properties.find(_.name == key)
       .exists(_.edmType == "Edm.String")
@@ -634,16 +626,16 @@ class ODataScanBuilder(conf: ODataConf, fullSchema: StructType)
     !applyRefused(key) && (ODataMeta.capable(key) {
       val url = ODataUrl.parse(meta.entitySetUrl)
         .withParam("$apply", a.pipeline).withParam("$top", "1").render
-      val resp = HttpCore.shared.get(url, auth = conf.auth)
       // rows must carry the aggregate alias: a server that ignores $apply
       // echoes raw entities, which would decode as all-null aggs
-      val refusal =
-        if (resp.status / 100 != 2) Some(s"HTTP ${resp.status}")
-        else scala.util.Try(ODataJson.extractPage(ODataJson.parse(resp.text))).toOption match {
+      val refusal = try {
+        val resp = HttpCore.shared.call("GET", url, auth = conf.auth)
+        scala.util.Try(ODataJson.extractPage(ODataJson.parse(resp.text))).toOption match {
           case None => Some(s"HTTP ${resp.status}, not an OData page")
           case Some(p) if !p.rows.forall(_.has("agg0")) => Some(s"HTTP ${resp.status}, rows without agg0")
           case _ => None
         }
+      } catch { case e: HttpStatusError => Some(s"HTTP ${e.status}") }
       refusal.foreach(r => Trace.warn("odata", s"$$apply probe GET $url -> $r: aggregating in Spark"))
       refusal.isEmpty
     } || { applyRefused += key; false })
@@ -729,8 +721,7 @@ class ODataApplyScan(conf: ODataConf, meta: ODataMeta, agg: ApplyAgg)
     Array(ODataInputPartition(u.render, 0))
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new ODataReaderFactory(agg.schema, conf.pageSize, conf.bearer, conf.user,
-      conf.password, None)
+    new ODataReaderFactory(agg.schema, conf.pageSize, conf.auth)
   override def supportedCustomMetrics(): Array[org.apache.spark.sql.connector.metric.CustomMetric] =
     Array(new PagesFetchedMetric, new RowsFetchedMetric, new BytesFetchedMetric)
 }
@@ -905,10 +896,11 @@ class ODataScan(conf: ODataConf, meta: ODataMeta, schema: StructType,
       var u = ODataUrl.parse(meta.entitySetUrl)
         .withParam("$top", "1").withParam("$skip", "1").withParam("$orderby", ord)
       if (meta.version == 2) u = u.withParam("$format", "json")
-      val status = HttpCore.shared.get(u.render, auth = conf.auth).status
-      if (status / 100 != 2)
-        Trace.warn("odata", s"$$skip probe GET ${u.render} -> HTTP $status: no range partitions")
-      status / 100 == 2
+      try { HttpCore.shared.call("GET", u.render, auth = conf.auth); true } catch {
+        case e: HttpStatusError =>
+          Trace.warn("odata", s"$$skip probe GET ${u.render} -> HTTP ${e.status}: no range partitions")
+          false
+      }
     } || { skipRefused = true; false })
 
   /** Keyset-window parallel scan for servers that reject `$skip`: partitions
@@ -929,8 +921,7 @@ class ODataScan(conf: ODataConf, meta: ODataMeta, schema: StructType,
     KeysetWindows.countRows(conf, meta, filterExpr.toSeq ++ runtimeExpr.toSeq)
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new ODataReaderFactory(schema, conf.pageSize, conf.bearer, conf.user,
-      conf.password, conf.unwrap)
+    new ODataReaderFactory(schema, conf.pageSize, conf.auth, conf.unwrap)
 
   /** Scan progress metrics — the Spark rendering of the reference's
     * `$count`-based progress fraction (`odata_read_functions.cpp:162-196`):
@@ -989,9 +980,7 @@ private[odata] object KeysetWindows {
   def keyOrder(conf: ODataConf, meta: ODataMeta): Option[String] =
     conf.partitionKey.orElse {
       if (conf.schemaDdl.isDefined) None
-      else meta.model.entitySets.find(_.name == meta.setName)
-        .flatMap(es => meta.model.entityTypes.get(es.entityTypeName.split('.').last))
-        .map(_.keys).filter(_.nonEmpty).map(_.mkString(","))
+      else Some(meta.model.entityTypeOf(meta.setName).keys).filter(_.nonEmpty).map(_.mkString(","))
     }
 
   /** Partitions of a `total`-row scan: at least `partitionRows` rows each,
@@ -1001,15 +990,18 @@ private[odata] object KeysetWindows {
       math.max(1L, (total + conf.partitionRows - 1) / conf.partitionRows)).toInt
 
   /** Filter-aware `/\$count` probe. An answer that carries no count (a
-    * non-200 status, a body that is not a number) is None and traced; a
+    * non-2xx status, a body that is not a number) is None and traced; a
     * transport failure that survives `HttpCore`'s retries propagates. */
   def countRows(conf: ODataConf, meta: ODataMeta, filters: Seq[String]): Option[Long] = {
     val u0 = ODataUrl.parse(meta.entitySetUrl + "/$count")
     val url = filters.foldLeft(u0)((u, e) => u.mergeFilter(e)).render
-    val resp = HttpCore.shared.get(url, auth = conf.auth)
-    val n = if (resp.status == 200) resp.text.trim.toLongOption else None
+    val (status, n) =
+      try {
+        val resp = HttpCore.shared.call("GET", url, auth = conf.auth)
+        (resp.status, resp.text.trim.toLongOption)
+      } catch { case e: HttpStatusError => (e.status, None) }
     if (n.isEmpty)
-      Trace.warn("odata", s"$$count GET $url -> HTTP ${resp.status}: planning without a row count")
+      Trace.warn("odata", s"$$count GET $url -> HTTP $status: planning without a row count")
     n
   }
 
@@ -1017,18 +1009,24 @@ private[odata] object KeysetWindows {
     * `partitionRows`. `filters` narrow the sweep (pushed + runtime filters
     * must shape the windows, or they would cover the unfiltered key space).
     * None when un-plannable (unsupported key type, one window, a sweep
-    * page answered with a status other than 200, which is traced) — the
+    * page answered with a status outside 2xx, which is traced) — the
     * caller stays serial, which is always correct. A transport failure
     * that survives `HttpCore`'s retries propagates.
     *
-    * Huge-set tail re-split: the sweep is O(swept keys) and capped by
-    * `keysetSweepMax`; beyond the cap the leftover tail used to become ONE
-    * unbounded window (the 100 TB skew shape). For an integral first key
-    * the tail is now re-carved NUMERICALLY: min is the last swept
-    * boundary, max comes from one `\$orderby key desc&\$top=1` probe, and
-    * the range splits uniformly — then each
-    * candidate sub-window gets a filtered `/\$count`, empty ones are
-    * dropped and any window holding > 2× its share is split again,
+    * Bounds, with `per = ⌈total / nParts⌉` keys per chain: the sweep holds
+    * one key tuple and one decoded page at a time, plus the `nParts - 1`
+    * boundary tuples. `keysetSweepMax` is checked between chains, so the
+    * sweep runs at most `min(nParts - 1, ⌈keysetSweepMax / per⌉)` chains
+    * and reads at most that many times `per` keys; each chain stops
+    * requesting pages once it holds `per` keys.
+    *
+    * Huge-set tail re-split: beyond the sweep cap the leftover tail used
+    * to become ONE unbounded window (the 100 TB skew shape). For an
+    * integral first key the tail is now re-carved NUMERICALLY: min is the
+    * last swept boundary, max comes from one `\$orderby key desc&\$top=1`
+    * probe, and the range splits uniformly — then each candidate
+    * sub-window gets a filtered `/\$count`, empty ones are dropped and any
+    * window holding > 2× its share is split again,
     * proportionally, one bounded round. O(parallelism) cheap requests
     * instead of an O(N) sweep keeps arbitrarily large sets parallel. */
   def planWindows(conf: ODataConf, meta: ODataMeta, ord: String,
@@ -1071,9 +1069,10 @@ private[odata] object KeysetWindows {
     val per = total.map(t => (t + nParts - 1) / nParts).getOrElse(conf.partitionRows)
 
     // boundary sweep: repeated keys-only `$top=per` chains, each continuing
-    // past the previous boundary tuple; the last key tuple of a full batch
-    // is a boundary
-    def sweep(afterLits: Option[Seq[String]]): Seq[Seq[String]] = {
+    // past the previous boundary tuple. A chain yields its tuple count and
+    // its last tuple, the boundary when the count is `per`; it holds one
+    // tuple and one page at a time
+    def sweep(afterLits: Option[Seq[String]]): (Long, Seq[String]) = {
       var u = ODataUrl.parse(meta.entitySetUrl)
       filters.foreach(e => u = u.mergeFilter(e))
       afterLits.foreach(l => u = u.mergeFilter(tupleGt(l)))
@@ -1081,15 +1080,16 @@ private[odata] object KeysetWindows {
         .withParam("$orderby", keys.mkString(","))
         .withParam("$top", per.toString)
       if (v2) u = u.withParam("$format", "json")
-      val out = scala.collection.mutable.Buffer[Seq[String]]()
+      var count = 0L
+      var last = Seq.empty[String]
       val pages = ODataPages.walk(u.render, conf.auth, ODataJson.tree)
-      while (pages.hasNext && out.size < per) pages.next().page.rows.foreach { n =>
+      while (pages.hasNext && count < per) pages.next().page.rows.foreach { n =>
         val tuple = keys.indices.map { i =>
           Option(n.get(keys(i))).filterNot(_.isNull).flatMap(renderKey(i, _))
         }
-        if (tuple.forall(_.isDefined)) out += tuple.map(_.get)
+        if (count < per && tuple.forall(_.isDefined)) { count += 1; last = tuple.map(_.get) }
       }
-      out.take(math.min(per, Int.MaxValue.toLong).toInt).toSeq
+      (count, last)
     }
     try {
       val boundaries = scala.collection.mutable.Buffer[Seq[String]]()
@@ -1097,10 +1097,10 @@ private[odata] object KeysetWindows {
       var swept = 0L
       var exhausted = false
       while (!exhausted && boundaries.size < nParts - 1 && swept < conf.keysetSweepMax) {
-        val got = sweep(lastLits)
-        swept += got.size
-        if (got.size < per) exhausted = true // tail fits in the final window
-        else { boundaries += got.last; lastLits = Some(got.last) }
+        val (count, last) = sweep(lastLits)
+        swept += count
+        if (count < per) exhausted = true // tail fits in the final window
+        else { boundaries += last; lastLits = Some(last) }
       }
       if (boundaries.isEmpty) return None // set fits one window: serial is right
       val head = tupleLe(boundaries.head) +:
@@ -1148,10 +1148,10 @@ private[odata] object KeysetWindows {
       filters.foreach(e => u = u.mergeFilter(e))
       u = u.withParam("$select", key).withParam("$orderby", s"$key desc").withParam("$top", "1")
       if (meta.version == 2) u = u.withParam("$format", "json")
-      val resp = HttpCore.shared.get(u.render, auth = conf.auth)
-      if (resp.status != 200) {
-        Trace.warn("odata", s"keyset tail probe GET ${u.render} -> HTTP ${resp.status}: one tail window")
-        return None
+      val resp = try HttpCore.shared.call("GET", u.render, auth = conf.auth) catch {
+        case e: HttpStatusError =>
+          Trace.warn("odata", s"keyset tail probe GET ${u.render} -> HTTP ${e.status}: one tail window")
+          return None
       }
       ODataJson.extractPage(ODataJson.parse(resp.text)).rows.headOption
         .flatMap(r => Option(r.get(key))).flatMap(_.asText.toLongOption)
@@ -1195,7 +1195,7 @@ class ODataCountScan(conf: ODataConf, meta: ODataMeta, filterExpr: Option[String
     Array(ODataInputPartition(u.render, 0))
   }
   override def createReaderFactory(): PartitionReaderFactory = {
-    val (bearer, user, password) = (conf.bearer, conf.user, conf.password)
+    val auth = conf.auth
     val v2 = meta.version == 2
     // extracted local only — the factory must not capture conf/meta
     val pushedFilterStr = filterExpr
@@ -1207,17 +1207,13 @@ class ODataCountScan(conf: ODataConf, meta: ODataMeta, filterExpr: Option[String
           private var row: InternalRow = _
           override def next(): Boolean = {
             if (done) return false
-            val auth = HttpAuth(bearer, user, password)
-            val resp = HttpCore.shared.get(url, auth = auth)
             // Page-walk fallback ONLY for "this server doesn't do /$count"
             // statuses; auth/server errors rethrow directly — an expired
             // token must not trigger an expensive full-table crawl that
             // then fails with a less diagnostic page-walk error.
-            val countUnsupported = Set(400, 404, 405, 501)
             val n =
-              if (resp.status == 200) resp.text.trim.toLong
-              else if (countUnsupported(resp.status)) pageCount(auth)
-              else throw new RuntimeException(s"GET $url -> HTTP ${resp.status}")
+              try HttpCore.shared.call("GET", url, auth = auth).text.trim.toLong
+              catch { case e: HttpStatusError if Set(400, 404, 405, 501)(e.status) => pageCount() }
             row = InternalRow(n)
             done = true
             true
@@ -1225,7 +1221,7 @@ class ODataCountScan(conf: ODataConf, meta: ODataMeta, filterExpr: Option[String
           /** Fallback when the service rejects `/$count` (many real OData
             * implementations do): walk the data pages, summing row counts —
             * still a complete answer, just not free. */
-          private def pageCount(auth: HttpAuth): Long = {
+          private def pageCount(): Long = {
             var u = ODataUrl.parse(url.replace("/$count", ""))
             if (v2) u = u.withParam("$format", "json")
             try ODataPages.walk(u.render, auth, ODataJson.tree).map(_.page.size.toLong).sum
@@ -1256,13 +1252,12 @@ final case class ODataInputPartition(url: String, index: Int,
 /** Everything shipped to executors must be small + serializable (SURVEY §7.4
   * item 5): URL, schema, auth material. The HTTP client is rebuilt lazily
   * executor-side. */
-class ODataReaderFactory(schema: StructType, pageSize: Option[Int],
-                         bearer: Option[String], user: Option[String],
-                         password: Option[String], unwrap: Option[String] = None)
+class ODataReaderFactory(schema: StructType, pageSize: Option[Int], auth: HttpAuth,
+                         unwrap: Option[String] = None)
   extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new ODataPartitionReader(partition.asInstanceOf[ODataInputPartition],
-      schema, pageSize, HttpAuth(bearer, user, password), unwrap)
+      schema, pageSize, auth, unwrap)
 }
 
 /** The executor-side paging loop (reference scan loop, SURVEY §3.1 step 4):

@@ -3,7 +3,7 @@ package graft.sources.services
 import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
-import graft.sources.http.{HttpAuth, HttpCore, SecretRegistry}
+import graft.sources.http.{HttpAuth, HttpCore, HttpStatusError, SecretRegistry}
 import graft.sources.odata.ODataJson
 import scala.jdk.CollectionConverters._
 
@@ -17,7 +17,10 @@ import scala.jdk.CollectionConverters._
   *  - DWAAS core (`{tenant}/dwaas-core/api/v1/spaces[/{id}/{objectType}]`) —
   *    space + object listings and CSN definitions;
   *  - catalog OData (`{tenant}/api/v1/dwc/catalog/...`) — labels and asset
-  *    consumption URLs, merged in when reachable.
+  *    consumption URLs, merged in unless the endpoint answers 404.
+  *
+  * A 404 is an absent endpoint or asset; any other failed answer throws
+  * its `HttpStatusError`.
   *
   * Reads themselves ([[Services.datasphereRelational]] /
   * [[Services.datasphereAnalytical]]) stay on the pushdown OData scan.
@@ -44,10 +47,12 @@ object Datasphere {
   private def auth(spark: SparkSession, url: String, secret: Option[String]): HttpAuth =
     SecretRegistry.authFor(spark, url, secret)
 
-  private def getOpt(url: String, a: HttpAuth): Option[JsonNode] = {
-    val resp = HttpCore.shared.get(url, auth = a)
-    if (resp.status == 200) Some(ODataJson.parse(resp.text)) else None
-  }
+  /** The JSON at `url`, or None when the endpoint answers 404 (a tenant
+    * without that object type or asset). Every other failed answer throws
+    * its [[HttpStatusError]]. */
+  private def getOpt(url: String, a: HttpAuth): Option[JsonNode] =
+    try Some(ODataJson.parse(HttpCore.shared.call("GET", url, auth = a).text))
+    catch { case e: HttpStatusError if e.status == 404 => None }
 
   private def text(n: JsonNode, k: String, default: String = ""): String = {
     val v = if (n == null) null else n.get(k)

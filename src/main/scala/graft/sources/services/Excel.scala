@@ -2,9 +2,8 @@ package graft.sources.services
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.http.{HttpAuth, SecretRegistry}
+import graft.sources.http.{HttpAuth, HttpCore, SecretRegistry}
 import graft.sources.odata.{ODataJson, ODataPages}
-import graft.writes.RestChanges
 
 /** OneDrive/SharePoint Excel workbook surface via the Graph workbook API —
   * the port of `graph_excel_functions.cpp` (1,112 LoC): file listing,
@@ -138,7 +137,7 @@ object Excel {
       cell == colValue
     }.map(r => Option(r.get("index")).map(_.asInt).getOrElse(-1)).toSeq
     val toDelete = matches.sorted.reverse
-    toDelete.foreach(i => RestChanges.call("DELETE", s"$rowsUrl/itemAt(index=$i)", None, a))
+    toDelete.foreach(i => HttpCore.shared.call("DELETE", s"$rowsUrl/itemAt(index=$i)", auth = a))
     Seq(toDelete.size.toLong).toDF("rows_deleted")
   }
 

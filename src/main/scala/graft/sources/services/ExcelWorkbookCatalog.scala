@@ -82,13 +82,13 @@ class ExcelRowsScan(rowsUrl: String, fullSchema: StructType,
   override def planInputPartitions(): Array[InputPartition] =
     Array(ExcelRowsPartition(rowsUrl))
   override def createReaderFactory(): PartitionReaderFactory = {
-    val indexes = required.fieldNames.map(fullSchema.fieldIndex)
-    val (b, u, p) = (auth.bearer, auth.basicUser, auth.basicPassword)
+    // locals only: the factory must not capture the scan
+    val (indexes, a) = (required.fieldNames.map(fullSchema.fieldIndex), auth)
     new PartitionReaderFactory {
       override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
         new PartitionReader[InternalRow] {
           private val rows = ODataPages.walk(
-            partition.asInstanceOf[ExcelRowsPartition].url, HttpAuth(b, u, p), ODataJson.tree)
+            partition.asInstanceOf[ExcelRowsPartition].url, a, ODataJson.tree)
             .flatMap(_.page.rows).map { item =>
               val vals = item.get("values")
               val row = if (vals != null && vals.isArray && vals.size() > 0) vals.get(0) else null

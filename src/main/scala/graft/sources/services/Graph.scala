@@ -74,12 +74,8 @@ object Graph {
   private def pagedValues(url: String, a: HttpAuth): Seq[JsonNode] =
     ODataPages.walk(url, a, ODataJson.tree).flatMap(_.page.rows).toSeq
 
-  private def getJson(url: String, a: HttpAuth): JsonNode = {
-    val resp = HttpCore.shared.get(url, auth = a)
-    if (resp.status != 200)
-      throw new RuntimeException(s"GET $url -> HTTP ${resp.status}: ${resp.text.take(300)}")
-    ODataJson.parse(resp.text)
-  }
+  private def getJson(url: String, a: HttpAuth): JsonNode =
+    ODataJson.parse(HttpCore.shared.call("GET", url, auth = a).text)
 
   private def str(n: JsonNode, k: String): String = {
     val v = if (n == null) null else n.get(k)

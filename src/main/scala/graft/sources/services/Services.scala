@@ -2,7 +2,7 @@ package graft.sources.services
 
 import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import graft.sources.http.SecretRegistry
-import graft.sources.odata.{ODataMeta, ODataConf, ODataUrl}
+import graft.sources.odata.{EdmEntityType, ODataMeta, ODataConf, ODataUrl}
 import graft.sources.http.HttpCore
 
 /** Service-specific connectors (SURVEY.md §2.1 bottom half): SAP Datasphere,
@@ -37,7 +37,7 @@ object Services {
     val model = ODataMeta.modelAt(serviceUrl, auth)
     val rows = for {
       set <- model.entitySets
-      et = model.entityTypes(set.entityTypeName)
+      et = model.entityTypeOf(set.name)
       p <- et.properties
     } yield (set.name, set.entityTypeName, model.version, p.name, p.edmType,
       p.nullable, et.keys.contains(p.name))
@@ -89,27 +89,25 @@ object Services {
       StructField("entity_sets", ArrayType(setType)),
       StructField("functions", ArrayType(funType))))
 
-    def propsOf(etName: String): Seq[Row] = {
-      val et = model.entityTypes(etName.split('.').last)
+    def propsOf(et: EdmEntityType): Seq[Row] =
       et.properties.map(p => Row(p.name, model.resolveType(p.edmType).simpleString,
         p.edmType, p.nullable, et.keys.contains(p.name)))
-    }
-    def navsOf(etName: String): Seq[Row] = {
-      val et = model.entityTypes(etName.split('.').last)
+    def navsOf(et: EdmEntityType): Seq[Row] =
       et.navProperties.map { n =>
-        val target = model.entityTypes.get(n.targetType.split('.').last)
+        val target = model.entityTypes.get(n.targetType)
         Row(n.name, n.targetType,
           target.map(t => Row(t.name, t.properties.size.toLong,
             t.navProperties.size.toLong)).orNull,
           n.toMany)
       }
-    }
     val serviceRoot = setOpt.map(_ => base.substring(0, base.lastIndexOf('/'))).getOrElse(base)
     val setsRows = model.entitySets.map(es =>
       Row(es.name, es.entityTypeName, s"$serviceRoot/${es.name}"))
     val row = setOpt match {
-      case Some(es) => Row(base, "entity_set", es.name, es.entityTypeName,
-        propsOf(es.entityTypeName), navsOf(es.entityTypeName), setsRows, Seq.empty[Row])
+      case Some(es) =>
+        val et = model.entityTypeOf(es.name)
+        Row(base, "entity_set", es.name, es.entityTypeName, propsOf(et), navsOf(et), setsRows,
+          Seq.empty[Row])
       case None => Row(base, "service", null, null,
         Seq.empty[Row], Seq.empty[Row], setsRows, Seq.empty[Row])
     }
@@ -149,10 +147,8 @@ object Services {
     val sets = model.entitySets.map(_.name)
     val body = graft.writes.ODataJsonBatch.buildGetBatch(
       sets.map(s => s"$s?$$top=$top&$$format=json"))
-    val resp = HttpCore.shared.request("POST", s"$root/$$batch",
+    val resp = HttpCore.shared.call("POST", s"$root/$$batch",
       Some((body, "application/json")), auth = auth)
-    if (resp.status != 200)
-      throw new RuntimeException(s"POST $root/$$batch -> HTTP ${resp.status}")
     val byId = graft.writes.ODataJsonBatch.getResponses(resp.text)
       .map(r => r._1 -> r).toMap
     sets.zipWithIndex.map { case (set, i) =>
@@ -350,7 +346,7 @@ object Services {
     val model = ODataMeta.modelAt(serviceRoot, auth)
     val set = model.entitySets.find(s => s.name.equalsIgnoreCase(entity))
       .getOrElse(throw new IllegalArgumentException(s"no entity set '$entity' at $serviceRoot"))
-    val et = model.entityTypes(set.entityTypeName.split('.').last)
+    val et = model.entityTypeOf(set.name)
     et.properties.map(p => (p.name, p.edmType, p.nullable, et.keys.contains(p.name)))
       .toDF(nameCol, typeCol, nullCol, keyCol)
   }
@@ -365,13 +361,6 @@ object Services {
                 secret: Option[String] = None): DataFrame =
     reader(spark, s"${baseUrl.stripSuffix("/")}/$resource", secret).load()
 
-  def graphUsers(spark: SparkSession, baseUrl: String = "https://graph.microsoft.com/v1.0",
-                 secret: Option[String] = None): DataFrame =
-    graphRead(spark, "users", baseUrl, secret)
-  def graphGroups(spark: SparkSession, baseUrl: String = "https://graph.microsoft.com/v1.0",
-                  secret: Option[String] = None): DataFrame =
-    graphRead(spark, "groups", baseUrl, secret)
-
   /** Excel workbook range/table read via the Graph workbook API (reference
     * `graph_excel_functions.cpp`: `graph_excel_range` / `graph_excel_table_data`).
     * The endpoint returns a values matrix `{"values": [[...], ...]}`; when
@@ -383,9 +372,7 @@ object Services {
                  headerRow: Boolean = true, secret: Option[String] = None): DataFrame = {
     import scala.jdk.CollectionConverters._
     val auth = SecretRegistry.authFor(spark, rangeUrl, secret)
-    val resp = HttpCore.shared.get(rangeUrl, auth = auth)
-    if (resp.status != 200)
-      throw new RuntimeException(s"GET $rangeUrl -> HTTP ${resp.status}")
+    val resp = HttpCore.shared.call("GET", rangeUrl, auth = auth)
     val values = graft.sources.odata.ODataJson.parse(resp.text).get("values")
     val matrix: Seq[Seq[String]] =
       if (values == null || !values.isArray) Seq.empty

@@ -1,6 +1,6 @@
 package graft.writes
 
-import graft.sources.http.HttpAuth
+import graft.sources.http.{HttpAuth, HttpCore}
 import graft.sources.odata.ODataJson
 
 /** OData JSON batch round-trips (OData 4.01 `$batch`; the same shape
@@ -34,19 +34,21 @@ object ODataJsonBatch {
     }.mkString("""{"requests":[""", ",", "]}")
 
   /** POSTs `reqs` as one batch to `batchUrl` and fails unless the batch AND
-    * every sub-request succeeded: a non-2xx envelope ([[RestChanges.call]]'s
-    * status rule), fewer sub-responses than sub-requests (truncating proxy,
-    * buggy service — those changes were silently not applied) or any
-    * sub-status outside 2xx all throw. OData batches are not transactions
-    * without changesets, so a failure may leave the other sub-requests
-    * applied (at-least-once, like the per-row path). */
+    * every sub-request succeeded ([[HttpCore.succeeded]], 2xx): a non-2xx
+    * envelope (its [[graft.sources.http.HttpStatusError]]), fewer
+    * sub-responses than sub-requests (truncating proxy, buggy service —
+    * those changes were silently not applied) or any sub-status outside 2xx
+    * all throw. OData batches are not transactions without changesets, so a
+    * failure may leave the other sub-requests applied (at-least-once, like
+    * the per-row path). */
   def send(batchUrl: String, reqs: Seq[SubRequest], auth: HttpAuth): Unit = {
-    val resp = RestChanges.call("POST", batchUrl, Some(buildBatch(reqs)), auth)
+    val resp = HttpCore.shared.call("POST", batchUrl, Some((buildBatch(reqs), "application/json")),
+      auth = auth)
     val answers = getResponses(resp.text)
     if (answers.size != reqs.size)
       throw new RuntimeException(s"$$batch answered ${answers.size} of " +
         s"${reqs.size} sub-requests: ${resp.text.take(200)}")
-    val bad = answers.collect { case (id, status, _) if status / 100 != 2 => (id, status) }
+    val bad = answers.collect { case (id, status, _) if !HttpCore.succeeded(status) => (id, status) }
     if (bad.nonEmpty)
       throw new RuntimeException(
         s"$$batch sub-requests failed: ${bad.take(3).mkString(", ")}")

@@ -8,7 +8,7 @@ import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import graft.sources.http.{HttpAuth, HttpCore, HttpResult, HttpStatusError}
+import graft.sources.http.{HttpAuth, HttpCore}
 import graft.sources.odata.ODataBatchTarget
 import scala.collection.mutable
 
@@ -19,8 +19,8 @@ import scala.collection.mutable
   * A change is `method` on `setUrl + path` with an optional JSON body.
   *
   * Status rule: every answer must be 2xx; anything else throws
-  * [[HttpStatusError]] `<METHOD> <url> -> HTTP <status>: <first 300 chars>`
-  * ([[RestChanges.call]]).
+  * [[graft.sources.http.HttpStatusError]] `<METHOD> <url> -> HTTP <status>:
+  * <first 300 chars>` ([[HttpCore.checked]]).
   *
   * With a `batch` target the changes are buffered as sub-requests on
   * `batch.setPath + path` and sent through [[ODataJsonBatch.send]]:
@@ -48,7 +48,8 @@ class RestChanges(setUrl: String, auth: HttpAuth, batch: Option[ODataBatchTarget
         bufKeys ++= key
         buf += ((method, b.setPath + path, body))
         if (buf.size >= b.size) flush()
-      case None => RestChanges.call(method, setUrl + path, body, auth)
+      case None =>
+        HttpCore.shared.call(method, setUrl + path, body.map((_, "application/json")), auth = auth)
     }
     n += 1
   }
@@ -62,16 +63,6 @@ class RestChanges(setUrl: String, auth: HttpAuth, batch: Option[ODataBatchTarget
   def commit(): WriterCommitMessage = { flush(); RestWriteCommit(n) }
   def abort(): Unit = { buf.clear(); bufKeys.clear() }
   def close(): Unit = ()
-}
-
-object RestChanges {
-  /** Sends one request and holds its answer to the one status rule. */
-  def call(method: String, url: String, body: Option[String], auth: HttpAuth): HttpResult = {
-    val r = HttpCore.shared.request(method, url, body.map((_, "application/json")), auth = auth)
-    if (r.status < 200 || r.status >= 300)
-      throw new HttpStatusError(method, url, r.status, r.headers, r.text)
-    r
-  }
 }
 
 /** A task's count of sent changes. */

@@ -7,9 +7,9 @@ import scala.jdk.CollectionConverters._
   * only one: a second session builder or another dev `main` under `src/`
   * fails here, and so does a hand-written nextLink loop outside
   * `ODataPages`, a JSON-to-row decoder outside `ODataJson`, a
-  * hand-written write check outside `RestChanges`, a second JDK HTTP client
-  * builder, a blocking pool or sleep in the connector, or a scan that
-  * fetches row pages in a `$batch`. */
+  * hand-written status check outside `HttpCore`, a second write shell, a
+  * second JDK HTTP client builder, a blocking pool or sleep in the
+  * connector, or a scan that fetches row pages in a `$batch`. */
 class GraftSessionSpec extends SparkSpecBase {
 
   test("GraftSession.local: extensions, UTC, nanosAsLong, partitions = cpus, no UI") {
@@ -76,10 +76,15 @@ class GraftSessionSpec extends SparkSpecBase {
       "main/scala/graft/streaming/OdpStream.scala"))
   }
 
-  test("src/main sends and checks sink writes only in RestChanges: one status rule, one shell") {
-    val module = Set("main/scala/graft/writes/RestChanges.scala")
-    assert(filesWith("status >" + "= 300").filter(_.startsWith("main/")) == module)
-    assert(filesWith("createBatch" + "WriterFactory").filter(_.startsWith("main/")) == module)
+  test("src/main judges an answer's status only in HttpCore: one success rule, one error type, one write shell") {
+    def mainFilesWith(needle: String): Set[String] =
+      filesWith(needle).filter(_.startsWith("main/"))
+    val core = Set("main/scala/graft/sources/http/HttpCore.scala")
+    // any construction, qualified or not
+    assert(mainFilesWith("HttpStatus" + "Error(") == core)
+    for (cmp <- Seq("status /" + " 100", "status !" + "= 200", "status =" + "= 200", "status >" + "= 300"))
+      assert(mainFilesWith(cmp).subsetOf(core), cmp)
+    assert(mainFilesWith("createBatch" + "WriterFactory") == Set("main/scala/graft/writes/RestChanges.scala"))
   }
 
   test("a JDK HttpClient is built only in HttpCore, and graft/sources holds no ThreadPoolExecutor and no sleep") {

@@ -2,8 +2,8 @@ package graft.sources
 
 import graft.SparkSpecBase
 import graft.testkit.ODataStub
-import graft.sources.deltashare.{DeltaShare, DeltaShareProfile}
-import graft.sources.http.{Charsets, HttpFunctions}
+import graft.sources.deltashare.{DeltaShare, DeltaShareClient, DeltaShareProfile}
+import graft.sources.http.{Charsets, HttpFunctions, HttpStatusError}
 import graft.writes.RestWrites
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
@@ -28,6 +28,17 @@ class MiscSourcesSpec extends SparkSpecBase with BeforeAndAfterAll {
       .map(r => (r.getString(0), r.getString(1))).toSeq == Seq(("sales", "core")))
     assert(DeltaShare.showTables(spark, profile, "sales", "core").collect()
       .map(_.getString(2)).toSeq == Seq("tx"))
+  }
+
+  test("delta sharing: a queryTable answered 403 fails with HttpStatusError carrying the URL") {
+    val path = "/shares/sales/schemas/core/tables/tx/query"
+    stub.extraStatuses.synchronized { stub.extraStatuses(path) = (403, Map.empty) }
+    try {
+      val e = intercept[HttpStatusError](
+        new DeltaShareClient(profile).queryTable("sales", "core", "tx"))
+      assert(e.status == 403 && e.url == profile.endpoint + path, e.getMessage)
+      assert(e.getMessage.startsWith(s"POST ${profile.endpoint}$path -> HTTP 403"), e.getMessage)
+    } finally stub.extraStatuses.synchronized { stub.extraStatuses.remove(path) }
   }
 
   test("delta sharing: query + parallel presigned download + parquet read") {

@@ -1,6 +1,7 @@
 package graft.sources.services
 
 import graft.SparkSpecBase
+import graft.sources.http.HttpStatusError
 import graft.testkit.DatasphereStub
 import org.apache.spark.sql.Row
 import org.scalatest.BeforeAndAfterAll
@@ -34,6 +35,18 @@ class DatasphereSpec extends SparkSpecBase with BeforeAndAfterAll {
     assert(a.contains(("Revenue Cube", "Analytic Model (Cube)", "REVCUBE")))
     assert(a.contains(("Catalog Only View", "View", "CAT_VIEW"))) // catalog merge
     assert(a.map(_._3).distinct.length == a.length) // deduped by technical name
+  }
+
+  test("datasphere_show_assets fails on a listing answered 401 or 500, naming its URL; only a 404 is an absent endpoint") {
+    for ((path, status) <- Seq("/dwaas-core/api/v1/spaces/SPACE1/views" -> 401,
+                               "/api/v1/dwc/catalog/assets" -> 500)) {
+      stub.extraStatuses.synchronized { stub.extraStatuses(path) = status }
+      try {
+        val e = intercept[HttpStatusError](Datasphere.showAssets(spark, base, "SPACE1"))
+        assert(e.status == status && e.url.startsWith(base + path), e.getMessage)
+        assert(e.getMessage.startsWith(s"GET ${e.url} -> HTTP $status"), e.getMessage)
+      } finally stub.extraStatuses.synchronized { stub.extraStatuses.remove(path) }
+    }
   }
 
   test("datasphere_show_assets (all spaces) adds space_name") {

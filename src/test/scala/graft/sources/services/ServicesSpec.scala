@@ -2,7 +2,7 @@ package graft.sources.services
 
 import graft.SparkSpecBase
 import graft.testkit.ODataStub
-import graft.sources.http.{OAuth2, SecretRegistry}
+import graft.sources.http.{HttpStatusError, OAuth2, SecretRegistry}
 import org.scalatest.BeforeAndAfterAll
 
 class ServicesSpec extends SparkSpecBase with BeforeAndAfterAll {
@@ -163,6 +163,17 @@ class ServicesSpec extends SparkSpecBase with BeforeAndAfterAll {
     val tokenCalls = stub.requests.count(_ == "/token")
     SecretRegistry.byName(spark, "cc").get.auth // cached: no second POST
     assert(stub.requests.count(_ == "/token") == tokenCalls)
+  }
+
+  test("oauth2: a token endpoint answering 401 fails with HttpStatusError naming the endpoint") {
+    val endpoint = s"http://localhost:${stub.port}/token-refused"
+    stub.extraStatuses.synchronized { stub.extraStatuses("/token-refused") = (401, Map.empty) }
+    try {
+      val e = intercept[HttpStatusError](
+        OAuth2.clientCredentialsToken(endpoint, "my-client", "wrong", None))
+      assert(e.status == 401 && e.url == endpoint, e.getMessage)
+      assert(e.getMessage.startsWith(s"POST $endpoint -> HTTP 401"), e.getMessage)
+    } finally stub.extraStatuses.synchronized { stub.extraStatuses.remove("/token-refused") }
   }
 
   test("oauth2 token_dir: a persisted token survives a fresh JVM (endpoint hit once)") {

@@ -7,15 +7,14 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-/** The PROBING StreamingSemDedup twin ([[StreamingSemDedup.semDedupStreamProbed]])
-  * — the r7/r8 "blocked" item, unblocked by fanning out survivor STORAGE
-  * (ghost entries) instead of lookups, so one fMGWS suffices and the
-  * watermark propagates. Gates:
+/** Probing StreamingSemDedup ([[StreamingSemDedup.semDedupStream]] with
+  * `nProbe`): survivor STORAGE fans out (ghost entries) instead of lookups,
+  * so one fMGWS suffices and the watermark propagates. Gates:
   *  - exact parity with a sequential replay of the documented policy;
   *  - the recall claim: a boundary-straddling pair (different home cells,
   *    neighbor within probe order) is CAUGHT at nProbe=2 and MISSED at
   *    nProbe=1 — the entire point of probing;
-  *  - nProbe=1 degenerates to the single-cell twin exactly. */
+  *  - a null embedding fails the query at every nProbe. */
 class StreamingSemDedupProbedSpec extends SparkSpecBase {
 
   private val base = 1700000000000L
@@ -73,7 +72,7 @@ class StreamingSemDedupProbedSpec extends SparkSpecBase {
     for ((nProbe, expectDup) <- Seq(1 -> false, 2 -> true)) {
       implicit val sqlCtx = spark.sqlContext
       val mem = MemoryStream[Vec]
-      val out = StreamingSemDedup.semDedupStreamProbed(mem.toDF(), "ts",
+      val out = StreamingSemDedup.semDedupStream(mem.toDF(), "ts",
         "vec_id", "emb", cents, watermarkDelayMs = 60000L, minSim = 0.99,
         nProbe = nProbe)
       val name = s"semdd_probe_$nProbe"
@@ -115,7 +114,7 @@ class StreamingSemDedupProbedSpec extends SparkSpecBase {
 
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Vec]
-    val out = StreamingSemDedup.semDedupStreamProbed(mem.toDF(), "ts",
+    val out = StreamingSemDedup.semDedupStream(mem.toDF(), "ts",
       "vec_id", "emb", cents, watermarkDelayMs = 60000L, minSim = 0.95,
       nProbe = nProbe)
     val q = out.writeStream.format("memory").queryName("semdd_probe_parity")
@@ -138,29 +137,24 @@ class StreamingSemDedupProbedSpec extends SparkSpecBase {
     assert(clones.map(_.vec_id).toSet.subsetOf(dups))
   }
 
-  test("probing semdedup: nProbe=1 equals the single-cell twin exactly") {
+  test("probing semdedup: a null embedding fails the query at nProbe 1 and 2, never leaves its row without a verdict") {
     import spark.implicits._
-    val corpus = graft.Tables.embeddings(spark, sf("sf0.001"))
-    val cents = Similarity.centroidsFor(corpus, "vec_id", "embedding", 4)
-    val feed = corpus.select(col("vec_id"),
-        Similarity.toDoubleVec(col("embedding")).as("v")).collect()
-      .map(r => Vec(r.getLong(0), new Timestamp(base + r.getLong(0) * 50L),
-        r.getSeq[Double](1).toArray)).sortBy(_.vec_id).take(120).toSeq
-    def run(probed: Boolean): Map[Long, (Boolean, Long)] = {
+    val cents = Seq(Seq(1.0, 0.0), Seq(0.0, 1.0))
+    for (nProbe <- Seq(1, 2)) {
       implicit val sqlCtx = spark.sqlContext
       val mem = MemoryStream[Vec]
-      val out =
-        if (probed) StreamingSemDedup.semDedupStreamProbed(mem.toDF(), "ts",
-          "vec_id", "emb", cents, 60000L, 0.9, nProbe = 1)
-        else StreamingSemDedup.semDedupStream(mem.toDF(), "ts", "vec_id",
-          "emb", cents, 60000L, 0.9)
-      val name = if (probed) "semdd_p1" else "semdd_s1"
-      val q = out.writeStream.format("memory").queryName(name)
+      val q = StreamingSemDedup.semDedupStream(mem.toDF(), "ts", "vec_id", "emb",
+          cents, watermarkDelayMs = 60000L, minSim = 0.9, nProbe = nProbe)
+        .writeStream.format("memory").queryName(s"semdd_null_$nProbe")
         .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-      mem.addData(feed: _*); q.processAllAvailable(); q.stop()
-      spark.table(name).collect()
-        .map(r => r.getLong(0) -> ((r.getBoolean(2), r.getLong(3)))).toMap
+      try {
+        mem.addData(Vec(1L, new Timestamp(base), Array(1.0, 0.0)),
+          Vec(2L, new Timestamp(base + 1L), null))
+        val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+          q.processAllAvailable())
+        assert(e.getMessage.contains("NULL value appeared in non-nullable field"),
+          s"nProbe=$nProbe: ${e.getMessage}")
+      } finally q.stop()
     }
-    assert(run(probed = true) == run(probed = false))
   }
 }

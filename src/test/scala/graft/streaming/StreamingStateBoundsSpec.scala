@@ -74,7 +74,7 @@ class StreamingStateBoundsSpec extends SparkSpecBase {
     val cents = Seq(Seq(1.0, 0.0), Seq(0.0, 1.0))
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[BVec]
-    val q = StreamingSemDedup.semDedupStreamProbed(mem.toDF(), "ts", "vec_id",
+    val q = StreamingSemDedup.semDedupStream(mem.toDF(), "ts", "vec_id",
         "emb", cents, watermarkDelayMs = 10000L, minSim = 0.99, nProbe = 2)
       .writeStream.format("memory").queryName("bounds_semdd_probed")
       .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()

@@ -11,6 +11,9 @@ class DatasphereStub {
 
   val requests = mutable.ListBuffer[String]()
 
+  /** Ad-hoc error routes: path -> status, answered to any request. */
+  val extraStatuses = mutable.Map[String, Int]()
+
   private var server: HttpServer = _
   def port: Int = server.getAddress.getPort
   def baseUrl: String = s"http://localhost:$port"
@@ -31,6 +34,12 @@ class DatasphereStub {
       requests.synchronized {
         requests += path + (if (rawQ.isEmpty) "" else "?" +
           URLDecoder.decode(rawQ, StandardCharsets.UTF_8))
+      }
+      extraStatuses.synchronized { extraStatuses.get(path) }.foreach { status =>
+        val bytes = s"answered $status".getBytes(StandardCharsets.UTF_8)
+        ex.sendResponseHeaders(status, bytes.length)
+        val os = ex.getResponseBody; os.write(bytes); os.close()
+        return
       }
       val body: Option[String] = path match {
         case "/dwaas-core/api/v1/spaces" =>
